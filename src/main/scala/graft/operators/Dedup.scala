@@ -3,6 +3,7 @@ package graft.operators
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
 /** Deduplication operators for training-data pipelines.
   *
@@ -96,34 +97,60 @@ object Dedup {
     * form on real crawls. */
   def ngramJaccardPairs(docs: DataFrame, id: String, text: String,
                         n: Int, threshold: Double,
-                        prefilterSingletons: Boolean = false): DataFrame = {
+                        prefilterSingletons: Boolean = false): DataFrame =
     // persisted: the shingle frame feeds the counts and both sides of
-    // the self-join (plus the optional df prefilter). Until round 16
-    // the frame ended in a global .distinct() whose Exchange every
-    // consumer reused; with the dedup now row-local (no exchange — see
-    // shingleSet) the persist is what keeps the tokenize→explode pass
-    // at ONE evaluation. Net plan: one shuffle fewer, same single
-    // materialization. Same CACHE NOTE contract as byteNearDupPairs.
-    val sh = shingleSet(docs, id, text, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cnt = sh.groupBy(col(id)).agg(count(lit(1)).as("n_sh"))
+    // the self-join (plus the optional df prefilter); with the per-doc
+    // dedup row-local (no exchange — see shingleSet) the persist is
+    // what keeps the tokenize→explode pass at ONE evaluation. Same
+    // CACHE NOTE contract as `cappedUniverse`.
+    shingleJaccardPairs(shingleSet(docs, id, text, n).persist(MEMORY_AND_DISK),
+      id, threshold, prefilterSingletons)
+
+  /** Exact Jaccard over a distinct (id, s) shingle frame — the one
+    * scoring core of the text and byte Jaccard families. Singleton
+    * prefiltering touches only the join input; set sizes always count
+    * the full frame `sh`. */
+  private def shingleJaccardPairs(sh: DataFrame, id: String, threshold: Double,
+                                  prefilterSingletons: Boolean = false): DataFrame = {
     val shJ =
       if (prefilterSingletons) {
         val shared = sh.groupBy(col("s")).agg(count(lit(1)).as("df"))
           .filter(col("df") >= 2).select(col("s"))
         sh.join(shared, "s")
       } else sh
-    val inter = shJ.as("a").join(shJ.as("b"),
-        col(s"a.s") === col(s"b.s") && col(s"a.$id") < col(s"b.$id"))
+    exactJaccard(bucketPairCount(shJ, id, "s", "inter"), sh, id, threshold)
+  }
+
+  /** Per-pair shared-unit counts: the `a.bucket = b.bucket AND a.id <
+    * b.id` self-join of a (id, bucket) unit frame, grouped to
+    * (da, db, `countAs`). Pairs materialize only per bucket, never
+    * all-pairs. */
+  private def bucketPairCount(units: DataFrame, id: String, bucket: String,
+                              countAs: String): DataFrame =
+    units.as("a").join(units.as("b"),
+        col(s"a.$bucket") === col(s"b.$bucket") && col(s"a.$id") < col(s"b.$id"))
       .groupBy(col(s"a.$id").as("da"), col(s"b.$id").as("db"))
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(cnt.select(col(id).as("da"), col("n_sh").as("na")), "da")
-      .join(cnt.select(col(id).as("db"), col("n_sh").as("nb")), "db")
+      .agg(count(lit(1)).as(countAs))
+
+  /** Pairs (da, db, ...) with each side's set size — the per-document
+    * row count of `units`, as `na` and `nb` — joined on. */
+  private def withSetSizes(pairs: DataFrame, units: DataFrame, id: String,
+                           sizeAs: String): DataFrame = {
+    val cnt = units.groupBy(col(id)).agg(count(lit(1)).as(sizeAs))
+    pairs
+      .join(cnt.select(col(id).as("da"), col(sizeAs).as("na")), "da")
+      .join(cnt.select(col(id).as("db"), col(sizeAs).as("nb")), "db")
+  }
+
+  /** The exact-Jaccard tail: (da, db, inter) pair intersections over
+    * the shingle universe `sh` → (da, db, jaccard), strictly above
+    * `threshold`. */
+  private def exactJaccard(inter: DataFrame, sh: DataFrame, id: String,
+                           threshold: Double): DataFrame =
+    withSetSizes(inter, sh, id, "n_sh")
       .select(col("da"), col("db"),
         (col("inter").cast("double") / (col("na") + col("nb") - col("inter"))).as("jaccard"))
       .filter(col("jaccard") > threshold)
-  }
 
   /** MinHash-LSH candidate pairs: docs sharing at least one band of
     * `rowsPerBand` consecutive minhashes. The band signature is the
@@ -359,13 +386,10 @@ object Dedup {
                        shingleN: Int, numHashes: Int, rowsPerBand: Int,
                        threshold: Double): DataFrame = {
     // the SAME shingle frame feeds candidates, counts and intersections
-    // — PERSISTED so the tokenize→explode pass runs once (the exchange
-    // that used to sit at the end of shingleSet and double as the
-    // reuse point is gone — see shingleSet; a cache is the stronger
-    // form of the same sharing, and one shuffle cheaper). Same CACHE
-    // NOTE contract as byteNearDupPairs.
-    val sh = shingleSet(docs, id, text, shingleN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // — PERSISTED so the tokenize→explode pass runs once (shingleSet
+    // has no exchange to share). Same CACHE NOTE contract as
+    // `cappedUniverse`.
+    val sh = shingleSet(docs, id, text, shingleN).persist(MEMORY_AND_DISK)
     val cand = minhashLshPairsFromShingles(sh, id, numHashes, rowsPerBand)
     exactVerifyPairs(sh, cand, id, threshold)
   }
@@ -385,9 +409,9 @@ object Dedup {
     val ids = cand.select(col("da").as(id))
       .union(cand.select(col("db").as(id))).distinct()
     // persisted for exactVerifyPairs' three consumers (counts + both
-    // join sides) — same CACHE NOTE contract as byteNearDupPairs
+    // join sides) — same CACHE NOTE contract as `cappedUniverse`
     val sh = shingleSet(docs.join(ids, Seq(id), "left_semi"), id, text, shingleN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     exactVerifyPairs(sh, cand, id, threshold)
   }
 
@@ -398,18 +422,12 @@ object Dedup {
     * shingles. */
   private def exactVerifyPairs(sh: DataFrame, cand: DataFrame, id: String,
                                threshold: Double): DataFrame = {
-    val cnt = sh.groupBy(col(id)).agg(count(lit(1)).as("n_sh"))
     val inter = cand
       .join(sh.select(col(id).as("da"), col("s")), "da")
       .join(sh.select(col(id).as("db"), col("s")), Seq("db", "s"))
       .groupBy(col("da"), col("db"))
       .agg(count(lit(1)).as("inter"))
-    inter
-      .join(cnt.select(col(id).as("da"), col("n_sh").as("na")), "da")
-      .join(cnt.select(col(id).as("db"), col("n_sh").as("nb")), "db")
-      .select(col("da"), col("db"),
-        (col("inter").cast("double") / (col("na") + col("nb") - col("inter"))).as("jaccard"))
-      .filter(col("jaccard") > threshold)
+    exactJaccard(inter, sh, id, threshold)
   }
 
   /** SimHash near-dup pairs within `maxHamming` bit flips, found via
@@ -463,22 +481,19 @@ object Dedup {
     * SIZE DISPATCH (the broadcast-threshold pattern): the canonical
     * edge set is materialized and COUNTED first — one action the star
     * path paid anyway as its initial convergence probe — and a graph
-    * at or under `GRAFT_CC_SMALL_MAX` edges (default 65 536; ~a few MB
-    * of driver memory, the same bounded-collect class as a broadcast
-    * relation) is solved driver-side by union-find into a
-    * LocalRelation of identical (id, rep) labels: zero shuffle rounds,
-    * zero per-round job latency, and downstream joins read a local
-    * frame. Above the threshold — every real crawl's dup subgraph —
-    * nothing changes: the star rounds run exactly as before. The two
+    * at or under `SmallGraphMax` edges (65 536; ~a few MB of driver
+    * memory, the same bounded-collect class as a broadcast relation)
+    * is solved driver-side by union-find into a LocalRelation of
+    * identical (id, rep) labels: zero shuffle rounds, zero per-round
+    * job latency, and downstream joins read a local frame. Above the
+    * threshold — every real crawl's dup subgraph — the star rounds
+    * run. The choice follows the measured edge count alone; the two
     * paths are pinned label-identical in DedupPropertySpec. */
   def connectedComponents(pairs: DataFrame, a: String = "da", b: String = "db"): DataFrame =
     connectedComponentsDispatch(pairs, a, b, SmallGraphMax)
 
-  /** Edge-count ceiling for the driver-side CC fast path; env-tunable
-    * (`GRAFT_CC_SMALL_MAX`, 0 disables) so a cluster deployment can
-    * size it to its driver like the broadcast threshold. */
-  private[graft] lazy val SmallGraphMax: Long =
-    sys.env.get("GRAFT_CC_SMALL_MAX").flatMap(_.toLongOption).getOrElse(65536L)
+  /** Edge-count ceiling for the driver-side CC fast path. */
+  private val SmallGraphMax = 65536L
 
   private[graft] def connectedComponentsDispatch(pairs: DataFrame, a: String,
                                                  b: String,
@@ -559,7 +574,7 @@ object Dedup {
     * truncates the otherwise per-round-doubling lineage; shared by
     * both CC implementations. */
   private def materializeRound(df: DataFrame): (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) = {
-    val rdd = df.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val rdd = df.rdd.persist(MEMORY_AND_DISK)
     (df.sparkSession.createDataFrame(rdd, df.schema), rdd)
   }
 
@@ -841,33 +856,37 @@ object Dedup {
     * window (bounded frame, no one-task funnel) → distinct on
     * (id, fp). The text never shuffles — only 16-byte (id, fp) rows. */
   def winnowFingerprints(docs: DataFrame, id: String, text: String,
-                         k: Int, w: Int): DataFrame = {
+                         k: Int, w: Int): DataFrame =
+    winnowWindow(docs, id, text, k, w, "fp", min(col("h")))
+      .select(col(id), col("fp"))
+      .distinct()
+
+  /** The winnowing window shared by the value-only and positioned
+    * forms: every k-token gram in position order as (id, pos, ng, h)
+    * — h its 40-bit md5-derived hash, ng the doc's gram count — with
+    * `agg` over each w-gram window (a bounded, doc-partitioned frame)
+    * as column `name`, kept only where a window starts: pos <=
+    * max(ng - w, 0), so a doc with fewer than w grams keeps one. */
+  private def winnowWindow(docs: DataFrame, id: String, text: String,
+                           k: Int, w: Int, name: String,
+                           agg: Column): DataFrame = {
     require(k >= 1, s"gram size k must be positive, got $k")
     require(w >= 1, s"window w must be positive, got $w")
     val win = org.apache.spark.sql.expressions.Window
       .partitionBy(col(id)).orderBy(col("pos")).rowsBetween(0, w - 1)
-    positionedGramHashes(docs, id, text, k)
-      .withColumn("fp", min(col("h")).over(win))
-      .filter(col("pos") <= greatest(col("ng") - w, lit(0)))
-      .select(col(id), col("fp"))
-      .distinct()
-  }
-
-  /** (id, pos, ng, h): every k-token gram in position order with its
-    * 40-bit md5-derived hash — the shared front half of the winnowing
-    * family (value-only fingerprints above, positioned spans below). */
-  private def positionedGramHashes(docs: DataFrame, id: String,
-                                   text: String, k: Int): DataFrame =
     // one JVM closure per row for the tokenize→gram chain (gramArray;
     // the shingleSet discipline — HOF lambdas evaluate interpreted);
-    // ng = size(tokens) - k + 1 is exactly the gram count, and the
-    // old size(tokens) >= k gate is exactly "at least one gram"
+    // size(gs) is exactly the gram count, and >= 1 is exactly "at
+    // least k tokens"
     docs.select(col(id), graft.functions.TextFunctions.gramArray(col(text), k).as("gs"))
       .filter(size(col("gs")) >= 1)
       .select(col(id), size(col("gs")).as("ng"),
         posexplode(col("gs")).as(Seq("pos", "s")))
       .select(col(id), col("pos"), col("ng"),
         conv(substring(md5(col("s")), 1, 10), 16, 10).cast("long").as("h"))
+      .withColumn(name, agg.over(win))
+      .filter(col("pos") <= greatest(col("ng") - w, lit(0)))
+  }
 
   /** POSITIONED winnowing selection — the MOSS-report half the
     * value-only form above deliberately drops: per window the minimum
@@ -883,18 +902,12 @@ object Dedup {
     * the position along; selecting by min(struct(h, -pos)) is the
     * argmin-with-rightmost-tie in one ordered comparison. */
   def winnowSpans(docs: DataFrame, id: String, text: String,
-                  k: Int, w: Int): DataFrame = {
-    require(k >= 1, s"gram size k must be positive, got $k")
-    require(w >= 1, s"window w must be positive, got $w")
-    val win = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(id)).orderBy(col("pos")).rowsBetween(0, w - 1)
-    positionedGramHashes(docs, id, text, k)
-      .withColumn("sel", min(struct(col("h"), (-col("pos")).as("np"))).over(win))
-      .filter(col("pos") <= greatest(col("ng") - w, lit(0)))
+                  k: Int, w: Int): DataFrame =
+    winnowWindow(docs, id, text, k, w, "sel",
+        min(struct(col("h"), (-col("pos")).as("np"))))
       .select(col(id), (-col("sel.np")).cast("long").as("spos"),
         col("sel.h").as("fp"))
       .distinct()
-  }
 
   /** Matched span offsets per document pair — the report a MOSS user
     * actually reads: for every fingerprint two documents share, WHERE
@@ -994,14 +1007,8 @@ object Dedup {
                              minContainment: Double): DataFrame = {
     require(minContainment >= 0.0 && minContainment <= 1.0,
       s"minContainment must be in [0, 1], got $minContainment")
-    val fps = winnowFingerprints(docs, id, text, k, w)
-    val cnt = fps.groupBy(col(id)).agg(count(lit(1)).as("n_fp"))
-    sharedFpPairs(fps, id, minShared = 1L)
-      .join(cnt.select(col(id).as("da"), col("n_fp").as("na")), "da")
-      .join(cnt.select(col(id).as("db"), col("n_fp").as("nb")), "db")
-      .select(col("da"), col("db"), col("n_shared"),
-        (col("n_shared").cast("double") / least(col("na"), col("nb")))
-          .as("containment"))
+    containmentScored(winnowFingerprints(docs, id, text, k, w), id)
+      .select(col("da"), col("db"), col("n_shared"), col("containment"))
       .filter(col("containment") >= minContainment)
   }
 
@@ -1057,24 +1064,25 @@ object Dedup {
                                       minContainment: Double): DataFrame = {
     require(minContainment > 0.0 && minContainment <= 1.0,
       s"minContainment must be in (0, 1], got $minContainment")
-    val cnt = fps.groupBy(col(id)).agg(count(lit(1)).as("n_fp"))
-    val contained = sharedFpPairs(fps, id, minShared = 1L)
-      .join(cnt.select(col(id).as("da"), col("n_fp").as("na")), "da")
-      .join(cnt.select(col(id).as("db"), col("n_fp").as("nb")), "db")
-      .filter(col("n_shared").cast("double") / least(col("na"), col("nb"))
-        >= minContainment)
+    val contained = containmentScored(fps, id)
+      .filter(col("containment") >= minContainment)
       .select(when(col("na") < col("nb"), col("da"))
         .otherwise(col("db")).as(id))
       .distinct()
     docs.join(contained, Seq(id), "left_anti")
   }
 
+  /** Fingerprint-sharing pairs (da, db, n_shared, na, nb, containment):
+    * containment = n_shared / min(na, nb), the fraction of the smaller
+    * document's fingerprint set the pair shares. */
+  private def containmentScored(fps: DataFrame, id: String): DataFrame =
+    withSetSizes(sharedFpPairs(fps, id, minShared = 1L), fps, id, "n_fp")
+      .withColumn("containment",
+        col("n_shared").cast("double") / least(col("na"), col("nb")))
+
   private def sharedFpPairs(fps: DataFrame, id: String,
                             minShared: Long): DataFrame =
-    fps.as("a").join(fps.as("b"),
-        col("a.fp") === col("b.fp") && col(s"a.$id") < col(s"b.$id"))
-      .groupBy(col(s"a.$id").as("da"), col(s"b.$id").as("db"))
-      .agg(count(lit(1)).as("n_shared"))
+    bucketPairCount(fps, id, "fp", "n_shared")
       .filter(col("n_shared") >= minShared)
 
   // ------------------------------------------------------------------
@@ -1132,6 +1140,35 @@ object Dedup {
     (out, d)
   }
 
+  /** The capped shingle universe every capped shingle family scores
+    * over: `shingles` (one (id, s) row per distinct document shingle)
+    * persisted, then `capHotBuckets` on `s`; when the cap fires the
+    * kept frame is persisted too. The raw frame feeds the df probe (an
+    * eager action) and the prune; the kept frame feeds the per-doc
+    * counts, the band aggregates and both self-join sides — without
+    * the caches each consumer re-runs the shingle explode (measured
+    * 25-30 s/query at sf0.1 for byte shingles, ~3 s cached).
+    * CacheManager dedupes by canonical plan, and Bench clears caches
+    * between timed runs, so every measurement still pays the build
+    * once.
+    *
+    * CACHE NOTE — the contract of every persisted frame in this
+    * object: the returned plan references one or two PERSISTED frames
+    * (the shingle frame; plus the capped frame when the cap fires)
+    * that are deliberately not unpersisted here — the result is lazy,
+    * so an internal unpersist would evict them before the caller
+    * materializes. Short-lived runs are covered (Bench and Verify
+    * clear all caches between queries); a long-lived session should
+    * `spark.catalog.clearCache()` (or walk
+    * `sparkContext.getPersistentRDDs`) after materializing the pairs,
+    * or the MEMORY_AND_DISK blocks accumulate once per call. */
+  private def cappedUniverse(shingles: DataFrame, id: String,
+                             maxDf: Long): (DataFrame, HotBucketDecision) = {
+    val sh = shingles.persist(MEMORY_AND_DISK)
+    val (kept, d) = capHotBuckets(sh, id, "s", maxDf)
+    (if (d.capped) kept.persist(MEMORY_AND_DISK) else kept, d)
+  }
+
   /** `winnowedSpanPairs` with the measured hot-bucket cap: fingerprints
     * held by more than `maxDf` documents are dropped (loudly, with the
     * decision returned) before the pair join, so one boilerplate
@@ -1158,28 +1195,8 @@ object Dedup {
   def ngramJaccardPairsCapped(docs: DataFrame, id: String, text: String,
                               n: Int, threshold: Double,
                               maxDf: Long): (DataFrame, HotBucketDecision) = {
-    // the byteNearDupPairs persist pattern: the shingle frame feeds the
-    // cap's df probe (an eager action) plus counts and both self-join
-    // sides; the capped frame, when the cap fires, feeds those three
-    // again. Same CACHE NOTE contract as byteNearDupPairs.
-    val sh = shingleSet(docs, id, text, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (kept0, d) = capHotBuckets(sh, id, "s", maxDf)
-    val kept =
-      if (!d.capped) kept0
-      else kept0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cnt = kept.groupBy(col(id)).agg(count(lit(1)).as("n_sh"))
-    val inter = kept.as("a").join(kept.as("b"),
-        col(s"a.s") === col(s"b.s") && col(s"a.$id") < col(s"b.$id"))
-      .groupBy(col(s"a.$id").as("da"), col(s"b.$id").as("db"))
-      .agg(count(lit(1)).as("inter"))
-    val out = inter
-      .join(cnt.select(col(id).as("da"), col("n_sh").as("na")), "da")
-      .join(cnt.select(col(id).as("db"), col("n_sh").as("nb")), "db")
-      .select(col("da"), col("db"),
-        (col("inter").cast("double") / (col("na") + col("nb") - col("inter"))).as("jaccard"))
-      .filter(col("jaccard") > threshold)
-    (out, d)
+    val (kept, d) = cappedUniverse(shingleSet(docs, id, text, n), id, maxDf)
+    (shingleJaccardPairs(kept, id, threshold), d)
   }
 
   /** Distinct byte n-gram shingles of a BINARY payload column: (id, s)
@@ -1251,34 +1268,15 @@ object Dedup {
     * family as the text near-dups: shuffle on shingle/band, candidate
     * pairs only from LSH buckets, never all-pairs; payloads themselves
     * never shuffle (only their hex shingles do — at 100 TB of blobs,
-    * run over the pointer store's payload column per ingest shard). */
-  /** CACHE NOTE: the returned plan references one or two PERSISTED
-    * frames (the shingle frame; plus the capped frame when the cap
-    * fires) that are deliberately not unpersisted here — the result is
-    * lazy, so an internal unpersist would evict them before the caller
-    * materializes. Short-lived runs are covered (Bench and Verify
-    * clear all caches between queries); a long-lived session should
-    * `spark.catalog.clearCache()` (or walk
-    * `sparkContext.getPersistentRDDs`) after materializing the pairs,
-    * or the MEMORY_AND_DISK blocks accumulate once per call. */
+    * run over the pointer store's payload column per ingest shard).
+    * The byte-shingle frame is ~len(payload) rows per doc (5-6x denser
+    * than the word families) and is persisted under the CACHE NOTE
+    * contract of `cappedUniverse`. */
   def byteNearDupPairs(bin: DataFrame, id: String, payload: String,
                        n: Int, numHashes: Int, rowsPerBand: Int,
                        threshold: Double,
                        maxDf: Long): (DataFrame, HotBucketDecision) = {
-    // persisted: the byte-shingle frame is ~len(payload) rows per doc
-    // (5-6x denser than the word families) and feeds FIVE consumers —
-    // the df probe, the cap's anti-join input, the band aggregate, the
-    // per-doc counts, and both sides of the exact-verify join; without
-    // the cache each consumer re-runs the explode+distinct (measured
-    // 25-30 s/query at sf0.1, ~3 s cached). CacheManager dedupes by
-    // canonical plan (the l12 precedent); Bench clears caches between
-    // timed runs, so every measurement still pays the build once.
-    val sh = byteShingleSet(bin, id, payload, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (kept0, d) = capHotBuckets(sh, id, "s", maxDf)
-    val kept =
-      if (!d.capped) kept0
-      else kept0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val (kept, d) = cappedUniverse(byteShingleSet(bin, id, payload, n), id, maxDf)
     val cand = minhashLshPairsFromShingles(kept, id, numHashes, rowsPerBand)
     (exactVerifyPairs(kept, cand, id, threshold), d)
   }
@@ -1304,7 +1302,7 @@ object Dedup {
     * bit-identical when no doc falls under the cut. Both bandings read
     * the SAME persisted shingle frame — the fine leg adds one
     * stratum-sized band aggregate, not a second shingle build. Same
-    * CACHE NOTE as `byteNearDupPairs`. */
+    * CACHE NOTE as `cappedUniverse`. */
   def byteNearDupPairsStratified(bin: DataFrame, id: String, payload: String,
                                  n: Int, numHashes: Int, rowsPerBand: Int,
                                  shortRowsPerBand: Int, shortMaxShingles: Long,
@@ -1327,7 +1325,7 @@ object Dedup {
     * verify(baseCand) ∪ verify(fineCand ∖ baseCand) is pair-for-pair
     * the same set as verify(baseCand ∪ fineCand), with identical
     * jaccard values (verification is per-pair). Same CACHE NOTE as
-    * `byteNearDupPairs`. */
+    * `cappedUniverse`. */
   def byteNearDupPairsAudit(bin: DataFrame, id: String, payload: String,
                             n: Int, numHashes: Int, rowsPerBand: Int,
                             shortRowsPerBand: Int, shortMaxShingles: Long,
@@ -1337,17 +1335,12 @@ object Dedup {
       s"shortMaxShingles must be >= 1, got $shortMaxShingles")
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
-    val sh = byteShingleSet(bin, id, payload, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (kept0, d) = capHotBuckets(sh, id, "s", maxDf)
-    val kept =
-      if (!d.capped) kept0
-      else kept0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val (kept, d) = cappedUniverse(byteShingleSet(bin, id, payload, n), id, maxDf)
     // persisted: the base candidates feed base verification AND the
     // fine leg's anti-join (two actions would rebuild the band
     // self-join otherwise — the multi-consumer discipline)
     val baseCand = bandPairJoin(bandFrame(kept, id, numHashes, rowsPerBand), id)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     val base = exactVerifyPairs(kept, baseCand, id, threshold)
     val fineCut = math.ceil(shortMaxShingles / threshold).toLong
     val shortIds = kept.groupBy(col(id)).agg(count(lit(1)).as("_nsh"))
@@ -1371,26 +1364,11 @@ object Dedup {
     * banded `byteNearDupPairs`, and this one exists to MEASURE what
     * that banding trades away. */
   def byteJaccardPairs(bin: DataFrame, id: String, payload: String,
-                       n: Int, threshold: Double): DataFrame = {
-    // persisted: the frame feeds THREE consumers (the per-doc counts
-    // and both sides of the exact self-join) and would re-run the
-    // explode+distinct per consumer otherwise — the same
-    // multi-consumer discipline, and the same CACHE NOTE contract, as
-    // byteNearDupPairs' five-consumer frame above.
-    val sh = byteShingleSet(bin, id, payload, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cnt = sh.groupBy(col(id)).agg(count(lit(1)).as("n_sh"))
-    val inter = sh.as("a").join(sh.as("b"),
-        col("a.s") === col("b.s") && col(s"a.$id") < col(s"b.$id"))
-      .groupBy(col(s"a.$id").as("da"), col(s"b.$id").as("db"))
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(cnt.select(col(id).as("da"), col("n_sh").as("na")), "da")
-      .join(cnt.select(col(id).as("db"), col("n_sh").as("nb")), "db")
-      .select(col("da"), col("db"),
-        (col("inter").cast("double") / (col("na") + col("nb") - col("inter"))).as("jaccard"))
-      .filter(col("jaccard") > threshold)
-  }
+                       n: Int, threshold: Double): DataFrame =
+    // persisted for the per-doc counts and both self-join sides, under
+    // the CACHE NOTE contract of `cappedUniverse`
+    shingleJaccardPairs(byteShingleSet(bin, id, payload, n).persist(MEMORY_AND_DISK),
+      id, threshold)
 
   /** Blocked EDIT-DISTANCE pair matching over a value VOCABULARY — the
     * entity-resolution primitive the hash families above can't express
@@ -1413,17 +1391,9 @@ object Dedup {
   def fuzzyValuePairs(df: DataFrame, value: String, blockOf: Column => Column,
                       maxDist: Int,
                       maxBlock: Long): (DataFrame, HotBucketDecision) = {
-    require(maxDist >= 1, s"maxDist must be >= 1, got $maxDist")
-    val vals = df.select(col(value).as("_v")).distinct()
-      .withColumn("_blk", blockOf(col("_v")))
-    val (kept, d) = capHotBuckets(vals, "_v", "_blk", maxBlock)
-    val pairs = kept.as("a").join(kept.as("b"),
-        col("a._blk") === col("b._blk") && col("a._v") < col("b._v") &&
-          abs(length(col("a._v")) - length(col("b._v"))) <= maxDist)
-      .select(col("a._v").as("va"), col("b._v").as("vb"),
-        levenshtein(col("a._v"), col("b._v")).cast("long").as("dist"))
-      .filter(col("dist") <= maxDist)
-    (pairs, d)
+    val (pairs, ds) = fuzzyBlockPairs(df, value, Seq(blockOf), setValued = false,
+      maxDist, maxBlock)
+    (pairs, ds.head)
   }
 
   /** `fuzzyValuePairs` with MULTI-PASS blocking — closes the classic
@@ -1444,20 +1414,40 @@ object Dedup {
     * pairs (bounded by the per-block caps). */
   def fuzzyValuePairsMultiBlock(df: DataFrame, value: String,
                                 blockOfs: Seq[Column => Column],
-                                maxDist: Int, maxBlock: Long): (DataFrame, Seq[HotBucketDecision]) = {
+                                maxDist: Int, maxBlock: Long): (DataFrame, Seq[HotBucketDecision]) =
+    fuzzyBlockPairs(df, value, blockOfs, setValued = false, maxDist, maxBlock)
+
+  /** The blocked edit-distance core of the three fuzzy pair forms:
+    * distinct values, then per key its blocks (one per value, or the
+    * exploded set when `setValued`), the key's measured hot-block cap,
+    * and the length-bounded block self-join. A set-valued key dedups
+    * its candidates (two values share many blocks); several keys union
+    * and dedup across keys. Levenshtein runs once per surviving
+    * candidate. Decisions return in key order. */
+  private def fuzzyBlockPairs(df: DataFrame, value: String,
+                              keys: Seq[Column => Column], setValued: Boolean,
+                              maxDist: Int,
+                              maxBlock: Long): (DataFrame, Seq[HotBucketDecision]) = {
     require(maxDist >= 1, s"maxDist must be >= 1, got $maxDist")
-    require(blockOfs.nonEmpty, "at least one blocking key is required")
+    require(keys.nonEmpty, "at least one blocking key is required")
     val vals = df.select(col(value).as("_v")).distinct()
-    val perKey = blockOfs.map { bf =>
-      val (kept, d) = capHotBuckets(
-        vals.withColumn("_blk", bf(col("_v"))), "_v", "_blk", maxBlock)
+    val perKey = keys.map { key =>
+      val blocks =
+        if (setValued) vals.select(col("_v"), explode(key(col("_v"))).as("_blk"))
+        else vals.withColumn("_blk", key(col("_v")))
+      val (kept, d) = capHotBuckets(blocks, "_v", "_blk", maxBlock)
       val cand = kept.as("a").join(kept.as("b"),
           col("a._blk") === col("b._blk") && col("a._v") < col("b._v") &&
             abs(length(col("a._v")) - length(col("b._v"))) <= maxDist)
         .select(col("a._v").as("va"), col("b._v").as("vb"))
-      (cand, d)
+      (if (setValued) cand.distinct() else cand, d)
     }
-    val cands = perKey.map(_._1).reduce(_ unionAll _).distinct()
+    // a single key's candidates are already distinct: the values are,
+    // a single-valued key puts each in one block, and a set-valued
+    // key's candidates were deduped above
+    val cands =
+      if (perKey.size == 1) perKey.head._1
+      else perKey.map(_._1).reduce(_ unionAll _).distinct()
     val pairs = cands
       .select(col("va"), col("vb"),
         levenshtein(col("va"), col("vb")).cast("long").as("dist"))
@@ -1501,27 +1491,8 @@ object Dedup {
     * `blockSetOfs` order; the self-joins stay vocabulary-sized. */
   def fuzzyValuePairsMultiBlockSets(df: DataFrame, value: String,
                                     blockSetOfs: Seq[Column => Column],
-                                    maxDist: Int, maxBlock: Long): (DataFrame, Seq[HotBucketDecision]) = {
-    require(maxDist >= 1, s"maxDist must be >= 1, got $maxDist")
-    require(blockSetOfs.nonEmpty, "at least one blocking key is required")
-    val vals = df.select(col(value).as("_v")).distinct()
-    val perKey = blockSetOfs.map { bf =>
-      val blocks = vals.select(col("_v"), explode(bf(col("_v"))).as("_blk"))
-      val (kept, d) = capHotBuckets(blocks, "_v", "_blk", maxBlock)
-      val cand = kept.as("a").join(kept.as("b"),
-          col("a._blk") === col("b._blk") && col("a._v") < col("b._v") &&
-            abs(length(col("a._v")) - length(col("b._v"))) <= maxDist)
-        .select(col("a._v").as("va"), col("b._v").as("vb"))
-        .distinct()
-      (cand, d)
-    }
-    val cands = perKey.map(_._1).reduce(_ unionAll _).distinct()
-    val pairs = cands
-      .select(col("va"), col("vb"),
-        levenshtein(col("va"), col("vb")).cast("long").as("dist"))
-      .filter(col("dist") <= maxDist)
-    (pairs, perKey.map(_._2))
-  }
+                                    maxDist: Int, maxBlock: Long): (DataFrame, Seq[HotBucketDecision]) =
+    fuzzyBlockPairs(df, value, blockSetOfs, setValued = true, maxDist, maxBlock)
 
   /** Canonical-value mapping over the fuzzy pair graph — the action
     * entity resolution exists for: every distinct value maps to the

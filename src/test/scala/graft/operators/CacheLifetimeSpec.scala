@@ -12,7 +12,7 @@ import graft.TestSpark
   * (shingle sets, candidate pairs, band aggregates) and deliberately do
   * NOT unpersist before returning — the result is lazy, so an internal
   * unpersist would evict the cache before the caller materializes (the
-  * CACHE NOTE on `Dedup.byteNearDupPairs`). The documented release
+  * CACHE NOTE on `Dedup.cappedUniverse`). The documented release
   * protocol is the caller's: after materializing, clear the CacheManager
   * and walk `sparkContext.getPersistentRDDs` — exactly what Bench does
   * between timed runs (Bench.scala) and Verify between queries
@@ -58,15 +58,19 @@ class CacheLifetimeSpec extends AnyFunSuite {
   }
 
   test("byte dedup chain + connected components: caches and CC round RDDs drain") {
-    release()
     val bin = docs.select(col("doc_id"), col("text").cast("binary").as("payload"))
-    val (bytePairs, _) = Dedup.byteNearDupPairs(bin, "doc_id", "payload",
-      n = 8, numHashes = 16, rowsPerBand = 4, threshold = 0.7,
-      maxDf = Long.MaxValue)
-    val cc = Dedup.connectedComponents(bytePairs.select(col("da"), col("db")))
-    cc.write.format("noop").mode("overwrite").save()
-    release()
-    assertDrained("byteNearDupPairs + connectedComponents")
+    // every doc shares the text around its token: maxDf = 30 fires the
+    // cap, so the capped frame's second persist must drain as well
+    for (maxDf <- Seq(Long.MaxValue, 30L)) {
+      release()
+      val (bytePairs, d) = Dedup.byteNearDupPairs(bin, "doc_id", "payload",
+        n = 8, numHashes = 16, rowsPerBand = 4, threshold = 0.7, maxDf = maxDf)
+      assert(d.capped == (maxDf == 30L), s"maxDf=$maxDf: $d")
+      val cc = Dedup.connectedComponents(bytePairs.select(col("da"), col("db")))
+      cc.write.format("noop").mode("overwrite").save()
+      release()
+      assertDrained(s"byteNearDupPairs(maxDf=$maxDf) + connectedComponents")
+    }
   }
 
   test("streaming winnow loop: per-turn persists are try/finally-released by the loop itself") {

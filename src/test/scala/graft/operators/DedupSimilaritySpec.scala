@@ -266,6 +266,32 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val (p2, dec2) = Dedup.fuzzyValuePairs(d, "text",
       _ => lit("k"), maxDist = 2, maxBlock = 3)
     assert(dec2.capped && dec2.hottestDf == 4 && p2.count() == 0)
+
+    // one key through all three pair forms (and the three canonical
+    // forms) gives the same pairs and the same decision: a word key,
+    // a one-block key that holds, and the same key capped
+    val vocab = docs((1L, "cold bolt"), (2L, "old bolt"), (3L, "aold bolt"),
+      (4L, "old boat"), (5L, "red widget"), (6L, "red widgets"))
+    type Key = org.apache.spark.sql.Column => org.apache.spark.sql.Column
+    val lastWord: Key = v => element_at(split(v, " "), -1)
+    val oneBlock: Key = _ => lit("k")
+    def pairSet(p: org.apache.spark.sql.DataFrame) = p.as[(String, String, Long)].collect().toSet
+    def canon(m: org.apache.spark.sql.DataFrame) = m.as[(String, String)].collect().toMap
+    for ((label, key, maxBlock) <- Seq(("lastWord", lastWord, 10L),
+        ("oneBlock", oneBlock, 10L), ("oneBlock capped", oneBlock, 3L))) {
+      val setKey: Key = v => array(key(v))
+      val (one, d1) = Dedup.fuzzyValuePairs(vocab, "text", key, 2, maxBlock)
+      val (multi, dm) = Dedup.fuzzyValuePairsMultiBlock(vocab, "text", Seq(key), 2, maxBlock)
+      val (sets, ds) = Dedup.fuzzyValuePairsMultiBlockSets(vocab, "text", Seq(setKey), 2, maxBlock)
+      assert(pairSet(one).nonEmpty == (maxBlock == 10L), label)
+      assert(pairSet(multi) == pairSet(one) && pairSet(sets) == pairSet(one), label)
+      assert(dm == Seq(d1) && ds == Seq(d1) && d1.capped == (maxBlock == 3L), label)
+      val (c1, e1) = Dedup.fuzzyCanonicalize(vocab, "text", key, 2, maxBlock)
+      val (cm, em) = Dedup.fuzzyCanonicalizeMultiBlock(vocab, "text", Seq(key), 2, maxBlock)
+      val (cs, es) = Dedup.fuzzyCanonicalizeMultiBlockSets(vocab, "text", Seq(setKey), 2, maxBlock)
+      assert(canon(cm) == canon(c1) && canon(cs) == canon(c1), label)
+      assert(em == Seq(e1) && es == Seq(e1), label)
+    }
   }
 
   test("fuzzyCanonicalize: transitive typo chain collapses to min, singletons self-map") {
@@ -633,6 +659,44 @@ class DedupSimilaritySpec extends AnyFunSuite {
         threshold = 0.5)
       .as[(Long, Long, Double)].collect().toSet
     assert(got == Set((1L, 2L, 2.0 / 3.0)))
+  }
+
+  test("byteNearDupPairs cap: fired pairs score over the de-boilerplated universe; a holding cap changes nothing") {
+    val r = new scala.util.Random(17)
+    def letters(len: Int, base: Int): String =
+      Array.fill(len)((base + r.nextInt(26)).toChar).mkString
+    // six payloads share a 48-byte uppercase header (every header-only
+    // window has df 6); lowercase bodies: 1~2 and 3~4 are one-byte
+    // edits of each other, 5 and 6 unrelated
+    val n = 8
+    val header = letters(48, 65)
+    val b1 = letters(80, 97); val b3 = letters(80, 97)
+    def edit(b: String): String = b.updated(40, if (b(40) == 'z') 'y' else 'z')
+    val bodies = Seq(1L -> b1, 2L -> edit(b1), 3L -> b3, 4L -> edit(b3),
+      5L -> letters(80, 97), 6L -> letters(80, 97))
+    def bin(rows: Seq[(Long, String)]) = rows.toDF("doc_id", "text")
+      .select($"doc_id", $"text".cast("binary").as("payload"))
+    def scored(p: org.apache.spark.sql.DataFrame) =
+      p.as[(Long, Long, Double)].collect().map(t => ((t._1, t._2), t._3)).toMap
+    val full = bin(bodies.map { case (i, b) => (i, header + b) })
+    def run(maxDf: Long) = Dedup.byteNearDupPairs(full, "doc_id", "payload",
+      n, numHashes = 16, rowsPerBand = 2, threshold = 0.7, maxDf = maxDf)
+    val (fired, fire) = run(3L)
+    assert(fire.capped && fire.hottestDf == 6)
+    // the capped universe is exactly the windows that touch a body
+    // byte: each payload from the header's last n-1 bytes on
+    val tail = header.takeRight(n - 1)
+    val exact = scored(Dedup.byteJaccardPairs(
+      bin(bodies.map { case (i, b) => (i, tail + b) }), "doc_id", "payload", n,
+      threshold = 0.7))
+    val got = scored(fired)
+    assert(got.keySet == Set((1L, 2L), (3L, 4L)), s"got $got")
+    assert(got.forall { case (p, j) => exact.get(p).contains(j) },
+      s"capped scores must equal the exact Jaccard over the capped universe: $got vs $exact")
+    // held at the hottest df: bit-identical to the uncapped run
+    val (held, hold) = run(6L)
+    assert(!hold.capped && hold.hottestDf == 6)
+    assert(scored(held) == scored(run(Long.MaxValue)._1))
   }
 
   test("byteNearDupPairsStratified: superset of the base banding, exact on fine pairs, identical when no doc is short") {
