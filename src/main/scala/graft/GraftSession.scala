@@ -75,16 +75,33 @@ object GraftSession {
       df.queryExecution.optimizedPlan.stats.sizeInBytes
         .min(BigInt(Long.MaxValue)).toLong)
 
-  /** Run `body` with `spark.sql.shuffle.partitions` set to `n`,
-    * restoring the previous value after — the scoped form every
-    * streaming query site uses so the scale-adaptive count never leaks
-    * into the batch plans around it (those have AQE coalescing and the
-    * session default). */
-  def withShufflePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
+  /** Run `body` with `spark.sql.shuffle.partitions` set to `n` — the
+    * scoped form every streaming query site uses so the scale-adaptive
+    * count never leaks into the batch plans around it (those have AQE
+    * coalescing and the session default). */
+  def withShufflePartitions[T](s: SparkSession, n: Int)(body: => T): T =
+    withConf(s, "spark.sql.shuffle.partitions" -> n.toString)(body)
+
+  /** The state-store provider the stateful streaming queries run on,
+    * as a `withConf` setting. */
+  private[graft] val RocksDBStateStore: (String, String) =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** Run `body` with each session conf key set to its value, then
+    * restore every key as it was — set keys to their previous value,
+    * keys that were unset before are unset again — also when `body`
+    * throws. A scoped setting never leaks into the plans that run
+    * after it in a long-lived session. */
+  private[graft] def withConf[T](s: SparkSession, settings: (String, String)*)(body: => T): T = {
+    val prev = settings.map { case (k, _) =>
+      k -> (if (s.sessionState.conf.contains(k)) Some(s.conf.get(k)) else None)
+    }
+    settings.foreach { case (k, v) => s.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None)    => s.conf.unset(k)
+    }
   }
 
   /** Local session for tests / verify / bench, with the engine's SQL

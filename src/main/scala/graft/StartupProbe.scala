@@ -81,28 +81,23 @@ object StartupProbe {
       val d = Scratch.dir("probe_b2"); writeFile(s"$d/src", 0); writeFile(s"$d/src", 1)
       timed(runOnce(s"$d/src", s"$d/ckpt", maxFiles = true))
     }
-    val statefulKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(statefulKey)
-    spark.conf.set(statefulKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val stateful = try (1 to reps).map { _ =>
-      val d = Scratch.dir("probe_tws"); writeFile(s"$d/src", 0)
-      timed {
-        val typed = spark.readStream.schema(schema).parquet(s"$d/src")
-          .select(col("id"), col("v")).as[(Long, String)]
-        val q = graft.streaming.KeyedState
-          .runningFoldTws[Long, (Long, String), Long](typed, _._1 % 8, 0L) {
-            case (n, _) => n + 1L
-          }
-          .map { case (k, n) => (k, n) }.toDF("k", "n")
-          .writeStream.outputMode("update")
-          .option("checkpointLocation", s"$d/ckpt").format("noop")
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+    val stateful = GraftSession.withConf(spark, GraftSession.RocksDBStateStore) {
+      (1 to reps).map { _ =>
+        val d = Scratch.dir("probe_tws"); writeFile(s"$d/src", 0)
+        timed {
+          val typed = spark.readStream.schema(schema).parquet(s"$d/src")
+            .select(col("id"), col("v")).as[(Long, String)]
+          val q = graft.streaming.KeyedState
+            .runningFoldTws[Long, (Long, String), Long](typed, _._1 % 8, 0L) {
+              case (n, _) => n + 1L
+            }
+            .map { case (k, n) => (k, n) }.toDF("k", "n")
+            .writeStream.outputMode("update")
+            .option("checkpointLocation", s"$d/ckpt").format("noop")
+            .trigger(Trigger.AvailableNow()).start()
+          q.awaitTermination()
+        }
       }
-    } finally prev match {
-      case Some(v) => spark.conf.set(statefulKey, v)
-      case None    => spark.conf.unset(statefulKey)
     }
 
     val mFresh = median(fresh); val mResume = median(resume)

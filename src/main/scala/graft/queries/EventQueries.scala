@@ -47,14 +47,10 @@ object EventQueries {
   private def runTws(s: SparkSession, dir: String, sinkPrefix: String,
                      outputMode: String)(
       build: DataFrame => DataFrame): DataFrame = {
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"
-    val prev = s.conf.getOption(providerKey)
-    val prevNanos = s.conf.getOption(nanosKey)
-    s.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      s.conf.set(nanosKey, "true")
+    // the legacy parquet flag is scoped too — leaking it would silently
+    // change every later nanos-timestamp parquet read in this session
+    graft.GraftSession.withConf(s, graft.GraftSession.RocksDBStateStore,
+        "spark.sql.legacy.parquet.nanosAsLong" -> "true") {
       val schema = s.read.parquet(s"$dir/events.parquet").schema
       // normalizeTs: the file-stream source yields whatever physical ts
       // type the generator wrote (int64-nanos or µs-NTZ); downstream
@@ -79,17 +75,6 @@ object EventQueries {
       }
       q.awaitTermination()
       s.table(sink)
-    } finally {
-      prev match {
-        case Some(v) => s.conf.set(providerKey, v)
-        case None    => s.conf.unset(providerKey)
-      }
-      // restore the legacy parquet flag too — leaking it would silently
-      // change every later nanos-timestamp parquet read in this session
-      prevNanos match {
-        case Some(v) => s.conf.set(nanosKey, v)
-        case None    => s.conf.unset(nanosKey)
-      }
     }
   }
 
@@ -453,11 +438,7 @@ object EventQueries {
     // — suppression never hid a change.
     "w14_cdc_suppress" -> ((s, dir) => {
       import s.implicits._
-      val providerKey = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(providerKey)
-      s.conf.set(providerKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
+      graft.GraftSession.withConf(s, graft.GraftSession.RocksDBStateStore) {
         val ev = Tables.load(s, dir, "events")
           .select(col("user_id"), col("event_id"), col("event_type"))
         val mx = ev.agg(max(col("event_id"))).head().getLong(0)
@@ -468,21 +449,9 @@ object EventQueries {
         val drop = (col("event_id") * 4 / lit(mx + 1)).cast(LongType)
         var emitted = 0L
         var written = 0L
-        // two starts, not four (the w15 shape): drops 0-2 land as
-        // single pinned-mtime files and one AvailableNow run at
-        // maxFilesPerTrigger=1 drains them as micro-batches 0-2; drop
-        // 3 lands after that run exits, so the second start is a
-        // genuine checkpoint resume — per-drop suppression semantics
-        // unchanged (batch k still IS drop k, enforced below)
-        // state partitions from the drop size, not the core count (the
-        // runTws rationale; the checkpoint pins the first start's value
-        // so both drains must derive it from the same input)
-        val nParts = graft.GraftSession.streamPartitionsFor(ev)
-        def drain(): Unit = graft.GraftSession.withShufflePartitions(s, nParts) {
-          val typed = s.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1").parquet(s"$root/src")
-            .as[(Long, Long, String)]
-          val q = graft.streaming.KeyedState.cdcWriteSetTws(typed)
+        graft.streaming.DropLoop.run(ev, (0 until 4).map(k => ev.filter(drop === k)),
+            root) { src =>
+          graft.streaming.KeyedState.cdcWriteSetTws(src.as[(Long, Long, String)])
             .toDF("user_id", "written_type", "changed")
             .writeStream.outputMode("update")
             .option("checkpointLocation", s"$root/ckpt")
@@ -498,15 +467,7 @@ object EventQueries {
             }
             .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
             .start()
-          q.awaitTermination()
         }
-        (0 until 3).foreach(k =>
-          graft.queries.LlmQueries.landDrop(ev.filter(drop === k), s"$root/src", k))
-        drain()
-        graft.queries.LlmQueries.requireDropBatches(s"$root/out", 3)
-        graft.queries.LlmQueries.landDrop(ev.filter(drop === 3), s"$root/src", 3)
-        drain()
-        graft.queries.LlmQueries.requireDropBatches(s"$root/out", 4)
         require(written < emitted,
           s"suppression must be non-vacuous: wrote $written of $emitted emissions")
         val out = s.read.option("basePath", s"$root/out").parquet(s"$root/out")
@@ -523,11 +484,9 @@ object EventQueries {
             .snapshotDiff(finalWritten, finalState, "user_id", col("t")).isEmpty,
           "the suppressed write set must reproduce the stream's final state exactly")
         out.orderBy(col("user_id"), col("ingest_batch"))
-      } finally prev match {
-        case Some(v) => s.conf.set(providerKey, v)
-        case None    => s.conf.unset(providerKey)
       }
     }),
+
 
     // W12 idempotent dedup: first event per (user_id, event_type) —
     // deterministic min-id representative rather than dropDuplicates'

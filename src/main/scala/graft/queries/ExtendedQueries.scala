@@ -697,11 +697,7 @@ object ExtendedQueries {
       val nRanges = 8
       val mBudget = 8192
       val minFreq = 8L
-      val providerKey = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(providerKey)
-      s.conf.set(providerKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val t = try {
+      val t = graft.GraftSession.withConf(s, graft.GraftSession.RocksDBStateStore) {
         val src = s.readStream.schema(docs.schema)
           .option("maxFilesPerTrigger", "1").parquet(s"$root/src")
         val typed = src.select(explode(gramArray(col("text"), 3)).as("s"))
@@ -730,11 +726,6 @@ object ExtendedQueries {
         }
         q.awaitTermination()
         s.table(sink)
-      } finally {
-        prev match {
-          case Some(v) => s.conf.set(providerKey, v)
-          case None    => s.conf.unset(providerKey)
-        }
       }
       // final summary per range = the monotone-max n_seen emission
       // (update mode emits the running summary once per touched range

@@ -233,11 +233,16 @@ object GraftLog {
   def baseOffset(dir: String, p: Int): Long = currentLog(dir, p)._1
 
   /** Current end offsets (base + line counts) per partition — the high
-    * watermark (pspf/log/interfaces.py high-watermark surface).
-    * Resolve+count retries on NoSuchFileException like the partition
-    * reader does: a concurrent trim can rename the generation away
-    * between the cache hit and the open — re-resolving finds the new
-    * generation (the race window is the rename itself). */
+    * watermark (pspf/log/interfaces.py high-watermark surface). Only
+    * newline-TERMINATED lines count: an append larger than the
+    * writer's buffer becomes visible in pieces, and a trigger planned
+    * over a half-written tail line would read it as a tombstone and
+    * consume its offset — the record would be lost once its newline
+    * lands. Resolve+count retries on NoSuchFileException like the
+    * partition reader does: a concurrent trim can rename the
+    * generation away between the cache hit and the open —
+    * re-resolving finds the new generation (the race window is the
+    * rename itself). */
   def latestOffsets(dir: String): Map[Int, Long] = {
     val root = Paths.get(dir)
     if (!Files.isDirectory(root)) return Map.empty
@@ -250,14 +255,8 @@ object GraftLog {
           var out = -1L
           while (out < 0) {
             val (base, f) = currentLog(dir, part)
-            try out = base + (if (Files.exists(f))
-              scala.util.Using.resource(Files.lines(f))(_.count()) else 0L)
+            try out = base + (if (Files.exists(f)) terminatedLines(f) else 0L)
             catch {
-              case e: java.io.UncheckedIOException
-                if e.getCause.isInstanceOf[java.nio.file.NoSuchFileException] =>
-                logCache.remove((dir, part))
-                attempt += 1
-                if (attempt > 5) throw e
               case e: java.nio.file.NoSuchFileException =>
                 logCache.remove((dir, part))
                 attempt += 1
@@ -268,6 +267,21 @@ object GraftLog {
         }.toMap
     }
   }
+
+  /** Number of `'\n'`-terminated lines in `f`, streamed through a
+    * fixed-size buffer (a partition log is never read whole). */
+  private def terminatedLines(f: Path): Long =
+    scala.util.Using.resource(Files.newInputStream(f)) { in =>
+      val buf = new Array[Byte](64 * 1024)
+      var n = 0L
+      var r = in.read(buf)
+      while (r >= 0) {
+        var i = 0
+        while (i < r) { if (buf(i) == '\n') n += 1; i += 1 }
+        r = in.read(buf)
+      }
+      n
+    }
 
   /** Retention trim (reference: LocalLog age-based cleanup,
     * pspf/log/local_log.py:254-266; Redis XTRIM): physically drop each

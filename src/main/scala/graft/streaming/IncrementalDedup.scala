@@ -182,8 +182,8 @@ object IncrementalDedup {
     * drop, or (b) land each drop as exactly ONE file with ascending
     * mtimes and set `maxFilesPerTrigger=1`, so a single AvailableNow
     * start drains several pending drops as one micro-batch each —
-    * paying the fixed per-start cost once (the graded loops run (b):
-    * ~70 % of their sf0.1 wall time was per-start overhead). Dedup
+    * paying the fixed per-start cost once. `DropLoop` is the one
+    * implementation of shape (b); every graded loop runs on it. Dedup
     * semantics stay correct even if a drop splits (a split drop's
     * later batches read its earlier batches as seen corpus —
     * strictly-before still holds), but batch ids then stop being drop
@@ -215,6 +215,22 @@ object IncrementalDedup {
           resultDir: String, checkpointDir: String,
           trigger: Trigger = Trigger.AvailableNow(),
           compactEvery: Int = 0): StreamingQuery =
+    startLoop(source, checkpointDir, trigger, compactEvery, bandStoreDir,
+        "ingest-loop.recover") { (b, id) =>
+      ingestBatch(b, id, cfg, bandStoreDir, resultDir)
+    }
+
+  /** The one store-loop core under `run`, `runWinnow` and
+    * `runDecontaminate`: each micro-batch runs `turn`, and with
+    * `compactEvery` > 0 the turn is bracketed by the in-loop store
+    * maintenance `run` documents — first the lease-guarded recovery of
+    * a prior turn's crashed compaction stage in `storeDir` (under lease
+    * `lease`), after the turn the fold of every `compactEvery`-th
+    * batch. */
+  private def startLoop(source: DataFrame, checkpointDir: String, trigger: Trigger,
+                        compactEvery: Int = 0, storeDir: String = "",
+                        lease: String = "")(
+      turn: (DataFrame, Long) => Unit): StreamingQuery =
     source.writeStream
       .foreachBatch { (b: DataFrame, id: Long) =>
         if (compactEvery > 0) {
@@ -224,20 +240,18 @@ object IncrementalDedup {
           // loop fails loudly at acquire instead of discarding the
           // compactor's live stage as a "crash". The clean-store case
           // (every turn, in steady state) stays listing-only.
-          val fs = new Path(bandStoreDir)
-            .getFileSystem(b.sparkSession.sessionState.newHadoopConf())
-          val root = new Path(bandStoreDir)
+          val root = new Path(storeDir)
+          val fs = root.getFileSystem(b.sparkSession.sessionState.newHadoopConf())
           val hasStage = fs.exists(root) && fs.listStatus(root).exists(s =>
             s.isDirectory && isStageName(s.getPath.getName))
           if (hasStage)
-            graft.operators.StoreLease.withLease(b.sparkSession,
-                bandStoreDir, "ingest-loop.recover") { _ =>
-              recoverPendingCompaction(fs, bandStoreDir)
+            graft.operators.StoreLease.withLease(b.sparkSession, storeDir, lease) { _ =>
+              recoverPendingCompaction(fs, storeDir)
             }
         }
-        ingestBatch(b, id, cfg, bandStoreDir, resultDir)
+        turn(b, id)
         if (compactEvery > 0 && id > 0 && id % compactEvery == 0)
-          compactBandStore(b.sparkSession, bandStoreDir, upToBatch = id): Unit
+          compactBandStore(b.sparkSession, storeDir, upToBatch = id): Unit
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
@@ -336,27 +350,10 @@ object IncrementalDedup {
                 resultDir: String, checkpointDir: String,
                 trigger: Trigger = Trigger.AvailableNow(),
                 compactEvery: Int = 0): StreamingQuery =
-    source.writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        if (compactEvery > 0) {
-          val fs = new Path(fpStoreDir)
-            .getFileSystem(b.sparkSession.sessionState.newHadoopConf())
-          val root = new Path(fpStoreDir)
-          val hasStage = fs.exists(root) && fs.listStatus(root).exists(s =>
-            s.isDirectory && isStageName(s.getPath.getName))
-          if (hasStage)
-            graft.operators.StoreLease.withLease(b.sparkSession,
-                fpStoreDir, "winnow-loop.recover") { _ =>
-              recoverPendingCompaction(fs, fpStoreDir)
-            }
-        }
-        ingestWinnowBatch(b, id, cfg, fpStoreDir, resultDir)
-        if (compactEvery > 0 && id > 0 && id % compactEvery == 0)
-          compactBandStore(b.sparkSession, fpStoreDir, upToBatch = id): Unit
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    startLoop(source, checkpointDir, trigger, compactEvery, fpStoreDir,
+        "winnow-loop.recover") { (b, id) =>
+      ingestWinnowBatch(b, id, cfg, fpStoreDir, resultDir)
+    }
 
   // ------------------------------------------------------------------
   // Decontamination ingest guard — the route-at-ingest form of the
@@ -434,13 +431,9 @@ object IncrementalDedup {
                        evalFpDir: String, resultDir: String, leakDir: String,
                        checkpointDir: String,
                        trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    source.writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        ingestDecontaminateBatch(b, id, cfg, evalFpDir, resultDir, leakDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    startLoop(source, checkpointDir, trigger) { (b, id) =>
+      ingestDecontaminateBatch(b, id, cfg, evalFpDir, resultDir, leakDir)
+    }
 
   /** All per-document verdicts written so far, with their
     * `ingest_batch` partition column. Reads only partitions whose

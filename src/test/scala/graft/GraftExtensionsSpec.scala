@@ -20,10 +20,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import graft.streaming.KeyedState
     implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    GraftSession.withConf(spark, GraftSession.RocksDBStateStore) {
       val in = MemoryStream[(String, Long)]
       val q = KeyedState.runningFold[String, (String, Long), Long](in.toDS(), _._1, 0L)(
         (s, v) => s + v._2).toDF("key", "total")
@@ -36,9 +33,6 @@ class GraftExtensionsSpec extends AnyFunSuite {
           .collect().map(r => (r.getString(0), r.getLong(1))).toMap
         assert(got == Map("a" -> 7L, "b" -> 3L))
       } finally q.stop()
-    } finally prev match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 }

@@ -176,19 +176,47 @@ class GraftLogSpec extends AnyFunSuite {
   }
 
   test("torn-tail recovery: a partial append is sealed as a tombstone, later records read cleanly") {
-    val dir = Files.createTempDirectory("graftlog_torn").toString + "/t"
+    val root = Files.createTempDirectory("graftlog_torn").toString
+    val dir = s"$root/t"
+    val log = java.nio.file.Paths.get(dir, "p=0", "log.jsonl")
+    def appendBytes(b: String): Unit =
+      Files.write(log, b.getBytes, java.nio.file.StandardOpenOption.APPEND)
+    val seen = new ConcurrentLinkedQueue[String]()
+    def drain(): Unit =
+      spark.readStream.format("graftlog").load(dir)
+        .writeStream
+        .option("checkpointLocation", s"$root/ckpt")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+          b.select("key").collect().foreach(r => seen.add(r.getString(0)))
+        }
+        .start().awaitTermination()
     GraftLog.append(dir, 1, "k1", """{"n":1}""")
-    // simulate a producer crash mid-append: partial line, no newline
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "p=0", "log.jsonl"),
-      """{"id":"999-0","key":"k2","val""".getBytes,
-      java.nio.file.StandardOpenOption.APPEND)
+    // simulate a producer crash mid-append: partial line, no newline —
+    // not an offset until something terminates it
+    appendBytes("""{"id":"999-0","key":"k2","val""")
+    assert(GraftLog.latestOffsets(dir) == Map(0 -> 1L))
+    drain()
     // next append seals the torn line and lands intact
     GraftLog.append(dir, 1, "k3", """{"n":3}""")
+    assert(GraftLog.latestOffsets(dir) == Map(0 -> 3L))
+    // an append still in flight (visible in pieces past the writer's
+    // buffer): a micro-batch planned over the partial line must not
+    // consume its offset, and delivers the record once its newline lands
+    GraftLog.append(s"$root/side", 1, "k4", """{"n":4}""")
+    val k4 = new String(Files.readAllBytes(
+      java.nio.file.Paths.get(root, "side", "p=0", "log.jsonl")))
+    appendBytes(k4.take(12))
+    assert(GraftLog.latestOffsets(dir) == Map(0 -> 3L))
+    drain()
+    appendBytes(k4.drop(12))
+    drain()
+    assert(seen.toArray.toSeq == Seq("k1", "k3", "k4"))
     val rows = spark.read.format("graftlog").load(dir).collect()
     // tombstone line occupies offset 1 but emits no row
-    assert(rows.map(_.getAs[String]("key")).toSet == Set("k1", "k3"))
-    assert(rows.map(_.getAs[Long]("offset")).toSet == Set(0L, 2L))
-    assert(GraftLog.latestOffsets(dir) == Map(0 -> 3L))
+    assert(rows.map(_.getAs[String]("key")).toSet == Set("k1", "k3", "k4"))
+    assert(rows.map(_.getAs[Long]("offset")).toSet == Set(0L, 2L, 3L))
+    assert(GraftLog.latestOffsets(dir) == Map(0 -> 4L))
   }
 
   test("maxRecordsPerTrigger paces consumption in capped batches without loss (reference batch_size)") {

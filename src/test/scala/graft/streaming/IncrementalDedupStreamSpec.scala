@@ -2,7 +2,9 @@ package graft.streaming
 
 import java.nio.file.{Files, Path, Paths}
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -107,14 +109,8 @@ class IncrementalDedupStreamSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft_incr_order").toString
     val src = s"$root/src"
     val schema = Seq((0L, "")).toDF("doc_id", "text").schema
-    def writeDrop(k: Int): Unit = {
-      Seq((k * 10L, s"drop$k a b c d e f")).toDF("doc_id", "text")
-        .coalesce(1).write.mode("append").parquet(src)
-      new java.io.File(src).listFiles()
-        .filter(f => f.isFile && f.getName.endsWith(".parquet") &&
-          f.lastModified() > 1000L * 1000)
-        .foreach(f => assert(f.setLastModified(1000L * (k + 1))))
-    }
+    def writeDrop(k: Int): Unit =
+      DropLoop.landDrop(Seq((k * 10L, s"drop$k a b c d e f")).toDF("doc_id", "text"), src, k)
     Seq(2, 0, 1).foreach(writeDrop)
     IncrementalDedup.run(
       spark.readStream.schema(schema)
@@ -129,65 +125,65 @@ class IncrementalDedupStreamSpec extends AnyFunSuite {
   }
 
   test("two-start loops: the checkpoint-RESUMED leg reports zero state rows by the engine's own counter") {
-    // The graded crawl loops run the two-start shape: drops 0..n-2
-    // drain under ONE AvailableNow start at maxFilesPerTrigger=1, the
-    // last drop under a genuine checkpoint-resumed second start. The
-    // per-drop rehearsal specs assert stateOperators==0 on every
+    // The graded crawl loops run the two-start DropLoop shape: drops
+    // 0..n-2 drain under ONE AvailableNow start at maxFilesPerTrigger=1,
+    // the last drop under a genuine checkpoint-resumed second start.
+    // The per-drop rehearsal specs assert stateOperators==0 on every
     // one-drop start; this pins the SAME bound on the resumed leg of
     // the exact two-start shape (and on the multi-batch first leg),
     // for each loop family: a resume that rebuilt state from the
-    // checkpoint would surface rows exactly here.
-    def assertZeroState(q: org.apache.spark.sql.streaming.StreamingQuery,
-                        leg: String): Unit =
+    // checkpoint would surface rows exactly here. The resume must also
+    // be invisible in the output: the two-start results equal one
+    // start over all four drops, row for row.
+    def assertZeroState(q: StreamingQuery, leg: String): Unit =
       q.recentProgress.foreach { p =>
         assert(p.stateOperators.forall(_.numRowsTotal == 0L),
           s"$leg leg reported state-store rows: " +
             p.stateOperators.map(_.numRowsTotal).mkString(" "))
       }
-    def pinDrop(src: String, k: Int, rows: (Long, String)*): Unit = {
-      rows.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(src)
-      new java.io.File(src).listFiles()
-        .filter(f => f.isFile && f.getName.endsWith(".parquet") &&
-          f.lastModified() > 1000L * 1000)
-        .foreach(f => assert(f.setLastModified(1000L * (k + 1))))
-    }
     val run16 = (1 to 16).map(i => s"r$i").mkString(" ")
-    val docs = Seq(
-      0 -> Seq(1L -> s"a1 a2 $run16 a3"),
-      1 -> Seq(10L -> s"b1 $run16 b2"),
-      2 -> Seq(20L -> s"c1 c2 $run16"))
-    val last = Seq(30L -> s"d1 $run16 d2")
-    val schema = Seq((0L, "")).toDF("doc_id", "text").schema
-    def twoStart(start: String => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-      val root = Files.createTempDirectory("graft_twostart").toString
-      docs.foreach { case (k, rows) => pinDrop(s"$root/src", k, rows: _*) }
-      val first = start(root)
-      first.awaitTermination()
+    val drops = Seq(
+      1L -> s"a1 a2 $run16 a3",
+      10L -> s"b1 $run16 b2",
+      20L -> s"c1 c2 $run16",
+      30L -> s"d1 $run16 d2").map(Seq(_).toDF("doc_id", "text"))
+    val input = drops.reduce(_ unionByName _)
+    def results(root: String): Seq[String] =
+      IncrementalDedup.results(spark, s"$root/out").collect().map(_.toString).toSeq.sorted
+    def twoStartEqualsOneStart(start: String => DataFrame => StreamingQuery): Unit = {
+      val two = Files.createTempDirectory("graft_twostart").toString
+      val legs = Seq.newBuilder[StreamingQuery]
+      DropLoop.run(input, drops, two) { src =>
+        val q = start(two)(src); legs += q; q
+      }
+      val Seq(first, resumed) = legs.result()
       assertZeroState(first, "first (multi-batch)")
-      pinDrop(s"$root/src", 3, last: _*)
-      val resumed = start(root)
-      resumed.awaitTermination()
       assert(resumed.recentProgress.nonEmpty, "the resumed leg must have run a batch")
       assertZeroState(resumed, "resumed")
+      val one = Files.createTempDirectory("graft_onestart").toString
+      drops.zipWithIndex.foreach { case (d, k) => DropLoop.landDrop(d, s"$one/src", k) }
+      start(one)(spark.readStream.schema(input.schema)
+        .option("maxFilesPerTrigger", "1").parquet(s"$one/src")).awaitTermination()
+      DropLoop.requireDropBatches(s"$one/out", 4)
+      val got = results(two)
+      assert(got.exists(_.endsWith(",3]")), s"the resumed leg's drop wrote no rows: $got")
+      assert(got == results(one), "the two-start results differ from one start's")
     }
-    def source(root: String) =
-      spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$root/src")
     // dedup loop
-    twoStart(root => IncrementalDedup.run(source(root), cfg,
+    twoStartEqualsOneStart(root => IncrementalDedup.run(_, cfg,
       s"$root/bands", s"$root/out", s"$root/ckpt"))
     // winnow loop
-    twoStart(root => IncrementalDedup.runWinnow(source(root),
+    twoStartEqualsOneStart(root => IncrementalDedup.runWinnow(_,
       IncrementalDedup.WinnowConfig("doc_id", "text", k = 3, w = 2, minShared = 2),
       s"$root/fps", s"$root/out", s"$root/ckpt"))
     // decontamination guard
-    twoStart { root =>
+    twoStartEqualsOneStart { root =>
       val dcfg = IncrementalDedup.DecontConfig("doc_id", "text",
         k = 3, w = 2, minShared = 2)
       IncrementalDedup.buildEvalFpStore(
         Seq(9000L -> s"x1 $run16 x2").toDF("doc_id", "text"), dcfg,
         s"$root/evalfp")
-      IncrementalDedup.runDecontaminate(source(root), dcfg,
+      IncrementalDedup.runDecontaminate(_, dcfg,
         s"$root/evalfp", s"$root/out", s"$root/leak", s"$root/ckpt")
     }
   }

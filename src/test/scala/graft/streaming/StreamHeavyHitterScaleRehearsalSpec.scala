@@ -56,12 +56,8 @@ class StreamHeavyHitterScaleRehearsalSpec extends AnyFunSuite {
     // make that test's exact reclaim counts order-dependent
     val sink = "hh_rehearsal_" +
       java.util.UUID.randomUUID().toString.replace("-", "")
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     var progresses = Array.empty[org.apache.spark.sql.streaming.StreamingQueryProgress]
-    val t = try {
+    val t = graft.GraftSession.withConf(spark, graft.GraftSession.RocksDBStateStore) {
       val src = spark.readStream.schema(dropDf(0).schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$root/src")
       val typed = src
@@ -82,11 +78,6 @@ class StreamHeavyHitterScaleRehearsalSpec extends AnyFunSuite {
       q.awaitTermination()
       progresses = q.recentProgress
       spark.table(sink)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None    => spark.conf.unset(providerKey)
-      }
     }
 
     // (a) every emission across all 16 batches stayed within the budget

@@ -9,19 +9,8 @@ class TransformWithStateSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private val providerKey = "spark.sql.streaming.stateStore.providerClass"
-  private val rocksdb =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  private def withRocksDb[T](body: => T): T = {
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey, rocksdb)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None    => spark.conf.unset(providerKey)
-    }
-  }
+  private def withRocksDb[T](body: => T): T =
+    graft.GraftSession.withConf(spark, graft.GraftSession.RocksDBStateStore)(body)
 
   test("transformWithState running fold: state persists across triggers (reference keyed sum)") {
     withRocksDb {
