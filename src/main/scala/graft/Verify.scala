@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import org.apache.commons.io.FileUtils
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -15,16 +16,21 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_ONLY=q1,l28 → dump only that subset (local iteration;
-    // the driver never sets it). Unknown names rejected like Bench.
+    // SPARK_GRAFT_ONLY=q1,l28 → dump only that subset (local iteration).
+    // Unset or blank dumps everything, and unknown names are rejected,
+    // both like Bench.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+      .filter(_.nonEmpty)
     only.foreach { names =>
       val unknown = names -- SparkEntry.queries.keySet
       require(unknown.isEmpty, s"SPARK_GRAFT_ONLY unknown queries: ${unknown.mkString(",")}")
     }
     val selected = only.fold(SparkEntry.queries)(n => SparkEntry.queries.filter(kv => n(kv._1)))
     selected.foreach { case (name, fn) =>
+      // a query that throws before its write must leave NO output: a
+      // stale dump from an earlier run would otherwise be graded
+      FileUtils.deleteDirectory(new java.io.File(s"$outDir/$name"))
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -768,6 +768,11 @@ object ExtendedQueries {
     })
   )
 
+  /** x30/x31: every 3-shingle occurrence of the corpus (a bag, no doc
+    * key), the heavy-hitter count's input. */
+  private val heavyShingleCtes: String =
+    LlmQueries.shingleCtes("d", "sh", "documents", n = 3, key = "", distinct = false)
+
   def oracleSql: Map[String, String] = Map(
     "x1_cube" ->
       """SELECT COALESCE(l_returnflag, 'ALL') AS returnflag,
@@ -887,19 +892,13 @@ object ExtendedQueries {
     // x30: the sketch prunes candidates but never touches the counts —
     // the contract IS "exact GROUP BY ... HAVING", so the oracle is one
     "x30_heavy_hitters" ->
-      """WITH d AS (SELECT regexp_extract_all(text, '\S+') AS ws FROM documents),
-        |sh AS (SELECT ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-        |       FROM d, UNNEST(generate_series(1, greatest(len(ws)-2, 0))) t(i)
-        |       WHERE len(ws) >= 3)
+      s"""WITH $heavyShingleCtes
         |SELECT s, CAST(COUNT(*) AS BIGINT) AS freq
         |FROM sh GROUP BY s HAVING COUNT(*) >= 8 ORDER BY s""".stripMargin,
     // x31: same contract at the exact-path threshold — either dispatch
     // direction must reproduce the plain HAVING semantics
     "x31_heavy_exact_hold" ->
-      """WITH d AS (SELECT regexp_extract_all(text, '\S+') AS ws FROM documents),
-        |sh AS (SELECT ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-        |       FROM d, UNNEST(generate_series(1, greatest(len(ws)-2, 0))) t(i)
-        |       WHERE len(ws) >= 3)
+      s"""WITH $heavyShingleCtes
         |SELECT s, CAST(COUNT(*) AS BIGINT) AS freq
         |FROM sh GROUP BY s HAVING COUNT(*) >= 2 ORDER BY s""".stripMargin,
     // x12: DuckDB full-scans the original table under the same

@@ -2514,54 +2514,498 @@ object LlmQueries {
        |$finalSelect""".stripMargin
   }
 
+  // ---- Oracle building blocks. Each shared spec decision has ONE home
+  // here; an oracle restating a decision calls its helper. Helpers
+  // return comma-separated CTEs (no leading WITH) or a SELECT, and take
+  // the CTE names, the source relation and the spec's own constants.
+
+  private def keyCols(key: String): String = if (key.isEmpty) "" else s"$key, "
+
+  /** Whitespace tokenization (`\S+` runs, the engine's token split):
+    * `name` = `src`'s `key` column (none when "") and its token array
+    * `ws`. */
+  private def tokensCte(name: String, src: String, key: String = "doc_id"): String =
+    s"$name AS (SELECT ${keyCols(key)}regexp_extract_all(text, '\\S+') AS ws FROM $src)"
+
+  /** Word n-shingles (`Dedup.shingleSet`): `toks` tokenizes `src`, `sh`
+    * holds every run of n adjacent tokens joined by single spaces —
+    * docs under n tokens emit none. `distinct` makes `sh` the per-doc
+    * shingle SET; `key` as in `tokensCte`. */
+  private[queries] def shingleCtes(toks: String, sh: String, src: String, n: Int,
+                                   key: String = "doc_id",
+                                   distinct: Boolean = true): String = {
+    val gram = (0 until n).map(j => if (j == 0) "ws[i]" else s"ws[i+$j]")
+      .mkString(" || ' ' || ")
+    s"""${tokensCte(toks, src, key)},
+       |$sh AS (SELECT ${if (distinct) "DISTINCT " else ""}${keyCols(key)}$gram AS s
+       |       FROM $toks, UNNEST(generate_series(1, greatest(len(ws)-${n - 1}, 0))) t(i)
+       |       WHERE len(ws) >= $n)""".stripMargin
+  }
+
+  /** Per-doc set size (`as`) of `src` — the Jaccard/containment
+    * denominators' input. */
+  private def setSizeCte(src: String, as: String = "n_sh"): String =
+    s"cnt AS (SELECT doc_id, COUNT(*) AS $as FROM $src GROUP BY 1)"
+
+  /** Shared-shingle count `i` per pair: over every pair of `sh` with
+    * ordered ids (`Dedup.ngramJaccardPairs`' bucket self-join). */
+  private def allPairsInterCte(name: String, sh: String): String =
+    s"""$name AS (SELECT a.doc_id AS da, b.doc_id AS db, COUNT(*) AS i
+       |          FROM $sh a JOIN $sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2)""".stripMargin
+
+  /** Shared-shingle count `i` per LSH candidate pair of `cand`
+    * (`Dedup.exactVerifyPairs`' re-shingled verification). */
+  private def candInterCte(name: String): String =
+    s"""$name AS (SELECT c.da, c.db, COUNT(*) AS i
+       |          FROM cand c
+       |          JOIN sh a ON a.doc_id = c.da
+       |          JOIN sh b ON b.doc_id = c.db AND b.s = a.s
+       |          GROUP BY 1, 2)""".stripMargin
+
+  private val jaccardOf = "CAST(i AS DOUBLE)/(ca.n_sh + cb.n_sh - i)"
+
+  /** Verified Jaccard (`Dedup.exactJaccard`): the pairs of `inter`
+    * whose |A∩B| / (|A| + |B| - |A∩B|) over the `cnt` set sizes
+    * STRICTLY exceeds `threshold`. */
+  private def jaccardAbove(inter: String, threshold: Double,
+                           cols: String = "da, db"): String =
+    s"""SELECT $cols FROM $inter JOIN cnt ca ON ca.doc_id = da JOIN cnt cb ON cb.doc_id = db
+       |WHERE $jaccardOf > $threshold""".stripMargin
+
+  /** The graded Jaccard pair output: `jaccardAbove` with the score. */
+  private def jaccardPairsSql(inter: String, threshold: Double): String =
+    jaccardAbove(inter, threshold, s"da, db, $jaccardOf AS jaccard") +
+      "\nORDER BY da, db"
+
+  /** The minhash seed family and banding (`Dedup.bandFrame`), restated
+    * here independently of the engine's constant arrays: hash_i =
+    * (A_i·h1 + B_i·h2) mod p over the two 40-bit md5 halves of each
+    * shingle `s` of `sh`, p = the first prime past 2^40; `mh` keeps the
+    * per-(key, seed) min, `bands` as in `bandsCte`. */
+  private def minhashCtes(key: String, numHashes: Int, rowsPerBand: Int): String = {
+    val a = Seq(40503, 34283, 49843, 10193, 5717, 9539, 62989, 55021,
+      14939, 58057, 23371, 60943, 3571, 38833, 50993, 17389)
+    val b = Seq(27179, 43691, 20117, 51347, 7129, 63577, 31769, 44201,
+      29527, 12641, 54679, 8363, 47507, 64151, 21841, 36653)
+    def coef(cs: Seq[Int]) = cs.take(numHashes).mkString("[", ",", "]")
+    s"""mh AS (SELECT $key, seed,
+       |         MIN((${coef(a)}[seed+1] * CAST('0x' || substr(md5(s), 1, 10) AS BIGINT) +
+       |              ${coef(b)}[seed+1] * CAST('0x' || substr(md5(s), 11, 10) AS BIGINT))
+       |             % 1099511627791) AS mh
+       |       FROM sh, UNNEST(generate_series(0, ${numHashes - 1})) t(seed) GROUP BY 1, 2),
+       |${bandsCte("bands", key, numHashes, rowsPerBand)}""".stripMargin
+  }
+
+  /** Strided banding: numHashes / rowsPerBand bands (band = seed %
+    * bands), each signed by its sorted minhash values. */
+  private def bandsCte(name: String, key: String, numHashes: Int, rowsPerBand: Int,
+                       from: String = "mh"): String =
+    s"""$name AS (SELECT $key, seed % ${numHashes / rowsPerBand} AS band,
+       |            array_to_string(list_sort(list(mh)), '|') AS bsig
+       |          FROM $from GROUP BY 1, 2)""".stripMargin
+
+  /** Band-bucket collision (`Dedup.bandPairJoin`): two rows of `bands`
+    * collide when any band's signature matches. */
+  private def bandJoin(bands: String): String =
+    s"FROM $bands x JOIN $bands y ON x.band = y.band AND x.bsig = y.bsig"
+
+  /** LSH candidate pairs: distinct colliding pairs, ordered `key`s. */
+  private def bandPairsSql(key: String = "doc_id", a: String = "da", b: String = "db",
+                           bands: String = "bands"): String =
+    s"SELECT DISTINCT x.$key AS $a, y.$key AS $b\n${bandJoin(bands)} AND x.$key < y.$key"
+
+  /** New-vs-seen band probe (`IncrementalDedup`): per doc `x`, its
+    * first band match and (when `counted`) match count among the docs
+    * `y` that `where` admits as already seen. */
+  private def bandMatchCte(where: String, counted: Boolean): String = {
+    val n = if (counted) ",\n        COUNT(DISTINCT y.doc_id) AS n_matches" else ""
+    s"""m AS (SELECT x.doc_id AS did, MIN(y.doc_id) AS first_match$n
+       |      ${bandJoin("bands")}
+       |      WHERE $where
+       |      GROUP BY 1)""".stripMargin
+  }
+
+  /** The crawl-drop loop's accumulated verdicts (`DropLoop` over
+    * `IncrementalDedup.run`): every doc of `corpus` with its drop
+    * (doc_id % 4), probing the bands of ALL strictly-earlier drops. */
+  private def dropVerdictSql(corpus: String, counted: Boolean): String = {
+    val n = if (counted) "\n  CAST(COALESCE(m.n_matches, 0) AS BIGINT) AS n_matches," else ""
+    s"""${bandMatchCte("(y.doc_id % 4) < (x.doc_id % 4)", counted)}
+       |SELECT n.doc_id, CAST(n.doc_id % 4 AS BIGINT) AS ingest_batch,
+       |  m.first_match,$n
+       |  m.first_match IS NOT NULL AS is_dup
+       |FROM $corpus n
+       |LEFT JOIN m ON m.did = n.doc_id
+       |ORDER BY doc_id""".stripMargin
+  }
+
+  /** `Dedup.lshVerifiedPairs` at the graded spec (3-shingles, 8
+    * hashes in bands of 2) over `src`: shingle sets `sh`, set sizes
+    * `cnt`, band candidates `cand` and their intersections `inter`. */
+  private def lshVerifyCtes(src: String): String =
+    s"""${shingleCtes("d", "sh", src, n = 3)},
+       |${setSizeCte("sh")},
+       |${minhashCtes("doc_id", numHashes = 8, rowsPerBand = 2)},
+       |cand AS (${bandPairsSql()}),
+       |${candInterCte("inter")}""".stripMargin
+
+  /** The LSH recall audit's chain over `src` (l52/l63): exact Jaccard
+    * > 0.8 over all pairs (`exact`) against the graded LSH spec's
+    * verified pairs (`lsh`). */
+  private def lshRecallCtes(src: String): String =
+    s"""${shingleCtes("d", "sh", src, n = 3)},
+       |${setSizeCte("sh")},
+       |${allPairsInterCte("einter", "sh")},
+       |exact AS (${jaccardAbove("einter", 0.8)}),
+       |${minhashCtes("doc_id", numHashes = 8, rowsPerBand = 2)},
+       |cand AS (${bandPairsSql()}),
+       |${candInterCte("vinter")},
+       |lsh AS (${jaccardAbove("vinter", 0.8)})""".stripMargin
+
+  /** Shingle decontamination (`Decontaminate.overlapStats`): the
+    * `train` docs' 3-shingle sets `tsh` with sizes `cnt`, the `ev`
+    * corpus's anonymous shingle set `esh`, and per train doc the count
+    * of its shingles the eval set holds (`hits`). */
+  private val shingleOverlapCtes: String =
+    s"""${shingleCtes("td", "tsh", "train", n = 3)},
+       |${shingleCtes("ed", "esh", "ev", n = 3, key = "")},
+       |${setSizeCte("tsh")},
+       |hits AS (SELECT t.doc_id, COUNT(*) AS n_overlap FROM tsh t JOIN esh e ON t.s = e.s GROUP BY 1)""".stripMargin
+
+  /** The shingle decontamination verdicts (l28; l47 at its own split
+    * and threshold): every doc_id % `evalMod` = 0 doc is eval, each
+    * train doc flagged when at least `threshold` of its shingles occur
+    * in the eval set. */
+  private def shingleDecontamSql(evalMod: Int, threshold: Double): String =
+    s"""WITH train AS (SELECT doc_id, text FROM documents WHERE doc_id % $evalMod <> 0),
+       |ev AS (SELECT text FROM documents WHERE doc_id % $evalMod = 0),
+       |$shingleOverlapCtes,
+       |frac AS (SELECT tr.doc_id,
+       |    COALESCE(cnt.n_sh, 0) AS n_sh,
+       |    COALESCE(hits.n_overlap, 0) AS n_overlap,
+       |    $overlapFrac
+       |  FROM train tr LEFT JOIN cnt ON cnt.doc_id = tr.doc_id
+       |  LEFT JOIN hits ON hits.doc_id = tr.doc_id)
+       |SELECT doc_id, n_sh, n_overlap, overlap_frac,
+       |  (overlap_frac >= $threshold AND n_sh > 0) AS contaminated
+       |FROM frac ORDER BY doc_id""".stripMargin
+
+  /** A train doc's overlapping share of its shingles; 0.0 when it has
+    * none. */
+  private val overlapFrac: String =
+    """CASE WHEN COALESCE(cnt.n_sh, 0) = 0 THEN 0.0
+      |         ELSE CAST(COALESCE(hits.n_overlap, 0) AS DOUBLE) / cnt.n_sh END AS overlap_frac""".stripMargin
+
+  /** Min-label connected components (`Dedup.connectedComponentsMinLabel`)
+    * as a recursive CTE (the enclosing WITH must be RECURSIVE): the
+    * (a, b) columns of `pairs` as undirected `edges`, `reach` every
+    * node's transitive closure, and `label` (when given) each node's
+    * min reachable id `rep`. */
+  private def closureCtes(a: String, b: String,
+                          label: Option[String] = Some("lbl")): String =
+    s"""edges AS (SELECT $a AS x, $b AS y FROM pairs
+       |          UNION SELECT $b, $a FROM pairs),
+       |nodes AS (SELECT DISTINCT x AS id FROM edges),
+       |reach AS (SELECT id, id AS r FROM nodes
+       |          UNION
+       |          SELECT e.x, reach.r FROM edges e JOIN reach ON reach.id = e.y)""".stripMargin +
+      label.fold("")(l => s",\n$l AS (SELECT id, MIN(r) AS rep FROM reach GROUP BY id)")
+
+  /** Winnowing (`Dedup.winnowFingerprints` / `winnowSpans`): `toks`
+    * tokenizes `src`; `g` hashes every k-token gram at its 0-based
+    * `pos` with the minhash family's 40-bit md5 prefix of the
+    * space-joined tokens (docs under k tokens have none), `ng` the
+    * doc's gram count; `wm` takes the min over each window of w grams —
+    * the value `fp`, or with `positioned` the struct min {h, -pos} as
+    * `sel` (argmin by hash, rightmost position on ties). */
+  private def winnowCtes(toks: String, g: String, wm: String, src: String,
+                         k: Int, w: Int, positioned: Boolean = false): String = {
+    val (pick, as) = if (positioned) ("MIN({'h': h, 'np': -pos})", "sel") else ("MIN(h)", "fp")
+    s"""${tokensCte(toks, src)},
+       |$g AS (SELECT doc_id, i-1 AS pos,
+       |        CAST('0x' || substr(md5(array_to_string(ws[i:i+${k - 1}], ' ')), 1, 10)
+       |          AS BIGINT) AS h,
+       |        len(ws)-${k - 1} AS ng
+       |      FROM $toks, UNNEST(generate_series(1, len(ws)-${k - 1})) t(i)
+       |      WHERE len(ws) >= $k),
+       |$wm AS (SELECT doc_id, pos, ng,
+       |        $pick OVER (PARTITION BY doc_id ORDER BY pos
+       |                     ROWS BETWEEN CURRENT ROW AND ${w - 1} FOLLOWING) AS $as
+       |       FROM $g)""".stripMargin
+  }
+
+  /** The winnow gate (`Dedup.winnowWindow`): only windows starting at
+    * pos <= ng - w are full; a doc with fewer than w grams keeps its
+    * one truncated window at pos 0. Distinct `cols` of the kept rows. */
+  private def winnowSelect(cols: String, wm: String, w: Int): String =
+    s"SELECT DISTINCT $cols FROM $wm\n        WHERE pos <= greatest(ng-$w, 0)"
+
+  /** A positioned selection's columns: offset `spos` and hash `fp`. */
+  private val spanCols = "doc_id, CAST(-(sel.np) AS BIGINT) AS spos, sel.h AS fp"
+
+  /** Pairs sharing fingerprints of `fps`, with the shared count
+    * (`Dedup.sharedFpPairs`). */
+  private def sharedFpCte(name: String, fps: String): String =
+    s"""$name AS (SELECT a.doc_id AS da, b.doc_id AS db, COUNT(*) AS n_shared
+       |          FROM $fps a JOIN $fps b ON a.fp = b.fp AND a.doc_id < b.doc_id
+       |          GROUP BY 1, 2)""".stripMargin
+
+  /** The l85-family winnow chain over `src` at k = 5, w = 4, ending at
+    * `fps` (doc_id, fp). */
+  private def winnowFpCtes(src: String): String =
+    s"""${winnowCtes("toks", "g", "wm", src, k = 5, w = 4)},
+       |fps AS (${winnowSelect("doc_id, fp", "wm", w = 4)})""".stripMargin
+
+  /** l88/l91: the positioned chain over the corpus, ending at `sels`. */
+  private val winnowSpanCtes: String =
+    s"""${winnowCtes("toks", "g", "wm", "documents", k = 5, w = 4, positioned = true)},
+       |sels AS (${winnowSelect(spanCols, "wm", w = 4)})""".stripMargin
+
+  /** Winnow containment (`Dedup.winnowContainmentPairs`): shared
+    * fingerprints over the smaller side's fingerprint count. */
+  private val containmentOf = "CAST(n_shared AS DOUBLE) / least(ca.n_fp, cb.n_fp)"
+
+  /** l96/l97: the corpus fingerprints, per-doc counts `cnt` and shared
+    * counts `pr`. */
+  private val winnowContainmentCtes: String =
+    s"""${winnowFpCtes("documents")},
+       |${setSizeCte("fps", "n_fp")},
+       |${sharedFpCte("pr", "fps")}""".stripMargin
+
+  /** The boilerplate-injected corpus of the df-cap oracles (l86, l89,
+    * l94): every third doc carries the same crawler license header. */
+  private val boilerplateDocs: String =
+    """docs2 AS (SELECT doc_id,
+      |        CASE WHEN doc_id % 3 = 0
+      |             THEN text || ' standard license header text appended by the crawler pipeline every run'
+      |             ELSE text END AS text
+      |      FROM documents)""".stripMargin
+
+  /** The stopword langid (`TextFunctions.langScores` / `langId`): per
+    * language the count of its stopword tokens; argmax with priority
+    * en > de > fr > es, 'und' when no stopword hits. */
+  private val langStops = scala.collection.immutable.ListMap(
+    "en" -> "'the','a','and','of','is'", "de" -> "'der','die','das','und','ist'",
+    "fr" -> "'le','la','et','les','est'", "es" -> "'el','los','y','las','es'")
+
+  private def langScore(lang: String): String =
+    s"len(list_filter(regexp_extract_all(text,'\\S+'), x -> list_contains([${langStops(lang)}], x)))"
+
+  /** The four score columns, named by language. */
+  private val langScoreCols: String =
+    langStops.keys.map(l => s"${langScore(l)} AS $l").mkString(",\n")
+
+  /** The argmax CASE over scores `sc(lang)`; `enOnly` stops after the
+    * 'en' arm (everything else 'other') for an English filter. */
+  private def langIdCase(sc: String => String = identity, enOnly: Boolean = false): String = {
+    val Seq(en, de, fr, es) = langStops.keys.toSeq.map(sc)
+    val rest =
+      if (enOnly) "ELSE 'other'"
+      else s"WHEN $de >= $fr AND $de >= $es THEN 'de'\n     WHEN $fr >= $es THEN 'fr' ELSE 'es'"
+    s"""CASE WHEN $en + $de + $fr + $es = 0 THEN 'und'
+       |     WHEN $en >= $de AND $en >= $fr AND $en >= $es THEN 'en'
+       |     $rest END""".stripMargin
+  }
+
+  /** The quality classifier's features (`TextFunctions.qualityScore`):
+    * stopword, punctuation and uppercase ratios and the token count
+    * per doc of `src` (ratios NULL on empty text), `cols` carried. */
+  private def qualityFeatsCte(cols: String, src: String): String =
+    s"""f AS (SELECT $cols,
+       |    CAST(len(list_filter(regexp_extract_all(text, '\\S+'),
+       |        x -> list_contains(['the','a','and','of','to','in'], x))) AS DOUBLE)
+       |      / NULLIF(len(regexp_extract_all(text, '\\S+')), 0) AS stop_ratio,
+       |    CAST(length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS DOUBLE)
+       |      / NULLIF(length(text), 0) AS punct_ratio,
+       |    CAST(length(regexp_replace(text, '[^A-Z]', '', 'g')) AS DOUBLE)
+       |      / NULLIF(length(text), 0) AS upper_ratio,
+       |    len(regexp_extract_all(text, '\\S+')) AS n_tokens
+       |  FROM $src)""".stripMargin
+
+  /** The quality logit `z` over the features `f` (`qualityScore`). */
+  private val qualityLogitCte: String =
+    """z AS (SELECT doc_id,
+      |    -1.5 + 3.0 * stop_ratio - 8.0 * punct_ratio - 2.0 * upper_ratio
+      |      + 0.35 * ln(1.0 + n_tokens) AS z
+      |  FROM f)""".stripMargin
+
+  /** The corpus's quality features and logit (l35/l51). */
+  private val qualityLogitCtes: String =
+    s"""${qualityFeatsCte("doc_id", "documents")},
+       |$qualityLogitCte""".stripMargin
+
+  /** SimHash-32 (`Dedup.simhash32`): per token md5, per (hex
+    * digit p, bit b) of its first 8 digits a +1/-1 vote summed per
+    * doc in `s`; `simhashFold` packs the positive sums into the 32-bit
+    * fingerprint. */
+  private val simhashCtes: String =
+    """tok AS (SELECT doc_id, unnest(regexp_extract_all(text, '\S+')) AS t FROM documents),
+      |h AS (SELECT doc_id, md5(t) AS h FROM tok),
+      |bits AS (SELECT doc_id, p, b,
+      |    CASE WHEN ((instr('0123456789abcdef', substr(h, p, 1)) - 1) >> b) & 1 = 1
+      |         THEN 1 ELSE -1 END AS c
+      |  FROM h, UNNEST(generate_series(1, 8)) tp(p), UNNEST(generate_series(0, 3)) tb(b)),
+      |s AS (SELECT doc_id, p, b, SUM(c) AS s FROM bits GROUP BY 1, 2, 3)""".stripMargin
+
+  private val simhashFold: String =
+    "CAST(SUM(CASE WHEN s > 0 THEN (CAST(1 AS BIGINT) << ((8 - p) * 4 + b)) ELSE 0 END) AS BIGINT)"
+
+  /** The exact squared L2 norm of `embedding` as a double sum. */
+  private val sqNorm: String =
+    "list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)))"
+
+  /** `name` = `src`'s `cols` with the squared norm (as `n2`) and, with
+    * `withNr`, the norm itself as `nr`. */
+  private def normCte(name: String = "e", src: String = "embeddings",
+                      cols: String = "vec_id, embedding", n2: String = "n2",
+                      withNr: Boolean = false): String = {
+    val nr = if (withNr) s",\n    sqrt($sqNorm) AS nr" else ""
+    s"$name AS (SELECT $cols,\n    $sqNorm AS $n2$nr\n  FROM $src)"
+  }
+
+  /** The zero-norm-guarded cosine (`Similarity.guardedCos`): a zero
+    * vector scores 0.0 against everything (raw 0/0 is NaN, which Spark
+    * orders above every value); otherwise the dot product over
+    * sqrt(n2a·n2b), rounded to 6 d.p. `a`/`b` alias rows carrying
+    * `embedding` and the squared norm `n2`. `norms` divides by the
+    * per-vector norms (nr_a·nr_b) instead — `ivfLists`' centroid
+    * assignment. `times` is the dot product's multiply as the l8 family
+    * spells it. */
+  private def guardedCos(a: String, b: String, n2: String = "n2", norms: Boolean = false,
+                         times: String = "*"): String = {
+    val den = if (norms) s"($a.nr * $b.nr)" else s"sqrt($a.$n2 * $b.$n2)"
+    s"""CASE WHEN $a.$n2 = 0 OR $b.$n2 = 0 THEN 0.0
+       |      ELSE round(list_sum(list_transform(list_zip($a.embedding, $b.embedding),
+       |        z -> CAST(z[1] AS DOUBLE)${times}CAST(z[2] AS DOUBLE))) / $den, 6) END""".stripMargin
+  }
+
+  /** Salted random-hyperplane signatures (`Similarity.lshCosinePairs`
+    * / `lshTopK`): per table t and plane i, the 64-d plane's value at d
+    * is hex6(md5 key)/2^24 - 0.5, keyed 'i_d' for table 0 and
+    * 't<t>_i_d' beyond; the projection is rounded to 6 d.p. before its
+    * sign bit. Over the norm CTE `e`. */
+  private def lshSigCte(planes: Int, tables: Int): String =
+    s"""sig AS (SELECT vec_id, t,
+       |    array_to_string(list_transform(generate_series(0, ${planes - 1}), i ->
+       |      CASE WHEN round(list_sum(list_transform(generate_series(1, 64), d ->
+       |          CAST(embedding[d] AS DOUBLE) *
+       |          (CAST('0x' || substr(md5(CASE WHEN t = 0 THEN CONCAT(i, '_', d - 1)
+       |                                       ELSE CONCAT('t', t, '_', i, '_', d - 1) END), 1, 6) AS BIGINT)
+       |             / 16777216.0 - 0.5))), 6) >= 0
+       |        THEN '1' ELSE '0' END), '') AS sig
+       |  FROM e, UNNEST(generate_series(0, ${tables - 1})) tt(t))""".stripMargin
+
+  /** The multi-table `lshTopK` neighbor ranking (l21/l45/l46): 6 planes
+    * x 4 tables, candidates unioned across tables and deduped before
+    * the guarded scoring, ranked per query by cosine desc, id asc. */
+  private val lshMultiCtes: String =
+    s"""${normCte()},
+       |${lshSigCte(planes = 6, tables = 4)},
+       |cand AS (SELECT DISTINCT a.vec_id AS qid, b.vec_id AS cid
+       |  FROM sig a JOIN sig b ON a.t = b.t AND a.sig = b.sig AND a.vec_id <> b.vec_id),
+       |scored AS (SELECT c.qid, c.cid,
+       |    ${guardedCos("q", "x")} AS cos
+       |  FROM cand c JOIN e q ON q.vec_id = c.qid JOIN e x ON x.vec_id = c.cid),
+       |rk AS (SELECT qid, cid, cos,
+       |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS rk FROM scored)""".stripMargin
+
+  /** Coarse IVF routing (`Similarity.ivfLists`, kmeansIters = 0): `c`
+    * = the 16 lowest vec_ids as centroids, `ac` every vector's guarded
+    * cosine to each (per-vector norms), `ranked` a vector's centroids
+    * by cosine desc, centroid id asc. */
+  private val ivfRoutingCtes: String =
+    s"""${normCte(withNr = true)},
+       |c AS (SELECT * FROM e ORDER BY vec_id LIMIT 16),
+       |ac AS (SELECT v.vec_id AS vid, c.vec_id AS ci,
+       |    ${guardedCos("v", "c", norms = true)} AS cos
+       |  FROM e v, c),
+       |ranked AS (SELECT vid, ci,
+       |    ROW_NUMBER() OVER (PARTITION BY vid ORDER BY cos DESC, ci) AS rnk FROM ac)""".stripMargin
+
+  /** PQ sub-vectors (`Quantize.pqCodebooks` / `pqEncode`): the 4
+    * consecutive 16-dim slices of each `src` row, 0-based `sub`. */
+  private def subVecs(cols: String, src: String, as: String): String =
+    s"SELECT $cols, embedding[sub*16+1 : sub*16+16] AS $as\n       FROM $src, UNNEST(generate_series(0, 3)) t(sub)"
+
+  /** The squared L2 distance of two sub-vectors, rounded to 6 d.p. */
+  private def sqDist(a: String, b: String): String =
+    s"""round(list_sum(list_transform(list_zip($a, $b),
+       |      z -> (CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE))
+       |         * (CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE)))), 6)""".stripMargin
+
+  /** The PQ codebook: the 16 lowest vec_ids (`cid` 0-based), sliced
+    * into sub-vector codewords `cb`. */
+  private val pqCodebookCtes: String =
+    s"""idx AS (SELECT vec_id, embedding,
+       |    ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cid
+       |  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 16)),
+       |cb AS (${subVecs("t.sub, cid", "idx", "cvec")})""".stripMargin
+
+  /** The codebook, every vector's sub-vectors `sv`, and each
+    * (sub-vector, codeword) distance `scored`. */
+  private val pqScoredCtes: String =
+    s"""$pqCodebookCtes,
+       |sv AS (${subVecs("vec_id, t.sub", "embeddings", "svec")}),
+       |scored AS (SELECT sv.vec_id, sv.sub, cb.cid,
+       |    ${sqDist("sv.svec", "cb.cvec")} AS dist
+       |  FROM sv JOIN cb ON cb.sub = sv.sub)""".stripMargin
+
+  /** PQ encoding: per (vec_id, sub) the nearest codeword, id tiebreak. */
+  private val pqCodesSql: String =
+    """SELECT vec_id, sub, code FROM (
+      |  SELECT vec_id, sub, cid AS code,
+      |    ROW_NUMBER() OVER (PARTITION BY vec_id, sub ORDER BY dist, cid) AS rk
+      |  FROM scored) WHERE rk = 1""".stripMargin
+
+  /** The ADC lookup table `dtab`: per (sub, code) the probe's squared
+    * distance to the codeword — one probe (vec_id 0) or, with `batch`,
+    * the probes vec_id < 5 keyed by `qid`. */
+  private def adcTableCtes(batch: Boolean): String = {
+    val qs =
+      if (batch) subVecs("vec_id AS qid, t.sub", "embeddings", "qvec") + "\n       WHERE vec_id < 5"
+      else subVecs("t.sub", "(SELECT embedding FROM embeddings WHERE vec_id = 0)", "qvec")
+    s"""qs AS ($qs),
+       |dtab AS (SELECT ${if (batch) "qs.qid, " else ""}cb.sub, cb.cid AS code,
+       |    ${sqDist("qs.qvec", "cb.cvec")} AS dsub
+       |  FROM cb JOIN qs ON qs.sub = cb.sub)""".stripMargin
+  }
+
+  /** ADC distance: the per-sub lookups summed as exact integer micros. */
+  private val adcDist =
+    "CAST(SUM(CAST(round(d.dsub * 1000000) AS BIGINT)) AS DOUBLE) / 1000000 AS adc_dist"
+
+  /** The single probe's ADC top-10 over `codes` (aliased `c`). */
+  private def adcTop10Sql(c: String): String =
+    s"""SELECT $c.vec_id,
+       |  $adcDist
+       |FROM codes $c JOIN dtab d ON d.sub = $c.sub AND d.code = $c.code
+       |GROUP BY 1 ORDER BY adc_dist, $c.vec_id LIMIT 10""".stripMargin
+
+  /** The batch probes' ADC top-5 per `qid` over the `adc` CTE. */
+  private val adcTop5PerProbeSql: String =
+    """SELECT qid, vec_id, rk, adc_dist FROM (
+      |  SELECT qid, vec_id, adc_dist,
+      |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adc_dist, vec_id) AS rk
+      |  FROM adc) WHERE rk <= 5 ORDER BY qid, rk""".stripMargin
+
   /** The winnowing pair pipeline in DuckDB — shared verbatim by l85
     * (the uncapped generator) and l87 (the capped generator holding
     * below its df ceiling on the natural corpus: identical output by
     * the hold contract). */
   private val winnowPairsSql: String =
-    """WITH toks AS (SELECT doc_id, regexp_extract_all(text, '\S+') AS ws
-      |              FROM documents),
-      |g AS (SELECT doc_id, i-1 AS pos,
-      |        CAST('0x' || substr(md5(array_to_string(ws[i:i+4], ' ')), 1, 10)
-      |          AS BIGINT) AS h,
-      |        len(ws)-4 AS ng
-      |      FROM toks, UNNEST(generate_series(1, len(ws)-4)) t(i)
-      |      WHERE len(ws) >= 5),
-      |wm AS (SELECT doc_id, pos, ng,
-      |        MIN(h) OVER (PARTITION BY doc_id ORDER BY pos
-      |                     ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp
-      |       FROM g),
-      |fps AS (SELECT DISTINCT doc_id, fp FROM wm
-      |        WHERE pos <= greatest(ng-4, 0)),
-      |pairs AS (SELECT a.doc_id AS da, b.doc_id AS db, COUNT(*) AS n_shared
-      |          FROM fps a JOIN fps b ON a.fp = b.fp AND a.doc_id < b.doc_id
-      |          GROUP BY 1, 2)
-      |SELECT da, db, n_shared FROM pairs WHERE n_shared >= 2
-      |ORDER BY da, db""".stripMargin
+    s"""WITH ${winnowFpCtes("documents")},
+       |${sharedFpCte("pairs", "fps")}
+       |SELECT da, db, n_shared FROM pairs WHERE n_shared >= 2
+       |ORDER BY da, db""".stripMargin
 
   /** The winnow span-ingest loop's batch replay in DuckDB — shared
     * verbatim by l92 (the uncapped loop) and l95 (the armed cap
     * HOLDING below its ceiling on the natural corpus: identical
     * output by the hold contract). */
   private val streamWinnowSql: String =
-    """WITH toks AS (SELECT doc_id, regexp_extract_all(text, '\S+') AS ws
-      |              FROM documents),
-      |g AS (SELECT doc_id, i-1 AS pos,
-      |        CAST('0x' || substr(md5(array_to_string(ws[i:i+4], ' ')), 1, 10)
-      |          AS BIGINT) AS h,
-      |        len(ws)-4 AS ng
-      |      FROM toks, UNNEST(generate_series(1, len(ws)-4)) t(i)
-      |      WHERE len(ws) >= 5),
-      |wm AS (SELECT doc_id, pos, ng,
-      |        MIN(h) OVER (PARTITION BY doc_id ORDER BY pos
-      |                     ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp
-      |       FROM g),
-      |fps AS (SELECT DISTINCT doc_id, fp FROM wm
-      |        WHERE pos <= greatest(ng-4, 0)),
-      |pr AS (SELECT a.doc_id AS da, b.doc_id AS db, COUNT(*) AS n_shared
-      |       FROM fps a JOIN fps b ON a.fp = b.fp AND a.doc_id < b.doc_id
-      |       GROUP BY 1, 2)
-      |SELECT CASE WHEN da % 4 > db % 4 THEN da ELSE db END AS new_id,
+    s"""WITH ${winnowFpCtes("documents")},
+       |${sharedFpCte("pr", "fps")}
+       |SELECT CASE WHEN da % 4 > db % 4 THEN da ELSE db END AS new_id,
       |  CASE WHEN da % 4 > db % 4 THEN db ELSE da END AS seen_id,
       |  n_shared,
       |  CAST(greatest(da % 4, db % 4) AS BIGINT) AS ingest_batch
@@ -2576,39 +3020,33 @@ object LlmQueries {
     * counts). The train definition is a parameter so l111's
     * leak-injected corpus reuses the chain verbatim. */
   private def spanDecontamCtesFrom(trSql: String): String =
-    ("WITH tr AS (" + trSql + "),\n") +
-    """ev AS (SELECT doc_id, text FROM documents WHERE doc_id % 50 = 0),
-      |ttk AS (SELECT doc_id, regexp_extract_all(text, '\S+') AS ws FROM tr),
-      |tg AS (SELECT doc_id, i-1 AS pos,
-      |        CAST('0x' || substr(md5(array_to_string(ws[i:i+4], ' ')), 1, 10)
-      |          AS BIGINT) AS h,
-      |        len(ws)-4 AS ng
-      |      FROM ttk, UNNEST(generate_series(1, len(ws)-4)) t(i)
-      |      WHERE len(ws) >= 5),
-      |twm AS (SELECT doc_id, pos, ng,
-      |        MIN(h) OVER (PARTITION BY doc_id ORDER BY pos
-      |                     ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp
-      |       FROM tg),
-      |tfp AS (SELECT DISTINCT doc_id, fp FROM twm
-      |        WHERE pos <= greatest(ng-4, 0)),
-      |etk AS (SELECT doc_id, regexp_extract_all(text, '\S+') AS ws FROM ev),
-      |eg AS (SELECT doc_id, i-1 AS pos,
-      |        CAST('0x' || substr(md5(array_to_string(ws[i:i+4], ' ')), 1, 10)
-      |          AS BIGINT) AS h,
-      |        len(ws)-4 AS ng
-      |      FROM etk, UNNEST(generate_series(1, len(ws)-4)) t(i)
-      |      WHERE len(ws) >= 5),
-      |ewm AS (SELECT doc_id, pos, ng,
-      |        MIN(h) OVER (PARTITION BY doc_id ORDER BY pos
-      |                     ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp
-      |       FROM eg),
-      |efp AS (SELECT DISTINCT fp FROM ewm
-      |        WHERE pos <= greatest(ng-4, 0)),
-      |hits AS (SELECT t.doc_id, COUNT(*) AS n_overlap
-      |         FROM tfp t JOIN efp e USING (fp) GROUP BY 1)""".stripMargin
+    s"""WITH tr AS ($trSql),
+       |ev AS (SELECT doc_id, text FROM documents WHERE doc_id % 50 = 0),
+       |${winnowCtes("ttk", "tg", "twm", "tr", k = 5, w = 4)},
+       |tfp AS (${winnowSelect("doc_id, fp", "twm", w = 4)}),
+       |${winnowCtes("etk", "eg", "ewm", "ev", k = 5, w = 4)},
+       |efp AS (${winnowSelect("fp", "ewm", w = 4)}),
+       |hits AS (SELECT t.doc_id, COUNT(*) AS n_overlap
+       |         FROM tfp t JOIN efp e USING (fp) GROUP BY 1)""".stripMargin
 
   private val spanDecontamCtes: String = spanDecontamCtesFrom(
     "SELECT doc_id, text FROM documents WHERE doc_id % 50 <> 0")
+
+  /** The span-decontamination verdict per train doc (l98; l111 adds
+    * the crawl-drop column): fingerprint count, eval overlap, and the
+    * absolute evidence flag (overlap >= 2). */
+  private def spanVerdictSql(ctes: String, withDrop: Boolean): String = {
+    val drop = if (withDrop) ",\n  CAST(tr.doc_id % 4 AS BIGINT) AS ingest_batch" else ""
+    s"""$ctes,
+       |${setSizeCte("tfp", "n_fp")}
+       |SELECT tr.doc_id,
+       |  COALESCE(cnt.n_fp, 0) AS n_fp,
+       |  COALESCE(hits.n_overlap, 0) AS n_overlap,
+       |  COALESCE(hits.n_overlap, 0) >= 2 AS contaminated$drop
+       |FROM tr LEFT JOIN cnt ON cnt.doc_id = tr.doc_id
+       |        LEFT JOIN hits ON hits.doc_id = tr.doc_id
+       |ORDER BY tr.doc_id""".stripMargin
+  }
 
   /** l111's replay: the same span-decontamination chain over the
     * LEAK-INJECTED train corpus (every 25th train doc — doc_id % 25 =
@@ -2616,20 +3054,10 @@ object LlmQueries {
     * so the routed leak set is non-empty at every shipped SF), plus
     * the crawl-drop column. The store is static, so the streaming
     * guard's per-drop union must equal this whole-train batch run. */
-  private val streamDecontamSql: String = spanDecontamCtesFrom(
+  private val streamDecontamSql: String = spanVerdictSql(spanDecontamCtesFrom(
     "SELECT doc_id, CASE WHEN doc_id % 25 = 7 THEN text || ' ' || " +
       "(SELECT substr(text, 1, 200) FROM documents WHERE doc_id = 0) " +
-      "ELSE text END AS text FROM documents WHERE doc_id % 50 <> 0") +
-    """,
-      |cnt AS (SELECT doc_id, COUNT(*) AS n_fp FROM tfp GROUP BY 1)
-      |SELECT tr.doc_id,
-      |  COALESCE(cnt.n_fp, 0) AS n_fp,
-      |  COALESCE(hits.n_overlap, 0) AS n_overlap,
-      |  COALESCE(hits.n_overlap, 0) >= 2 AS contaminated,
-      |  CAST(tr.doc_id % 4 AS BIGINT) AS ingest_batch
-      |FROM tr LEFT JOIN cnt ON cnt.doc_id = tr.doc_id
-      |        LEFT JOIN hits ON hits.doc_id = tr.doc_id
-      |ORDER BY tr.doc_id""".stripMargin
+      "ELSE text END AS text FROM documents WHERE doc_id % 50 <> 0"), withDrop = true)
 
   /** l117's replay: the l111 winnow chain with TWO eval stores and the
     * drop-conditional join — a doc's verdict reads the store its drop
@@ -2638,7 +3066,7 @@ object LlmQueries {
     * fingerprint, whether any v1 doc carries it, so both stores fold
     * into one join. */
   private val deconRefreshSql: String =
-    """WITH tr AS (SELECT doc_id,
+    s"""WITH tr AS (SELECT doc_id,
       |    CASE WHEN doc_id % 5 = 2 THEN text || ' ' ||
       |           (SELECT substr(text, 1, 200) FROM documents WHERE doc_id = 0)
       |         WHEN doc_id % 5 = 3 THEN text || ' ' ||
@@ -2647,38 +3075,16 @@ object LlmQueries {
       |  FROM documents WHERE doc_id % 50 <> 0 AND doc_id % 50 <> 25),
       |ev AS (SELECT doc_id, text FROM documents
       |       WHERE doc_id % 50 = 0 OR doc_id % 50 = 25),
-      |ttk AS (SELECT doc_id, regexp_extract_all(text, '\S+') AS ws FROM tr),
-      |tg AS (SELECT doc_id, i-1 AS pos,
-      |        CAST('0x' || substr(md5(array_to_string(ws[i:i+4], ' ')), 1, 10)
-      |          AS BIGINT) AS h,
-      |        len(ws)-4 AS ng
-      |      FROM ttk, UNNEST(generate_series(1, len(ws)-4)) t(i)
-      |      WHERE len(ws) >= 5),
-      |twm AS (SELECT doc_id, pos, ng,
-      |        MIN(h) OVER (PARTITION BY doc_id ORDER BY pos
-      |                     ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp
-      |       FROM tg),
-      |tfp AS (SELECT DISTINCT doc_id, fp FROM twm
-      |        WHERE pos <= greatest(ng-4, 0)),
-      |etk AS (SELECT doc_id, regexp_extract_all(text, '\S+') AS ws FROM ev),
-      |eg AS (SELECT doc_id, i-1 AS pos,
-      |        CAST('0x' || substr(md5(array_to_string(ws[i:i+4], ' ')), 1, 10)
-      |          AS BIGINT) AS h,
-      |        len(ws)-4 AS ng
-      |      FROM etk, UNNEST(generate_series(1, len(ws)-4)) t(i)
-      |      WHERE len(ws) >= 5),
-      |ewm AS (SELECT doc_id, pos, ng,
-      |        MIN(h) OVER (PARTITION BY doc_id ORDER BY pos
-      |                     ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp
-      |       FROM eg),
+      |${winnowCtes("ttk", "tg", "twm", "tr", k = 5, w = 4)},
+      |tfp AS (${winnowSelect("doc_id, fp", "twm", w = 4)}),
+      |${winnowCtes("etk", "eg", "ewm", "ev", k = 5, w = 4)},
       |efp AS (SELECT fp, BOOL_OR(doc_id % 50 = 0) AS in_v1
-      |        FROM (SELECT DISTINCT doc_id, fp FROM ewm
-      |              WHERE pos <= greatest(ng-4, 0)) e0 GROUP BY 1),
+      |        FROM (${winnowSelect("doc_id, fp", "ewm", w = 4)}) e0 GROUP BY 1),
       |hits AS (SELECT t.doc_id,
       |           COUNT(*) FILTER (WHERE e.in_v1) AS ov1,
       |           COUNT(*) AS ov2
       |         FROM tfp t JOIN efp e USING (fp) GROUP BY 1),
-      |cnt AS (SELECT doc_id, COUNT(*) AS n_fp FROM tfp GROUP BY 1)
+      |${setSizeCte("tfp", "n_fp")}
       |SELECT tr.doc_id, COALESCE(cnt.n_fp, 0) AS n_fp,
       |  CASE WHEN tr.doc_id % 4 <= 1 THEN COALESCE(hits.ov1, 0)
       |       ELSE COALESCE(hits.ov2, 0) END AS n_overlap,
@@ -2751,17 +3157,18 @@ object LlmQueries {
     * this ASCII corpus). */
   private def perceptualKeepBestSql(variantExpr: String): String =
     "WITH RECURSIVE " + perceptualCtes(variantExpr) + ",\n" +
-    """pairs AS (SELECT da, db FROM hd WHERE hamming <= 3),
-      |edges AS (SELECT da AS x, db AS y FROM pairs
-      |          UNION SELECT db, da FROM pairs),
-      |nodes AS (SELECT DISTINCT x AS id FROM edges),
-      |reach AS (SELECT id, id AS r FROM nodes
-      |          UNION
-      |          SELECT e.x, reach.r FROM edges e JOIN reach ON reach.id = e.y),
-      |lbl AS (SELECT id, MIN(r) AS rep FROM reach GROUP BY id),
-      |members AS (SELECT lbl.rep, lbl.id, length(b.t) AS nb
-      |            FROM lbl JOIN base b ON b.doc_id = lbl.id),
-      |best AS (SELECT rep, id AS keep_id FROM (
+    s"""pairs AS (SELECT da, db FROM hd WHERE hamming <= 3),
+       |${closureCtes("da", "db")},
+       |members AS (SELECT lbl.rep, lbl.id, length(b.t) AS nb
+       |            FROM lbl JOIN base b ON b.doc_id = lbl.id),
+       |$keepBestSql""".stripMargin
+
+  /** The blob keep-best retention (l114/l119): per closure group of
+    * `lbl` the keeper is the member of most bytes `nb` (id tiebreak);
+    * every `base` blob maps to its group's keeper, singletons to
+    * themselves. */
+  private val keepBestSql: String =
+    """best AS (SELECT rep, id AS keep_id FROM (
       |           SELECT rep, id, ROW_NUMBER() OVER (PARTITION BY rep
       |             ORDER BY nb DESC, id) AS rk FROM members) WHERE rk = 1)
       |SELECT b.doc_id, COALESCE(best.keep_id, b.doc_id) AS keep_id,
@@ -2776,37 +3183,13 @@ object LlmQueries {
     * doc_id % 50 benchmark split, matches joined cross-corpus, island
     * breaks computed per (pair, diagonal) — ends at `isl`. */
   private val leakSpanCtes: String =
-    """WITH tr AS (SELECT doc_id, text FROM documents WHERE doc_id % 50 <> 0),
-      |ev AS (SELECT doc_id, text FROM documents WHERE doc_id % 50 = 0),
-      |ttk AS (SELECT doc_id, regexp_extract_all(text, '\S+') AS ws FROM tr),
-      |tg AS (SELECT doc_id, i-1 AS pos,
-      |        CAST('0x' || substr(md5(array_to_string(ws[i:i+4], ' ')), 1, 10)
-      |          AS BIGINT) AS h,
-      |        len(ws)-4 AS ng
-      |      FROM ttk, UNNEST(generate_series(1, len(ws)-4)) t(i)
-      |      WHERE len(ws) >= 5),
-      |twm AS (SELECT doc_id, pos, ng,
-      |        MIN({'h': h, 'np': -pos}) OVER (PARTITION BY doc_id ORDER BY pos
-      |                     ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS sel
-      |       FROM tg),
-      |tsel AS (SELECT DISTINCT doc_id, CAST(-(sel.np) AS BIGINT) AS spos,
-      |           sel.h AS fp
-      |         FROM twm WHERE pos <= greatest(ng-4, 0)),
-      |etk AS (SELECT doc_id, regexp_extract_all(text, '\S+') AS ws FROM ev),
-      |eg AS (SELECT doc_id, i-1 AS pos,
-      |        CAST('0x' || substr(md5(array_to_string(ws[i:i+4], ' ')), 1, 10)
-      |          AS BIGINT) AS h,
-      |        len(ws)-4 AS ng
-      |      FROM etk, UNNEST(generate_series(1, len(ws)-4)) t(i)
-      |      WHERE len(ws) >= 5),
-      |ewm AS (SELECT doc_id, pos, ng,
-      |        MIN({'h': h, 'np': -pos}) OVER (PARTITION BY doc_id ORDER BY pos
-      |                     ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS sel
-      |       FROM eg),
-      |esel AS (SELECT DISTINCT doc_id, CAST(-(sel.np) AS BIGINT) AS spos,
-      |           sel.h AS fp
-      |         FROM ewm WHERE pos <= greatest(ng-4, 0)),
-      |m AS (SELECT t.doc_id AS train_id, e.doc_id AS eval_id,
+    s"""WITH tr AS (SELECT doc_id, text FROM documents WHERE doc_id % 50 <> 0),
+       |ev AS (SELECT doc_id, text FROM documents WHERE doc_id % 50 = 0),
+       |${winnowCtes("ttk", "tg", "twm", "tr", k = 5, w = 4, positioned = true)},
+       |tsel AS (${winnowSelect(spanCols, "twm", w = 4)}),
+       |${winnowCtes("etk", "eg", "ewm", "ev", k = 5, w = 4, positioned = true)},
+       |esel AS (${winnowSelect(spanCols, "ewm", w = 4)}),
+       |m AS (SELECT t.doc_id AS train_id, e.doc_id AS eval_id,
       |        t.spos AS pa, e.spos AS pb, t.spos - e.spos AS diag
       |      FROM tsel t JOIN esel e ON t.fp = e.fp),
       |br AS (SELECT *, CASE WHEN pa - LAG(pa) OVER (PARTITION BY train_id,
@@ -2911,33 +3294,14 @@ object LlmQueries {
        |        FROM hx, UNNEST(generate_series(0, nb - 8)) t(i)
        |        WHERE nb >= 8),
        |$universe
-       |cnt AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY 1),
-       |mh AS (SELECT doc_id, seed,
-       |         MIN(([40503,34283,49843,10193,5717,9539,62989,55021,
-       |               14939,58057,23371,60943,3571,38833,50993,17389][seed+1]
-       |                * CAST('0x' || substr(md5(s), 1, 10) AS BIGINT) +
-       |              [27179,43691,20117,51347,7129,63577,31769,44201,
-       |               29527,12641,54679,8363,47507,64151,21841,36653][seed+1]
-       |                * CAST('0x' || substr(md5(s), 11, 10) AS BIGINT))
-       |             % 1099511627791) AS mh
-       |       FROM sh, UNNEST(generate_series(0, 15)) t(seed) GROUP BY 1, 2),
-       |bands AS (SELECT doc_id, seed % 4 AS band,
-       |            array_to_string(list_sort(list(mh)), '|') AS bsig
-       |          FROM mh GROUP BY 1, 2),
-       |cand AS (SELECT DISTINCT x.doc_id AS da, y.doc_id AS db
-       |         FROM bands x JOIN bands y
-       |           ON x.band = y.band AND x.bsig = y.bsig AND x.doc_id < y.doc_id),
-       |inter AS (SELECT c.da, c.db, COUNT(*) AS i FROM cand c
-       |          JOIN sh a ON a.doc_id = c.da
-       |          JOIN sh b ON b.doc_id = c.db AND b.s = a.s GROUP BY 1, 2)""".stripMargin
+       |${setSizeCte("sh")},
+       |${minhashCtes("doc_id", numHashes = 16, rowsPerBand = 4)},
+       |cand AS (${bandPairsSql()}),
+       |${candInterCte("inter")}""".stripMargin
   }
 
   private def blobNearDupSql(capped: Boolean): String =
-    "WITH " + blobNearDupCtes(capped) + "\n" +
-    """SELECT da, db, CAST(i AS DOUBLE)/(ca.n_sh + cb.n_sh - i) AS jaccard
-      |FROM inter JOIN cnt ca ON ca.doc_id = da JOIN cnt cb ON cb.doc_id = db
-      |WHERE CAST(i AS DOUBLE)/(ca.n_sh + cb.n_sh - i) > 0.7
-      |ORDER BY da, db""".stripMargin
+    "WITH " + blobNearDupCtes(capped) + "\n" + jaccardPairsSql("inter", 0.7)
 
   /** l114: l106's fire-universe pair chain + the l17 recursive-CTE
     * closure + the size/id argmax retention — every corpus blob with
@@ -2945,26 +3309,11 @@ object LlmQueries {
     * keeping themselves. */
   private def blobKeepBestSql: String =
     "WITH RECURSIVE " + blobNearDupCtes(capped = true) + ",\n" +
-    """pairs AS (SELECT da, db FROM inter
-      |          JOIN cnt ca ON ca.doc_id = da JOIN cnt cb ON cb.doc_id = db
-      |          WHERE CAST(i AS DOUBLE)/(ca.n_sh + cb.n_sh - i) > 0.7),
-      |edges AS (SELECT da AS x, db AS y FROM pairs
-      |          UNION SELECT db, da FROM pairs),
-      |nodes AS (SELECT DISTINCT x AS id FROM edges),
-      |reach AS (SELECT id, id AS r FROM nodes
-      |          UNION
-      |          SELECT e.x, reach.r FROM edges e JOIN reach ON reach.id = e.y),
-      |lbl AS (SELECT id, MIN(r) AS rep FROM reach GROUP BY id),
-      |members AS (SELECT lbl.rep, lbl.id, hx.nb
-      |            FROM lbl JOIN hx ON hx.doc_id = lbl.id),
-      |best AS (SELECT rep, id AS keep_id FROM (
-      |           SELECT rep, id, ROW_NUMBER() OVER (PARTITION BY rep
-      |             ORDER BY nb DESC, id) AS rk FROM members) WHERE rk = 1)
-      |SELECT b.doc_id, COALESCE(best.keep_id, b.doc_id) AS keep_id,
-      |  CAST(b.doc_id = COALESCE(best.keep_id, b.doc_id) AS INT) AS kept
-      |FROM base b LEFT JOIN lbl ON lbl.id = b.doc_id
-      |            LEFT JOIN best ON best.rep = lbl.rep
-      |ORDER BY b.doc_id""".stripMargin
+    s"""pairs AS (${jaccardAbove("inter", 0.7)}),
+       |${closureCtes("da", "db")},
+       |members AS (SELECT lbl.rep, lbl.id, hx.nb
+       |            FROM lbl JOIN hx ON hx.doc_id = lbl.id),
+       |$keepBestSql""".stripMargin
 
   /** The l103/l104 injected messy URLs: four doc_id-derived variants,
     * three of which canonicalize identically per doc_id-div-4 group.
@@ -3021,6 +3370,50 @@ object LlmQueries {
       |              '&utm_[^&]*', '', 'g'), '^\?utm_[^&]*&', '?', 'g'),
       |              '^\?utm_[^&]*$', '', 'g') AS rest FROM sp)""".stripMargin
 
+  /** l107/l109: the typo-injected vocabulary's multi-key blocked
+    * candidates (last word, first word), length-prefiltered and
+    * unioned before the DP. */
+  private val multiBlockCandCtes: String =
+    """p2 AS (SELECT p_name FROM part
+      |            UNION ALL
+      |            SELECT substr(p_name, 1, length(p_name)-1)
+      |            FROM part WHERE p_partkey % 100 = 0),
+      |v AS (SELECT DISTINCT p_name AS s FROM p2),
+      |b1 AS (SELECT s, split_part(s, ' ', -1) AS blk FROM v),
+      |b2 AS (SELECT s, split_part(s, ' ', 1) AS blk FROM v),
+      |cand AS (
+      |  SELECT a.s AS va, b.s AS vb FROM b1 a
+      |  JOIN b1 b ON a.blk = b.blk AND a.s < b.s
+      |  WHERE abs(length(a.s) - length(b.s)) <= 2
+      |  UNION
+      |  SELECT a.s, b.s FROM b2 a
+      |  JOIN b2 b ON a.blk = b.blk AND a.s < b.s
+      |  WHERE abs(length(a.s) - length(b.s)) <= 2)""".stripMargin
+
+  /** l112/l115: the q-gram blocked candidates over the one-token
+    * vocabulary (+ truncation typos), the df > 16 cap replayed. */
+  private val qgramCandCtes: String =
+    """lw AS (SELECT DISTINCT UNNEST(string_split(p_name, ' ')) AS w
+      |           FROM part),
+      |v AS (SELECT w FROM lw
+      |      UNION
+      |      SELECT substr(w, 1, length(w)-1) FROM lw WHERE length(w) >= 5),
+      |g AS (SELECT w, substr(w, i, 3) AS blk
+      |      FROM v, UNNEST(generate_series(1, length(w)-2)) t(i)
+      |      WHERE length(w) >= 3),
+      |gb AS (SELECT DISTINCT w, blk FROM g),
+      |hot AS (SELECT blk FROM gb GROUP BY blk HAVING COUNT(*) > 16),
+      |kept AS (SELECT w, blk FROM gb
+      |         WHERE blk NOT IN (SELECT blk FROM hot)),
+      |cand AS (SELECT DISTINCT a.w AS va, b.w AS vb
+      |         FROM kept a JOIN kept b ON a.blk = b.blk AND a.w < b.w
+      |         WHERE abs(length(a.w) - length(b.w)) <= 2)""".stripMargin
+
+  /** The l116/l119 swap injection: adjacent chars swapped pairwise. */
+  private val swapVariantSql: String =
+    "list_aggregate(list_transform(range(0, length(t)//2), " +
+      "i -> substr(t, i*2+2, 1) || substr(t, i*2+1, 1)), 'string_agg', '')"
+
   def oracleSql: Map[String, String] = {
     val base = oracleSqlBase
     // l62 serves from the PERSISTED index; floats round-trip parquet
@@ -3040,11 +3433,7 @@ object LlmQueries {
       // the quantizers are still the 16 training vectors, so the
       // stream-built index must serve l55's oracle verbatim
       ("l93_stream_ann_ingest" -> base("l55_ivf_pq")) +
-      // l85: the same winnowing pipeline replayed in SQL — positioned
-      // 5-token grams, the minhash family's 40-bit md5 hash, min over
-      // each full 4-gram window (pos 0-based on both sides; docs with
-      // fewer than w grams keep their single truncated-window min via
-      // the greatest(ng-w, 0) gate), distinct per doc, pair join
+      // l85: the winnowing pipeline (`winnowCtes`) and its pair join
       ("l85_winnow_pairs" -> winnowPairsSql) +
       // l87 runs the CAPPED pair generator on the natural corpus: the
       // measured hottest fingerprint (df <= 4 at every shipped SF)
@@ -3058,33 +3447,14 @@ object LlmQueries {
       // before the pair join) — the green hash row proves the capped
       // pair set matches, not merely that the cap fired
       ("l86_winnow_hot_cap" ->
-        """WITH docs2 AS (SELECT doc_id,
-          |        CASE WHEN doc_id % 3 = 0
-          |             THEN text || ' standard license header text appended by the crawler pipeline every run'
-          |             ELSE text END AS text
-          |      FROM documents),
-          |toks AS (SELECT doc_id, regexp_extract_all(text, '\S+') AS ws
-          |         FROM docs2),
-          |g AS (SELECT doc_id, i-1 AS pos,
-          |        CAST('0x' || substr(md5(array_to_string(ws[i:i+4], ' ')), 1, 10)
-          |          AS BIGINT) AS h,
-          |        len(ws)-4 AS ng
-          |      FROM toks, UNNEST(generate_series(1, len(ws)-4)) t(i)
-          |      WHERE len(ws) >= 5),
-          |wm AS (SELECT doc_id, pos, ng,
-          |        MIN(h) OVER (PARTITION BY doc_id ORDER BY pos
-          |                     ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp
-          |       FROM g),
-          |fps AS (SELECT DISTINCT doc_id, fp FROM wm
-          |        WHERE pos <= greatest(ng-4, 0)),
-          |dfx AS (SELECT fp, COUNT(*) AS df FROM fps GROUP BY 1),
-          |kept AS (SELECT f.doc_id, f.fp FROM fps f JOIN dfx USING (fp)
-          |         WHERE df <= 8),
-          |pairs AS (SELECT a.doc_id AS da, b.doc_id AS db, COUNT(*) AS n_shared
-          |          FROM kept a JOIN kept b ON a.fp = b.fp AND a.doc_id < b.doc_id
-          |          GROUP BY 1, 2)
-          |SELECT da, db, n_shared FROM pairs WHERE n_shared >= 2
-          |ORDER BY da, db""".stripMargin) +
+        s"""WITH $boilerplateDocs,
+           |${winnowFpCtes("docs2")},
+           |dfx AS (SELECT fp, COUNT(*) AS df FROM fps GROUP BY 1),
+           |kept AS (SELECT f.doc_id, f.fp FROM fps f JOIN dfx USING (fp)
+           |         WHERE df <= 8),
+           |${sharedFpCte("pairs", "kept")}
+           |SELECT da, db, n_shared FROM pairs WHERE n_shared >= 2
+           |ORDER BY da, db""".stripMargin) +
       // l90 runs the capped Jaccard generator holding below its df-50
       // ceiling on the natural corpus (hottest shingle df 25): output
       // contract is l5's uncapped oracle verbatim, hold pinned in-query
@@ -3093,47 +3463,19 @@ object LlmQueries {
       // the df cap erasing hot shingles from the universe (both the
       // intersection and the per-doc set sizes) before the pair join
       ("l89_jaccard_hot_cap" ->
-        """WITH docs2 AS (SELECT doc_id,
-          |        CASE WHEN doc_id % 3 = 0
-          |             THEN text || ' standard license header text appended by the crawler pipeline every run'
-          |             ELSE text END AS text
-          |      FROM documents),
-          |d AS (SELECT doc_id, regexp_extract_all(text, '\S+') AS ws FROM docs2),
-          |sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-          |       FROM d, UNNEST(generate_series(1, greatest(len(ws)-2, 0))) t(i)
-          |       WHERE len(ws) >= 3),
-          |dfx AS (SELECT s, COUNT(*) AS df FROM sh GROUP BY 1),
-          |kept AS (SELECT sh.doc_id, sh.s FROM sh JOIN dfx USING (s)
-          |         WHERE df <= 50),
-          |cnt AS (SELECT doc_id, COUNT(*) AS n_sh FROM kept GROUP BY 1),
-          |inter AS (SELECT a.doc_id AS da, b.doc_id AS db, COUNT(*) AS i
-          |          FROM kept a JOIN kept b ON a.s = b.s AND a.doc_id < b.doc_id
-          |          GROUP BY 1, 2)
-          |SELECT da, db, CAST(i AS DOUBLE)/(ca.n_sh + cb.n_sh - i) AS jaccard
-          |FROM inter JOIN cnt ca ON ca.doc_id = da JOIN cnt cb ON cb.doc_id = db
-          |WHERE CAST(i AS DOUBLE)/(ca.n_sh + cb.n_sh - i) > 0.8
-          |ORDER BY da, db""".stripMargin) +
-      // l88: positioned selection — per window the struct min
-      // {h, -pos} is argmin-by-hash with the RIGHTMOST position on
-      // ties, exactly the Spark side's min(struct(h, -pos)); offsets
-      // join per shared fingerprint
+        s"""WITH $boilerplateDocs,
+           |${shingleCtes("d", "sh", "docs2", n = 3)},
+           |dfx AS (SELECT s, COUNT(*) AS df FROM sh GROUP BY 1),
+           |kept AS (SELECT sh.doc_id, sh.s FROM sh JOIN dfx USING (s)
+           |         WHERE df <= 50),
+           |${setSizeCte("kept")},
+           |${allPairsInterCte("inter", "kept")}
+           |${jaccardPairsSql("inter", 0.8)}""".stripMargin) +
+      // l88: the positioned selections, offsets joined per shared
+      // fingerprint
       ("l88_winnow_spans" ->
-        """WITH toks AS (SELECT doc_id, regexp_extract_all(text, '\S+') AS ws
-          |              FROM documents),
-          |g AS (SELECT doc_id, i-1 AS pos,
-          |        CAST('0x' || substr(md5(array_to_string(ws[i:i+4], ' ')), 1, 10)
-          |          AS BIGINT) AS h,
-          |        len(ws)-4 AS ng
-          |      FROM toks, UNNEST(generate_series(1, len(ws)-4)) t(i)
-          |      WHERE len(ws) >= 5),
-          |wm AS (SELECT doc_id, pos, ng,
-          |        MIN({'h': h, 'np': -pos}) OVER (PARTITION BY doc_id ORDER BY pos
-          |                     ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS sel
-          |       FROM g),
-          |sels AS (SELECT DISTINCT doc_id, CAST(-(sel.np) AS BIGINT) AS spos,
-          |           sel.h AS fp
-          |         FROM wm WHERE pos <= greatest(ng-4, 0))
-          |SELECT a.doc_id AS da, b.doc_id AS db, a.fp AS fp,
+        s"""WITH $winnowSpanCtes
+           |SELECT a.doc_id AS da, b.doc_id AS db, a.fp AS fp,
           |  a.spos AS pa, b.spos AS pb
           |FROM sels a JOIN sels b ON a.fp = b.fp AND a.doc_id < b.doc_id
           |ORDER BY da, db, fp, pa, pb""".stripMargin) +
@@ -3143,22 +3485,8 @@ object LlmQueries {
       // more than 8 tokens apart, interval ends covering the full
       // 5-gram (+4)
       ("l91_winnow_intervals" ->
-        """WITH toks AS (SELECT doc_id, regexp_extract_all(text, '\S+') AS ws
-          |              FROM documents),
-          |g AS (SELECT doc_id, i-1 AS pos,
-          |        CAST('0x' || substr(md5(array_to_string(ws[i:i+4], ' ')), 1, 10)
-          |          AS BIGINT) AS h,
-          |        len(ws)-4 AS ng
-          |      FROM toks, UNNEST(generate_series(1, len(ws)-4)) t(i)
-          |      WHERE len(ws) >= 5),
-          |wm AS (SELECT doc_id, pos, ng,
-          |        MIN({'h': h, 'np': -pos}) OVER (PARTITION BY doc_id ORDER BY pos
-          |                     ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS sel
-          |       FROM g),
-          |sels AS (SELECT DISTINCT doc_id, CAST(-(sel.np) AS BIGINT) AS spos,
-          |           sel.h AS fp
-          |         FROM wm WHERE pos <= greatest(ng-4, 0)),
-          |m AS (SELECT a.doc_id AS da, b.doc_id AS db, a.spos AS pa,
+        s"""WITH $winnowSpanCtes,
+           |m AS (SELECT a.doc_id AS da, b.doc_id AS db, a.spos AS pa,
           |        b.spos AS pb, a.spos - b.spos AS diag
           |      FROM sels a JOIN sels b ON a.fp = b.fp AND a.doc_id < b.doc_id),
           |br AS (SELECT *, CASE WHEN pa - LAG(pa) OVER (PARTITION BY da, db, diag
@@ -3181,29 +3509,12 @@ object LlmQueries {
       // the containment division replayed — exact BIGINT inputs, one
       // correctly-rounded division per pair on both engines
       ("l96_winnow_containment" ->
-        """WITH toks AS (SELECT doc_id, regexp_extract_all(text, '\S+') AS ws
-          |              FROM documents),
-          |g AS (SELECT doc_id, i-1 AS pos,
-          |        CAST('0x' || substr(md5(array_to_string(ws[i:i+4], ' ')), 1, 10)
-          |          AS BIGINT) AS h,
-          |        len(ws)-4 AS ng
-          |      FROM toks, UNNEST(generate_series(1, len(ws)-4)) t(i)
-          |      WHERE len(ws) >= 5),
-          |wm AS (SELECT doc_id, pos, ng,
-          |        MIN(h) OVER (PARTITION BY doc_id ORDER BY pos
-          |                     ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp
-          |       FROM g),
-          |fps AS (SELECT DISTINCT doc_id, fp FROM wm
-          |        WHERE pos <= greatest(ng-4, 0)),
-          |cnt AS (SELECT doc_id, COUNT(*) AS n_fp FROM fps GROUP BY 1),
-          |pr AS (SELECT a.doc_id AS da, b.doc_id AS db, COUNT(*) AS n_shared
-          |       FROM fps a JOIN fps b ON a.fp = b.fp AND a.doc_id < b.doc_id
-          |       GROUP BY 1, 2)
-          |SELECT da, db, n_shared,
-          |  CAST(n_shared AS DOUBLE) / least(ca.n_fp, cb.n_fp) AS containment
-          |FROM pr JOIN cnt ca ON ca.doc_id = da JOIN cnt cb ON cb.doc_id = db
-          |WHERE CAST(n_shared AS DOUBLE) / least(ca.n_fp, cb.n_fp) >= 0.8
-          |ORDER BY da, db""".stripMargin) +
+        s"""WITH $winnowContainmentCtes
+           |SELECT da, db, n_shared,
+           |  $containmentOf AS containment
+           |FROM pr JOIN cnt ca ON ca.doc_id = da JOIN cnt cb ON cb.doc_id = db
+           |WHERE $containmentOf >= 0.8
+           |ORDER BY da, db""".stripMargin) +
       // l95 arms the cap on the natural corpus: every turn's df stays
       // under the ceiling (prefix df <= full-corpus df <= 4), the
       // probe is a no-op, so the contract is l92's uncapped oracle
@@ -3216,87 +3527,45 @@ object LlmQueries {
       // docs; verdicts accumulate per turn (an early pair survives
       // even if its fingerprint turns hot later)
       ("l94_stream_winnow_cap" ->
-        """WITH docs2 AS (SELECT doc_id,
-          |        CASE WHEN doc_id % 3 = 0
-          |             THEN text || ' standard license header text appended by the crawler pipeline every run'
-          |             ELSE text END AS text
-          |      FROM documents),
-          |toks AS (SELECT doc_id, regexp_extract_all(text, '\S+') AS ws
-          |         FROM docs2),
-          |g AS (SELECT doc_id, i-1 AS pos,
-          |        CAST('0x' || substr(md5(array_to_string(ws[i:i+4], ' ')), 1, 10)
-          |          AS BIGINT) AS h,
-          |        len(ws)-4 AS ng
-          |      FROM toks, UNNEST(generate_series(1, len(ws)-4)) t(i)
-          |      WHERE len(ws) >= 5),
-          |wm AS (SELECT doc_id, pos, ng,
-          |        MIN(h) OVER (PARTITION BY doc_id ORDER BY pos
-          |                     ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp
-          |       FROM g),
-          |fps AS (SELECT DISTINCT doc_id, fp FROM wm
-          |        WHERE pos <= greatest(ng-4, 0)),
-          |b AS (SELECT doc_id, fp, doc_id % 4 AS batch FROM fps),
-          |turns AS (SELECT UNNEST(generate_series(0, 3)) AS t),
-          |dfx AS (SELECT turns.t, b.fp, COUNT(*) AS df
-          |        FROM b, turns WHERE b.batch <= turns.t
-          |        GROUP BY turns.t, b.fp),
-          |kept AS (SELECT d.t, b.doc_id, b.fp, b.batch
-          |         FROM b JOIN dfx d ON d.fp = b.fp AND b.batch <= d.t
-          |         WHERE d.df <= 8),
-          |pr AS (SELECT n.doc_id AS new_id, s.doc_id AS seen_id,
-          |         COUNT(*) AS n_shared
-          |       FROM kept n JOIN kept s
-          |         ON n.t = s.t AND n.fp = s.fp
-          |        AND n.batch = n.t AND s.batch < n.t
-          |       GROUP BY 1, 2)
-          |SELECT new_id, seen_id, n_shared,
-          |  CAST(new_id % 4 AS BIGINT) AS ingest_batch
-          |FROM pr WHERE n_shared >= 2
-          |ORDER BY new_id, seen_id""".stripMargin) +
+        s"""WITH $boilerplateDocs,
+           |${winnowFpCtes("docs2")},
+           |b AS (SELECT doc_id, fp, doc_id % 4 AS batch FROM fps),
+           |turns AS (SELECT UNNEST(generate_series(0, 3)) AS t),
+           |dfx AS (SELECT turns.t, b.fp, COUNT(*) AS df
+           |        FROM b, turns WHERE b.batch <= turns.t
+           |        GROUP BY turns.t, b.fp),
+           |kept AS (SELECT d.t, b.doc_id, b.fp, b.batch
+           |         FROM b JOIN dfx d ON d.fp = b.fp AND b.batch <= d.t
+           |         WHERE d.df <= 8),
+           |pr AS (SELECT n.doc_id AS new_id, s.doc_id AS seen_id,
+           |         COUNT(*) AS n_shared
+           |       FROM kept n JOIN kept s
+           |         ON n.t = s.t AND n.fp = s.fp
+           |        AND n.batch = n.t AND s.batch < n.t
+           |       GROUP BY 1, 2)
+           |SELECT new_id, seen_id, n_shared,
+           |  CAST(new_id % 4 AS BIGINT) AS ingest_batch
+           |FROM pr WHERE n_shared >= 2
+           |ORDER BY new_id, seen_id""".stripMargin) +
       // l97: the l96 containment pipeline extended with the keep-best
       // action replayed — per pair at containment >= 0.8 the smaller
       // fingerprint set is the contained side (ties drop the larger
       // id), the distinct contained set anti-joins the corpus
       ("l97_containment_dedup" ->
-        """WITH toks AS (SELECT doc_id, regexp_extract_all(text, '\S+') AS ws
-          |              FROM documents),
-          |g AS (SELECT doc_id, i-1 AS pos,
-          |        CAST('0x' || substr(md5(array_to_string(ws[i:i+4], ' ')), 1, 10)
-          |          AS BIGINT) AS h,
-          |        len(ws)-4 AS ng
-          |      FROM toks, UNNEST(generate_series(1, len(ws)-4)) t(i)
-          |      WHERE len(ws) >= 5),
-          |wm AS (SELECT doc_id, pos, ng,
-          |        MIN(h) OVER (PARTITION BY doc_id ORDER BY pos
-          |                     ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp
-          |       FROM g),
-          |fps AS (SELECT DISTINCT doc_id, fp FROM wm
-          |        WHERE pos <= greatest(ng-4, 0)),
-          |cnt AS (SELECT doc_id, COUNT(*) AS n_fp FROM fps GROUP BY 1),
-          |pr AS (SELECT a.doc_id AS da, b.doc_id AS db, COUNT(*) AS n_shared
-          |       FROM fps a JOIN fps b ON a.fp = b.fp AND a.doc_id < b.doc_id
-          |       GROUP BY 1, 2),
-          |contained AS (SELECT DISTINCT
-          |    CASE WHEN ca.n_fp < cb.n_fp THEN da ELSE db END AS doc_id
-          |  FROM pr JOIN cnt ca ON ca.doc_id = da JOIN cnt cb ON cb.doc_id = db
-          |  WHERE CAST(n_shared AS DOUBLE) / least(ca.n_fp, cb.n_fp) >= 0.8)
-          |SELECT d.doc_id, d.lang, d.n_chars FROM documents d
-          |WHERE d.doc_id NOT IN (SELECT doc_id FROM contained)
-          |ORDER BY doc_id""".stripMargin) +
+        s"""WITH $winnowContainmentCtes,
+           |contained AS (SELECT DISTINCT
+           |    CASE WHEN ca.n_fp < cb.n_fp THEN da ELSE db END AS doc_id
+           |  FROM pr JOIN cnt ca ON ca.doc_id = da JOIN cnt cb ON cb.doc_id = db
+           |  WHERE $containmentOf >= 0.8)
+           |SELECT d.doc_id, d.lang, d.n_chars FROM documents d
+           |WHERE d.doc_id NOT IN (SELECT doc_id FROM contained)
+           |ORDER BY doc_id""".stripMargin) +
       // l98: the winnowing replay on both sides of the benchmark
       // split; per train doc its fingerprint count and how many of
       // those the eval corpus also selected; flag = absolute evidence
       // count >= 2 (docs under k tokens surface with n_fp 0, clean)
-      ("l98_span_decontaminate" -> (spanDecontamCtes +
-        """,
-          |cnt AS (SELECT doc_id, COUNT(*) AS n_fp FROM tfp GROUP BY 1)
-          |SELECT tr.doc_id,
-          |  COALESCE(cnt.n_fp, 0) AS n_fp,
-          |  COALESCE(hits.n_overlap, 0) AS n_overlap,
-          |  COALESCE(hits.n_overlap, 0) >= 2 AS contaminated
-          |FROM tr LEFT JOIN cnt ON cnt.doc_id = tr.doc_id
-          |        LEFT JOIN hits ON hits.doc_id = tr.doc_id
-          |ORDER BY tr.doc_id""".stripMargin)) +
+      ("l98_span_decontaminate" ->
+        spanVerdictSql(spanDecontamCtes, withDrop = false)) +
       // l99: the filtering form — train rows below the evidence
       // threshold, metadata intact
       ("l99_span_decontaminate_filter" -> (spanDecontamCtes +
@@ -3310,8 +3579,7 @@ object LlmQueries {
       // store is static, so per-drop union == whole-train batch run)
       ("l111_stream_decontaminate" -> streamDecontamSql) +
       // l100: the l91 positioned-selection + diagonal/island chain run
-      // on both sides of the benchmark split — the same struct-min
-      // (argmin-by-hash, rightmost tie) replay, matches joined
+      // on both sides of the benchmark split, matches joined
       // cross-corpus, islands merged per (pair, diagonal)
       ("l100_leak_spans" -> (leakSpanCtes +
         """
@@ -3359,23 +3627,16 @@ object LlmQueries {
           |WHERE abs(length(a.s) - length(b2.s)) <= 2
           |  AND levenshtein(a.s, b2.s) <= 2
           |ORDER BY va, vb""".stripMargin) +
-      // l105: the l102 pair SQL + the same recursive-CTE closure the
-      // l17 oracle uses, min label per component, singletons to
+      // l105: the l102 pair SQL + the min-label closure, singletons to
       // themselves, per-name row counts joined back
       ("l105_fuzzy_canonical" ->
-        """WITH RECURSIVE v AS (SELECT DISTINCT p_name AS s FROM part),
+        s"""WITH RECURSIVE v AS (SELECT DISTINCT p_name AS s FROM part),
           |b AS (SELECT s, split_part(s, ' ', -1) AS blk FROM v),
           |pairs AS (SELECT a.s AS va, b2.s AS vb
           |          FROM b a JOIN b b2 ON a.blk = b2.blk AND a.s < b2.s
           |          WHERE abs(length(a.s) - length(b2.s)) <= 2
           |            AND levenshtein(a.s, b2.s) <= 2),
-          |edges AS (SELECT va AS x, vb AS y FROM pairs
-          |          UNION SELECT vb, va FROM pairs),
-          |nodes AS (SELECT DISTINCT x AS id FROM edges),
-          |reach AS (SELECT id, id AS r FROM nodes
-          |          UNION
-          |          SELECT e.x, reach.r FROM edges e JOIN reach ON reach.id = e.y),
-          |lbl AS (SELECT id, MIN(r) AS rep FROM reach GROUP BY id),
+          |${closureCtes("va", "vb")},
           |rc AS (SELECT p_name, COUNT(*) AS n_rows FROM part GROUP BY 1)
           |SELECT v.s AS p_name, COALESCE(lbl.rep, v.s) AS canonical, rc.n_rows
           |FROM v LEFT JOIN lbl ON lbl.id = v.s JOIN rc ON rc.p_name = v.s
@@ -3394,66 +3655,30 @@ object LlmQueries {
       // the raster and kills every 8-gram; the 4-byte header shift
       // does the exact opposite)
       ("l116_blob_perceptual_neardup" -> perceptualSql(
-        "list_aggregate(list_transform(range(0, length(t)//2), " +
-          "i -> substr(t, i*2+2, 1) || substr(t, i*2+1, 1)), 'string_agg', '')")) +
+        swapVariantSql)) +
       ("l118_blob_perceptual_hold" -> perceptualSql(
         "'HDR|' || substr(t, 1, length(t)-4)")) +
       // l119: the fire chain's pairs + recursive closure + size/id
       // argmax — the l114 retention tail on the perceptual key
       ("l119_blob_perceptual_dedup" -> perceptualKeepBestSql(
-        "list_aggregate(list_transform(range(0, length(t)//2), " +
-          "i -> substr(t, i*2+2, 1) || substr(t, i*2+1, 1)), 'string_agg', '')")) +
+        swapVariantSql)) +
       // l117: the guard's refresh path — per-drop verdicts against the
       // store THAT DROP ingested under (v1 for batches 0-1, the
       // enlarged v2 for 2-3)
       ("l117_decon_refresh" -> deconRefreshSql) +
-      // l115: l112's candidate chain + the l17 recursive closure —
-      // the canonical action over the q-gram recall
+      // l115: l112's candidate chain + the min-label closure — the
+      // canonical action over the q-gram recall
       ("l115_fuzzy_qgram_canonical" ->
-        """WITH RECURSIVE lw AS (SELECT DISTINCT UNNEST(string_split(p_name, ' ')) AS w
-          |           FROM part),
-          |v AS (SELECT w FROM lw
-          |      UNION
-          |      SELECT substr(w, 1, length(w)-1) FROM lw WHERE length(w) >= 5),
-          |g AS (SELECT w, substr(w, i, 3) AS blk
-          |      FROM v, UNNEST(generate_series(1, length(w)-2)) t(i)
-          |      WHERE length(w) >= 3),
-          |gb AS (SELECT DISTINCT w, blk FROM g),
-          |hot AS (SELECT blk FROM gb GROUP BY blk HAVING COUNT(*) > 16),
-          |kept AS (SELECT w, blk FROM gb
-          |         WHERE blk NOT IN (SELECT blk FROM hot)),
-          |cand AS (SELECT DISTINCT a.w AS va, b.w AS vb
-          |         FROM kept a JOIN kept b ON a.blk = b.blk AND a.w < b.w
-          |         WHERE abs(length(a.w) - length(b.w)) <= 2),
+        s"""WITH RECURSIVE $qgramCandCtes,
           |pairs AS (SELECT va, vb FROM cand WHERE levenshtein(va, vb) <= 2),
-          |edges AS (SELECT va AS x, vb AS y FROM pairs
-          |          UNION SELECT vb, va FROM pairs),
-          |nodes AS (SELECT DISTINCT x AS id FROM edges),
-          |reach AS (SELECT id, id AS r FROM nodes
-          |          UNION
-          |          SELECT e.x, reach.r FROM edges e JOIN reach ON reach.id = e.y),
-          |lbl AS (SELECT id, MIN(r) AS rep FROM reach GROUP BY id)
+          |${closureCtes("va", "vb")}
           |SELECT v.w, COALESCE(lbl.rep, v.w) AS canonical
           |FROM v LEFT JOIN lbl ON lbl.id = v.w
           |ORDER BY v.w""".stripMargin) +
       // l107: multi-pass blocked fuzzy ER — per-key candidates
       // unioned, dedup'd before the DP, over the typo-injected corpus
       ("l107_fuzzy_multiblock" ->
-        """WITH p2 AS (SELECT p_name FROM part
-          |            UNION ALL
-          |            SELECT substr(p_name, 1, length(p_name)-1)
-          |            FROM part WHERE p_partkey % 100 = 0),
-          |v AS (SELECT DISTINCT p_name AS s FROM p2),
-          |b1 AS (SELECT s, split_part(s, ' ', -1) AS blk FROM v),
-          |b2 AS (SELECT s, split_part(s, ' ', 1) AS blk FROM v),
-          |cand AS (
-          |  SELECT a.s AS va, b.s AS vb FROM b1 a
-          |  JOIN b1 b ON a.blk = b.blk AND a.s < b.s
-          |  WHERE abs(length(a.s) - length(b.s)) <= 2
-          |  UNION
-          |  SELECT a.s, b.s FROM b2 a
-          |  JOIN b2 b ON a.blk = b.blk AND a.s < b.s
-          |  WHERE abs(length(a.s) - length(b.s)) <= 2)
+        s"""WITH $multiBlockCandCtes
           |SELECT va, vb, CAST(levenshtein(va, vb) AS BIGINT) AS dist
           |FROM cand WHERE levenshtein(va, vb) <= 2
           |ORDER BY va, vb""".stripMargin) +
@@ -3463,21 +3688,7 @@ object LlmQueries {
       // The two word-split keys contribute zero candidates on a
       // one-token vocabulary by construction, so they have no SQL leg.
       ("l112_fuzzy_qgram_block" ->
-        """WITH lw AS (SELECT DISTINCT UNNEST(string_split(p_name, ' ')) AS w
-          |           FROM part),
-          |v AS (SELECT w FROM lw
-          |      UNION
-          |      SELECT substr(w, 1, length(w)-1) FROM lw WHERE length(w) >= 5),
-          |g AS (SELECT w, substr(w, i, 3) AS blk
-          |      FROM v, UNNEST(generate_series(1, length(w)-2)) t(i)
-          |      WHERE length(w) >= 3),
-          |gb AS (SELECT DISTINCT w, blk FROM g),
-          |hot AS (SELECT blk FROM gb GROUP BY blk HAVING COUNT(*) > 16),
-          |kept AS (SELECT w, blk FROM gb
-          |         WHERE blk NOT IN (SELECT blk FROM hot)),
-          |cand AS (SELECT DISTINCT a.w AS va, b.w AS vb
-          |         FROM kept a JOIN kept b ON a.blk = b.blk AND a.w < b.w
-          |         WHERE abs(length(a.w) - length(b.w)) <= 2)
+        s"""WITH $qgramCandCtes
           |SELECT va, vb, CAST(levenshtein(va, vb) AS BIGINT) AS dist
           |FROM cand WHERE levenshtein(va, vb) <= 2
           |ORDER BY va, vb""".stripMargin) +
@@ -3487,7 +3698,7 @@ object LlmQueries {
       // Pair identity rides the payload itself (the Spark side keys on
       // blob_key) — per-stratum COUNTS are identical either way.
       ("l113_byte_lsh_recall" ->
-        """WITH docs AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 = 0),
+        s"""WITH docs AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 = 0),
           |base AS (
           |  SELECT doc_id, encode(text) AS payload FROM docs
           |  UNION ALL
@@ -3508,30 +3719,11 @@ object LlmQueries {
           |          JOIN cnt ca ON ca.payload = pa
           |          JOIN cnt cb ON cb.payload = pb
           |          WHERE CAST(inter AS DOUBLE) / (ca.n_sh + cb.n_sh - inter) > 0.7),
-          |mh AS (SELECT payload, seed,
-          |         MIN(([40503,34283,49843,10193,5717,9539,62989,55021,
-          |               14939,58057,23371,60943,3571,38833,50993,17389][seed+1]
-          |                * CAST('0x' || substr(md5(s), 1, 10) AS BIGINT) +
-          |              [27179,43691,20117,51347,7129,63577,31769,44201,
-          |               29527,12641,54679,8363,47507,64151,21841,36653][seed+1]
-          |                * CAST('0x' || substr(md5(s), 11, 10) AS BIGINT))
-          |             % 1099511627791) AS mh
-          |       FROM sh, UNNEST(generate_series(0, 15)) t(seed) GROUP BY 1, 2),
-          |bands AS (SELECT payload, seed % 4 AS band,
-          |            array_to_string(list_sort(list(mh)), '|') AS bsig
-          |          FROM mh GROUP BY 1, 2),
-          |cand AS (SELECT DISTINCT x.payload AS pa, y.payload AS pb
-          |         FROM bands x JOIN bands y
-          |           ON x.band = y.band AND x.bsig = y.bsig
-          |          AND x.payload < y.payload),
+          |${minhashCtes("payload", numHashes = 16, rowsPerBand = 4)},
+          |cand AS (${bandPairsSql("payload", "pa", "pb")}),
           |fids AS (SELECT payload FROM cnt WHERE n_sh < 173),
-          |fbands AS (SELECT payload, seed % 8 AS band,
-          |             array_to_string(list_sort(list(mh)), '|') AS bsig
-          |           FROM mh JOIN fids USING (payload) GROUP BY 1, 2),
-          |fcand AS (SELECT DISTINCT x.payload AS pa, y.payload AS pb
-          |          FROM fbands x JOIN fbands y
-          |            ON x.band = y.band AND x.bsig = y.bsig
-          |           AND x.payload < y.payload),
+          |${bandsCte("fbands", "payload", 16, 2, from = "mh JOIN fids USING (payload)")},
+          |fcand AS (${bandPairsSql("payload", "pa", "pb", bands = "fbands")}),
           |candall AS (SELECT pa, pb FROM cand UNION SELECT pa, pb FROM fcand),
           |lshv AS (SELECT c.pa, c.pb FROM cand c
           |         JOIN inter i ON i.pa = c.pa AND i.pb = c.pb
@@ -3558,9 +3750,9 @@ object LlmQueries {
           |  CAST(COUNT(hit) AS DOUBLE) / COUNT(*) AS recall
           |FROM strat GROUP BY 1 ORDER BY 1""".stripMargin) +
       // l110: the l61 cross-drop band-join replay over the byte chain
-      // (16-seed family, 4 strided bands, +1000001 variant ids)
+      // (+1000001 variant ids)
       ("l110_stream_blob_neardup" ->
-        """WITH base AS (
+        s"""WITH base AS (
           |  SELECT doc_id, encode(text) AS payload FROM documents
           |  UNION ALL
           |  SELECT doc_id + 1000001,
@@ -3571,56 +3763,14 @@ object LlmQueries {
           |sh AS (SELECT DISTINCT doc_id, substr(h, i*2+1, 16) AS s
           |        FROM hx, UNNEST(generate_series(0, nb - 8)) t(i)
           |        WHERE nb >= 8),
-          |mh AS (SELECT doc_id, seed,
-          |         MIN(([40503,34283,49843,10193,5717,9539,62989,55021,
-          |               14939,58057,23371,60943,3571,38833,50993,17389][seed+1]
-          |                * CAST('0x' || substr(md5(s), 1, 10) AS BIGINT) +
-          |              [27179,43691,20117,51347,7129,63577,31769,44201,
-          |               29527,12641,54679,8363,47507,64151,21841,36653][seed+1]
-          |                * CAST('0x' || substr(md5(s), 11, 10) AS BIGINT))
-          |             % 1099511627791) AS mh
-          |       FROM sh, UNNEST(generate_series(0, 15)) t(seed) GROUP BY 1, 2),
-          |bands AS (SELECT doc_id, seed % 4 AS band,
-          |            array_to_string(list_sort(list(mh)), '|') AS bsig
-          |          FROM mh GROUP BY 1, 2),
-          |m AS (SELECT x.doc_id AS did, MIN(y.doc_id) AS first_match,
-          |        COUNT(DISTINCT y.doc_id) AS n_matches
-          |      FROM bands x JOIN bands y ON x.band = y.band AND x.bsig = y.bsig
-          |      WHERE (y.doc_id % 4) < (x.doc_id % 4)
-          |      GROUP BY 1)
-          |SELECT n.doc_id, CAST(n.doc_id % 4 AS BIGINT) AS ingest_batch,
-          |  m.first_match,
-          |  CAST(COALESCE(m.n_matches, 0) AS BIGINT) AS n_matches,
-          |  m.first_match IS NOT NULL AS is_dup
-          |FROM base n
-          |LEFT JOIN m ON m.did = n.doc_id
-          |ORDER BY doc_id""".stripMargin) +
-      // l109: the multiblock pair union + the l17 recursive-CTE
-      // closure — min label per component, singletons self-map
+          |${minhashCtes("doc_id", numHashes = 16, rowsPerBand = 4)},
+          |${dropVerdictSql("base", counted = true)}""".stripMargin) +
+      // l109: the multiblock pair union + the min-label closure,
+      // singletons self-map
       ("l109_fuzzy_multiblock_canonical" ->
-        """WITH RECURSIVE p2 AS (SELECT p_name FROM part
-          |            UNION ALL
-          |            SELECT substr(p_name, 1, length(p_name)-1)
-          |            FROM part WHERE p_partkey % 100 = 0),
-          |v AS (SELECT DISTINCT p_name AS s FROM p2),
-          |b1 AS (SELECT s, split_part(s, ' ', -1) AS blk FROM v),
-          |b2 AS (SELECT s, split_part(s, ' ', 1) AS blk FROM v),
-          |cand AS (
-          |  SELECT a.s AS va, b.s AS vb FROM b1 a
-          |  JOIN b1 b ON a.blk = b.blk AND a.s < b.s
-          |  WHERE abs(length(a.s) - length(b.s)) <= 2
-          |  UNION
-          |  SELECT a.s, b.s FROM b2 a
-          |  JOIN b2 b ON a.blk = b.blk AND a.s < b.s
-          |  WHERE abs(length(a.s) - length(b.s)) <= 2),
+        s"""WITH RECURSIVE $multiBlockCandCtes,
           |pairs AS (SELECT va, vb FROM cand WHERE levenshtein(va, vb) <= 2),
-          |edges AS (SELECT va AS x, vb AS y FROM pairs
-          |          UNION SELECT vb, va FROM pairs),
-          |nodes AS (SELECT DISTINCT x AS id FROM edges),
-          |reach AS (SELECT id, id AS r FROM nodes
-          |          UNION
-          |          SELECT e.x, reach.r FROM edges e JOIN reach ON reach.id = e.y),
-          |lbl AS (SELECT id, MIN(r) AS rep FROM reach GROUP BY id)
+          |${closureCtes("va", "vb")}
           |SELECT v.s AS p_name, COALESCE(lbl.rep, v.s) AS canonical
           |FROM v LEFT JOIN lbl ON lbl.id = v.s
           |ORDER BY p_name""".stripMargin) +
@@ -3651,10 +3801,7 @@ object LlmQueries {
       ("l69_token_fertility" -> bpeFertilityOracle(10)) +
       ("l68_pii_redact" -> piiOracle) +
       ("l70_ngram_novelty" ->
-        """WITH d AS (SELECT doc_id, regexp_extract_all(text, '\S+') AS ws FROM documents),
-          |sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-          |       FROM d, UNNEST(generate_series(1, greatest(len(ws)-2, 0))) t(i)
-          |       WHERE len(ws) >= 3),
+        s"""WITH ${shingleCtes("d", "sh", "documents", n = 3)},
           |df AS (SELECT s, COUNT(*) AS df FROM sh GROUP BY 1),
           |agg AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_shingles,
           |          CAST(SUM(CASE WHEN df = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_unique
@@ -3694,23 +3841,11 @@ object LlmQueries {
       // state through, so the green hash row proves incremental ==
       // full, the IVM equivalence claim.
       ("l77_incremental_refresh" ->
-        """WITH b AS (SELECT doc_id,
+        s"""WITH b AS (SELECT doc_id,
           |        CASE WHEN doc_id % 5 = 0 THEN text || ' [rev2]' ELSE text END AS text
           |      FROM documents WHERE doc_id % 11 <> 4),
-          |f AS (SELECT doc_id,
-          |    CAST(len(list_filter(regexp_extract_all(text, '\S+'),
-          |        x -> list_contains(['the','a','and','of','to','in'], x))) AS DOUBLE)
-          |      / NULLIF(len(regexp_extract_all(text, '\S+')), 0) AS stop_ratio,
-          |    CAST(length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS DOUBLE)
-          |      / NULLIF(length(text), 0) AS punct_ratio,
-          |    CAST(length(regexp_replace(text, '[^A-Z]', '', 'g')) AS DOUBLE)
-          |      / NULLIF(length(text), 0) AS upper_ratio,
-          |    len(regexp_extract_all(text, '\S+')) AS n_tokens
-          |  FROM b),
-          |z AS (SELECT doc_id,
-          |    -1.5 + 3.0 * stop_ratio - 8.0 * punct_ratio - 2.0 * upper_ratio
-          |      + 0.35 * ln(1.0 + n_tokens) AS z
-          |  FROM f)
+          |${qualityFeatsCte("doc_id", "b")},
+          |$qualityLogitCte
           |SELECT doc_id, round(1.0 / (1.0 + exp(-z)), 6) AS q_score,
           |  round(1.0 / (1.0 + exp(-z)), 6) >= 0.5 AS keep
           |FROM z ORDER BY doc_id""".stripMargin) +
@@ -3738,9 +3873,6 @@ object LlmQueries {
           |  CAST(SUM(octet_length(encode(text))) AS BIGINT) AS sum_bytes
           |FROM documents WHERE doc_id % 11 <> 4
           |GROUP BY source ORDER BY source""".stripMargin) +
-      // l73: per-pair guarded cosine rounded to 6 d.p. BEFORE the max —
-      // the same scoring contract as l8/l9, so the max and the >= 0.4
-      // flag are bit-reproducible across engines.
       // l75: DuckDB rebuilds both snapshots and compares the payloads
       // THEMSELVES — the Spark side diffs (id, xxhash64) pointer
       // frames, so the green row certifies the fingerprint trade on
@@ -3772,43 +3904,19 @@ object LlmQueries {
         .replace("FROM embeddings", "FROM live_embeddings")
         .replaceFirst("WITH ",
           "WITH live_embeddings AS (SELECT * FROM embeddings " +
-            "WHERE vec_id % 3 <> 0 OR vec_id = 0),\n") + "\n" +
-        """SELECT c2.vec_id,
-          |  CAST(SUM(CAST(round(d.dsub * 1000000) AS BIGINT)) AS DOUBLE) / 1000000 AS adc_dist
-          |FROM codes c2 JOIN dtab d ON d.sub = c2.sub AND d.code = c2.code
-          |GROUP BY 1 ORDER BY adc_dist, c2.vec_id LIMIT 10""".stripMargin)) +
-      ("l76_ann_tombstone" -> (ivfPqAdcCtes + ",\n" +
-        """adc AS (SELECT c2.vec_id,
-          |    CAST(SUM(CAST(round(d.dsub * 1000000) AS BIGINT)) AS DOUBLE) / 1000000 AS adc_dist
-          |  FROM codes c2 JOIN dtab d ON d.sub = c2.sub AND d.code = c2.code
-          |  GROUP BY 1),
-          |del AS (SELECT vec_id FROM adc WHERE vec_id <> 0
-          |        ORDER BY adc_dist, vec_id LIMIT 3)
-          |SELECT vec_id, adc_dist FROM adc
-          |WHERE vec_id NOT IN (SELECT vec_id FROM del)
-          |ORDER BY adc_dist, vec_id LIMIT 10""".stripMargin)) +
+            "WHERE vec_id % 3 <> 0 OR vec_id = 0),\n") + "\n" + adcTop10Sql("c2"))) +
+      ("l76_ann_tombstone" -> annTombstoneSql) +
       // l82 holds-and-masks: the serve contract is l76's masked-serve
       // oracle verbatim (same 3-nearest-derived deletion, same mask)
-      ("l82_ann_auto_hold" -> (ivfPqAdcCtes + ",\n" +
-        """adc AS (SELECT c2.vec_id,
-          |    CAST(SUM(CAST(round(d.dsub * 1000000) AS BIGINT)) AS DOUBLE) / 1000000 AS adc_dist
-          |  FROM codes c2 JOIN dtab d ON d.sub = c2.sub AND d.code = c2.code
-          |  GROUP BY 1),
-          |del AS (SELECT vec_id FROM adc WHERE vec_id <> 0
-          |        ORDER BY adc_dist, vec_id LIMIT 3)
-          |SELECT vec_id, adc_dist FROM adc
-          |WHERE vec_id NOT IN (SELECT vec_id FROM del)
-          |ORDER BY adc_dist, vec_id LIMIT 10""".stripMargin)) +
+      ("l82_ann_auto_hold" -> annTombstoneSql) +
+      // l73: the guarded cosine is rounded BEFORE the max, so the max
+      // and the >= 0.4 flag are bit-reproducible across engines
       ("l73_semantic_decontaminate" ->
-        """WITH e AS (SELECT vec_id, embedding,
-          |    list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))) AS nrm
-          |  FROM embeddings),
+        s"""WITH ${normCte(n2 = "nrm")},
           |ev AS (SELECT embedding, nrm FROM e WHERE vec_id % 17 = 0),
           |tr AS (SELECT vec_id, embedding, nrm FROM e WHERE vec_id % 17 <> 0),
           |sc AS (SELECT t.vec_id,
-          |    max(CASE WHEN t.nrm = 0 OR v.nrm = 0 THEN 0.0
-          |      ELSE round(list_sum(list_transform(list_zip(t.embedding, v.embedding),
-          |        z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE))) / sqrt(t.nrm * v.nrm), 6) END)
+          |    max(${guardedCos("t", "v", n2 = "nrm", times = " * ")})
           |      AS max_eval_cos
           |  FROM tr t CROSS JOIN ev v GROUP BY t.vec_id)
           |SELECT t.vec_id, coalesce(sc.max_eval_cos, 0.0) AS max_eval_cos,
@@ -3918,17 +4026,11 @@ object LlmQueries {
        |pieces AS (SELECT t.doc_id, CAST(SUM(len(e.sy)) AS BIGINT) AS n_pieces
        |           FROM tok t JOIN enc e USING (word) GROUP BY t.doc_id),
        |lang AS (SELECT doc_id,
-       |    CASE WHEN en + de + fr + es = 0 THEN 'und'
-       |         WHEN en >= de AND en >= fr AND en >= es THEN 'en'
-       |         WHEN de >= fr AND de >= es THEN 'de'
-       |         WHEN fr >= es THEN 'fr' ELSE 'es' END AS lang_detected,
+       |    ${langIdCase()} AS lang_detected,
        |    n_words
        |  FROM (SELECT doc_id,
        |      CAST(len(regexp_extract_all(text, '\\S+')) AS BIGINT) AS n_words,
-       |      len(list_filter(regexp_extract_all(text,'\\S+'), x -> list_contains(['the','a','and','of','is'], x))) AS en,
-       |      len(list_filter(regexp_extract_all(text,'\\S+'), x -> list_contains(['der','die','das','und','ist'], x))) AS de,
-       |      len(list_filter(regexp_extract_all(text,'\\S+'), x -> list_contains(['le','la','et','les','est'], x))) AS fr,
-       |      len(list_filter(regexp_extract_all(text,'\\S+'), x -> list_contains(['el','los','y','las','es'], x))) AS es
+       |$langScoreCols
        |    FROM documents))
        |SELECT l.lang_detected, COUNT(*) AS n_docs,
        |  CAST(SUM(l.n_words) AS BIGINT) AS n_words,
@@ -3946,46 +4048,29 @@ object LlmQueries {
     * and the probe's per-(sub, code) ADC lookup table. Ends at the
     * `dtab` CTE — callers append their own final ranking. */
   private def ivfPqAdcCtes: String =
-    """WITH e AS (SELECT vec_id, embedding,
-      |    list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))) AS n2,
-      |    sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)))) AS nr
-      |  FROM embeddings),
-      |c AS (SELECT * FROM e ORDER BY vec_id LIMIT 16),
-      |ac AS (SELECT v.vec_id AS vid, c.vec_id AS ci,
-      |    CASE WHEN v.n2 = 0 OR c.n2 = 0 THEN 0.0
-      |      ELSE round(list_sum(list_transform(list_zip(v.embedding, c.embedding),
-      |        z -> CAST(z[1] AS DOUBLE)*CAST(z[2] AS DOUBLE))) / (v.nr * c.nr), 6) END AS cos
-      |  FROM e v, c),
-      |ranked AS (SELECT vid, ci,
-      |    ROW_NUMBER() OVER (PARTITION BY vid ORDER BY cos DESC, ci) AS rnk FROM ac),
-      |buckets AS (SELECT ci AS bucket, vid FROM ranked WHERE rnk = 1),
-      |pb AS (SELECT ci AS bucket FROM ranked WHERE vid = 0 AND rnk <= 4),
-      |cand AS (SELECT b.vid AS vec_id FROM buckets b JOIN pb ON pb.bucket = b.bucket),
-      |idx AS (SELECT vec_id, embedding,
-      |    ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cid
-      |  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 16)),
-      |cb AS (SELECT t.sub, cid, embedding[sub*16+1 : sub*16+16] AS cvec
-      |       FROM idx, UNNEST(generate_series(0, 3)) t(sub)),
-      |sv AS (SELECT vec_id, t.sub, embedding[sub*16+1 : sub*16+16] AS svec
-      |       FROM embeddings, UNNEST(generate_series(0, 3)) t(sub)),
-      |scored AS (SELECT sv.vec_id, sv.sub, cb.cid,
-      |    round(list_sum(list_transform(list_zip(sv.svec, cb.cvec),
-      |      z -> (CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE))
-      |         * (CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE)))), 6) AS dist
-      |  FROM sv JOIN cb ON cb.sub = sv.sub),
-      |codes AS (SELECT vec_id, sub, code FROM (
-      |  SELECT vec_id, sub, cid AS code,
-      |    ROW_NUMBER() OVER (PARTITION BY vec_id, sub ORDER BY dist, cid) AS rk
-      |  FROM scored) WHERE rk = 1
-      |  AND vec_id IN (SELECT vec_id FROM cand)),
-      |qs AS (SELECT t.sub, embedding[sub*16+1 : sub*16+16] AS qvec
-      |       FROM (SELECT embedding FROM embeddings WHERE vec_id = 0),
-      |            UNNEST(generate_series(0, 3)) t(sub)),
-      |dtab AS (SELECT cb.sub, cb.cid AS code,
-      |    round(list_sum(list_transform(list_zip(qs.qvec, cb.cvec),
-      |      z -> (CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE))
-      |         * (CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE)))), 6) AS dsub
-      |  FROM cb JOIN qs ON qs.sub = cb.sub)""".stripMargin
+    s"""WITH $ivfRoutingCtes,
+       |buckets AS (SELECT ci AS bucket, vid FROM ranked WHERE rnk = 1),
+       |pb AS (SELECT ci AS bucket FROM ranked WHERE vid = 0 AND rnk <= 4),
+       |cand AS (SELECT b.vid AS vec_id FROM buckets b JOIN pb ON pb.bucket = b.bucket),
+       |$pqScoredCtes,
+       |codes AS ($pqCodesSql
+       |  AND vec_id IN (SELECT vec_id FROM cand)),
+       |${adcTableCtes(batch = false)}""".stripMargin
+
+  /** l76/l82's delete-aware tail: the full candidate ADC ranking, the
+    * probe's top-3 non-self neighbors as the tombstone set, and the
+    * top-10 drawn from the survivors. */
+  private def annTombstoneSql: String =
+    ivfPqAdcCtes + ",\n" +
+    s"""adc AS (SELECT c2.vec_id,
+       |    $adcDist
+       |  FROM codes c2 JOIN dtab d ON d.sub = c2.sub AND d.code = c2.code
+       |  GROUP BY 1),
+       |del AS (SELECT vec_id FROM adc WHERE vec_id <> 0
+       |        ORDER BY adc_dist, vec_id LIMIT 3)
+       |SELECT vec_id, adc_dist FROM adc
+       |WHERE vec_id NOT IN (SELECT vec_id FROM del)
+       |ORDER BY adc_dist, vec_id LIMIT 10""".stripMargin
 
   private def oracleSqlBase: Map[String, String] = Map(
     "l58_logreg_quality" -> logRegOracle,
@@ -4003,16 +4088,10 @@ object LlmQueries {
         |  CAST(length(regexp_replace(text, '[^A-Z]', '', 'g')) AS DOUBLE) / length(text) AS upper_ratio
         |FROM documents ORDER BY doc_id""".stripMargin,
     "l2_text_langid" ->
-      """WITH sc AS (SELECT
-        |  len(list_filter(regexp_extract_all(text,'\S+'), x -> list_contains(['the','a','and','of','is'], x))) AS en,
-        |  len(list_filter(regexp_extract_all(text,'\S+'), x -> list_contains(['der','die','das','und','ist'], x))) AS de,
-        |  len(list_filter(regexp_extract_all(text,'\S+'), x -> list_contains(['le','la','et','les','est'], x))) AS fr,
-        |  len(list_filter(regexp_extract_all(text,'\S+'), x -> list_contains(['el','los','y','las','es'], x))) AS es
+      s"""WITH sc AS (SELECT
+        |$langScoreCols
         |FROM documents)
-        |SELECT CASE WHEN en + de + fr + es = 0 THEN 'und'
-        |            WHEN en >= de AND en >= fr AND en >= es THEN 'en'
-        |            WHEN de >= fr AND de >= es THEN 'de'
-        |            WHEN fr >= es THEN 'fr' ELSE 'es' END AS lang_detected,
+        |SELECT ${langIdCase()} AS lang_detected,
         |  COUNT(*) AS n
         |FROM sc GROUP BY 1 ORDER BY 1""".stripMargin,
     "l3_fingerprint" ->
@@ -4021,108 +4100,28 @@ object LlmQueries {
       """SELECT md5(text) AS content_hash, MIN(doc_id) AS keep_id, COUNT(*) AS n_copies
         |FROM documents GROUP BY 1 ORDER BY keep_id""".stripMargin,
     "l5_dedup_ngram" ->
-      """WITH d AS (SELECT doc_id, regexp_extract_all(text, '\S+') AS ws FROM documents),
-        |sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-        |       FROM d, UNNEST(generate_series(1, greatest(len(ws)-2, 0))) t(i)
-        |       WHERE len(ws) >= 3),
-        |cnt AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY 1),
-        |inter AS (SELECT a.doc_id AS da, b.doc_id AS db, COUNT(*) AS i
-        |          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2)
-        |SELECT da, db, CAST(i AS DOUBLE)/(ca.n_sh + cb.n_sh - i) AS jaccard
-        |FROM inter JOIN cnt ca ON ca.doc_id = da JOIN cnt cb ON cb.doc_id = db
-        |WHERE CAST(i AS DOUBLE)/(ca.n_sh + cb.n_sh - i) > 0.8
-        |ORDER BY da, db""".stripMargin,
+      s"""WITH ${shingleCtes("d", "sh", "documents", n = 3)},
+        |${setSizeCte("sh")},
+        |${allPairsInterCte("inter", "sh")}
+        |${jaccardPairsSql("inter", 0.8)}""".stripMargin,
     "l6_dedup_minhash" ->
-      """WITH d AS (SELECT doc_id, regexp_extract_all(text, '\S+') AS ws FROM documents),
-        |sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-        |       FROM d, UNNEST(generate_series(1, greatest(len(ws)-2, 0))) t(i)
-        |       WHERE len(ws) >= 3),
-        |mh AS (SELECT doc_id, seed,
-        |         MIN(([40503,34283,49843,10193,5717,9539,62989,55021][seed+1]
-        |                * CAST('0x' || substr(md5(s), 1, 10) AS BIGINT) +
-        |              [27179,43691,20117,51347,7129,63577,31769,44201][seed+1]
-        |                * CAST('0x' || substr(md5(s), 11, 10) AS BIGINT))
-        |             % 1099511627791) AS mh
-        |       FROM sh, UNNEST(generate_series(0, 7)) t(seed) GROUP BY 1, 2),
-        |bands AS (SELECT doc_id, seed % 4 AS band,
-        |            array_to_string(list_sort(list(mh)), '|') AS bsig
-        |          FROM mh GROUP BY 1, 2)
-        |SELECT DISTINCT x.doc_id AS da, y.doc_id AS db
-        |FROM bands x JOIN bands y
-        |  ON x.band = y.band AND x.bsig = y.bsig AND x.doc_id < y.doc_id
+      s"""WITH ${shingleCtes("d", "sh", "documents", n = 3)},
+        |${minhashCtes("doc_id", numHashes = 8, rowsPerBand = 2)}
+        |${bandPairsSql()}
         |ORDER BY da, db""".stripMargin,
     "l17_dedup_groups" ->
-      """WITH RECURSIVE d AS (SELECT doc_id, regexp_extract_all(text, '\S+') AS ws FROM documents),
-        |sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-        |       FROM d, UNNEST(generate_series(1, greatest(len(ws)-2, 0))) t(i)
-        |       WHERE len(ws) >= 3),
-        |cnt AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY 1),
-        |mh AS (SELECT doc_id, seed,
-        |         MIN(([40503,34283,49843,10193,5717,9539,62989,55021][seed+1]
-        |                * CAST('0x' || substr(md5(s), 1, 10) AS BIGINT) +
-        |              [27179,43691,20117,51347,7129,63577,31769,44201][seed+1]
-        |                * CAST('0x' || substr(md5(s), 11, 10) AS BIGINT))
-        |             % 1099511627791) AS mh
-        |       FROM sh, UNNEST(generate_series(0, 7)) t(seed) GROUP BY 1, 2),
-        |bands AS (SELECT doc_id, seed % 4 AS band,
-        |            array_to_string(list_sort(list(mh)), '|') AS bsig
-        |          FROM mh GROUP BY 1, 2),
-        |cand AS (SELECT DISTINCT x.doc_id AS da, y.doc_id AS db
-        |         FROM bands x JOIN bands y
-        |           ON x.band = y.band AND x.bsig = y.bsig AND x.doc_id < y.doc_id),
-        |inter AS (SELECT c.da, c.db, COUNT(*) AS i
-        |          FROM cand c
-        |          JOIN sh a ON a.doc_id = c.da
-        |          JOIN sh b ON b.doc_id = c.db AND b.s = a.s
-        |          GROUP BY 1, 2),
-        |pairs AS (SELECT da, db FROM inter
-        |          JOIN cnt ca ON ca.doc_id = da JOIN cnt cb ON cb.doc_id = db
-        |          WHERE CAST(i AS DOUBLE)/(ca.n_sh + cb.n_sh - i) > 0.8),
-        |edges AS (SELECT da AS x, db AS y FROM pairs UNION SELECT db, da FROM pairs),
-        |nodes AS (SELECT DISTINCT x AS id FROM edges),
-        |reach AS (SELECT id, id AS r FROM nodes
-        |          UNION
-        |          SELECT e.x, reach.r FROM edges e JOIN reach ON reach.id = e.y)
+      s"""WITH RECURSIVE ${lshVerifyCtes("documents")},
+        |pairs AS (${jaccardAbove("inter", 0.8)}),
+        |${closureCtes("da", "db", label = None)}
         |SELECT id AS doc_id, MIN(r) AS rep FROM reach GROUP BY id ORDER BY doc_id""".stripMargin,
     "l7_simhash" ->
-      """WITH tok AS (SELECT doc_id, unnest(regexp_extract_all(text, '\S+')) AS t FROM documents),
-        |h AS (SELECT doc_id, md5(t) AS h FROM tok),
-        |bits AS (SELECT doc_id, p, b,
-        |    CASE WHEN ((instr('0123456789abcdef', substr(h, p, 1)) - 1) >> b) & 1 = 1
-        |         THEN 1 ELSE -1 END AS c
-        |  FROM h, UNNEST(generate_series(1, 8)) tp(p), UNNEST(generate_series(0, 3)) tb(b)),
-        |s AS (SELECT doc_id, p, b, SUM(c) AS s FROM bits GROUP BY 1, 2, 3)
+      s"""WITH $simhashCtes
         |SELECT doc_id,
-        |  CAST(SUM(CASE WHEN s > 0 THEN (CAST(1 AS BIGINT) << ((8 - p) * 4 + b)) ELSE 0 END) AS BIGINT) AS simhash32
+        |  $simhashFold AS simhash32
         |FROM s GROUP BY doc_id ORDER BY doc_id""".stripMargin,
     "l16_dedup_lsh_verified" ->
-      """WITH d AS (SELECT doc_id, regexp_extract_all(text, '\S+') AS ws FROM documents),
-        |sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-        |       FROM d, UNNEST(generate_series(1, greatest(len(ws)-2, 0))) t(i)
-        |       WHERE len(ws) >= 3),
-        |cnt AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY 1),
-        |mh AS (SELECT doc_id, seed,
-        |         MIN(([40503,34283,49843,10193,5717,9539,62989,55021][seed+1]
-        |                * CAST('0x' || substr(md5(s), 1, 10) AS BIGINT) +
-        |              [27179,43691,20117,51347,7129,63577,31769,44201][seed+1]
-        |                * CAST('0x' || substr(md5(s), 11, 10) AS BIGINT))
-        |             % 1099511627791) AS mh
-        |       FROM sh, UNNEST(generate_series(0, 7)) t(seed) GROUP BY 1, 2),
-        |bands AS (SELECT doc_id, seed % 4 AS band,
-        |            array_to_string(list_sort(list(mh)), '|') AS bsig
-        |          FROM mh GROUP BY 1, 2),
-        |cand AS (SELECT DISTINCT x.doc_id AS da, y.doc_id AS db
-        |         FROM bands x JOIN bands y
-        |           ON x.band = y.band AND x.bsig = y.bsig AND x.doc_id < y.doc_id),
-        |inter AS (SELECT c.da, c.db, COUNT(*) AS i
-        |          FROM cand c
-        |          JOIN sh a ON a.doc_id = c.da
-        |          JOIN sh b ON b.doc_id = c.db AND b.s = a.s
-        |          GROUP BY 1, 2)
-        |SELECT da, db, CAST(i AS DOUBLE)/(ca.n_sh + cb.n_sh - i) AS jaccard
-        |FROM inter JOIN cnt ca ON ca.doc_id = da JOIN cnt cb ON cb.doc_id = db
-        |WHERE CAST(i AS DOUBLE)/(ca.n_sh + cb.n_sh - i) > 0.8
-        |ORDER BY da, db""".stripMargin,
+      s"""WITH ${lshVerifyCtes("documents")}
+        |${jaccardPairsSql("inter", 0.8)}""".stripMargin,
     "l15_data_split" ->
       """SELECT CASE WHEN substr(md5('split42|' || CAST(doc_id AS VARCHAR)), 1, 2) < 'cc' THEN 'train'
         |            WHEN substr(md5('split42|' || CAST(doc_id AS VARCHAR)), 1, 2) < 'e6' THEN 'val'
@@ -4202,23 +4201,9 @@ object LlmQueries {
         |  END AS cos_deq
         |FROM qq ORDER BY vec_id""".stripMargin,
     "l30_semdedup" ->
-      """WITH e AS (SELECT vec_id, embedding,
-        |    list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))) AS n2,
-        |    sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)))) AS nr
-        |  FROM embeddings),
-        |c AS (SELECT * FROM e ORDER BY vec_id LIMIT 16),
-        |ac AS (SELECT v.vec_id AS vid, c.vec_id AS ci,
-        |    CASE WHEN v.n2 = 0 OR c.n2 = 0 THEN 0.0
-        |      ELSE round(list_sum(list_transform(list_zip(v.embedding, c.embedding),
-        |        z -> CAST(z[1] AS DOUBLE)*CAST(z[2] AS DOUBLE))) / (v.nr * c.nr), 6) END AS cos
-        |  FROM e v, c),
-        |ranked AS (SELECT vid, ci,
-        |    ROW_NUMBER() OVER (PARTITION BY vid ORDER BY cos DESC, ci) AS rnk FROM ac),
+      s"""WITH $ivfRoutingCtes,
         |assigned AS (SELECT ci AS cluster, vid FROM ranked WHERE rnk = 1),
-        |mx AS (SELECT y.vid AS vid, MAX(CASE WHEN ea.n2 = 0 OR eb.n2 = 0 THEN 0.0
-        |      ELSE round(list_sum(list_transform(
-        |      list_zip(ea.embedding, eb.embedding),
-        |      z -> CAST(z[1] AS DOUBLE)*CAST(z[2] AS DOUBLE))) / sqrt(ea.n2 * eb.n2), 6) END) AS max_lower_cos
+        |mx AS (SELECT y.vid AS vid, MAX(${guardedCos("ea", "eb")}) AS max_lower_cos
         |  FROM assigned x JOIN assigned y ON x.cluster = y.cluster AND x.vid < y.vid
         |  JOIN e ea ON ea.vec_id = x.vid JOIN e eb ON eb.vec_id = y.vid
         |  GROUP BY 1)
@@ -4243,33 +4228,9 @@ object LlmQueries {
         |      / 4294967296.0 < r.rate
         |GROUP BY 1 ORDER BY 1""".stripMargin,
     "l28_decontaminate" ->
-      """WITH train AS (SELECT doc_id, text FROM documents WHERE doc_id % 50 <> 0),
-        |ev AS (SELECT text FROM documents WHERE doc_id % 50 = 0),
-        |td AS (SELECT doc_id, regexp_extract_all(text, '\S+') AS ws FROM train),
-        |tsh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-        |        FROM td, UNNEST(generate_series(1, greatest(len(ws)-2, 0))) t(i)
-        |        WHERE len(ws) >= 3),
-        |ed AS (SELECT regexp_extract_all(text, '\S+') AS ws FROM ev),
-        |esh AS (SELECT DISTINCT ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-        |        FROM ed, UNNEST(generate_series(1, greatest(len(ws)-2, 0))) t(i)
-        |        WHERE len(ws) >= 3),
-        |cnt AS (SELECT doc_id, COUNT(*) AS n_sh FROM tsh GROUP BY 1),
-        |hits AS (SELECT t.doc_id, COUNT(*) AS n_overlap FROM tsh t JOIN esh e ON t.s = e.s GROUP BY 1),
-        |frac AS (SELECT tr.doc_id,
-        |    COALESCE(cnt.n_sh, 0) AS n_sh,
-        |    COALESCE(hits.n_overlap, 0) AS n_overlap,
-        |    CASE WHEN COALESCE(cnt.n_sh, 0) = 0 THEN 0.0
-        |         ELSE CAST(COALESCE(hits.n_overlap, 0) AS DOUBLE) / cnt.n_sh END AS overlap_frac
-        |  FROM train tr LEFT JOIN cnt ON cnt.doc_id = tr.doc_id
-        |  LEFT JOIN hits ON hits.doc_id = tr.doc_id)
-        |SELECT doc_id, n_sh, n_overlap, overlap_frac,
-        |  (overlap_frac >= 0.5 AND n_sh > 0) AS contaminated
-        |FROM frac ORDER BY doc_id""".stripMargin,
+      shingleDecontamSql(evalMod = 50, threshold = 0.5),
     "l27_repetition" ->
-      """WITH d AS (SELECT doc_id, regexp_extract_all(text, '\S+') AS ws FROM documents),
-        |sh AS (SELECT doc_id, ws[i] || ' ' || ws[i+1] AS s
-        |       FROM d, UNNEST(generate_series(1, greatest(len(ws)-1, 0))) t(i)
-        |       WHERE len(ws) >= 2)
+      s"""WITH ${shingleCtes("d", "sh", "documents", n = 2, distinct = false)}
         |SELECT doc_id, COUNT(*) AS n_2grams, COUNT(DISTINCT s) AS n_distinct,
         |  1.0 - CAST(COUNT(DISTINCT s) AS DOUBLE) / COUNT(*) AS rep_ratio
         |FROM sh GROUP BY doc_id ORDER BY doc_id""".stripMargin,
@@ -4302,15 +4263,9 @@ object LlmQueries {
         |    (acc, c) -> (acc * 31 + c) % 1000000007) AS rhash
         |FROM documents ORDER BY doc_id""".stripMargin,
     "l13_simhash_pairs" ->
-      """WITH tok AS (SELECT doc_id, unnest(regexp_extract_all(text, '\S+')) AS t FROM documents),
-        |h AS (SELECT doc_id, md5(t) AS h FROM tok),
-        |bits AS (SELECT doc_id, p, b,
-        |    CASE WHEN ((instr('0123456789abcdef', substr(h, p, 1)) - 1) >> b) & 1 = 1
-        |         THEN 1 ELSE -1 END AS c
-        |  FROM h, UNNEST(generate_series(1, 8)) tp(p), UNNEST(generate_series(0, 3)) tb(b)),
-        |s AS (SELECT doc_id, p, b, SUM(c) AS s FROM bits GROUP BY 1, 2, 3),
+      s"""WITH $simhashCtes,
         |sh AS (SELECT doc_id,
-        |    CAST(SUM(CASE WHEN s > 0 THEN (CAST(1 AS BIGINT) << ((8 - p) * 4 + b)) ELSE 0 END) AS BIGINT) AS f
+        |    $simhashFold AS f
         |  FROM s GROUP BY doc_id)
         |SELECT a.doc_id AS da, b.doc_id AS db,
         |  CAST(bit_count(xor(a.f, b.f)) AS INT) AS hamming
@@ -4318,26 +4273,16 @@ object LlmQueries {
         |WHERE bit_count(xor(a.f, b.f)) <= 1
         |ORDER BY da, db""".stripMargin,
     "l8_embed_pairs" ->
-      """WITH e AS (SELECT vec_id, embedding,
-        |    list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))) AS nrm
-        |  FROM embeddings)
+      s"""WITH ${normCte(n2 = "nrm")}
         |SELECT a.vec_id AS da, b.vec_id AS db,
-        |  CASE WHEN a.nrm = 0 OR b.nrm = 0 THEN 0.0
-        |    ELSE round(list_sum(list_transform(list_zip(a.embedding, b.embedding),
-        |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE))) / sqrt(a.nrm * b.nrm), 6) END AS cos
+        |  ${guardedCos("a", "b", n2 = "nrm", times = " * ")} AS cos
         |FROM e a JOIN e b ON a.vec_id < b.vec_id
-        |WHERE CASE WHEN a.nrm = 0 OR b.nrm = 0 THEN 0.0
-        |    ELSE round(list_sum(list_transform(list_zip(a.embedding, b.embedding),
-        |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE))) / sqrt(a.nrm * b.nrm), 6) END > 0.4
+        |WHERE ${guardedCos("a", "b", n2 = "nrm", times = " * ")} > 0.4
         |ORDER BY da, db""".stripMargin,
     "l9_ann_topk" ->
-      """WITH e AS (SELECT vec_id, embedding,
-        |    list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))) AS nrm
-        |  FROM embeddings),
+      s"""WITH ${normCte(n2 = "nrm")},
         |scored AS (SELECT q.vec_id AS qid, c.vec_id AS cid,
-        |    CASE WHEN q.nrm = 0 OR c.nrm = 0 THEN 0.0
-        |      ELSE round(list_sum(list_transform(list_zip(q.embedding, c.embedding),
-        |        z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE))) / sqrt(q.nrm * c.nrm), 6) END AS cos
+        |    ${guardedCos("q", "c", n2 = "nrm", times = " * ")} AS cos
         |  FROM e q JOIN e c ON q.vec_id < 10 AND q.vec_id <> c.vec_id),
         |rk AS (SELECT qid, cid, cos,
         |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS rk
@@ -4347,13 +4292,10 @@ object LlmQueries {
     "l10_mm_binary" ->
       """SELECT doc_id, CAST(strlen(text) AS INT) AS n_bytes, md5(text) AS content_md5
         |FROM documents ORDER BY doc_id""".stripMargin,
-    // Mirrors Similarity.lshSignature exactly: plane value
-    // h_i[d] = hex6(md5(i||'_'||d))/2^24 - 0.5, projection rounded to
-    // 6 d.p. before the sign bit; scoring divides by sqrt(n2a*n2b).
+    // Mirrors Similarity.lshSignature: one table of 8 planes, keyed as
+    // `lshSigCte`'s table 0.
     "l20_ann_lsh" ->
-      """WITH e AS (SELECT vec_id, embedding,
-        |    list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))) AS n2
-        |  FROM embeddings),
+      s"""WITH ${normCte()},
         |sig AS (SELECT vec_id, embedding, n2,
         |    array_to_string(list_transform(generate_series(0, 7), i ->
         |      CASE WHEN round(list_sum(list_transform(generate_series(1, 64), d ->
@@ -4363,89 +4305,37 @@ object LlmQueries {
         |        THEN '1' ELSE '0' END), '') AS sig
         |  FROM e),
         |scored AS (SELECT a.vec_id AS qid, b.vec_id AS cid,
-        |    CASE WHEN a.n2 = 0 OR b.n2 = 0 THEN 0.0
-        |      ELSE round(list_sum(list_transform(list_zip(a.embedding, b.embedding),
-        |        z -> CAST(z[1] AS DOUBLE)*CAST(z[2] AS DOUBLE))) / sqrt(a.n2 * b.n2), 6) END AS cos
+        |    ${guardedCos("a", "b")} AS cos
         |  FROM sig a JOIN sig b ON a.sig = b.sig AND a.vec_id <> b.vec_id),
         |rk AS (SELECT qid, cid, cos,
         |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS rk FROM scored)
         |SELECT qid, cid, cos, CAST(rk AS INT) AS rk FROM rk WHERE rk <= 3 AND qid < 20
         |ORDER BY qid, rk""".stripMargin,
-    // Mirrors lshCosinePairs: per-table salted signatures (4 planes,
-    // 6 tables), bucket join, da<db, exact rounded scoring, threshold.
+    // Mirrors lshCosinePairs: bucket join, da<db, guarded scoring,
+    // threshold.
     "l22_embed_pairs_lsh" ->
-      """WITH e AS (SELECT vec_id, embedding,
-        |    list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))) AS n2
-        |  FROM embeddings),
-        |sig AS (SELECT vec_id, t,
-        |    array_to_string(list_transform(generate_series(0, 3), i ->
-        |      CASE WHEN round(list_sum(list_transform(generate_series(1, 64), d ->
-        |          CAST(embedding[d] AS DOUBLE) *
-        |          (CAST('0x' || substr(md5(CASE WHEN t = 0 THEN CONCAT(i, '_', d - 1)
-        |                                       ELSE CONCAT('t', t, '_', i, '_', d - 1) END), 1, 6) AS BIGINT)
-        |             / 16777216.0 - 0.5))), 6) >= 0
-        |        THEN '1' ELSE '0' END), '') AS sig
-        |  FROM e, UNNEST(generate_series(0, 5)) tt(t)),
+      s"""WITH ${normCte()},
+        |${lshSigCte(planes = 4, tables = 6)},
         |cand AS (SELECT DISTINCT a.vec_id AS da, b.vec_id AS db
         |  FROM sig a JOIN sig b ON a.t = b.t AND a.sig = b.sig AND a.vec_id < b.vec_id)
         |SELECT c.da, c.db,
-        |    CASE WHEN q.n2 = 0 OR x.n2 = 0 THEN 0.0
-        |      ELSE round(list_sum(list_transform(list_zip(q.embedding, x.embedding),
-        |        z -> CAST(z[1] AS DOUBLE)*CAST(z[2] AS DOUBLE))) / sqrt(q.n2 * x.n2), 6) END AS cos
+        |    ${guardedCos("q", "x")} AS cos
         |  FROM cand c JOIN e q ON q.vec_id = c.da JOIN e x ON x.vec_id = c.db
-        |  WHERE CASE WHEN q.n2 = 0 OR x.n2 = 0 THEN 0.0
-        |      ELSE round(list_sum(list_transform(list_zip(q.embedding, x.embedding),
-        |        z -> CAST(z[1] AS DOUBLE)*CAST(z[2] AS DOUBLE))) / sqrt(q.n2 * x.n2), 6) END > 0.4
+        |  WHERE ${guardedCos("q", "x")} > 0.4
         |ORDER BY da, db""".stripMargin,
-    // Mirrors the multi-table lshTopK: per-table signatures over salted
-    // plane keys (t=0 the l20 formula, t>0 't<t>_<i>_<d>'), candidate
-    // pairs unioned across tables and deduped before scoring.
+    // Mirrors the multi-table lshTopK (`lshMultiCtes`).
     "l21_ann_lsh_multi" ->
-      """WITH e AS (SELECT vec_id, embedding,
-        |    list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))) AS n2
-        |  FROM embeddings),
-        |sig AS (SELECT vec_id, t,
-        |    array_to_string(list_transform(generate_series(0, 5), i ->
-        |      CASE WHEN round(list_sum(list_transform(generate_series(1, 64), d ->
-        |          CAST(embedding[d] AS DOUBLE) *
-        |          (CAST('0x' || substr(md5(CASE WHEN t = 0 THEN CONCAT(i, '_', d - 1)
-        |                                       ELSE CONCAT('t', t, '_', i, '_', d - 1) END), 1, 6) AS BIGINT)
-        |             / 16777216.0 - 0.5))), 6) >= 0
-        |        THEN '1' ELSE '0' END), '') AS sig
-        |  FROM e, UNNEST(generate_series(0, 3)) tt(t)),
-        |cand AS (SELECT DISTINCT a.vec_id AS qid, b.vec_id AS cid
-        |  FROM sig a JOIN sig b ON a.t = b.t AND a.sig = b.sig AND a.vec_id <> b.vec_id),
-        |scored AS (SELECT c.qid, c.cid,
-        |    CASE WHEN q.n2 = 0 OR x.n2 = 0 THEN 0.0
-        |      ELSE round(list_sum(list_transform(list_zip(q.embedding, x.embedding),
-        |        z -> CAST(z[1] AS DOUBLE)*CAST(z[2] AS DOUBLE))) / sqrt(q.n2 * x.n2), 6) END AS cos
-        |  FROM cand c JOIN e q ON q.vec_id = c.qid JOIN e x ON x.vec_id = c.cid),
-        |rk AS (SELECT qid, cid, cos,
-        |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS rk FROM scored)
+      s"""WITH $lshMultiCtes
         |SELECT qid, cid, cos, CAST(rk AS INT) AS rk FROM rk WHERE rk <= 3 AND qid < 20
         |ORDER BY qid, rk""".stripMargin,
-    // Mirrors ivfTopK exactly: assignment divides by sqrt(a)*sqrt(b)
-    // (per-vector norms), scoring by sqrt(a*b) (product of squared
-    // norms) — both rounded to 6 d.p. like the Spark side.
+    // Mirrors ivfTopK: assignment divides by the per-vector norms,
+    // scoring by sqrt of the squared-norm product (`guardedCos`).
     "l18_ann_ivf" ->
-      """WITH e AS (SELECT vec_id, embedding,
-        |    list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))) AS n2,
-        |    sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)))) AS nr
-        |  FROM embeddings),
-        |c AS (SELECT * FROM e ORDER BY vec_id LIMIT 16),
-        |ac AS (SELECT v.vec_id AS vid, c.vec_id AS ci,
-        |    CASE WHEN v.n2 = 0 OR c.n2 = 0 THEN 0.0
-        |      ELSE round(list_sum(list_transform(list_zip(v.embedding, c.embedding),
-        |        z -> CAST(z[1] AS DOUBLE)*CAST(z[2] AS DOUBLE))) / (v.nr * c.nr), 6) END AS cos
-        |  FROM e v, c),
-        |ranked AS (SELECT vid, ci,
-        |    ROW_NUMBER() OVER (PARTITION BY vid ORDER BY cos DESC, ci) AS rnk FROM ac),
+      s"""WITH $ivfRoutingCtes,
         |buckets AS (SELECT ci AS bucket, vid AS cid FROM ranked WHERE rnk = 1),
         |probes AS (SELECT ci AS bucket, vid AS qid FROM ranked WHERE rnk <= 4),
         |scored AS (SELECT DISTINCT p.qid, b.cid,
-        |    CASE WHEN q.n2 = 0 OR t.n2 = 0 THEN 0.0
-        |      ELSE round(list_sum(list_transform(list_zip(q.embedding, t.embedding),
-        |        z -> CAST(z[1] AS DOUBLE)*CAST(z[2] AS DOUBLE))) / sqrt(q.n2 * t.n2), 6) END AS cos
+        |    ${guardedCos("q", "t")} AS cos
         |  FROM probes p JOIN buckets b ON b.bucket = p.bucket AND b.cid <> p.qid
         |  JOIN e q ON q.vec_id = p.qid JOIN e t ON t.vec_id = b.cid),
         |rk AS (SELECT qid, cid, cos,
@@ -4453,49 +4343,13 @@ object LlmQueries {
         |SELECT qid, cid, cos, CAST(rk AS INT) AS rk FROM rk WHERE rk <= 3 AND qid < 20
         |ORDER BY qid, rk""".stripMargin,
     "l12_data_pipeline" ->
-      """WITH f AS (
+      s"""WITH f AS (
         |  SELECT doc_id, text, n_chars FROM documents
-        |  WHERE len(regexp_extract_all(text, '\S+')) >= 20
+        |  WHERE len(regexp_extract_all(text, '\\S+')) >= 20
         |    AND CAST(length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS DOUBLE) / length(text) < 0.1
-        |    AND (CASE
-        |      WHEN len(list_filter(regexp_extract_all(text,'\S+'), x -> list_contains(['the','a','and','of','is'], x)))
-        |         + len(list_filter(regexp_extract_all(text,'\S+'), x -> list_contains(['der','die','das','und','ist'], x)))
-        |         + len(list_filter(regexp_extract_all(text,'\S+'), x -> list_contains(['le','la','et','les','est'], x)))
-        |         + len(list_filter(regexp_extract_all(text,'\S+'), x -> list_contains(['el','los','y','las','es'], x))) = 0 THEN 'und'
-        |      WHEN len(list_filter(regexp_extract_all(text,'\S+'), x -> list_contains(['the','a','and','of','is'], x)))
-        |        >= len(list_filter(regexp_extract_all(text,'\S+'), x -> list_contains(['der','die','das','und','ist'], x)))
-        |       AND len(list_filter(regexp_extract_all(text,'\S+'), x -> list_contains(['the','a','and','of','is'], x)))
-        |        >= len(list_filter(regexp_extract_all(text,'\S+'), x -> list_contains(['le','la','et','les','est'], x)))
-        |       AND len(list_filter(regexp_extract_all(text,'\S+'), x -> list_contains(['the','a','and','of','is'], x)))
-        |        >= len(list_filter(regexp_extract_all(text,'\S+'), x -> list_contains(['el','los','y','las','es'], x))) THEN 'en'
-        |      ELSE 'other' END) = 'en'),
-        |d AS (SELECT doc_id, regexp_extract_all(text, '\S+') AS ws FROM f),
-        |sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-        |       FROM d, UNNEST(generate_series(1, greatest(len(ws)-2, 0))) t(i)
-        |       WHERE len(ws) >= 3),
-        |cnt AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY 1),
-        |mh AS (SELECT doc_id, seed,
-        |         MIN(([40503,34283,49843,10193,5717,9539,62989,55021][seed+1]
-        |                * CAST('0x' || substr(md5(s), 1, 10) AS BIGINT) +
-        |              [27179,43691,20117,51347,7129,63577,31769,44201][seed+1]
-        |                * CAST('0x' || substr(md5(s), 11, 10) AS BIGINT))
-        |             % 1099511627791) AS mh
-        |       FROM sh, UNNEST(generate_series(0, 7)) t(seed) GROUP BY 1, 2),
-        |bands AS (SELECT doc_id, seed % 4 AS band,
-        |            array_to_string(list_sort(list(mh)), '|') AS bsig
-        |          FROM mh GROUP BY 1, 2),
-        |cand AS (SELECT DISTINCT x.doc_id AS da, y.doc_id AS db
-        |         FROM bands x JOIN bands y
-        |           ON x.band = y.band AND x.bsig = y.bsig AND x.doc_id < y.doc_id),
-        |inter AS (SELECT c.da, c.db, COUNT(*) AS i
-        |          FROM cand c
-        |          JOIN sh a ON a.doc_id = c.da
-        |          JOIN sh b ON b.doc_id = c.db AND b.s = a.s
-        |          GROUP BY 1, 2),
-        |victims AS (
-        |  SELECT DISTINCT db FROM inter
-        |  JOIN cnt ca ON ca.doc_id = da JOIN cnt cb ON cb.doc_id = db
-        |  WHERE CAST(i AS DOUBLE)/(ca.n_sh + cb.n_sh - i) > 0.8)
+        |    AND (${langIdCase(langScore, enOnly = true)}) = 'en'),
+        |${lshVerifyCtes("f")},
+        |victims AS (${jaccardAbove("inter", 0.8, "DISTINCT db")})
         |SELECT doc_id, n_chars FROM f
         |WHERE doc_id NOT IN (SELECT db FROM victims)
         |ORDER BY doc_id""".stripMargin,
@@ -4513,8 +4367,8 @@ object LlmQueries {
         |  CAST(((frames - 1) // 2) * 2 AS INT) AS last_frame
         |FROM m ORDER BY doc_id""".stripMargin,
     "l11_multimodal_join" ->
-      """SELECT doc_id, lang, n_chars, label,
-        |  round(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))), 6) AS norm2
+      s"""SELECT doc_id, lang, n_chars, label,
+        |  round($sqNorm, 6) AS norm2
         |FROM documents JOIN embeddings ON doc_id = vec_id
         |ORDER BY doc_id""".stripMargin,
     // Mirrors Ranking.bm25's exact operation order: idf * (tf * 2.2)
@@ -4554,48 +4408,18 @@ object LlmQueries {
         |  CAST(sum(CASE WHEN kept THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
         |  CAST(sum(CASE WHEN kept THEN n_tokens ELSE 0 END) AS BIGINT) AS tokens_kept
         |FROM flags GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    // z = -1.5 + 3*stop_ratio - 8*punct_ratio - 2*upper_ratio
-    //       + 0.35*ln(1 + n_tokens); score = round(sigmoid(z), 6).
+    // score = round(sigmoid(z), 6) over `qualityLogitCte`'s z.
     "l35_quality_score" ->
-      """WITH f AS (SELECT doc_id,
-        |    CAST(len(list_filter(regexp_extract_all(text, '\S+'),
-        |        x -> list_contains(['the','a','and','of','to','in'], x))) AS DOUBLE)
-        |      / NULLIF(len(regexp_extract_all(text, '\S+')), 0) AS stop_ratio,
-        |    CAST(length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS DOUBLE)
-        |      / NULLIF(length(text), 0) AS punct_ratio,
-        |    CAST(length(regexp_replace(text, '[^A-Z]', '', 'g')) AS DOUBLE)
-        |      / NULLIF(length(text), 0) AS upper_ratio,
-        |    len(regexp_extract_all(text, '\S+')) AS n_tokens
-        |  FROM documents),
-        |z AS (SELECT doc_id,
-        |    -1.5 + 3.0 * stop_ratio - 8.0 * punct_ratio - 2.0 * upper_ratio
-        |      + 0.35 * ln(1.0 + n_tokens) AS z
-        |  FROM f)
+      s"""WITH $qualityLogitCtes
         |SELECT doc_id, round(1.0 / (1.0 + exp(-z)), 6) AS q_score,
         |  round(1.0 / (1.0 + exp(-z)), 6) >= 0.5 AS keep
         |FROM z ORDER BY doc_id""".stripMargin,
     // Band signatures as in the verified l6 contract; the join is
     // restricted to new-side × seen-side.
     "l36_incr_dedup" ->
-      """WITH d AS (SELECT doc_id, regexp_extract_all(text, '\S+') AS ws FROM documents),
-        |sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-        |       FROM d, UNNEST(generate_series(1, greatest(len(ws)-2, 0))) t(i)
-        |       WHERE len(ws) >= 3),
-        |mh AS (SELECT doc_id, seed,
-        |         MIN(([40503,34283,49843,10193,5717,9539,62989,55021][seed+1]
-        |                * CAST('0x' || substr(md5(s), 1, 10) AS BIGINT) +
-        |              [27179,43691,20117,51347,7129,63577,31769,44201][seed+1]
-        |                * CAST('0x' || substr(md5(s), 11, 10) AS BIGINT))
-        |             % 1099511627791) AS mh
-        |       FROM sh, UNNEST(generate_series(0, 7)) t(seed) GROUP BY 1, 2),
-        |bands AS (SELECT doc_id, seed % 4 AS band,
-        |            array_to_string(list_sort(list(mh)), '|') AS bsig
-        |          FROM mh GROUP BY 1, 2),
-        |m AS (SELECT x.doc_id AS did, MIN(y.doc_id) AS first_match,
-        |        COUNT(DISTINCT y.doc_id) AS n_matches
-        |      FROM bands x JOIN bands y ON x.band = y.band AND x.bsig = y.bsig
-        |      WHERE x.doc_id % 10 >= 8 AND y.doc_id % 10 < 8
-        |      GROUP BY 1)
+      s"""WITH ${shingleCtes("d", "sh", "documents", n = 3)},
+        |${minhashCtes("doc_id", numHashes = 8, rowsPerBand = 2)},
+        |${bandMatchCte("x.doc_id % 10 >= 8 AND y.doc_id % 10 < 8", counted = true)}
         |SELECT n.doc_id, m.first_match,
         |  CAST(COALESCE(m.n_matches, 0) AS BIGINT) AS n_matches,
         |  m.first_match IS NOT NULL AS is_dup
@@ -4606,59 +4430,15 @@ object LlmQueries {
     // contract as l36, but every doc surfaces with its drop id and
     // matches run against ALL strictly-earlier drops.
     "l61_stream_incr_dedup" ->
-      """WITH d AS (SELECT doc_id, regexp_extract_all(text, '\S+') AS ws FROM documents),
-        |sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-        |       FROM d, UNNEST(generate_series(1, greatest(len(ws)-2, 0))) t(i)
-        |       WHERE len(ws) >= 3),
-        |mh AS (SELECT doc_id, seed,
-        |         MIN(([40503,34283,49843,10193,5717,9539,62989,55021][seed+1]
-        |                * CAST('0x' || substr(md5(s), 1, 10) AS BIGINT) +
-        |              [27179,43691,20117,51347,7129,63577,31769,44201][seed+1]
-        |                * CAST('0x' || substr(md5(s), 11, 10) AS BIGINT))
-        |             % 1099511627791) AS mh
-        |       FROM sh, UNNEST(generate_series(0, 7)) t(seed) GROUP BY 1, 2),
-        |bands AS (SELECT doc_id, seed % 4 AS band,
-        |            array_to_string(list_sort(list(mh)), '|') AS bsig
-        |          FROM mh GROUP BY 1, 2),
-        |m AS (SELECT x.doc_id AS did, MIN(y.doc_id) AS first_match,
-        |        COUNT(DISTINCT y.doc_id) AS n_matches
-        |      FROM bands x JOIN bands y ON x.band = y.band AND x.bsig = y.bsig
-        |      WHERE (y.doc_id % 4) < (x.doc_id % 4)
-        |      GROUP BY 1)
-        |SELECT n.doc_id, CAST(n.doc_id % 4 AS BIGINT) AS ingest_batch,
-        |  m.first_match,
-        |  CAST(COALESCE(m.n_matches, 0) AS BIGINT) AS n_matches,
-        |  m.first_match IS NOT NULL AS is_dup
-        |FROM documents n
-        |LEFT JOIN m ON m.did = n.doc_id
-        |ORDER BY doc_id""".stripMargin,
+      s"""WITH ${shingleCtes("d", "sh", "documents", n = 3)},
+        |${minhashCtes("doc_id", numHashes = 8, rowsPerBand = 2)},
+        |${dropVerdictSql("documents", counted = true)}""".stripMargin,
     // l61's oracle verbatim minus n_matches: the lite path's contract
     // is bit-identical first_match/is_dup without the pair count.
     "l80_stream_dedup_lite" ->
-      """WITH d AS (SELECT doc_id, regexp_extract_all(text, '\S+') AS ws FROM documents),
-        |sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-        |       FROM d, UNNEST(generate_series(1, greatest(len(ws)-2, 0))) t(i)
-        |       WHERE len(ws) >= 3),
-        |mh AS (SELECT doc_id, seed,
-        |         MIN(([40503,34283,49843,10193,5717,9539,62989,55021][seed+1]
-        |                * CAST('0x' || substr(md5(s), 1, 10) AS BIGINT) +
-        |              [27179,43691,20117,51347,7129,63577,31769,44201][seed+1]
-        |                * CAST('0x' || substr(md5(s), 11, 10) AS BIGINT))
-        |             % 1099511627791) AS mh
-        |       FROM sh, UNNEST(generate_series(0, 7)) t(seed) GROUP BY 1, 2),
-        |bands AS (SELECT doc_id, seed % 4 AS band,
-        |            array_to_string(list_sort(list(mh)), '|') AS bsig
-        |          FROM mh GROUP BY 1, 2),
-        |m AS (SELECT x.doc_id AS did, MIN(y.doc_id) AS first_match
-        |      FROM bands x JOIN bands y ON x.band = y.band AND x.bsig = y.bsig
-        |      WHERE (y.doc_id % 4) < (x.doc_id % 4)
-        |      GROUP BY 1)
-        |SELECT n.doc_id, CAST(n.doc_id % 4 AS BIGINT) AS ingest_batch,
-        |  m.first_match,
-        |  m.first_match IS NOT NULL AS is_dup
-        |FROM documents n
-        |LEFT JOIN m ON m.did = n.doc_id
-        |ORDER BY doc_id""".stripMargin,
+      s"""WITH ${shingleCtes("d", "sh", "documents", n = 3)},
+        |${minhashCtes("doc_id", numHashes = 8, rowsPerBand = 2)},
+        |${dropVerdictSql("documents", counted = false)}""".stripMargin,
     "l37_bpe_pairs" ->
       """WITH t AS (SELECT UNNEST(regexp_extract_all(text, '\S+')) AS t FROM documents),
         |p AS (SELECT substr(t, CAST(i AS INT), 2) AS pair
@@ -4697,22 +4477,12 @@ object LlmQueries {
         |  CAST(CAST(s AS DOUBLE) / n AS FLOAT) AS m
         |FROM a ORDER BY label, d""".stripMargin,
     "l40_decontaminate_filter" ->
-      """WITH train AS (SELECT doc_id, text, lang, n_chars FROM documents WHERE doc_id % 50 <> 0),
+      s"""WITH train AS (SELECT doc_id, text, lang, n_chars FROM documents WHERE doc_id % 50 <> 0),
         |ev AS (SELECT text FROM documents WHERE doc_id % 50 = 0),
-        |td AS (SELECT doc_id, regexp_extract_all(text, '\S+') AS ws FROM train),
-        |tsh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-        |        FROM td, UNNEST(generate_series(1, greatest(len(ws)-2, 0))) t(i)
-        |        WHERE len(ws) >= 3),
-        |ed AS (SELECT regexp_extract_all(text, '\S+') AS ws FROM ev),
-        |esh AS (SELECT DISTINCT ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-        |        FROM ed, UNNEST(generate_series(1, greatest(len(ws)-2, 0))) t(i)
-        |        WHERE len(ws) >= 3),
-        |cnt AS (SELECT doc_id, COUNT(*) AS n_sh FROM tsh GROUP BY 1),
-        |hits AS (SELECT t.doc_id, COUNT(*) AS n_overlap FROM tsh t JOIN esh e ON t.s = e.s GROUP BY 1),
+        |$shingleOverlapCtes,
         |frac AS (SELECT tr.doc_id, tr.lang, tr.n_chars,
         |    COALESCE(cnt.n_sh, 0) AS n_sh,
-        |    CASE WHEN COALESCE(cnt.n_sh, 0) = 0 THEN 0.0
-        |         ELSE CAST(COALESCE(hits.n_overlap, 0) AS DOUBLE) / cnt.n_sh END AS overlap_frac
+        |    $overlapFrac
         |  FROM train tr LEFT JOIN cnt ON cnt.doc_id = tr.doc_id
         |  LEFT JOIN hits ON hits.doc_id = tr.doc_id)
         |SELECT doc_id, lang, n_chars FROM frac
@@ -4720,16 +4490,7 @@ object LlmQueries {
         |ORDER BY doc_id""".stripMargin,
     // Spark desc = NULLS LAST; pinned explicitly for the oracle.
     "l41_quality_topk_domain" ->
-      """WITH f AS (SELECT doc_id, lang,
-        |    CAST(len(list_filter(regexp_extract_all(text, '\S+'),
-        |        x -> list_contains(['the','a','and','of','to','in'], x))) AS DOUBLE)
-        |      / NULLIF(len(regexp_extract_all(text, '\S+')), 0) AS stop_ratio,
-        |    CAST(length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS DOUBLE)
-        |      / NULLIF(length(text), 0) AS punct_ratio,
-        |    CAST(length(regexp_replace(text, '[^A-Z]', '', 'g')) AS DOUBLE)
-        |      / NULLIF(length(text), 0) AS upper_ratio,
-        |    len(regexp_extract_all(text, '\S+')) AS n_tokens
-        |  FROM documents),
+      s"""WITH ${qualityFeatsCte("doc_id, lang", "documents")},
         |q AS (SELECT doc_id, lang,
         |    round(1.0 / (1.0 + exp(-(-1.5 + 3.0 * stop_ratio - 8.0 * punct_ratio
         |      - 2.0 * upper_ratio + 0.35 * ln(1.0 + n_tokens)))), 6) AS q_score
@@ -4765,52 +4526,23 @@ object LlmQueries {
       """SELECT doc_id, md5(nfc_normalize(text)) AS h,
         |  length(nfc_normalize(text)) AS n_chars
         |FROM documents ORDER BY doc_id""".stripMargin,
-    // l17's recursive-CTE connected components + l41's quality logit;
-    // keeper = quality argmax per component (doc-id tiebreak),
+    // l17's min-label components + l41's quality logit; keeper =
+    // quality argmax per component (doc-id tiebreak),
     // singletons keep themselves.
     "l44_dedup_keep_best" ->
-      """WITH RECURSIVE d AS (SELECT doc_id, regexp_extract_all(text, '\S+') AS ws FROM documents),
-        |sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-        |       FROM d, UNNEST(generate_series(1, greatest(len(ws)-2, 0))) t(i)
-        |       WHERE len(ws) >= 3),
-        |cnt AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY 1),
-        |mh AS (SELECT doc_id, seed,
-        |         MIN(([40503,34283,49843,10193,5717,9539,62989,55021][seed+1]
-        |                * CAST('0x' || substr(md5(s), 1, 10) AS BIGINT) +
-        |              [27179,43691,20117,51347,7129,63577,31769,44201][seed+1]
-        |                * CAST('0x' || substr(md5(s), 11, 10) AS BIGINT))
-        |             % 1099511627791) AS mh
-        |       FROM sh, UNNEST(generate_series(0, 7)) t(seed) GROUP BY 1, 2),
-        |bands AS (SELECT doc_id, seed % 4 AS band,
-        |            array_to_string(list_sort(list(mh)), '|') AS bsig
-        |          FROM mh GROUP BY 1, 2),
-        |cand AS (SELECT DISTINCT x.doc_id AS da, y.doc_id AS db
-        |         FROM bands x JOIN bands y
-        |           ON x.band = y.band AND x.bsig = y.bsig AND x.doc_id < y.doc_id),
-        |inter AS (SELECT c.da, c.db, COUNT(*) AS i
-        |          FROM cand c
-        |          JOIN sh a ON a.doc_id = c.da
-        |          JOIN sh b ON b.doc_id = c.db AND b.s = a.s
-        |          GROUP BY 1, 2),
-        |pairs AS (SELECT da, db FROM inter
-        |          JOIN cnt ca ON ca.doc_id = da JOIN cnt cb ON cb.doc_id = db
-        |          WHERE CAST(i AS DOUBLE)/(ca.n_sh + cb.n_sh - i) > 0.8),
-        |edges AS (SELECT da AS x, db AS y FROM pairs UNION SELECT db, da FROM pairs),
-        |nodes AS (SELECT DISTINCT x AS id FROM edges),
-        |reach AS (SELECT id, id AS r FROM nodes
-        |          UNION
-        |          SELECT e.x, reach.r FROM edges e JOIN reach ON reach.id = e.y),
-        |comp AS (SELECT id, MIN(r) AS rep FROM reach GROUP BY id),
+      s"""WITH RECURSIVE ${lshVerifyCtes("documents")},
+        |pairs AS (${jaccardAbove("inter", 0.8)}),
+        |${closureCtes("da", "db", label = Some("comp"))},
         |q AS (SELECT doc_id,
         |    round(1.0 / (1.0 + exp(-(-1.5
-        |      + 3.0 * (CAST(len(list_filter(regexp_extract_all(text, '\S+'),
+        |      + 3.0 * (CAST(len(list_filter(regexp_extract_all(text, '\\S+'),
         |          x -> list_contains(['the','a','and','of','to','in'], x))) AS DOUBLE)
-        |        / NULLIF(len(regexp_extract_all(text, '\S+')), 0))
+        |        / NULLIF(len(regexp_extract_all(text, '\\S+')), 0))
         |      - 8.0 * (CAST(length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS DOUBLE)
         |        / NULLIF(length(text), 0))
         |      - 2.0 * (CAST(length(regexp_replace(text, '[^A-Z]', '', 'g')) AS DOUBLE)
         |        / NULLIF(length(text), 0))
-        |      + 0.35 * ln(1.0 + len(regexp_extract_all(text, '\S+')))))), 6) AS q_score
+        |      + 0.35 * ln(1.0 + len(regexp_extract_all(text, '\\S+')))))), 6) AS q_score
         |  FROM documents),
         |best AS (SELECT rep, doc_id AS keep_id FROM (
         |    SELECT c.rep, q.doc_id,
@@ -4826,27 +4558,7 @@ object LlmQueries {
     // l21's multi-table LSH neighbor SQL at k=5 + majority vote
     // (votes desc, label asc) + leave-one-out comparison.
     "l45_knn_classify" ->
-      """WITH e AS (SELECT vec_id, embedding,
-        |    list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))) AS n2
-        |  FROM embeddings),
-        |sig AS (SELECT vec_id, t,
-        |    array_to_string(list_transform(generate_series(0, 5), i ->
-        |      CASE WHEN round(list_sum(list_transform(generate_series(1, 64), d ->
-        |          CAST(embedding[d] AS DOUBLE) *
-        |          (CAST('0x' || substr(md5(CASE WHEN t = 0 THEN CONCAT(i, '_', d - 1)
-        |                                       ELSE CONCAT('t', t, '_', i, '_', d - 1) END), 1, 6) AS BIGINT)
-        |             / 16777216.0 - 0.5))), 6) >= 0
-        |        THEN '1' ELSE '0' END), '') AS sig
-        |  FROM e, UNNEST(generate_series(0, 3)) tt(t)),
-        |cand AS (SELECT DISTINCT a.vec_id AS qid, b.vec_id AS cid
-        |  FROM sig a JOIN sig b ON a.t = b.t AND a.sig = b.sig AND a.vec_id <> b.vec_id),
-        |scored AS (SELECT c.qid, c.cid,
-        |    CASE WHEN q.n2 = 0 OR x.n2 = 0 THEN 0.0
-        |      ELSE round(list_sum(list_transform(list_zip(q.embedding, x.embedding),
-        |        z -> CAST(z[1] AS DOUBLE)*CAST(z[2] AS DOUBLE))) / sqrt(q.n2 * x.n2), 6) END AS cos
-        |  FROM cand c JOIN e q ON q.vec_id = c.qid JOIN e x ON x.vec_id = c.cid),
-        |rk AS (SELECT qid, cid, cos,
-        |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS rk FROM scored),
+      s"""WITH $lshMultiCtes,
         |nb AS (SELECT r.qid, l.label AS nl FROM rk r
         |  JOIN embeddings l ON l.vec_id = r.cid WHERE r.rk <= 5),
         |votes AS (SELECT qid, nl, count(*) AS votes FROM nb GROUP BY qid, nl),
@@ -4861,27 +4573,7 @@ object LlmQueries {
     // l45's LSH neighborhood widened to k=20; positive = best
     // same-label neighbor, negative = best different-label neighbor.
     "l46_triplet_mine" ->
-      """WITH e AS (SELECT vec_id, embedding,
-        |    list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))) AS n2
-        |  FROM embeddings),
-        |sig AS (SELECT vec_id, t,
-        |    array_to_string(list_transform(generate_series(0, 5), i ->
-        |      CASE WHEN round(list_sum(list_transform(generate_series(1, 64), d ->
-        |          CAST(embedding[d] AS DOUBLE) *
-        |          (CAST('0x' || substr(md5(CASE WHEN t = 0 THEN CONCAT(i, '_', d - 1)
-        |                                       ELSE CONCAT('t', t, '_', i, '_', d - 1) END), 1, 6) AS BIGINT)
-        |             / 16777216.0 - 0.5))), 6) >= 0
-        |        THEN '1' ELSE '0' END), '') AS sig
-        |  FROM e, UNNEST(generate_series(0, 3)) tt(t)),
-        |cand AS (SELECT DISTINCT a.vec_id AS qid, b.vec_id AS cid
-        |  FROM sig a JOIN sig b ON a.t = b.t AND a.sig = b.sig AND a.vec_id <> b.vec_id),
-        |scored AS (SELECT c.qid, c.cid,
-        |    CASE WHEN q.n2 = 0 OR x.n2 = 0 THEN 0.0
-        |      ELSE round(list_sum(list_transform(list_zip(q.embedding, x.embedding),
-        |        z -> CAST(z[1] AS DOUBLE)*CAST(z[2] AS DOUBLE))) / sqrt(q.n2 * x.n2), 6) END AS cos
-        |  FROM cand c JOIN e q ON q.vec_id = c.qid JOIN e x ON x.vec_id = c.cid),
-        |rk AS (SELECT qid, cid, cos,
-        |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS rk FROM scored),
+      s"""WITH $lshMultiCtes,
         |nb AS (SELECT r.qid, r.cid, r.cos, la.label AS ql, lb.label AS cl
         |  FROM rk r JOIN embeddings la ON la.vec_id = r.qid
         |            JOIN embeddings lb ON lb.vec_id = r.cid
@@ -4903,28 +4595,7 @@ object LlmQueries {
     // bloom prefilter is exact end-to-end (no false negatives + exact
     // verify of survivors) → the oracle is the plain exact-overlap SQL
     "l47_bloom_decontaminate" ->
-      """WITH train AS (SELECT doc_id, text FROM documents WHERE doc_id % 40 <> 0),
-        |ev AS (SELECT text FROM documents WHERE doc_id % 40 = 0),
-        |td AS (SELECT doc_id, regexp_extract_all(text, '\S+') AS ws FROM train),
-        |tsh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-        |        FROM td, UNNEST(generate_series(1, greatest(len(ws)-2, 0))) t(i)
-        |        WHERE len(ws) >= 3),
-        |ed AS (SELECT regexp_extract_all(text, '\S+') AS ws FROM ev),
-        |esh AS (SELECT DISTINCT ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-        |        FROM ed, UNNEST(generate_series(1, greatest(len(ws)-2, 0))) t(i)
-        |        WHERE len(ws) >= 3),
-        |cnt AS (SELECT doc_id, COUNT(*) AS n_sh FROM tsh GROUP BY 1),
-        |hits AS (SELECT t.doc_id, COUNT(*) AS n_overlap FROM tsh t JOIN esh e ON t.s = e.s GROUP BY 1),
-        |frac AS (SELECT tr.doc_id,
-        |    COALESCE(cnt.n_sh, 0) AS n_sh,
-        |    COALESCE(hits.n_overlap, 0) AS n_overlap,
-        |    CASE WHEN COALESCE(cnt.n_sh, 0) = 0 THEN 0.0
-        |         ELSE CAST(COALESCE(hits.n_overlap, 0) AS DOUBLE) / cnt.n_sh END AS overlap_frac
-        |  FROM train tr LEFT JOIN cnt ON cnt.doc_id = tr.doc_id
-        |  LEFT JOIN hits ON hits.doc_id = tr.doc_id)
-        |SELECT doc_id, n_sh, n_overlap, overlap_frac,
-        |  (overlap_frac >= 0.3 AND n_sh > 0) AS contaminated
-        |FROM frac ORDER BY doc_id""".stripMargin,
+      shingleDecontamSql(evalMod = 40, threshold = 0.3),
     "l48_line_dedup" ->
       """WITH corpus AS (
         |  SELECT doc_id, 'NAV MENU HOME ABOUT' || chr(10) || text || chr(10) ||
@@ -4953,32 +4624,8 @@ object LlmQueries {
         |FROM corpus c LEFT JOIN reb r ON r.doc_id = c.doc_id
         |ORDER BY c.doc_id""".stripMargin,
     "l49_split_leakage" ->
-      """WITH d AS (SELECT doc_id, regexp_extract_all(text, '\S+') AS ws FROM documents),
-        |sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-        |       FROM d, UNNEST(generate_series(1, greatest(len(ws)-2, 0))) t(i)
-        |       WHERE len(ws) >= 3),
-        |cnt AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY 1),
-        |mh AS (SELECT doc_id, seed,
-        |         MIN(([40503,34283,49843,10193,5717,9539,62989,55021][seed+1]
-        |                * CAST('0x' || substr(md5(s), 1, 10) AS BIGINT) +
-        |              [27179,43691,20117,51347,7129,63577,31769,44201][seed+1]
-        |                * CAST('0x' || substr(md5(s), 11, 10) AS BIGINT))
-        |             % 1099511627791) AS mh
-        |       FROM sh, UNNEST(generate_series(0, 7)) t(seed) GROUP BY 1, 2),
-        |bands AS (SELECT doc_id, seed % 4 AS band,
-        |            array_to_string(list_sort(list(mh)), '|') AS bsig
-        |          FROM mh GROUP BY 1, 2),
-        |cand AS (SELECT DISTINCT x.doc_id AS da, y.doc_id AS db
-        |         FROM bands x JOIN bands y
-        |           ON x.band = y.band AND x.bsig = y.bsig AND x.doc_id < y.doc_id),
-        |inter AS (SELECT c.da, c.db, COUNT(*) AS i
-        |          FROM cand c
-        |          JOIN sh a ON a.doc_id = c.da
-        |          JOIN sh b ON b.doc_id = c.db AND b.s = a.s
-        |          GROUP BY 1, 2),
-        |ver AS (SELECT da, db
-        |        FROM inter JOIN cnt ca ON ca.doc_id = da JOIN cnt cb ON cb.doc_id = db
-        |        WHERE CAST(i AS DOUBLE)/(ca.n_sh + cb.n_sh - i) > 0.8),
+      s"""WITH ${lshVerifyCtes("documents")},
+        |ver AS (${jaccardAbove("inter", 0.8)}),
         |sp AS (SELECT doc_id,
         |         CASE WHEN substr(md5('split42|' || CAST(doc_id AS VARCHAR)), 1, 2) < 'cc' THEN 'train'
         |              WHEN substr(md5('split42|' || CAST(doc_id AS VARCHAR)), 1, 2) < 'e6' THEN 'val'
@@ -4989,19 +4636,13 @@ object LlmQueries {
         |FROM ver JOIN sp a ON a.doc_id = ver.da JOIN sp b ON b.doc_id = ver.db
         |GROUP BY 1, 2, 4 ORDER BY 1, 2""".stripMargin,
     "l50_corpus_card" ->
-      """WITH f AS (
+      s"""WITH f AS (
         |  SELECT source, doc_id, length(text) AS chars,
-        |    len(regexp_extract_all(text, '\S+')) AS toks,
+        |    len(regexp_extract_all(text, '\\S+')) AS toks,
         |    md5(text) AS chash,
-        |    CASE WHEN en + de + fr + es = 0 THEN 'und'
-        |         WHEN en >= de AND en >= fr AND en >= es THEN 'en'
-        |         WHEN de >= fr AND de >= es THEN 'de'
-        |         WHEN fr >= es THEN 'fr' ELSE 'es' END AS lang
+        |    ${langIdCase()} AS lang
         |  FROM (SELECT source, doc_id, text,
-        |    len(list_filter(regexp_extract_all(text,'\S+'), x -> list_contains(['the','a','and','of','is'], x))) AS en,
-        |    len(list_filter(regexp_extract_all(text,'\S+'), x -> list_contains(['der','die','das','und','ist'], x))) AS de,
-        |    len(list_filter(regexp_extract_all(text,'\S+'), x -> list_contains(['le','la','et','les','est'], x))) AS fr,
-        |    len(list_filter(regexp_extract_all(text,'\S+'), x -> list_contains(['el','los','y','las','es'], x))) AS es
+        |$langScoreCols
         |  FROM documents))
         |SELECT source, COUNT(*) AS n_docs,
         |  CAST(SUM(chars) AS BIGINT) AS total_chars,
@@ -5012,77 +4653,17 @@ object LlmQueries {
         |  MIN(doc_id) AS sample_id
         |FROM f GROUP BY 1 ORDER BY 1""".stripMargin,
     "l52_lsh_recall" ->
-      """WITH d AS (SELECT doc_id, regexp_extract_all(text, '\S+') AS ws FROM documents),
-        |sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-        |       FROM d, UNNEST(generate_series(1, greatest(len(ws)-2, 0))) t(i)
-        |       WHERE len(ws) >= 3),
-        |cnt AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY 1),
-        |einter AS (SELECT a.doc_id AS da, b.doc_id AS db, COUNT(*) AS i
-        |           FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-        |exact AS (SELECT da, db
-        |          FROM einter JOIN cnt ca ON ca.doc_id = da JOIN cnt cb ON cb.doc_id = db
-        |          WHERE CAST(i AS DOUBLE)/(ca.n_sh + cb.n_sh - i) > 0.8),
-        |mh AS (SELECT doc_id, seed,
-        |         MIN(([40503,34283,49843,10193,5717,9539,62989,55021][seed+1]
-        |                * CAST('0x' || substr(md5(s), 1, 10) AS BIGINT) +
-        |              [27179,43691,20117,51347,7129,63577,31769,44201][seed+1]
-        |                * CAST('0x' || substr(md5(s), 11, 10) AS BIGINT))
-        |             % 1099511627791) AS mh
-        |       FROM sh, UNNEST(generate_series(0, 7)) t(seed) GROUP BY 1, 2),
-        |bands AS (SELECT doc_id, seed % 4 AS band,
-        |            array_to_string(list_sort(list(mh)), '|') AS bsig
-        |          FROM mh GROUP BY 1, 2),
-        |cand AS (SELECT DISTINCT x.doc_id AS da, y.doc_id AS db
-        |         FROM bands x JOIN bands y
-        |           ON x.band = y.band AND x.bsig = y.bsig AND x.doc_id < y.doc_id),
-        |vinter AS (SELECT c.da, c.db, COUNT(*) AS i
-        |           FROM cand c
-        |           JOIN sh a ON a.doc_id = c.da
-        |           JOIN sh b ON b.doc_id = c.db AND b.s = a.s
-        |           GROUP BY 1, 2),
-        |lsh AS (SELECT da, db
-        |        FROM vinter JOIN cnt ca ON ca.doc_id = da JOIN cnt cb ON cb.doc_id = db
-        |        WHERE CAST(i AS DOUBLE)/(ca.n_sh + cb.n_sh - i) > 0.8)
+      s"""WITH ${lshRecallCtes("documents")}
         |SELECT COUNT(*) AS n_exact, COUNT(l.da) AS n_lsh,
         |  CAST(COUNT(l.da) AS DOUBLE) / COUNT(*) AS recall
         |FROM exact e LEFT JOIN lsh l ON l.da = e.da AND l.db = e.db""".stripMargin,
     // l52's chain over the md5-coin document sample, with the
     // normal-approximation half-width mirrored expression-for-expression.
     "l63_lsh_recall_sampled" ->
-      """WITH sdoc AS (SELECT doc_id, text FROM documents
+      s"""WITH sdoc AS (SELECT doc_id, text FROM documents
         |  WHERE CAST('0x' || substr(md5('recall62|' || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT)
         |        / 4294967296.0 < 0.5),
-        |d AS (SELECT doc_id, regexp_extract_all(text, '\S+') AS ws FROM sdoc),
-        |sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-        |       FROM d, UNNEST(generate_series(1, greatest(len(ws)-2, 0))) t(i)
-        |       WHERE len(ws) >= 3),
-        |cnt AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY 1),
-        |einter AS (SELECT a.doc_id AS da, b.doc_id AS db, COUNT(*) AS i
-        |           FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-        |exact AS (SELECT da, db
-        |          FROM einter JOIN cnt ca ON ca.doc_id = da JOIN cnt cb ON cb.doc_id = db
-        |          WHERE CAST(i AS DOUBLE)/(ca.n_sh + cb.n_sh - i) > 0.8),
-        |mh AS (SELECT doc_id, seed,
-        |         MIN(([40503,34283,49843,10193,5717,9539,62989,55021][seed+1]
-        |                * CAST('0x' || substr(md5(s), 1, 10) AS BIGINT) +
-        |              [27179,43691,20117,51347,7129,63577,31769,44201][seed+1]
-        |                * CAST('0x' || substr(md5(s), 11, 10) AS BIGINT))
-        |             % 1099511627791) AS mh
-        |       FROM sh, UNNEST(generate_series(0, 7)) t(seed) GROUP BY 1, 2),
-        |bands AS (SELECT doc_id, seed % 4 AS band,
-        |            array_to_string(list_sort(list(mh)), '|') AS bsig
-        |          FROM mh GROUP BY 1, 2),
-        |cand AS (SELECT DISTINCT x.doc_id AS da, y.doc_id AS db
-        |         FROM bands x JOIN bands y
-        |           ON x.band = y.band AND x.bsig = y.bsig AND x.doc_id < y.doc_id),
-        |vinter AS (SELECT c.da, c.db, COUNT(*) AS i
-        |           FROM cand c
-        |           JOIN sh a ON a.doc_id = c.da
-        |           JOIN sh b ON b.doc_id = c.db AND b.s = a.s
-        |           GROUP BY 1, 2),
-        |lsh AS (SELECT da, db
-        |        FROM vinter JOIN cnt ca ON ca.doc_id = da JOIN cnt cb ON cb.doc_id = db
-        |        WHERE CAST(i AS DOUBLE)/(ca.n_sh + cb.n_sh - i) > 0.8),
+        |${lshRecallCtes("sdoc")},
         |agg AS (SELECT COUNT(*) AS n_exact, COUNT(l.da) AS n_lsh
         |        FROM exact e LEFT JOIN lsh l ON l.da = e.da AND l.db = e.db)
         |SELECT n_exact, n_lsh,
@@ -5093,64 +4674,25 @@ object LlmQueries {
         |              * (1.0 - CAST(n_lsh AS DOUBLE) / n_exact)
         |              / CAST(n_exact AS DOUBLE)), 6) END AS recall_err95
         |FROM agg""".stripMargin,
-    "l55_ivf_pq" -> (ivfPqAdcCtes + "\n" +
-      """SELECT c2.vec_id,
-        |  CAST(SUM(CAST(round(d.dsub * 1000000) AS BIGINT)) AS DOUBLE) / 1000000 AS adc_dist
-        |FROM codes c2 JOIN dtab d ON d.sub = c2.sub AND d.code = c2.code
-        |GROUP BY 1 ORDER BY adc_dist, c2.vec_id LIMIT 10""".stripMargin),
+    "l55_ivf_pq" -> (ivfPqAdcCtes + "\n" + adcTop10Sql("c2")),
     // Batch IVF-PQ: l55's coarse routing computed PER PROBE (vec_id <
     // 5), l56's batch ADC restricted to each probe's candidate pairs.
     "l64_ivf_pq_batch" ->
-      """WITH e AS (SELECT vec_id, embedding,
-        |    list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))) AS n2,
-        |    sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)))) AS nr
-        |  FROM embeddings),
-        |c AS (SELECT * FROM e ORDER BY vec_id LIMIT 16),
-        |ac AS (SELECT v.vec_id AS vid, c.vec_id AS ci,
-        |    CASE WHEN v.n2 = 0 OR c.n2 = 0 THEN 0.0
-        |      ELSE round(list_sum(list_transform(list_zip(v.embedding, c.embedding),
-        |        z -> CAST(z[1] AS DOUBLE)*CAST(z[2] AS DOUBLE))) / (v.nr * c.nr), 6) END AS cos
-        |  FROM e v, c),
-        |ranked AS (SELECT vid, ci,
-        |    ROW_NUMBER() OVER (PARTITION BY vid ORDER BY cos DESC, ci) AS rnk FROM ac),
+      s"""WITH $ivfRoutingCtes,
         |buckets AS (SELECT ci AS bucket, vid FROM ranked WHERE rnk = 1),
         |pb AS (SELECT vid AS qid, ci AS bucket FROM ranked WHERE vid < 5 AND rnk <= 4),
         |cand AS (SELECT pb.qid, b.vid AS vec_id FROM buckets b JOIN pb ON pb.bucket = b.bucket),
-        |idx AS (SELECT vec_id, embedding,
-        |    ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cid
-        |  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 16)),
-        |cb AS (SELECT t.sub, cid, embedding[sub*16+1 : sub*16+16] AS cvec
-        |       FROM idx, UNNEST(generate_series(0, 3)) t(sub)),
-        |sv AS (SELECT vec_id, t.sub, embedding[sub*16+1 : sub*16+16] AS svec
-        |       FROM embeddings, UNNEST(generate_series(0, 3)) t(sub)),
-        |scored AS (SELECT sv.vec_id, sv.sub, cb.cid,
-        |    round(list_sum(list_transform(list_zip(sv.svec, cb.cvec),
-        |      z -> (CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE))
-        |         * (CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE)))), 6) AS dist
-        |  FROM sv JOIN cb ON cb.sub = sv.sub),
-        |codes AS (SELECT vec_id, sub, code FROM (
-        |  SELECT vec_id, sub, cid AS code,
-        |    ROW_NUMBER() OVER (PARTITION BY vec_id, sub ORDER BY dist, cid) AS rk
-        |  FROM scored) WHERE rk = 1),
-        |qs AS (SELECT vec_id AS qid, t.sub, embedding[sub*16+1 : sub*16+16] AS qvec
-        |       FROM embeddings, UNNEST(generate_series(0, 3)) t(sub)
-        |       WHERE vec_id < 5),
-        |dtab AS (SELECT qs.qid, cb.sub, cb.cid AS code,
-        |    round(list_sum(list_transform(list_zip(qs.qvec, cb.cvec),
-        |      z -> (CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE))
-        |         * (CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE)))), 6) AS dsub
-        |  FROM cb JOIN qs ON qs.sub = cb.sub),
+        |$pqScoredCtes,
+        |codes AS ($pqCodesSql),
+        |${adcTableCtes(batch = true)},
         |adc AS (SELECT d.qid, c2.vec_id,
-        |    CAST(SUM(CAST(round(d.dsub * 1000000) AS BIGINT)) AS DOUBLE) / 1000000 AS adc_dist
+        |    $adcDist
         |  FROM codes c2
         |  JOIN dtab d ON d.sub = c2.sub AND d.code = c2.code
         |  JOIN cand ON cand.qid = d.qid AND cand.vec_id = c2.vec_id
         |  WHERE c2.vec_id <> d.qid
         |  GROUP BY 1, 2)
-        |SELECT qid, vec_id, rk, adc_dist FROM (
-        |  SELECT qid, vec_id, adc_dist,
-        |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adc_dist, vec_id) AS rk
-        |  FROM adc) WHERE rk <= 5 ORDER BY qid, rk""".stripMargin,
+        |$adcTop5PerProbeSql""".stripMargin,
     // Mirrors AnnIndex.driftAudit exactly: per-sub MIN of the rounded
     // squared distance to the base codebooks (l53's scoring), summed as
     // integer micros per vector (l54's ADC discipline), averaged per
@@ -5159,23 +4701,16 @@ object LlmQueries {
     // REAL stays single-precision in DuckDB, bit-identical to Spark's
     // float Add) under offset ids.
     "l65_quantizer_drift" ->
-      """WITH u AS (
+      s"""WITH u AS (
         |  SELECT 'base' AS ingest, vec_id, embedding FROM embeddings
         |  UNION ALL
         |  SELECT 'drift' AS ingest, vec_id + 1000000,
         |    list_transform(embedding, x -> x + CAST(0.25 AS FLOAT))
         |  FROM embeddings),
-        |idx AS (SELECT vec_id, embedding,
-        |    ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cid
-        |  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 16)),
-        |cb AS (SELECT t.sub, cid, embedding[sub*16+1 : sub*16+16] AS cvec
-        |       FROM idx, UNNEST(generate_series(0, 3)) t(sub)),
-        |sv AS (SELECT ingest, vec_id, t.sub, embedding[sub*16+1 : sub*16+16] AS svec
-        |       FROM u, UNNEST(generate_series(0, 3)) t(sub)),
+        |$pqCodebookCtes,
+        |sv AS (${subVecs("ingest, vec_id, t.sub", "u", "svec")}),
         |best AS (SELECT sv.ingest, sv.vec_id, sv.sub,
-        |    MIN(round(list_sum(list_transform(list_zip(sv.svec, cb.cvec),
-        |      z -> (CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE))
-        |         * (CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE)))), 6)) AS dist
+        |    MIN(${sqDist("sv.svec", "cb.cvec")}) AS dist
         |  FROM sv JOIN cb ON cb.sub = sv.sub
         |  GROUP BY 1, 2, 3),
         |ru AS (SELECT ingest, vec_id,
@@ -5184,18 +4719,10 @@ object LlmQueries {
         |resid AS (SELECT ingest, CAST(COUNT(*) AS BIGINT) AS n_vecs,
         |    SUM(ru) AS rus
         |  FROM ru GROUP BY 1),
-        |e AS (SELECT ingest, vec_id, embedding,
-        |    list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))) AS n2,
-        |    sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)))) AS nr
-        |  FROM u),
-        |c AS (SELECT vec_id, embedding,
-        |    list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))) AS n2,
-        |    sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)))) AS nr
-        |  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 16)),
+        |${normCte(src = "u", cols = "ingest, vec_id, embedding", withNr = true)},
+        |${normCte("c", "(SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 16)", withNr = true)},
         |ac AS (SELECT v.ingest, v.vec_id AS vid, c.vec_id AS ci,
-        |    CASE WHEN v.n2 = 0 OR c.n2 = 0 THEN 0.0
-        |      ELSE round(list_sum(list_transform(list_zip(v.embedding, c.embedding),
-        |        z -> CAST(z[1] AS DOUBLE)*CAST(z[2] AS DOUBLE))) / (v.nr * c.nr), 6) END AS cos
+        |    ${guardedCos("v", "c", norms = true)} AS cos
         |  FROM e v, c),
         |buck AS (SELECT ingest, vid, ci AS bucket FROM (
         |    SELECT ingest, vid, ci,
@@ -5210,85 +4737,23 @@ object LlmQueries {
         |  round(CAST(o.max_bucket_n AS DOUBLE) * 16 / r.n_vecs, 6) AS occ_skew
         |FROM resid r JOIN occ o USING (ingest) ORDER BY ingest""".stripMargin,
     "l56_pq_adc_batch" ->
-      """WITH idx AS (SELECT vec_id, embedding,
-        |    ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cid
-        |  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 16)),
-        |cb AS (SELECT t.sub, cid, embedding[sub*16+1 : sub*16+16] AS cvec
-        |       FROM idx, UNNEST(generate_series(0, 3)) t(sub)),
-        |sv AS (SELECT vec_id, t.sub, embedding[sub*16+1 : sub*16+16] AS svec
-        |       FROM embeddings, UNNEST(generate_series(0, 3)) t(sub)),
-        |scored AS (SELECT sv.vec_id, sv.sub, cb.cid,
-        |    round(list_sum(list_transform(list_zip(sv.svec, cb.cvec),
-        |      z -> (CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE))
-        |         * (CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE)))), 6) AS dist
-        |  FROM sv JOIN cb ON cb.sub = sv.sub),
-        |codes AS (SELECT vec_id, sub, code FROM (
-        |  SELECT vec_id, sub, cid AS code,
-        |    ROW_NUMBER() OVER (PARTITION BY vec_id, sub ORDER BY dist, cid) AS rk
-        |  FROM scored) WHERE rk = 1),
-        |qs AS (SELECT vec_id AS qid, t.sub, embedding[sub*16+1 : sub*16+16] AS qvec
-        |       FROM embeddings, UNNEST(generate_series(0, 3)) t(sub)
-        |       WHERE vec_id < 5),
-        |dtab AS (SELECT qs.qid, cb.sub, cb.cid AS code,
-        |    round(list_sum(list_transform(list_zip(qs.qvec, cb.cvec),
-        |      z -> (CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE))
-        |         * (CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE)))), 6) AS dsub
-        |  FROM cb JOIN qs ON qs.sub = cb.sub),
+      s"""WITH $pqScoredCtes,
+        |codes AS ($pqCodesSql),
+        |${adcTableCtes(batch = true)},
         |adc AS (SELECT d.qid, c2.vec_id,
-        |    CAST(SUM(CAST(round(d.dsub * 1000000) AS BIGINT)) AS DOUBLE) / 1000000 AS adc_dist
+        |    $adcDist
         |  FROM codes c2 JOIN dtab d ON d.sub = c2.sub AND d.code = c2.code
         |  WHERE c2.vec_id <> d.qid
         |  GROUP BY 1, 2)
-        |SELECT qid, vec_id, rk, adc_dist FROM (
-        |  SELECT qid, vec_id, adc_dist,
-        |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adc_dist, vec_id) AS rk
-        |  FROM adc) WHERE rk <= 5 ORDER BY qid, rk""".stripMargin,
+        |$adcTop5PerProbeSql""".stripMargin,
     "l53_pq_codes" ->
-      """WITH idx AS (SELECT vec_id, embedding,
-        |    ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cid
-        |  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 16)),
-        |cb AS (SELECT t.sub, cid, embedding[sub*16+1 : sub*16+16] AS cvec
-        |       FROM idx, UNNEST(generate_series(0, 3)) t(sub)),
-        |sv AS (SELECT vec_id, t.sub, embedding[sub*16+1 : sub*16+16] AS svec
-        |       FROM embeddings, UNNEST(generate_series(0, 3)) t(sub)),
-        |scored AS (SELECT sv.vec_id, sv.sub, cb.cid,
-        |    round(list_sum(list_transform(list_zip(sv.svec, cb.cvec),
-        |      z -> (CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE))
-        |         * (CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE)))), 6) AS dist
-        |  FROM sv JOIN cb ON cb.sub = sv.sub)
-        |SELECT vec_id, sub, code FROM (
-        |  SELECT vec_id, sub, cid AS code,
-        |    ROW_NUMBER() OVER (PARTITION BY vec_id, sub ORDER BY dist, cid) AS rk
-        |  FROM scored) WHERE rk = 1 ORDER BY vec_id, sub""".stripMargin,
+      s"""WITH $pqScoredCtes
+        |$pqCodesSql ORDER BY vec_id, sub""".stripMargin,
     "l54_pq_adc" ->
-      """WITH idx AS (SELECT vec_id, embedding,
-        |    ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cid
-        |  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 16)),
-        |cb AS (SELECT t.sub, cid, embedding[sub*16+1 : sub*16+16] AS cvec
-        |       FROM idx, UNNEST(generate_series(0, 3)) t(sub)),
-        |sv AS (SELECT vec_id, t.sub, embedding[sub*16+1 : sub*16+16] AS svec
-        |       FROM embeddings, UNNEST(generate_series(0, 3)) t(sub)),
-        |scored AS (SELECT sv.vec_id, sv.sub, cb.cid,
-        |    round(list_sum(list_transform(list_zip(sv.svec, cb.cvec),
-        |      z -> (CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE))
-        |         * (CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE)))), 6) AS dist
-        |  FROM sv JOIN cb ON cb.sub = sv.sub),
-        |codes AS (SELECT vec_id, sub, code FROM (
-        |  SELECT vec_id, sub, cid AS code,
-        |    ROW_NUMBER() OVER (PARTITION BY vec_id, sub ORDER BY dist, cid) AS rk
-        |  FROM scored) WHERE rk = 1),
-        |qs AS (SELECT t.sub, embedding[sub*16+1 : sub*16+16] AS qvec
-        |       FROM (SELECT embedding FROM embeddings WHERE vec_id = 0),
-        |            UNNEST(generate_series(0, 3)) t(sub)),
-        |dtab AS (SELECT cb.sub, cb.cid AS code,
-        |    round(list_sum(list_transform(list_zip(qs.qvec, cb.cvec),
-        |      z -> (CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE))
-        |         * (CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE)))), 6) AS dsub
-        |  FROM cb JOIN qs ON qs.sub = cb.sub)
-        |SELECT c.vec_id,
-        |  CAST(SUM(CAST(round(d.dsub * 1000000) AS BIGINT)) AS DOUBLE) / 1000000 AS adc_dist
-        |FROM codes c JOIN dtab d ON d.sub = c.sub AND d.code = c.code
-        |GROUP BY 1 ORDER BY adc_dist, c.vec_id LIMIT 10""".stripMargin,
+      s"""WITH $pqScoredCtes,
+        |codes AS ($pqCodesSql),
+        |${adcTableCtes(batch = false)}
+        |${adcTop10Sql("c")}""".stripMargin,
     // DuckDB regexp_replace is single-match by default — the 'g' flag is
     // load-bearing on every rule; entity decode runs AFTER tag removal
     "l57_html_strip" ->
@@ -5309,20 +4774,7 @@ object LlmQueries {
         |SELECT doc_id, md5(clean) AS clean_md5, length(clean) AS n_chars_clean
         |FROM s4 ORDER BY doc_id""".stripMargin,
     "l51_difficulty_bins" ->
-      """WITH f AS (SELECT doc_id,
-        |    CAST(len(list_filter(regexp_extract_all(text, '\S+'),
-        |        x -> list_contains(['the','a','and','of','to','in'], x))) AS DOUBLE)
-        |      / NULLIF(len(regexp_extract_all(text, '\S+')), 0) AS stop_ratio,
-        |    CAST(length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS DOUBLE)
-        |      / NULLIF(length(text), 0) AS punct_ratio,
-        |    CAST(length(regexp_replace(text, '[^A-Z]', '', 'g')) AS DOUBLE)
-        |      / NULLIF(length(text), 0) AS upper_ratio,
-        |    len(regexp_extract_all(text, '\S+')) AS n_tokens
-        |  FROM documents),
-        |z AS (SELECT doc_id,
-        |    -1.5 + 3.0 * stop_ratio - 8.0 * punct_ratio - 2.0 * upper_ratio
-        |      + 0.35 * ln(1.0 + n_tokens) AS z
-        |  FROM f),
+      s"""WITH $qualityLogitCtes,
         |q AS (SELECT doc_id, round(1.0 / (1.0 + exp(-z)), 6) AS q FROM z)
         |SELECT least(9, CAST(floor(q * 10) AS BIGINT)) AS bin, COUNT(*) AS n,
         |  MIN(q) AS q_min, MAX(q) AS q_max

@@ -33,6 +33,11 @@ def frame_hash(df: pd.DataFrame) -> str:
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    if not oracle:
+        # an empty dump (e.g. a filter that selected nothing) grades
+        # nothing — that is a failed check, not a vacuous pass
+        print(f"FAIL: {out_dir}/oracle_sql.json has no entries")
+        sys.exit(1)
     con = duckdb.connect()
     for t in ["region","nation","customer","supplier","part","orders",
               "lineitem","events","documents","embeddings"]:
