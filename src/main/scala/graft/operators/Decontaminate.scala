@@ -26,8 +26,7 @@ object Decontaminate {
     * `contaminated` = overlap_frac >= flagFrac AND n_sh > 0. */
   def overlapStats(train: DataFrame, eval: DataFrame, id: String, text: String,
                    n: Int, flagFrac: Double): DataFrame = {
-    require(n >= 1, s"n-gram length must be >= 1, got $n")
-    require(flagFrac > 0.0 && flagFrac <= 1.0, s"flagFrac must be in (0,1], got $flagFrac")
+    requireSpec(n, flagFrac)
     val trainSh = Dedup.shingleSet(train, id, text, n)
     val evalSh = Dedup.shingleSet(eval, id, text, n)
       .select(col("s")).distinct()
@@ -41,15 +40,28 @@ object Decontaminate {
       .join(broadcast(evalSh.withColumn("hit", lit(1))), Seq("s"), "left")
       .groupBy(col(id))
       .agg(count(lit(1)).as("n_sh"), count(col("hit")).as("n_overlap"))
-    val frac = when(coalesce(col("n_sh"), lit(0L)) === 0, lit(0.0))
+    verdicts(train, stats, id, flagFrac)
+  }
+
+  private def requireSpec(n: Int, flagFrac: Double): Unit = {
+    require(n >= 1, s"n-gram length must be >= 1, got $n")
+    require(flagFrac > 0.0 && flagFrac <= 1.0, s"flagFrac must be in (0,1], got $flagFrac")
+  }
+
+  /** The overlap verdict per train doc from per-doc `stats` (id, n_sh,
+    * n_overlap): docs without shingles read 0 / 0.0 and are never
+    * contaminated; otherwise `contaminated` = overlap_frac >= flagFrac. */
+  private def verdicts(train: DataFrame, stats: DataFrame, id: String,
+                       flagFrac: Double): DataFrame = {
+    val nSh = coalesce(col("n_sh"), lit(0L))
+    val frac = when(nSh === 0, lit(0.0))
       .otherwise(coalesce(col("n_overlap"), lit(0L)).cast("double") / col("n_sh"))
     train.select(col(id))
       .join(stats, Seq(id), "left")
-      .select(col(id),
-        coalesce(col("n_sh"), lit(0L)).as("n_sh"),
+      .select(col(id), nSh.as("n_sh"),
         coalesce(col("n_overlap"), lit(0L)).as("n_overlap"),
         frac.as("overlap_frac"),
-        (frac >= flagFrac && coalesce(col("n_sh"), lit(0L)) > 0).as("contaminated"))
+        (frac >= flagFrac && nSh > 0).as("contaminated"))
   }
 
   /** Bloom-prefiltered overlap stats — the shape for when the eval side
@@ -69,8 +81,7 @@ object Decontaminate {
   def bloomOverlapStats(train: DataFrame, eval: DataFrame, id: String, text: String,
                         n: Int, flagFrac: Double,
                         expectedEvalShingles: Long = 1L << 20): DataFrame = {
-    require(n >= 1, s"n-gram length must be >= 1, got $n")
-    require(flagFrac > 0.0 && flagFrac <= 1.0, s"flagFrac must be in (0,1], got $flagFrac")
+    requireSpec(n, flagFrac)
     import graft.functions.BloomFunctions.{bloomOf, mightContain}
     val trainSh = Dedup.shingleSet(train, id, text, n)
     val evalSh = Dedup.shingleSet(eval, id, text, n).select(col("s")).distinct()
@@ -82,7 +93,7 @@ object Decontaminate {
     // pass (a full shuffle) would run once per branch. At 100 TB this
     // is the staged shingle artifact a production run writes to storage
     // between the mark and verify phases; released below once the
-    // per-document stats are checkpointed.
+    // per-document stats are checkpointed (or their write failed).
     // BloomFilterAggregate over an EMPTY build side yields NULL, and a
     // NULL probe result would make both branch filters below drop every
     // train shingle (breaking the bit-identical-to-overlapStats
@@ -121,25 +132,16 @@ object Decontaminate {
             "set spark.sparkContext.setCheckpointDir to a shared path")
         graft.Scratch.dir("graft_decontam_stats")
       }
-    verified.unionByName(clean)
+    try verified.unionByName(clean)
       .groupBy(col(id))
       .agg(count(lit(1)).as("n_sh"), count(col("hit")).as("n_overlap"))
       .write.mode("overwrite").parquet(stageDir)
-    marked.unpersist(blocking = false)
+    finally marked.unpersist(blocking = false)
     // reclaim the stage when the JVM exits — the returned frame reads
     // it lazily, so it must outlive this call but not the process
     val stagePath = new org.apache.hadoop.fs.Path(stageDir)
     stagePath.getFileSystem(spark.sessionState.newHadoopConf()).deleteOnExit(stagePath)
-    val stats = spark.read.parquet(stageDir)
-    val frac = when(coalesce(col("n_sh"), lit(0L)) === 0, lit(0.0))
-      .otherwise(coalesce(col("n_overlap"), lit(0L)).cast("double") / col("n_sh"))
-    train.select(col(id))
-      .join(stats, Seq(id), "left")
-      .select(col(id),
-        coalesce(col("n_sh"), lit(0L)).as("n_sh"),
-        coalesce(col("n_overlap"), lit(0L)).as("n_overlap"),
-        frac.as("overlap_frac"),
-        (frac >= flagFrac && coalesce(col("n_sh"), lit(0L)) > 0).as("contaminated"))
+    verdicts(train, spark.read.parquet(stageDir), id, flagFrac)
   }
 
   /** The filtering form: train rows whose benchmark overlap stays below

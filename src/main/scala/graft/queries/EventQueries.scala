@@ -35,6 +35,21 @@ object EventQueries {
   private def dec(c: String) = col(c).cast(d)
   private def sumv = sum(dec("value")).cast(DoubleType).as("sum_value")
 
+  /** The events table split into its (clicks, purchases) — the two
+    * sides of the j1/j3/j4 joins. */
+  private def clicksAndPurchases(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val e = Tables.load(s, dir, "events")
+    (e.filter(col("event_type") === "click"), e.filter(col("event_type") === "purchase"))
+  }
+
+  /** The interval joins' sides (j1, j4): clicks as (user_id, c_ts),
+    * purchases as (p_user, p_ts). */
+  private def intervalSides(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val (c, p) = clicksAndPurchases(s, dir)
+    (c.select(col("user_id"), col("ts").as("c_ts")),
+      p.select(col("user_id").as("p_user"), col("ts").as("p_ts")))
+  }
+
   /** Shared harness for the transformWithState-graded queries (w8/w9/
     * w10): RocksDB provider scoped to the run (restored after), the
     * events table as a file-stream source, ONE AvailableNow execution
@@ -526,13 +541,11 @@ object EventQueries {
     // clicks at the same ts (kind 0 < 1), making the bound inclusive
     // (p_ts <= c_ts), exactly the ASOF contract.
     "j3_asof_join" -> ((s, dir) => {
-      val e = Tables.load(s, dir, "events")
-      val c = e.filter(col("event_type") === "click")
-        .select(col("event_id").as("click_id"), col("user_id"),
-          col("ts"), lit(1).as("kind"), lit(null).cast("timestamp").as("p_ts"))
-      val p = e.filter(col("event_type") === "purchase")
-        .select(lit(null).cast("long").as("click_id"), col("user_id"),
-          col("ts"), lit(0).as("kind"), col("ts").as("p_ts"))
+      val (clicks, purchases) = clicksAndPurchases(s, dir)
+      val c = clicks.select(col("event_id").as("click_id"), col("user_id"),
+        col("ts"), lit(1).as("kind"), lit(null).cast("timestamp").as("p_ts"))
+      val p = purchases.select(lit(null).cast("long").as("click_id"), col("user_id"),
+        col("ts"), lit(0).as("kind"), col("ts").as("p_ts"))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("user_id")).orderBy(col("ts"), col("kind"))
         .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
@@ -550,11 +563,7 @@ object EventQueries {
     // same user within 4h. Equi-key + time-range condition is exactly the
     // reference Joiner's buffer/probe contract.
     "j1_interval_join" -> ((s, dir) => {
-      val e = Tables.load(s, dir, "events")
-      val c = e.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts").as("c_ts"))
-      val p = e.filter(col("event_type") === "purchase")
-        .select(col("user_id").as("p_user"), col("ts").as("p_ts"))
+      val (c, p) = intervalSides(s, dir)
       c.join(p, col("user_id") === col("p_user") &&
           col("p_ts") >= col("c_ts") &&
           col("p_ts") <= col("c_ts") + expr("interval 4 hours"))
@@ -568,11 +577,7 @@ object EventQueries {
     // leg's watermark-gated null emission; this grades the operator's
     // values through StreamJoins.windowed itself, symmetric ±4h bound).
     "j4_interval_left" -> ((s, dir) => {
-      val e = Tables.load(s, dir, "events")
-      val c = e.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts").as("c_ts"))
-      val p = e.filter(col("event_type") === "purchase")
-        .select(col("user_id").as("p_user"), col("ts").as("p_ts"))
+      val (c, p) = intervalSides(s, dir)
       graft.streaming.StreamJoins.windowed(c, p, "user_id", "p_user",
           "c_ts", "p_ts", withinMs = 4L * 3600 * 1000, joinType = "left")
         .groupBy(col("user_id"))

@@ -15,6 +15,15 @@ object ExtendedQueries {
   private val d = DecimalType(18, 2)
   private def dec(c: String) = col(c).cast(d)
 
+  /** The graded per-group summary of the document selection queries
+    * (x13, x15, x17-x20): row count `n`, exact char total and first
+    * doc, ordered by the group. */
+  private def charSummary(by: String, n: String = "n")(df: DataFrame): DataFrame =
+    df.groupBy(col(by))
+      .agg(count(lit(1)).as(n), sum(col("n_chars")).as("sum_chars"),
+        min(col("doc_id")).as("first_doc"))
+      .orderBy(col(by))
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // CUBE grouping sets.
     "x1_cube" -> ((s, dir) => {
@@ -242,10 +251,7 @@ object ExtendedQueries {
     "x13_weighted_sample" -> ((s, dir) => {
       val d = Tables.load(s, dir, "documents")
       graft.operators.Sampling.weightedByScore(d, "doc_id", "n_chars", salt = "wsamp9")
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sum_chars"),
-          min(col("doc_id")).as("first_doc"))
-        .orderBy(col("lang"))
+        .transform(charSummary("lang"))
     }),
 
     // Bloom-sidecar POINT lookup: the needle-in-haystack read min/max
@@ -280,10 +286,7 @@ object ExtendedQueries {
     "x15_balanced_shards" -> ((s, dir) => {
       val d = Tables.load(s, dir, "documents")
       graft.operators.Packing.balancedShards(d, "doc_id", "n_chars", nShards = 8)
-        .groupBy(col("shard"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"),
-          min(col("doc_id")).as("first_doc"))
-        .orderBy(col("shard"))
+        .transform(charSummary("shard", n = "n_docs"))
     }),
 
     // Per-epoch deterministic dataloader order: epoch 3's permutation,
@@ -310,10 +313,7 @@ object ExtendedQueries {
     "x17_exact_k" -> ((s, dir) => {
       val d = Tables.load(s, dir, "documents")
       graft.operators.Sampling.exactKPerStratum(d, "lang", "doc_id", k = 50, salt = "xk9")
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sum_chars"),
-          min(col("doc_id")).as("first_doc"))
-        .orderBy(col("lang"))
+        .transform(charSummary("lang"))
     }),
 
     // Token-budget selection: keep the longest documents while the
@@ -328,10 +328,7 @@ object ExtendedQueries {
       val budget = d.agg(sum(col("n_chars"))).head().getLong(0) * 2 / 5
       graft.operators.Packing.selectByBudget(
           d, Seq(col("n_chars").desc, col("doc_id")), "n_chars", budget)
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sum_chars"),
-          min(col("doc_id")).as("first_doc"))
-        .orderBy(col("lang"))
+        .transform(charSummary("lang"))
     }),
 
     // Temperature mixture resampling at α = 0.5: keep_rate per lang =
@@ -343,10 +340,7 @@ object ExtendedQueries {
       val d = Tables.load(s, dir, "documents")
       graft.operators.Sampling.temperatureMix(d, "lang", "doc_id",
           alpha = 0.5, salt = "tmix9")
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sum_chars"),
-          min(col("doc_id")).as("first_doc"))
-        .orderBy(col("lang"))
+        .transform(charSummary("lang"))
     }),
 
     // The training-export pipeline COMPOSED: temperature-tempered
@@ -366,10 +360,7 @@ object ExtendedQueries {
       val kept = Packing.selectByBudget(
         mixed, Seq(col("n_chars").desc, col("doc_id")), "n_chars", budget)
       Packing.balancedShards(kept, "doc_id", "n_chars", nShards = 4)
-        .groupBy(col("shard"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"),
-          min(col("doc_id")).as("first_doc"))
-        .orderBy(col("shard"))
+        .transform(charSummary("shard", n = "n_docs"))
     }),
 
     // Cross-source quality calibration: a raw score threshold means a

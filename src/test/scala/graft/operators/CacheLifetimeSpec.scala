@@ -73,6 +73,24 @@ class CacheLifetimeSpec extends AnyFunSuite {
     }
   }
 
+  test("bloomOverlapStats releases its shingle cache when the staged stats write throws") {
+    release()
+    // read back from parquet: over a local relation the optimizer folds
+    // the projection, so raise_error would fire before the persist
+    val root = graft.Scratch.dir("graft_cachelife_bloom")
+    docs.write.parquet(s"$root/docs")
+    val train = spark.read.parquet(s"$root/docs").withColumn("text",
+      when(col("doc_id") === 7, raise_error(lit("poisoned row"))).otherwise(col("text")))
+    val eval = docs.filter(col("doc_id") % 10 === 0)
+    intercept[Exception] {
+      Decontaminate.bloomOverlapStats(train, eval, "doc_id", "text", n = 3, flagFrac = 0.5)
+    }
+    // no caller release here: the operator must clean up after itself
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "bloomOverlapStats left its marked shingle frame in the cache after a failed write")
+    assertDrained("bloomOverlapStats (failed stage write)")
+  }
+
   test("streaming winnow loop: per-turn persists are try/finally-released by the loop itself") {
     release()
     val root = graft.Scratch.dir("graft_cachelife_wn")
