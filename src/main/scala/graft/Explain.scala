@@ -14,7 +14,7 @@ package graft
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = GraftSession.local()
+    val spark = GraftSession.graded("graft-explain")
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     val shuffleAudit = sys.env.get("SPARK_GRAFT_SHUFFLES").exists(_.nonEmpty)
     names.foreach { n =>

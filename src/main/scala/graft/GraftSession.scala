@@ -104,6 +104,27 @@ object GraftSession {
     }
   }
 
+  /** The session recipe of the non-Bench mains (Verify, Explain,
+    * PlanAudit, Profile, StartupProbe): `tune` over
+    * `local[$SPARK_GRAFT_CPUS]` (default 4) with one shuffle partition
+    * per core, logging at WARN — the recipe Bench times, so the oracle
+    * grades and the plan tools show what Bench runs. */
+  private[graft] def graded(appName: String): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val s = tune(SparkSession.builder().master(s"local[$cpus]").appName(appName),
+      shufflePartitions = cpus).getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
+  /** Release every block a finished query left persisted: the
+    * CacheManager's frames, then the raw-RDD persists
+    * (connectedComponents rounds) that `clearCache` does not see. */
+  private[graft] def releaseCached(s: SparkSession): Unit = {
+    s.catalog.clearCache()
+    s.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+  }
+
   /** Local session for tests / verify / bench, with the engine's SQL
     * functions registered (vec_dot, simhash32). */
   def local(cores: Int = Runtime.getRuntime.availableProcessors.min(32)): SparkSession = {

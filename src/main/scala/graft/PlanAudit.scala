@@ -32,7 +32,7 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = GraftSession.local()
+    val spark = GraftSession.graded("graft-plan-audit")
     var bad = 0
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       val plan = try fn(spark, sfDir).queryExecution.executedPlan.toString

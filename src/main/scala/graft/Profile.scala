@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Per-JOB time attribution for a named query (optimization tooling,
   * guide §1: measure first). Bench reports one wall number per query;
@@ -21,11 +20,7 @@ object Profile {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: Profile <queryName> [queryName ...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = GraftSession.tune(
-      SparkSession.builder().master(s"local[$cpus]").appName("graft-profile"),
-      shufflePartitions = cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.graded("graft-profile")
 
     val warm = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.001")
 
@@ -54,16 +49,14 @@ object Profile {
       if (warm.isDirectory) {
         try fn(spark, warm.toString).write.format("noop").mode("overwrite").save()
         catch { case e: Throwable => System.err.println(s"[profile] warmup: ${e.getMessage}") }
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+        GraftSession.releaseCached(spark)
       }
       jobs.clear(); collecting = true
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - t0) / 1e9
       collecting = false
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      GraftSession.releaseCached(spark)
       // listener bus is async; give tail events a moment
       Thread.sleep(300)
       import scala.jdk.CollectionConverters._

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -33,12 +32,8 @@ object StartupProbe {
   private def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_PROBE_REPS", "5").toInt
-    val spark = GraftSession.tune(
-      SparkSession.builder().master(s"local[$cpus]").appName("graft-startup-probe"),
-      shufflePartitions = cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.graded("graft-startup-probe")
     import spark.implicits._
 
     def writeFile(dir: String, k: Int): Unit =

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import org.apache.commons.io.FileUtils
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -7,12 +6,7 @@ import org.apache.commons.io.FileUtils
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    // the session Bench times: the oracle grades the tuned configuration
-    val spark = GraftSession.tune(
-      SparkSession.builder().master(s"local[$cpus]").appName("graft-verify"),
-      shufflePartitions = cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.graded("graft-verify")
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q1,l28 → dump only that subset (local iteration).
     // Unset or blank dumps everything, and unknown names are rejected,
@@ -34,12 +28,8 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       } finally {
-        spark.catalog.clearCache() // queries that persist (l12)
-        // must not leak cache entries across the whole dump run;
-        // raw-RDD materializations (connectedComponents rounds) are
-        // invisible to clearCache and need their own release
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        // queries that persist (l12) must not leak blocks across the run
+        GraftSession.releaseCached(spark)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

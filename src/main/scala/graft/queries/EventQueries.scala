@@ -93,31 +93,41 @@ object EventQueries {
     }
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def defs: Seq[QueryDef] = Seq(
     // W1 tumbling window: 1h fixed buckets per event_type.
-    "w1_tumbling_window" -> ((s, dir) => {
+    QueryDef("w1_tumbling_window", (s, dir) => {
       Tables.load(s, dir, "events")
         .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
         .agg(count(lit(1)).as("n"), sumv)
         .select(unix_timestamp(col("w.start")).as("window_start"),
           col("event_type"), col("n"), col("sum_value"))
         .orderBy(col("window_start"), col("event_type"))
-    }),
+    },
+      """SELECT CAST(floor(epoch(ts)/3600)*3600 AS BIGINT) AS window_start, event_type,
+        |  COUNT(*) AS n, CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
 
     // W2 sliding window: 2h size / 1h slide — each event lands in 2 windows
     // (end-exclusive assignment, matching the reference's backtracking
     // assigner semantics verified in its tests/test_windows.py:22-36).
-    "w2_sliding_window" -> ((s, dir) => {
+    QueryDef("w2_sliding_window", (s, dir) => {
       Tables.load(s, dir, "events")
         .groupBy(window(col("ts"), "2 hours", "1 hour").as("w"), col("event_type"))
         .agg(count(lit(1)).as("n"), sumv)
         .select(unix_timestamp(col("w.start")).as("window_start"),
           col("event_type"), col("n"), col("sum_value"))
         .orderBy(col("window_start"), col("event_type"))
-    }),
+    },
+      """WITH e AS (SELECT CAST(floor(epoch(ts)/3600) AS BIGINT) AS hb, event_type, value FROM events),
+        |w AS (SELECT hb*3600 AS window_start, event_type, value FROM e
+        |      UNION ALL
+        |      SELECT (hb-1)*3600 AS window_start, event_type, value FROM e)
+        |SELECT window_start, event_type, COUNT(*) AS n,
+        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+        |FROM w GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
 
     // W3 session window: 6h inactivity gap per user; start = first event.
-    "w3_session_window" -> ((s, dir) => {
+    QueryDef("w3_session_window", (s, dir) => {
       Tables.load(s, dir, "events")
         .groupBy(session_window(col("ts"), "6 hours").as("w"), col("user_id"))
         .agg(count(lit(1)).as("n"), sumv)
@@ -125,12 +135,26 @@ object EventQueries {
           unix_timestamp(col("w.start")).as("session_start"),
           col("n"), col("sum_value"))
         .orderBy(col("user_id"), col("session_start"))
-    }),
+    },
+      """WITH g AS (
+        |  SELECT user_id, ts, value,
+        |    -- strict >: Spark session_window MERGES events exactly gap apart
+        |    -- (empirically probed: ts 0 and 10 with gap 10s -> one session
+        |    -- [0,20)), so only a gap STRICTLY beyond the timeout splits
+        |    CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts) > INTERVAL 6 HOUR
+        |         OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL THEN 1 ELSE 0 END AS new_s
+        |  FROM events),
+        |s AS (SELECT user_id, ts, value,
+        |    SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS sid
+        |  FROM g)
+        |SELECT user_id, CAST(floor(epoch(MIN(ts))) AS BIGINT) AS session_start,
+        |  COUNT(*) AS n, CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+        |FROM s GROUP BY user_id, sid ORDER BY user_id, session_start""".stripMargin),
 
     // W5/W6 watermark + late-event split: watermark = max(ts) - 24h; the
     // reference routes window_end < watermark to a {topic}-late side
     // output (pspf/stream.py:402-413). Batch form labels both legs.
-    "w5_late_split" -> ((s, dir) => {
+    QueryDef("w5_late_split", (s, dir) => {
       val e = Tables.load(s, dir, "events")
       val wm = e.agg(max(col("ts")).as("max_ts"))
       e.crossJoin(broadcast(wm))
@@ -140,18 +164,25 @@ object EventQueries {
         .groupBy(col("event_type"), col("status"))
         .agg(count(lit(1)).as("n"))
         .orderBy(col("event_type"), col("status"))
-    }),
+    },
+      """SELECT event_type,
+        |  CASE WHEN ts < (SELECT MAX(ts) FROM events) - INTERVAL 24 HOUR
+        |       THEN 'late' ELSE 'ontime' END AS status,
+        |  COUNT(*) AS n
+        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
 
     // O2/O3 map + filter chain (DSL `map`/`filter`).
-    "o2_map_filter" -> ((s, dir) => {
+    QueryDef("o2_map_filter", (s, dir) => {
       Tables.load(s, dir, "events")
         .filter(col("event_type") === lit("click"))
         .select(col("event_id"), (col("value") * lit(2.0)).as("doubled"))
         .orderBy(col("event_id"))
-    }),
+    },
+      """SELECT event_id, value * 2.0 AS doubled
+        |FROM events WHERE event_type = 'click' ORDER BY event_id""".stripMargin),
 
     // O5 Router: ordered first-match predicate → route, with default.
-    "o5_router" -> ((s, dir) => {
+    QueryDef("o5_router", (s, dir) => {
       Tables.load(s, dir, "events")
         .withColumn("route",
           when(col("value") > 300, "high_value")
@@ -160,16 +191,23 @@ object EventQueries {
         .groupBy(col("route"))
         .agg(count(lit(1)).as("n"), sumv)
         .orderBy(col("route"))
-    }),
+    },
+      """SELECT CASE WHEN value > 300 THEN 'high_value'
+        |            WHEN value > 100 THEN 'mid_value'
+        |            ELSE 'standard' END AS route,
+        |  COUNT(*) AS n, CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // O7 dynamic-schema JSON payload extraction (props is a JSON string,
     // like the reference's value: Dict[str,Any]).
-    "o7_json_extract" -> ((s, dir) => {
+    QueryDef("o7_json_extract", (s, dir) => {
       Tables.load(s, dir, "events")
         .select(get_json_object(col("props"), "$.k").cast(LongType).as("k"))
         .groupBy(col("k")).agg(count(lit(1)).as("n"))
         .orderBy(col("k"))
-    }),
+    },
+      """SELECT CAST(json_extract_string(props, '$.k') AS BIGINT) AS k, COUNT(*) AS n
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // O7's EVOLUTION policy graded end to end (reference:
     // docs/schema-evolution.md — additive defaults, alias renames,
@@ -188,7 +226,7 @@ object EventQueries {
     // corrupt counts, the coerced-amount sum over clean rows, and the
     // additive field's coverage — wrong alias folding, wrong coercion,
     // or corrupt leakage each shifts a graded value.
-    "o8_schema_evolution" -> ((s, dir) => {
+    QueryDef("o8_schema_evolution", (s, dir) => {
       import graft.streaming.{Evolution, SchemaRegistry}
       import org.apache.spark.sql.types.{StructField, StructType, StringType}
       val e = Tables.load(s, dir, "events")
@@ -228,7 +266,27 @@ object EventQueries {
           sum(when(!col("_corrupt"), col("amount"))).as("sum_amount"),
           sum(when(col("tier").isNotNull, 1L).otherwise(0L)).as("n_tiered"))
         .orderBy(col("bucket"))
-    }),
+    },
+      // o8: the registry's evolution semantics replayed in SQL — the
+      // generation rules are a pure function of event_id, so the oracle
+      // applies alias folding (cust == customer_id, same value either
+      // way), string→long coercion (NULL + corrupt where uncastable),
+      // and the additive tier field directly.
+      """WITH e AS (SELECT event_id, user_id,
+        |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+        |  FROM events),
+        |p AS (SELECT user_id AS customer_id,
+        |    CASE WHEN event_id % 3 = 0 AND event_id % 17 = 5 THEN NULL
+        |         ELSE cents END AS amount,
+        |    CASE WHEN event_id % 3 = 2 THEN
+        |      CASE WHEN user_id % 2 = 0 THEN 'gold' ELSE 'std' END END AS tier,
+        |    (event_id % 3 = 0 AND event_id % 17 = 5) AS corrupt
+        |  FROM e)
+        |SELECT customer_id % 8 AS bucket, COUNT(*) AS n,
+        |  CAST(SUM(CASE WHEN corrupt THEN 1 ELSE 0 END) AS BIGINT) AS n_corrupt,
+        |  CAST(SUM(CASE WHEN NOT corrupt THEN amount END) AS BIGINT) AS sum_amount,
+        |  CAST(SUM(CASE WHEN tier IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_tiered
+        |FROM p GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // S2/O9 — the graftlog broker END TO END, oracle-graded: a
     // deterministic event slice produced THROUGH GraftLogConnector
@@ -248,7 +306,7 @@ object EventQueries {
     // One DLQ move rides along, pinned: the second drop's error events
     // go to the side topic with the _error metadata folded into the
     // payload JSON (the reference's DLQ message shape).
-    "o9_graftlog_roundtrip" -> ((s, dir) => {
+    QueryDef("o9_graftlog_roundtrip", (s, dir) => {
       import s.implicits._
       val np = 4
       val root = graft.Scratch.dir("graft_o9")
@@ -318,16 +376,41 @@ object EventQueries {
         s"the committed prefix must be exactly the first drop's $n1 records")
       rows.drop("id").join(broadcast(lagDf), Seq("part"))
         .orderBy(col("part"), col("log_offset"))
-    }),
+    },
+      // o9: the segment files' logical contract replayed from the events
+      // table — routing is pure arithmetic on the 1-char key (hashCode of
+      // a 1-char string is its code point; 48 % 4 = 0 so partition =
+      // user_id % 4), offsets are the dense per-partition row numbers in
+      // produce order (event_id order — the produce sorts the frame), and
+      // lag recounts the second, uncommitted drop per partition.
+      """WITH s1 AS (SELECT event_id, event_type, user_id FROM events
+        |            WHERE event_id % 20 = 0),
+        |s2 AS (SELECT CAST(user_id % 4 AS INT) AS part, COUNT(*) AS lag
+        |       FROM events WHERE event_id % 20 = 10 GROUP BY 1),
+        |r AS (SELECT CAST(user_id % 4 AS INT) AS part,
+        |        CAST(ROW_NUMBER() OVER (PARTITION BY user_id % 4
+        |                                ORDER BY event_id) - 1 AS BIGINT) AS log_offset,
+        |        chr(CAST(48 + user_id % 8 AS INT)) AS key,
+        |        event_type,
+        |        CAST(event_id AS VARCHAR) AS payload
+        |      FROM s1)
+        |SELECT r.part AS part, r.log_offset, r.key, r.event_type, r.payload,
+        |  COALESCE(l.lag, 0) AS lag
+        |FROM r LEFT JOIN s2 l ON l.part = r.part
+        |ORDER BY r.part, r.log_offset""".stripMargin),
 
     // W8 per-key running state (wordcount analog): final state per user.
-    "w8_keyed_state" -> ((s, dir) => {
+    QueryDef("w8_keyed_state", (s, dir) => {
       Tables.load(s, dir, "events")
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n"), sumv,
           countDistinct(col("event_type")).as("n_types"))
         .orderBy(col("user_id"))
-    }),
+    },
+      """SELECT user_id, COUNT(*) AS n,
+        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value,
+        |  COUNT(DISTINCT event_type) AS n_types
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin),
 
     // W4/W8 on the Spark 4 transformWithState path: the same keyed
     // running fold as w8, but executed as a REAL streaming query (file
@@ -337,7 +420,7 @@ object EventQueries {
     // cents (decimal-cast then ×100): a double fold would be
     // accumulation-order-dependent across state updates and could never
     // hash-match a batch oracle.
-    "w8_tws_fold" -> ((s, dir) => {
+    QueryDef("w8_tws_fold", (s, dir) => {
       import s.implicits._
       val t = runTws(s, dir, "tws_fold_", "update") { src =>
         val typed = src
@@ -357,7 +440,10 @@ object EventQueries {
         .select(col("user_id"), col("fin.n").as("n"),
           (col("fin.cents").cast(DoubleType) / 100).as("sum_value"))
         .orderBy(col("user_id"))
-    }),
+    },
+      """SELECT user_id, COUNT(*) AS n,
+        |  CAST(SUM(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)) AS DOUBLE) / 100 AS sum_value
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin),
 
     // W3 session semantics on the Spark 4 TIMER API: sessionizeTws
     // splits sessions in-batch (strict gap, session_window-compatible)
@@ -367,7 +453,7 @@ object EventQueries {
     // restricted to sessions the final watermark (max ts) can close;
     // the whole file arrives in one AvailableNow batch, so in-batch
     // splits are deterministic.
-    "w9_tws_sessions" -> ((s, dir) => {
+    QueryDef("w9_tws_sessions", (s, dir) => {
       import s.implicits._
       // session arithmetic in µs; engine timers are ms (msPerUnit).
       // AvailableNow runs a trailing no-data batch after the data batch
@@ -385,7 +471,29 @@ object EventQueries {
           .map { case (u, startUs, _, n) => (u, startUs / 1000000L, n) }
           .toDF("user_id", "session_start", "n")
       }.orderBy(col("user_id"), col("session_start"))
-    }),
+    },
+      """WITH g AS (
+        |  SELECT user_id, ts,
+        |    CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts) > INTERVAL 6 HOUR
+        |         OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL THEN 1 ELSE 0 END AS new_s
+        |  FROM events),
+        |s AS (SELECT user_id, ts,
+        |    SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS sid
+        |  FROM g),
+        |sess AS (SELECT user_id, sid, MIN(ts) AS start_ts, MAX(ts) AS end_ts, COUNT(*) AS n
+        |         FROM s GROUP BY user_id, sid),
+        |sess2 AS (SELECT *, MAX(sid) OVER (PARTITION BY user_id) AS max_sid FROM sess)
+        |SELECT user_id, CAST(floor(epoch(start_ts)) AS BIGINT) AS session_start, n
+        |FROM sess2
+        |-- a NON-trailing session (a later session exists for the key)
+        |-- closes on in-batch evidence and always emits; the trailing
+        |-- session closes via the engine's MILLISECOND timer clock:
+        |-- floor(watermark µs / 1000) >= ceil((end + gap) µs / 1000) —
+        |-- both arms mirrored exactly (timestamps are µs-precision)
+        |WHERE sid < max_sid
+        |   OR epoch_us((SELECT MAX(ts) FROM events)) // 1000
+        |      >= (epoch_us(end_ts) + 21600000000 + 999) // 1000
+        |ORDER BY user_id, session_start""".stripMargin),
 
     // Per-key running top-k on transformWithState LIST state: the
     // named-variable API (ListState + ValueState) graded end-to-end.
@@ -393,7 +501,7 @@ object EventQueries {
     // latest Update emission per key (max running seen-count) is the
     // final top-k, which a batch ROW_NUMBER oracle mirrors exactly
     // (score desc, event_id asc tie-break, exact integer cents).
-    "w10_tws_topk" -> ((s, dir) => {
+    QueryDef("w10_tws_topk", (s, dir) => {
       import s.implicits._
       val t = runTws(s, dir, "tws_topk_", "update") { src =>
         val typed = src
@@ -409,7 +517,16 @@ object EventQueries {
         .select(col("user_id"), col("rk").cast(LongType).as("rk"),
           (col("cents").cast(DoubleType) / 100).as("value"), col("event_id"))
         .orderBy(col("user_id"), col("rk"))
-    }),
+    },
+      """SELECT user_id, rk,
+        |  CAST(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS DOUBLE) / 100 AS value,
+        |  event_id
+        |FROM (SELECT user_id, value, event_id,
+        |        ROW_NUMBER() OVER (PARTITION BY user_id
+        |          ORDER BY CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) DESC,
+        |                   event_id) AS rk
+        |      FROM events)
+        |WHERE rk <= 3 ORDER BY user_id, rk""".stripMargin),
 
     // Streaming CDC ledger — Audit.snapshotDiff's per-key counterpart
     // as a REAL streaming query: each user's event_type stream is an
@@ -420,7 +537,7 @@ object EventQueries {
     // the same total order with one LAG window. Update mode emits the
     // running ledger per trigger; the latest emission per key is the
     // monotone-max nUpserts row.
-    "w13_tws_cdc" -> ((s, dir) => {
+    QueryDef("w13_tws_cdc", (s, dir) => {
       import s.implicits._
       val t = runTws(s, dir, "tws_cdc_", "update") { src =>
         val typed = src.select(col("user_id"), col("event_id"), col("event_type"))
@@ -436,7 +553,20 @@ object EventQueries {
           col("fin.n_unchanged").as("n_unchanged"),
           col("fin.last_type").as("last_type"))
         .orderBy(col("user_id"))
-    }),
+    },
+      // w13: the same seq-ordered upsert replay via one LAG window —
+      // 'new' where no predecessor, 'changed' where the payload flipped,
+      // 'unchanged' otherwise; last payload = arg_max over the sequence.
+      """WITH o AS (SELECT user_id, event_type,
+        |    LAG(event_type) OVER (PARTITION BY user_id ORDER BY event_id) AS pt
+        |  FROM events)
+        |SELECT user_id, COUNT(*) AS n_upserts,
+        |  CAST(SUM(CASE WHEN pt IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_new,
+        |  CAST(SUM(CASE WHEN pt IS NOT NULL AND event_type <> pt THEN 1 ELSE 0 END) AS BIGINT) AS n_changed,
+        |  CAST(SUM(CASE WHEN event_type = pt THEN 1 ELSE 0 END) AS BIGINT) AS n_unchanged,
+        |  (SELECT arg_max(event_type, event_id) FROM events e2
+        |   WHERE e2.user_id = o.user_id) AS last_type
+        |FROM o GROUP BY user_id ORDER BY user_id""".stripMargin),
 
     // CDC WRITE SUPPRESSION — what w13's ledger exists for (reference
     // parity: the idempotent sink's skip counter,
@@ -451,7 +581,7 @@ object EventQueries {
     // reproduce the stream's final state exactly (snapshotDiff between
     // the replayed writes and the batch-computed final state is empty)
     // — suppression never hid a change.
-    "w14_cdc_suppress" -> ((s, dir) => {
+    QueryDef("w14_cdc_suppress", (s, dir) => {
       import s.implicits._
       graft.GraftSession.withConf(s, graft.GraftSession.RocksDBStateStore) {
         val ev = Tables.load(s, dir, "events")
@@ -500,23 +630,42 @@ object EventQueries {
           "the suppressed write set must reproduce the stream's final state exactly")
         out.orderBy(col("user_id"), col("ingest_batch"))
       }
-    }),
-
+    },
+      // w14: a written row exists for (user, drop) iff the user's
+      // last-in-drop payload is their first sighting or differs from
+      // their previous drop's last payload — one LAG over the per-drop
+      // tails replays the suppression decision exactly.
+      """WITH mx AS (SELECT MAX(event_id) AS m FROM events),
+        |e AS (SELECT user_id, event_id, event_type,
+        |    CAST(FLOOR(event_id * 4 / (m + 1)) AS BIGINT) AS drp
+        |  FROM events, mx),
+        |last_in AS (SELECT user_id, drp, event_type FROM (
+        |    SELECT user_id, drp, event_type,
+        |      ROW_NUMBER() OVER (PARTITION BY user_id, drp ORDER BY event_id DESC) AS rk
+        |    FROM e) WHERE rk = 1),
+        |seq AS (SELECT user_id, drp, event_type,
+        |    LAG(event_type) OVER (PARTITION BY user_id ORDER BY drp) AS prev
+        |  FROM last_in)
+        |SELECT user_id, drp AS ingest_batch, event_type AS written_type
+        |FROM seq WHERE prev IS NULL OR event_type <> prev
+        |ORDER BY user_id, ingest_batch""".stripMargin),
 
     // W12 idempotent dedup: first event per (user_id, event_type) —
     // deterministic min-id representative rather than dropDuplicates'
     // arbitrary row, so the oracle can match it.
-    "w12_dedup_first" -> ((s, dir) => {
+    QueryDef("w12_dedup_first", (s, dir) => {
       Tables.load(s, dir, "events")
         .groupBy(col("user_id"), col("event_type"))
         .agg(min(col("event_id")).as("first_event_id"),
           count(lit(1)).as("n_dupes"))
         .orderBy(col("user_id"), col("event_type"))
-    }),
+    },
+      """SELECT user_id, event_type, MIN(event_id) AS first_event_id, COUNT(*) AS n_dupes
+        |FROM events GROUP BY user_id, event_type ORDER BY user_id, event_type""".stripMargin),
 
     // J2 stream-static enrichment join (SURVEY §2.4: absent in the
     // reference, free in Spark): events enriched with a broadcast dim.
-    "j2_enrich_join" -> ((s, dir) => {
+    QueryDef("j2_enrich_join", (s, dir) => {
       val e = Tables.load(s, dir, "events")
       val c = Tables.load(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment"))
@@ -525,7 +674,11 @@ object EventQueries {
         .agg(count(lit(1)).as("n"),
           sum(dec("value")).cast(DoubleType).as("sum_value"))
         .orderBy(col("segment"))
-    }),
+    },
+      """SELECT COALESCE(c_mktsegment, 'UNKNOWN') AS segment, COUNT(*) AS n,
+        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+        |FROM events LEFT JOIN customer ON user_id = c_custkey
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // J3 as-of join (composed from built-ins — Spark lacks a native
     // ASOF): each click paired with the user's most recent prior-or-
@@ -540,7 +693,7 @@ object EventQueries {
     // as the executable spec this plan must match. Purchases sort BEFORE
     // clicks at the same ts (kind 0 < 1), making the bound inclusive
     // (p_ts <= c_ts), exactly the ASOF contract.
-    "j3_asof_join" -> ((s, dir) => {
+    QueryDef("j3_asof_join", (s, dir) => {
       val (clicks, purchases) = clicksAndPurchases(s, dir)
       val c = clicks.select(col("event_id").as("click_id"), col("user_id"),
         col("ts"), lit(1).as("kind"), lit(null).cast("timestamp").as("p_ts"))
@@ -557,12 +710,19 @@ object EventQueries {
           unix_timestamp(col("ts")).as("click_sec"),
           unix_timestamp(col("asof_ts")).as("purchase_sec"))
         .orderBy(col("click_id"))
-    }),
+    },
+      """SELECT c.event_id AS click_id,
+        |  CAST(floor(epoch(c.ts)) AS BIGINT) AS click_sec,
+        |  CAST(floor(epoch(p.ts)) AS BIGINT) AS purchase_sec
+        |FROM (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click') c
+        |ASOF LEFT JOIN (SELECT user_id, ts FROM events WHERE event_type = 'purchase') p
+        |  ON c.user_id = p.user_id AND p.ts <= c.ts
+        |ORDER BY click_id""".stripMargin),
 
     // J1 windowed stream-stream equi-join: click→purchase pairs for the
     // same user within 4h. Equi-key + time-range condition is exactly the
     // reference Joiner's buffer/probe contract.
-    "j1_interval_join" -> ((s, dir) => {
+    QueryDef("j1_interval_join", (s, dir) => {
       val (c, p) = intervalSides(s, dir)
       c.join(p, col("user_id") === col("p_user") &&
           col("p_ts") >= col("c_ts") &&
@@ -570,215 +730,31 @@ object EventQueries {
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_pairs"))
         .orderBy(col("user_id"))
-    }),
+    },
+      """SELECT c.user_id, COUNT(*) AS n_pairs
+        |FROM events c JOIN events p
+        |  ON c.user_id = p.user_id
+        | AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 4 HOUR
+        |WHERE c.event_type = 'click' AND p.event_type = 'purchase'
+        |GROUP BY c.user_id ORDER BY c.user_id""".stripMargin),
 
     // J4 LEFT OUTER interval join — the unmatched-side emission outer
     // stream-stream joins add (StreamingSliceSpec proves the streaming
     // leg's watermark-gated null emission; this grades the operator's
     // values through StreamJoins.windowed itself, symmetric ±4h bound).
-    "j4_interval_left" -> ((s, dir) => {
+    QueryDef("j4_interval_left", (s, dir) => {
       val (c, p) = intervalSides(s, dir)
       graft.streaming.StreamJoins.windowed(c, p, "user_id", "p_user",
           "c_ts", "p_ts", withinMs = 4L * 3600 * 1000, joinType = "left")
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_rows"), count(col("p_ts")).as("n_matched"))
         .orderBy(col("user_id"))
-    })
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "w1_tumbling_window" ->
-      """SELECT CAST(floor(epoch(ts)/3600)*3600 AS BIGINT) AS window_start, event_type,
-        |  COUNT(*) AS n, CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "w2_sliding_window" ->
-      """WITH e AS (SELECT CAST(floor(epoch(ts)/3600) AS BIGINT) AS hb, event_type, value FROM events),
-        |w AS (SELECT hb*3600 AS window_start, event_type, value FROM e
-        |      UNION ALL
-        |      SELECT (hb-1)*3600 AS window_start, event_type, value FROM e)
-        |SELECT window_start, event_type, COUNT(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM w GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "w3_session_window" ->
-      """WITH g AS (
-        |  SELECT user_id, ts, value,
-        |    -- strict >: Spark session_window MERGES events exactly gap apart
-        |    -- (empirically probed: ts 0 and 10 with gap 10s -> one session
-        |    -- [0,20)), so only a gap STRICTLY beyond the timeout splits
-        |    CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts) > INTERVAL 6 HOUR
-        |         OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL THEN 1 ELSE 0 END AS new_s
-        |  FROM events),
-        |s AS (SELECT user_id, ts, value,
-        |    SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM g)
-        |SELECT user_id, CAST(floor(epoch(MIN(ts))) AS BIGINT) AS session_start,
-        |  COUNT(*) AS n, CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM s GROUP BY user_id, sid ORDER BY user_id, session_start""".stripMargin,
-    "w5_late_split" ->
-      """SELECT event_type,
-        |  CASE WHEN ts < (SELECT MAX(ts) FROM events) - INTERVAL 24 HOUR
-        |       THEN 'late' ELSE 'ontime' END AS status,
-        |  COUNT(*) AS n
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "o2_map_filter" ->
-      """SELECT event_id, value * 2.0 AS doubled
-        |FROM events WHERE event_type = 'click' ORDER BY event_id""".stripMargin,
-    "o5_router" ->
-      """SELECT CASE WHEN value > 300 THEN 'high_value'
-        |            WHEN value > 100 THEN 'mid_value'
-        |            ELSE 'standard' END AS route,
-        |  COUNT(*) AS n, CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    "o7_json_extract" ->
-      """SELECT CAST(json_extract_string(props, '$.k') AS BIGINT) AS k, COUNT(*) AS n
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    // o8: the registry's evolution semantics replayed in SQL — the
-    // generation rules are a pure function of event_id, so the oracle
-    // applies alias folding (cust == customer_id, same value either
-    // way), string→long coercion (NULL + corrupt where uncastable),
-    // and the additive tier field directly.
-    "o8_schema_evolution" ->
-      """WITH e AS (SELECT event_id, user_id,
-        |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-        |  FROM events),
-        |p AS (SELECT user_id AS customer_id,
-        |    CASE WHEN event_id % 3 = 0 AND event_id % 17 = 5 THEN NULL
-        |         ELSE cents END AS amount,
-        |    CASE WHEN event_id % 3 = 2 THEN
-        |      CASE WHEN user_id % 2 = 0 THEN 'gold' ELSE 'std' END END AS tier,
-        |    (event_id % 3 = 0 AND event_id % 17 = 5) AS corrupt
-        |  FROM e)
-        |SELECT customer_id % 8 AS bucket, COUNT(*) AS n,
-        |  CAST(SUM(CASE WHEN corrupt THEN 1 ELSE 0 END) AS BIGINT) AS n_corrupt,
-        |  CAST(SUM(CASE WHEN NOT corrupt THEN amount END) AS BIGINT) AS sum_amount,
-        |  CAST(SUM(CASE WHEN tier IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_tiered
-        |FROM p GROUP BY 1 ORDER BY 1""".stripMargin,
-    // o9: the segment files' logical contract replayed from the events
-    // table — routing is pure arithmetic on the 1-char key (hashCode of
-    // a 1-char string is its code point; 48 % 4 = 0 so partition =
-    // user_id % 4), offsets are the dense per-partition row numbers in
-    // produce order (event_id order — the produce sorts the frame), and
-    // lag recounts the second, uncommitted drop per partition.
-    "o9_graftlog_roundtrip" ->
-      """WITH s1 AS (SELECT event_id, event_type, user_id FROM events
-        |            WHERE event_id % 20 = 0),
-        |s2 AS (SELECT CAST(user_id % 4 AS INT) AS part, COUNT(*) AS lag
-        |       FROM events WHERE event_id % 20 = 10 GROUP BY 1),
-        |r AS (SELECT CAST(user_id % 4 AS INT) AS part,
-        |        CAST(ROW_NUMBER() OVER (PARTITION BY user_id % 4
-        |                                ORDER BY event_id) - 1 AS BIGINT) AS log_offset,
-        |        chr(CAST(48 + user_id % 8 AS INT)) AS key,
-        |        event_type,
-        |        CAST(event_id AS VARCHAR) AS payload
-        |      FROM s1)
-        |SELECT r.part AS part, r.log_offset, r.key, r.event_type, r.payload,
-        |  COALESCE(l.lag, 0) AS lag
-        |FROM r LEFT JOIN s2 l ON l.part = r.part
-        |ORDER BY r.part, r.log_offset""".stripMargin,
-    "w8_keyed_state" ->
-      """SELECT user_id, COUNT(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value,
-        |  COUNT(DISTINCT event_type) AS n_types
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "w8_tws_fold" ->
-      """SELECT user_id, COUNT(*) AS n,
-        |  CAST(SUM(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)) AS DOUBLE) / 100 AS sum_value
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "w9_tws_sessions" ->
-      """WITH g AS (
-        |  SELECT user_id, ts,
-        |    CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts) > INTERVAL 6 HOUR
-        |         OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL THEN 1 ELSE 0 END AS new_s
-        |  FROM events),
-        |s AS (SELECT user_id, ts,
-        |    SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM g),
-        |sess AS (SELECT user_id, sid, MIN(ts) AS start_ts, MAX(ts) AS end_ts, COUNT(*) AS n
-        |         FROM s GROUP BY user_id, sid),
-        |sess2 AS (SELECT *, MAX(sid) OVER (PARTITION BY user_id) AS max_sid FROM sess)
-        |SELECT user_id, CAST(floor(epoch(start_ts)) AS BIGINT) AS session_start, n
-        |FROM sess2
-        |-- a NON-trailing session (a later session exists for the key)
-        |-- closes on in-batch evidence and always emits; the trailing
-        |-- session closes via the engine's MILLISECOND timer clock:
-        |-- floor(watermark µs / 1000) >= ceil((end + gap) µs / 1000) —
-        |-- both arms mirrored exactly (timestamps are µs-precision)
-        |WHERE sid < max_sid
-        |   OR epoch_us((SELECT MAX(ts) FROM events)) // 1000
-        |      >= (epoch_us(end_ts) + 21600000000 + 999) // 1000
-        |ORDER BY user_id, session_start""".stripMargin,
-    "w10_tws_topk" ->
-      """SELECT user_id, rk,
-        |  CAST(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS DOUBLE) / 100 AS value,
-        |  event_id
-        |FROM (SELECT user_id, value, event_id,
-        |        ROW_NUMBER() OVER (PARTITION BY user_id
-        |          ORDER BY CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) DESC,
-        |                   event_id) AS rk
-        |      FROM events)
-        |WHERE rk <= 3 ORDER BY user_id, rk""".stripMargin,
-    "w12_dedup_first" ->
-      """SELECT user_id, event_type, MIN(event_id) AS first_event_id, COUNT(*) AS n_dupes
-        |FROM events GROUP BY user_id, event_type ORDER BY user_id, event_type""".stripMargin,
-    // w13: the same seq-ordered upsert replay via one LAG window —
-    // 'new' where no predecessor, 'changed' where the payload flipped,
-    // 'unchanged' otherwise; last payload = arg_max over the sequence.
-    "w13_tws_cdc" ->
-      """WITH o AS (SELECT user_id, event_type,
-        |    LAG(event_type) OVER (PARTITION BY user_id ORDER BY event_id) AS pt
-        |  FROM events)
-        |SELECT user_id, COUNT(*) AS n_upserts,
-        |  CAST(SUM(CASE WHEN pt IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_new,
-        |  CAST(SUM(CASE WHEN pt IS NOT NULL AND event_type <> pt THEN 1 ELSE 0 END) AS BIGINT) AS n_changed,
-        |  CAST(SUM(CASE WHEN event_type = pt THEN 1 ELSE 0 END) AS BIGINT) AS n_unchanged,
-        |  (SELECT arg_max(event_type, event_id) FROM events e2
-        |   WHERE e2.user_id = o.user_id) AS last_type
-        |FROM o GROUP BY user_id ORDER BY user_id""".stripMargin,
-    // w14: a written row exists for (user, drop) iff the user's
-    // last-in-drop payload is their first sighting or differs from
-    // their previous drop's last payload — one LAG over the per-drop
-    // tails replays the suppression decision exactly.
-    "w14_cdc_suppress" ->
-      """WITH mx AS (SELECT MAX(event_id) AS m FROM events),
-        |e AS (SELECT user_id, event_id, event_type,
-        |    CAST(FLOOR(event_id * 4 / (m + 1)) AS BIGINT) AS drp
-        |  FROM events, mx),
-        |last_in AS (SELECT user_id, drp, event_type FROM (
-        |    SELECT user_id, drp, event_type,
-        |      ROW_NUMBER() OVER (PARTITION BY user_id, drp ORDER BY event_id DESC) AS rk
-        |    FROM e) WHERE rk = 1),
-        |seq AS (SELECT user_id, drp, event_type,
-        |    LAG(event_type) OVER (PARTITION BY user_id ORDER BY drp) AS prev
-        |  FROM last_in)
-        |SELECT user_id, drp AS ingest_batch, event_type AS written_type
-        |FROM seq WHERE prev IS NULL OR event_type <> prev
-        |ORDER BY user_id, ingest_batch""".stripMargin,
-    "j2_enrich_join" ->
-      """SELECT COALESCE(c_mktsegment, 'UNKNOWN') AS segment, COUNT(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM events LEFT JOIN customer ON user_id = c_custkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "j3_asof_join" ->
-      """SELECT c.event_id AS click_id,
-        |  CAST(floor(epoch(c.ts)) AS BIGINT) AS click_sec,
-        |  CAST(floor(epoch(p.ts)) AS BIGINT) AS purchase_sec
-        |FROM (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click') c
-        |ASOF LEFT JOIN (SELECT user_id, ts FROM events WHERE event_type = 'purchase') p
-        |  ON c.user_id = p.user_id AND p.ts <= c.ts
-        |ORDER BY click_id""".stripMargin,
-    "j1_interval_join" ->
-      """SELECT c.user_id, COUNT(*) AS n_pairs
-        |FROM events c JOIN events p
-        |  ON c.user_id = p.user_id
-        | AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 4 HOUR
-        |WHERE c.event_type = 'click' AND p.event_type = 'purchase'
-        |GROUP BY c.user_id ORDER BY c.user_id""".stripMargin,
-    "j4_interval_left" ->
+    },
       """SELECT c.user_id, COUNT(*) AS n_rows, COUNT(p.ts) AS n_matched
         |FROM (SELECT user_id, ts FROM events WHERE event_type = 'click') c
         |LEFT JOIN (SELECT user_id, ts FROM events WHERE event_type = 'purchase') p
         |  ON c.user_id = p.user_id
         | AND p.ts >= c.ts - INTERVAL 4 HOUR AND p.ts <= c.ts + INTERVAL 4 HOUR
-        |GROUP BY 1 ORDER BY 1""".stripMargin
+        |GROUP BY 1 ORDER BY 1""".stripMargin)
   )
 }

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.TestSpark
+import graft.{SparkEntry, TestSpark}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,7 +13,7 @@ class PlanShapeSpec extends AnyFunSuite {
   private val sfDir = "/root/testdata/sf0.001"
 
   test("l12: the tokenize→shingle subtree is built once (shared shingle frame + cached filter)") {
-    val df = LlmQueries.queries("l12_data_pipeline")(spark, sfDir)
+    val df = SparkEntry.queries("l12_data_pipeline")(spark, sfDir)
     val plan = df.queryExecution.executedPlan.toString
     // the quality/langid filter stage is persisted: every consumer reads
     // the InMemoryRelation instead of re-running the regex scan

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.TestSpark
+import graft.{SparkEntry, TestSpark}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -23,7 +23,7 @@ class QueryEquivalenceSpec extends AnyFunSuite {
       .union(a.intersectAll(b).groupBy(col("l_orderkey")).agg((count(lit(1)) * -1).as("n")))
       .groupBy(col("l_orderkey")).agg(sum(col("n")).as("net"))
       .as[(Long, Long)].collect().toMap
-    val viaCounts = AnalyticQueries.queries("a10_setops_all")(spark, dir)
+    val viaCounts = SparkEntry.queries("a10_setops_all")(spark, dir)
       .as[(Long, Long)].collect().toMap
     assert(viaCounts.nonEmpty && viaCounts == viaOps)
   }
@@ -48,7 +48,7 @@ class QueryEquivalenceSpec extends AnyFunSuite {
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), if (r.isNullAt(2)) None else Some(r.getLong(2))))
       .toSet
-    val viaWindow = EventQueries.queries("j3_asof_join")(spark, dir)
+    val viaWindow = SparkEntry.queries("j3_asof_join")(spark, dir)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), if (r.isNullAt(2)) None else Some(r.getLong(2))))
       .toSet
