@@ -35,6 +35,18 @@ object GraftSession {
       .config("spark.sql.parquet.filterPushdown", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", settings.broadcastThresholdBytes.toString)
       .config("spark.ui.enabled", "false")
+      // Every streaming checkpoint write (offsets and commits logs,
+      // metadata, HDFS-backed and RocksDB state-store files, checksum
+      // files) goes through FileContextBasedCheckpointFileManager, i.e.
+      // the FileContext filesystem of `file:`. Without libhadoop, the
+      // stock one spawns a process at two sites of RawLocalFileSystem:
+      // `setPermission` runs `chmod` on every create and mkdir, and
+      // `getFileLinkStatus` (each rename) runs `readlink`. NioLocalFs
+      // does both through java.nio and writes the same files, `.crc`
+      // sidecars and modes. The FileSystem-API key `fs.file.impl`
+      // (parquet and other batch writes) is left at Hadoop's default:
+      // no workload here measures that traffic.
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.io.NioLocalFs].getName)
   }
 
   /** Fully settings-driven variant (GRAFT_SHUFFLE_PARTITIONS etc.). */

@@ -255,7 +255,7 @@ object GraftLog {
           var out = -1L
           while (out < 0) {
             val (base, f) = currentLog(dir, part)
-            try out = base + (if (Files.exists(f)) terminatedLines(f) else 0L)
+            try out = base + (if (Files.exists(f)) scanTerminated(f)._1 else 0L)
             catch {
               case e: java.nio.file.NoSuchFileException =>
                 logCache.remove((dir, part))
@@ -268,19 +268,28 @@ object GraftLog {
     }
   }
 
-  /** Number of `'\n'`-terminated lines in `f`, streamed through a
-    * fixed-size buffer (a partition log is never read whole). */
-  private def terminatedLines(f: Path): Long =
+  /** The first `limit` `'\n'`-terminated lines of `f`, scanned as bytes
+    * through a fixed-size buffer (a partition log is never read whole,
+    * and a tombstone torn inside a multi-byte character is never
+    * decoded): how many there are, and the byte position just past the
+    * last of them. */
+  private def scanTerminated(f: Path, limit: Long = Long.MaxValue): (Long, Long) =
     scala.util.Using.resource(Files.newInputStream(f)) { in =>
       val buf = new Array[Byte](64 * 1024)
       var n = 0L
+      var pos = 0L
+      var read = 0L
       var r = in.read(buf)
-      while (r >= 0) {
+      while (r >= 0 && n < limit) {
         var i = 0
-        while (i < r) { if (buf(i) == '\n') n += 1; i += 1 }
+        while (i < r && n < limit) {
+          if (buf(i) == '\n') { n += 1; pos = read + i + 1 }
+          i += 1
+        }
+        read += r
         r = in.read(buf)
       }
-      n
+      (n, pos)
     }
 
   /** Retention trim (reference: LocalLog age-based cleanup,
@@ -304,19 +313,19 @@ object GraftLog {
         logs.maxByOption(_._1).foreach { case (base, f) =>
           logs.filter(_._2 != f).foreach(g => Files.deleteIfExists(g._2))
           Files.deleteIfExists(f.getParent.resolve("log.jsonl.tmp"))
-          val total = scala.util.Using.resource(Files.lines(f))(_.count())
-          val drop = math.min(math.max(0L, target - base), total)
+          val (drop, cut) = scanTerminated(f, math.max(0L, target - base))
           if (drop > 0) {
             val newBase = base + drop
             val tmp = f.getParent.resolve("log.jsonl.tmp")
-            // stream the survivor suffix — never the whole log in heap
+            // copy the survivor bytes unchanged — never the whole log in
+            // heap, and never decoded (a torn tombstone stays as it is)
             scala.util.Using.resources(
-              Files.newBufferedReader(f, StandardCharsets.UTF_8),
-              Files.newBufferedWriter(tmp, StandardCharsets.UTF_8)) { (r, w) =>
-              var skipped = 0L
-              while (skipped < drop && r.readLine() != null) skipped += 1
-              var ln = r.readLine()
-              while (ln != null) { w.write(ln); w.write("\n"); ln = r.readLine() }
+              java.nio.channels.FileChannel.open(f, StandardOpenOption.READ),
+              java.nio.channels.FileChannel.open(tmp, StandardOpenOption.CREATE,
+                StandardOpenOption.TRUNCATE_EXISTING, StandardOpenOption.WRITE)) { (in, out) =>
+              var at = cut
+              val end = in.size()
+              while (at < end) at += in.transferTo(at, end - at, out)
             }
             Files.move(tmp, f.getParent.resolve(s"log-$newBase.jsonl"),
               java.nio.file.StandardCopyOption.REPLACE_EXISTING,

@@ -206,7 +206,12 @@ final class GraftLogPartitionReader(p: GraftLogInputPartition)
     var out: (Long, java.io.BufferedReader) = null
     while (out == null) {
       val (b, f) = GraftLog.currentLog(p.path, p.partition)
-      try out = (b, Files.newBufferedReader(f, StandardCharsets.UTF_8))
+      // a replacing decoder (InputStreamReader's default): a sealed
+      // tombstone torn inside a multi-byte character decodes to garbage
+      // that fails its JSON parse, instead of throwing on every batch
+      // that skips past it
+      try out = (b, new java.io.BufferedReader(
+        new java.io.InputStreamReader(Files.newInputStream(f), StandardCharsets.UTF_8)))
       catch {
         case e: java.nio.file.NoSuchFileException =>
           attempt += 1

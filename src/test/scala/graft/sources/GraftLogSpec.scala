@@ -219,6 +219,49 @@ class GraftLogSpec extends AnyFunSuite {
     assert(GraftLog.latestOffsets(dir) == Map(0 -> 4L))
   }
 
+  test("torn-tail recovery inside a multi-byte character: the tombstone stays row-less, its partition readable and trimmable") {
+    val root = Files.createTempDirectory("graftlog_torn_utf8").toString
+    val dir = s"$root/t"
+    val log = java.nio.file.Paths.get(dir, "p=0", "log.jsonl")
+    val seen = new ConcurrentLinkedQueue[String]()
+    def drain(): Unit =
+      spark.readStream.format("graftlog").load(dir)
+        .writeStream
+        .option("checkpointLocation", s"$root/ckpt")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+          b.select("value").collect().foreach(r => seen.add(r.getString(0)))
+        }
+        .start().awaitTermination()
+    def batchRows(): Seq[(Long, String)] =
+      spark.read.format("graftlog").load(dir).collect().toSeq
+        .map(r => (r.getAs[Long]("offset"), r.getAs[String]("value"))).sortBy(_._1)
+    GraftLog.append(dir, 1, "k1", """{"s":"café"}""")
+    // a producer crash cut the next record between the two bytes of 'é'
+    // (0xC3|0xA9); the following append seals the fragment as offset 1
+    val torn = """{"id":"999-0","key":"k2","value":"{\"s\":\"caf""".getBytes("UTF-8") :+ 0xC3.toByte
+    Files.write(log, torn, java.nio.file.StandardOpenOption.APPEND)
+    GraftLog.append(dir, 1, "k3", """{"s":"naïve"}""")
+    drain()
+    // a later batch still skips through the tombstone from the generation start
+    GraftLog.append(dir, 1, "k4", """{"s":"über"}""")
+    drain()
+    val intact = Seq("""{"s":"café"}""", """{"s":"naïve"}""", """{"s":"über"}""")
+    assert(seen.toArray.toSeq == intact)
+    assert(batchRows() == Seq(0L, 2L, 3L).zip(intact))
+    assert(GraftLog.latestOffsets(dir) == Map(0 -> 4L))
+    // a trim that keeps the tombstone copies its bytes unchanged
+    val bytes = Files.readAllBytes(log)
+    val suffix = bytes.drop(bytes.indexOf('\n'.toByte) + 1)
+    GraftLog.trim(dir, Map(0 -> 1L))
+    assert(Files.readAllBytes(java.nio.file.Paths.get(dir, "p=0", "log-1.jsonl")).sameElements(suffix))
+    assert(batchRows() == Seq(2L, 3L).zip(intact.tail))
+    GraftLog.trim(dir, Map(0 -> 2L))
+    assert(GraftLog.baseOffset(dir, 0) == 2L)
+    assert(batchRows() == Seq(2L, 3L).zip(intact.tail))
+    assert(GraftLog.latestOffsets(dir) == Map(0 -> 4L))
+  }
+
   test("maxRecordsPerTrigger paces consumption in capped batches without loss (reference batch_size)") {
     val root = Files.createTempDirectory("graftlog_adm").toString
     val dir = s"$root/topic"
