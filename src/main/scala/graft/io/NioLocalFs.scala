@@ -1,8 +1,7 @@
 package graft.io
 
 import java.net.URI
-import java.nio.file.{Files, Path => NioPath}
-import java.nio.file.attribute.PosixFilePermissions
+import java.nio.file.Files
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants, FsServerDefaults, Path, RawLocalFileSystem}
@@ -11,22 +10,19 @@ import org.apache.hadoop.fs.permission.FsPermission
 
 /** Hadoop's `RawLocalFileSystem` without its two process spawns. Without
   * libhadoop, `setPermission` runs a `chmod` per create and mkdir, and
-  * `getFileLinkStatus` runs a `readlink` per call (on the `file:/…` URI
-  * string, so it never resolves a link). Both become `java.nio` calls;
-  * the cases nio cannot express (a sticky bit, a real symlink) keep the
-  * stock path. */
+  * `getFileLinkStatus` runs a `readlink` per call. That `readlink` gets
+  * the `file:/…` URI string, so it never resolves a link and stock
+  * answers with `getFileStatus`. `setPermission` becomes a `chmod(2)` of
+  * the same mode: like GNU `chmod` under a 4-digit numeric mode, it
+  * keeps a directory's setuid and setgid bits. */
 class NioRawLocalFileSystem extends RawLocalFileSystem {
-  override def setPermission(p: Path, permission: FsPermission): Unit =
-    if (permission.getStickyBit) super.setPermission(p, permission)
-    else Files.setPosixFilePermissions(nio(p),
-      PosixFilePermissions.fromString(permission.getUserAction.SYMBOL +
-        permission.getGroupAction.SYMBOL + permission.getOtherAction.SYMBOL))
+  override def setPermission(p: Path, permission: FsPermission): Unit = {
+    val f = pathToFile(p).toPath
+    val kept = if (Files.isDirectory(f)) Files.getAttribute(f, "unix:mode").asInstanceOf[Int] & 0x0c00 else 0 // S_ISUID | S_ISGID
+    Files.setAttribute(f, "unix:mode", kept | permission.toShort)
+  }
 
-  override def getFileLinkStatus(f: Path): FileStatus =
-    if (Files.isSymbolicLink(nio(f))) super.getFileLinkStatus(f)
-    else getFileStatus(f)
-
-  private def nio(p: Path): NioPath = pathToFile(p).toPath
+  override def getFileLinkStatus(f: Path): FileStatus = getFileStatus(f)
 }
 
 /** `NioRawLocalFileSystem` as a FileContext filesystem, as Hadoop's

@@ -1,7 +1,6 @@
 package graft.io
 
 import java.nio.file.{Files, LinkOption, Path => NioPath}
-import java.nio.file.attribute.PosixFilePermissions
 
 import scala.jdk.CollectionConverters._
 
@@ -22,24 +21,30 @@ class NioLocalFsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val key = "fs.AbstractFileSystem.file.impl"
 
-  /** Every path under `root` (relative, a temp file's random UUID
-    * masked) with its POSIX mode and, for a file, its bytes. */
-  private def listing(root: NioPath): Seq[(String, String, Seq[Byte])] =
+  /** A listing row: a path under the root (relative, a temp file's
+    * random UUID masked), its full mode in octal (setuid, setgid and
+    * sticky bits too), its group and, for a file, its bytes. */
+  private type Entry = (String, String, Int, Seq[Byte])
+
+  private def listing(root: NioPath): Seq[Entry] =
     scala.util.Using.resource(Files.walk(root)) { w =>
       w.iterator().asScala.filter(_ != root).map { p =>
+        def attr(name: String) = Files.getAttribute(p, s"unix:$name", LinkOption.NOFOLLOW_LINKS).asInstanceOf[Int]
         (root.relativize(p).toString.replaceAll("[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}", "<uuid>"),
-          PosixFilePermissions.toString(Files.getPosixFilePermissions(p, LinkOption.NOFOLLOW_LINKS)),
+          Integer.toOctalString(attr("mode") & 0xfff), attr("gid"),
           if (Files.isRegularFile(p)) Files.readAllBytes(p).toSeq else Seq.empty[Byte])
       }.toSeq.sortBy(_._1)
     }
 
-  test("checkpoint writes match stock LocalFs: file names and bytes, .crc sidecars, file and directory modes") {
+  /** Writes the same checkpoint files through stock `LocalFs` under
+    * `root/stock` and through the session's filesystem under `root/nio`;
+    * returns both listings. */
+  private def stockAndNio(root: NioPath): (Seq[Entry], Seq[Entry]) = {
     val conf = spark.sessionState.newHadoopConf()
     assert(conf.get(key) == classOf[NioLocalFs].getName)
     val stock = new Configuration(conf)
     stock.set(key, new Configuration().get(key))
     assert(stock.get(key) == "org.apache.hadoop.fs.local.LocalFs")
-    val root = Files.createTempDirectory("niofs")
     def writeAll(c: Configuration, side: String): Unit = {
       val dir = new Path(root.resolve(side).toUri)
       val fm = CheckpointFileManager.create(dir, c)
@@ -58,10 +63,22 @@ class NioLocalFsSpec extends AnyFunSuite {
     }
     writeAll(stock, "stock")
     writeAll(conf, "nio")
-    val want = listing(root.resolve("stock"))
-    assert(want.map(_._1).contains("offsets/.0.crc"))
-    assert(listing(root.resolve("nio")) == want)
     assert(Files.readString(root.resolve("nio/offsets/0")) == "v1\n{\"a\":2}\n")
+    (listing(root.resolve("stock")), listing(root.resolve("nio")))
+  }
+
+  test("checkpoint writes match stock LocalFs: file names and bytes, .crc sidecars, file and directory modes") {
+    val (want, got) = stockAndNio(Files.createTempDirectory("niofs"))
+    assert(want.map(_._1).contains("offsets/.0.crc"))
+    assert(got == want)
+  }
+
+  test("under a setgid directory, checkpoint directories keep the inherited setgid bit, as with stock LocalFs") {
+    val root = Files.createTempDirectory("niofs_setgid")
+    Files.setAttribute(root, "unix:mode", 0x1ed | 0x400) // 0755 | S_ISGID
+    val (want, got) = stockAndNio(root)
+    assert(want.collect { case ("offsets/nested", mode, _, _) => mode } == Seq("2755"))
+    assert(got == want)
   }
 
   /** Commands of the processes this JVM started while `body` ran. */
@@ -127,9 +144,8 @@ class NioLocalFsSpec extends AnyFunSuite {
     // default), and Spark deletes its local working copies with `rm -rf`;
     // the offsets and commits logs, metadata, changelog and zip files
     // all go through the checkpoint file manager and spawn nothing
-    val (sstUploads, rest) = spawned.partition(c => c.startsWith("chmod ") &&
+    val rest = spawned.filterNot(c => c.startsWith("chmod ") &&
       "/ckpt/state/0/[0-9]+(/SSTs(/\\.?[0-9]+-[0-9a-f-]+\\.sst(\\.crc)?)?)?$".r.findFirstIn(c).isDefined)
-    assert(sstUploads.nonEmpty)
     assert(rest.forall(c => c.startsWith("rm -rf ") && !c.contains("/ckpt/")), rest)
   }
 }

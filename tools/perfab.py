@@ -14,6 +14,10 @@ compile. Then --pairs pairs of `perfbench/run.py` runs with the same
 seed on both sides; which side runs first alternates from pair to pair,
 so a drift of the host over the session does not favour one side.
 
+A run that exits non-zero, is not correct or has failed operations
+counts as failed: it enters no pair, and any failed run makes the exit
+code 1.
+
 Prints, per metric: the median of each side, the change/base ratio of
 the medians, each pair's change/base ratio, how many pairs the change
 won (direction from BENCHMARK.json), and each side's spread as
@@ -55,7 +59,8 @@ def build(side_dir):
 
 def run_once(side_dir, a):
     """One perfbench run: its metrics as {name: value} plus the host's
-    steal share during the run (`host_steal_share`), or None on failure."""
+    steal share during the run (`host_steal_share`), or None when the run
+    failed, was incorrect or had failed operations."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", a.workload, "--seed", str(a.seed),
            "--seconds", str(a.seconds), "--trace", str(a.trace)]
     p = subprocess.run(cmd, cwd=side_dir, capture_output=True, text=True)
@@ -65,7 +70,10 @@ def run_once(side_dir, a):
         return None
     res = json.loads(lines[-1])
     if not res["correct"] or res["failed"]:
-        print(f"  incorrect run in {side_dir}: {lines[-2] if len(lines) > 1 else ''}", flush=True)
+        checks = "; ".join(l for l in lines if l.startswith("FAILED "))
+        print(f"  incorrect run in {side_dir}: correct={res['correct']} "
+              f"failed={res['failed']} {checks}", flush=True)
+        return None
     out = {k: m["value"] for k, m in res["metrics"].items()}
     result_file = os.path.join(side_dir, "perfbench", "results",
                                f"{a.workload}-seed{a.seed}-trace{a.trace}.json")
