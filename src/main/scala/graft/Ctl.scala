@@ -143,17 +143,8 @@ object Ctl {
     // the closed-loop form: measure standing fold-eligible ingests and
     // fold only past the ceiling (cron-safe — a no-op below it)
     case ("index-autocompact", dir :: maxIng :: upTo :: Nil) =>
-      (parseBatch(maxIng), parseBatch(upTo)) match {
-        case (Right(m), Right(b)) if m >= 1 => attempt {
-          val d = graft.operators.AnnIndex
-            .compactIfFragmented(spark, s"$root/$dir", m.toInt, b)
-          s"standing=${d.standingBatches} ceiling=${d.maxIngests} " +
-            s"compacted=${d.compacted} folded=${d.folded}"
-        }
-        case (Right(m), Right(_)) => Left(s"maxIngests must be >= 1, got $m")
-        case (Left(e), _) => Left(e)
-        case (_, Left(e)) => Left(e)
-      }
+      autocompact(maxIng, upTo)(
+        graft.operators.AnnIndex.compactIfFragmented(spark, s"$root/$dir", _, _))
     // right-to-erasure verbs: tombstone ids out of a persisted index
     // (no rebuild — load masks them; the next rebuild purges), and
     // inspect the standing deletion state
@@ -185,17 +176,8 @@ object Ctl {
         s"folded=${graft.streaming.IncrementalDedup.compactBandStore(spark, s"$root/$dir", b)}"))
     // the closed-loop form, symmetric with index-autocompact
     case ("bands-autocompact", dir :: maxParts :: upTo :: Nil) =>
-      (parseBatch(maxParts), parseBatch(upTo)) match {
-        case (Right(m), Right(b)) if m >= 1 => attempt {
-          val d = graft.streaming.IncrementalDedup
-            .compactBandStoreIfFragmented(spark, s"$root/$dir", m.toInt, b)
-          s"standing=${d.standingPartitions} ceiling=${d.maxPartitions} " +
-            s"compacted=${d.compacted} folded=${d.folded}"
-        }
-        case (Right(m), Right(_)) => Left(s"maxPartitions must be >= 1, got $m")
-        case (Left(e), _) => Left(e)
-        case (_, Left(e)) => Left(e)
-      }
+      autocompact(maxParts, upTo)(
+        graft.streaming.IncrementalDedup.compactBandStoreIfFragmented(spark, s"$root/$dir", _, _))
     // the manual-resolution verb the ambiguous-stage fail-fast points
     // at: executes the operator's discard/complete decision with
     // content-verified safety checks (stop the ingest loop first)
@@ -317,6 +299,21 @@ object Ctl {
   private def parseBatch(s: String): Either[String, Long] =
     s.toLongOption.filter(_ >= 0)
       .toRight(s"upToBatch must be a non-negative integer, got '$s'")
+
+  /** The two autocompact verbs: parse the ceiling and `upToBatch`, run
+    * the store's fragmentation probe, print its decision. */
+  private def autocompact(ceiling: String, upTo: String)(
+      probe: (Int, Long) => graft.operators.FoldStore.CompactionDecision)
+      : Either[String, String] =
+    (parseBatch(ceiling), parseBatch(upTo)) match {
+      case (Right(c), Right(b)) if c >= 1 => attempt {
+        val d = probe(c.toInt, b)
+        s"standing=${d.standing} ceiling=${d.ceiling} compacted=${d.compacted} folded=${d.folded}"
+      }
+      case (Right(c), Right(_)) => Left(s"the ceiling must be >= 1, got $c")
+      case (Left(e), _) => Left(e)
+      case (_, Left(e)) => Left(e)
+    }
 
   private def showRows(df: org.apache.spark.sql.DataFrame): String = {
     val rows = df.collect()

@@ -73,45 +73,56 @@ object AnnIndex {
   }
 
   private val Artifacts = Seq("codes", "lists")
-  private val TmpPrefix = ".compact_tmp_"
   private val BatchTagRe = "batch_(\\d+)".r
 
-  private def fsOf(spark: SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+  /** Codes and lists on the fold-store core: `ingest=batch_<id>`
+    * partitions are foldable; `base` and manual tags never are. */
+  private val IndexStore =
+    new FoldStore(Artifacts, "ingest=batch_", Seq(".compact_tmp_"), "compactIngests")(discardUnarmed)
+
+  /** The ANN index's unarmed-stage rule: discard every stage of the
+    * fold — it arms only after both artifacts are staged, and deletes
+    * only after arming, so an unarmed fold touched no original — unless
+    * the layout says otherwise. A swap's deletes remove partition
+    * DIRECTORIES outright, so a batch whose directory is ABSENT from one
+    * artifact while the other has it committed is evidence that history
+    * may live only in a stage (a stage written by a pre-manifest version
+    * of the protocol, or an append whose second artifact write never
+    * started): fail fast for a human rather than destroy what may be the
+    * only copy. A batch PRESENT but uncommitted in one artifact is a torn
+    * append awaiting its same-tag retry and does not block the discard. */
+  private def discardUnarmed(fs: org.apache.hadoop.fs.FileSystem, dir: String,
+                             stages: Seq[FoldStore.Stage]): Unit = {
+    val target = stages.head.target
+    val layout = Artifacts.map { artifact =>
+      val ls = IndexStore.listing(fs, dir, artifact, guarded = false)
+      def upToTarget(ps: Seq[org.apache.hadoop.fs.Path]) =
+        ps.flatMap(p => IndexStore.batchId(p.getName)).filter(_ <= target).toSet
+      (artifact, upToTarget(ls.partitions), upToTarget(ls.committed))
+    }
+    val missing = for {
+      (a, present, _) <- layout
+      (b, _, committedB) <- layout if b != a
+      k <- committedB -- present
+    } yield s"$a lacks batch_$k that $b has committed"
+    require(missing.isEmpty,
+      s"cannot discard manifest-less compaction stages under $dir: " +
+        s"${missing.mkString("; ")} — a swap without a manifest may have " +
+        "deleted originals whose only copy is a stage; resolve manually " +
+        "(complete the old swap or restore the missing partitions) before retrying")
+    stages.foreach(s =>
+      require(fs.delete(s.path, true), s"failed to discard torn compaction stage ${s.path}"))
+  }
 
   /** Ingest tags whose partition carries a parquet _SUCCESS marker for
     * the given artifact — a crashed append's torn partition is
     * invisible until its replay commits it. Fails fast while a staged
-    * compaction dot-dir exists: between a compaction's deletes and its
-    * rename, part of the history lives ONLY in the stage, and serving
-    * past it would silently drop those ingests (same single-writer
-    * discipline as the dedup band store's `seenBands`) — run
-    * `compactIngests` to complete the swap, then retry. */
+    * compaction dot-dir exists (the fold-store reader guard). */
   private def committedTags(spark: SparkSession, dir: String,
-                            artifact: String): Set[String] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$artifact")
-    val fs = fsOf(spark, dir)
-    if (!fs.exists(p)) Set.empty
-    else {
-      // ONE listing serves the fail-fast and the tag filter
-      val ls = fs.listStatus(p).toSeq.filter(_.isDirectory)
-      val pending = ls.filter(_.getPath.getName.startsWith(TmpPrefix))
-      require(pending.isEmpty,
-        s"$dir/$artifact has an unfinished compaction " +
-          s"(${pending.map(_.getPath.getName).mkString(", ")}) — " +
-          "run AnnIndex.compactIngests to complete the swap before serving")
-      committedFrom(fs, ls)
-    }
-  }
-
-  /** THE "committed ingest partition" definition — the one copy both
-    * the serving reads and recovery share. */
-  private def committedFrom(fs: org.apache.hadoop.fs.FileSystem,
-                            ls: Seq[org.apache.hadoop.fs.FileStatus]): Set[String] =
-    ls.filter(s => s.getPath.getName.startsWith("ingest=") &&
-        fs.exists(new org.apache.hadoop.fs.Path(s"${s.getPath}/_SUCCESS")))
-      .map(_.getPath.getName.stripPrefix("ingest=")).toSet
+                            artifact: String): Set[String] =
+    IndexStore.listing(IndexStore.fsOf(spark, dir), dir, artifact, guarded = true)
+      .committed.map(_.getName).filter(_.startsWith("ingest="))
+      .map(_.stripPrefix("ingest=")).toSet
 
   /** Ingests committed in BOTH artifacts: a crash between the codes
     * and lists writes must not surface half an ingest anywhere. */
@@ -133,7 +144,7 @@ object AnnIndex {
     * tags sort by their numeric id (batch_2 before batch_10), manual
     * tags lexicographically before them. */
   def servableIngests(spark: SparkSession, dir: String): Seq[String] = {
-    val fs = fsOf(spark, dir)
+    val fs = IndexStore.fsOf(spark, dir)
     require(Artifacts.exists(a =>
         fs.exists(new org.apache.hadoop.fs.Path(s"$dir/$a"))),
       s"no index artifacts under $dir")
@@ -287,202 +298,18 @@ object AnnIndex {
       .write.mode("overwrite").parquet(ingestDir(dir, "lists", ingestTag))
     }
 
-  /** Compact the per-ingest partitions: fold every COMMITTED
-    * `ingest=batch_<k>` partition of codes and lists with k <
-    * `upToBatch` into one partition named for the highest folded id.
-    * Thousands of crawl drops otherwise accumulate small files; serve
-    * semantics don't depend on which ingest a code row came from, so
-    * the fold is loss-free — `load` reads the compacted partition
-    * exactly as it read the originals (the spec pins hash-identical
-    * serving). The `base` build partition and non-`batch_*` manual
-    * tags are never folded.
-    *
-    * Call only with `upToBatch` <= the last COMMITTED streaming batch
-    * id, so the one batch a checkpoint can replay stays out of the
-    * fold (its replay overwrites its own partition by tag) — the same
-    * contract as `IncrementalDedup.compactBandStore`.
-    *
-    * Crash discipline (single writer): BOTH artifacts' folds are fully
-    * staged in dot-dirs (invisible to partition discovery and readers
-    * fail fast on them) before any original partition is touched, and
-    * swaps only begin once every stage carries its parquet _SUCCESS
-    * AND its `_FOLDED` manifest — the exact tag list the stage covers.
-    * So a torn stage (either marker missing) proves no swap started
-    * (recovery discards all stages), while a committed stage is always
-    * safe to complete: recovery deletes EXACTLY the manifest's
-    * partitions and renames the stage in, so a tag that was
-    * half-committed at stage time (excluded from the fold) keeps its
-    * committed artifact intact through a crashed swap, awaiting its
-    * same-tag retry. Every interleaving recovers to either the old or
-    * the new layout, never to codes and lists folded inconsistently.
-    * Returns the number of partitions folded per artifact (0 = nothing
-    * to do). */
-  /** Fold-eligible `batch_<k>` ingests: k < `upToBatch`, committed in
-    * BOTH artifacts — the one definition shared by the compaction
-    * itself and the fragmentation probe, so the probe can never
-    * disagree with what a fold would actually touch. Fails fast on a
-    * torn compaction (via `committedTags`), same as serving. */
-  private def foldableBatches(spark: SparkSession, dir: String,
-                              upToBatch: Long): Seq[Long] =
-    Artifacts.map { artifact =>
-      committedTags(spark, dir, artifact).flatMap { t =>
-        t match {
-          case BatchTagRe(k) if k.toLong < upToBatch => Some(k.toLong)
-          case _ => None
-        }
-      }
-    }.reduce(_ intersect _).toSeq.sorted
-
+  /** Fold every COMMITTED `ingest=batch_<k>` partition of codes and
+    * lists with k < `upToBatch` into one partition named for the highest
+    * folded id — the fold-store fold (`FoldStore`), staged in both
+    * artifacts before any original is touched, so codes and lists never
+    * serve folded inconsistently. Serving does not depend on which ingest
+    * a code row came from, so the fold is loss-free. The `base` build
+    * partition and non-`batch_*` manual tags are never folded. Call with
+    * `upToBatch` <= the last COMMITTED streaming batch id, so the one
+    * batch a checkpoint can replay stays out. Returns the number of
+    * partitions folded per artifact (0 = nothing to do). */
   def compactIngests(spark: SparkSession, dir: String, upToBatch: Long): Int =
-    StoreLease.withLease(spark, dir, "compactIngests") { lease =>
-    val fs = fsOf(spark, dir)
-    recoverPendingCompaction(fs, dir)
-    val foldable = foldableBatches(spark, dir, upToBatch)
-    if (foldable.size < 2) 0 else {
-    val target = foldable.max
-    // stage EVERYTHING first: no original is touched until both
-    // artifacts' folds are durably complete
-    Artifacts.foreach { artifact =>
-      spark.read
-        .option("basePath", s"$dir/$artifact")
-        .parquet(foldable.map(k => ingestDir(dir, artifact, s"batch_$k")): _*)
-        .drop("ingest")
-        .write.mode("overwrite").parquet(s"$dir/$artifact/$TmpPrefix$target")
-    }
-    // manifests LAST: their presence is what marks the stages complete
-    // and arms the swap, and their content is what recovery deletes
-    Artifacts.foreach { artifact =>
-      writeManifest(fs,
-        new org.apache.hadoop.fs.Path(s"$dir/$artifact/$TmpPrefix$target"),
-        foldable)
-    }
-    // the deletes below are the destructive phase: the lease must still
-    // be ours (verify-on-commit) before any original partition goes
-    StoreLease.verify(spark, lease)
-    Artifacts.foreach { artifact =>
-      foldable.foreach { k =>
-        val d = new org.apache.hadoop.fs.Path(ingestDir(dir, artifact, s"batch_$k"))
-        require(fs.delete(d, true), s"compaction failed to delete $d")
-      }
-      val tmp = new org.apache.hadoop.fs.Path(s"$dir/$artifact/$TmpPrefix$target")
-      require(fs.rename(tmp, new org.apache.hadoop.fs.Path(
-        ingestDir(dir, artifact, s"batch_$target"))),
-        s"compaction failed to swap $tmp into place — history is staged " +
-          "there; re-run compactIngests to complete the swap")
-    }
-    foldable.size
-    }
-    }
-
-  // Coverage-manifest protocol shared with the incremental-dedup band
-  // store — format, atomicity, and truncation discipline documented on
-  // graft.operators.FoldManifest.
-  private def manifestPath(sp: org.apache.hadoop.fs.Path) = FoldManifest.path(sp)
-
-  private def writeManifest(fs: org.apache.hadoop.fs.FileSystem,
-                            sp: org.apache.hadoop.fs.Path,
-                            tags: Seq[Long]): Unit = FoldManifest.write(fs, sp, tags)
-
-  private def readManifest(fs: org.apache.hadoop.fs.FileSystem,
-                           sp: org.apache.hadoop.fs.Path): Option[Set[Long]] =
-    FoldManifest.read(fs, sp)
-
-  /** Finish or discard an interrupted compaction. Swaps begin only
-    * after every artifact's stage carries both _SUCCESS and its
-    * `_FOLDED` manifest, so: any stage missing either → the crash
-    * happened while staging and no original was touched — discard ALL
-    * stages; all stages committed → complete each artifact's swap
-    * (delete exactly the manifest's partitions, rename the stage in;
-    * an artifact already swapped simply has no stage left). Deleting
-    * by manifest rather than by `k <= target` keeps a tag that was
-    * half-committed at stage time — and therefore excluded from the
-    * fold — intact in its committed artifact. */
-  private def recoverPendingCompaction(fs: org.apache.hadoop.fs.FileSystem,
-                                       dir: String): Unit = {
-    val stages = Artifacts.flatMap { artifact =>
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$artifact")
-      if (!fs.exists(p)) Nil
-      else fs.listStatus(p).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith(TmpPrefix))
-        .map(s => (artifact, s.getPath))
-    }
-    if (stages.isEmpty) return
-    // one manifest read per stage, shared by the torn filter and the
-    // committed branch (object-store opens are not free, and the two
-    // decisions must see the same bytes)
-    val manifests: Map[org.apache.hadoop.fs.Path, Option[Set[Long]]] =
-      stages.map { case (_, sp) =>
-        sp -> (if (fs.exists(new org.apache.hadoop.fs.Path(s"$sp/_SUCCESS")) &&
-            fs.exists(manifestPath(sp))) readManifest(fs, sp)
-          else None)
-      }.toMap
-    val torn = stages.filterNot { case (_, sp) => manifests(sp).nonEmpty }
-    if (torn.nonEmpty) {
-      // discard is only provably safe if no original was deleted, and
-      // a manifest-less stage can't say what it covers. A swap's
-      // deletes remove partition DIRECTORIES outright, so a tag whose
-      // directory is entirely ABSENT from one artifact while another
-      // artifact has it committed is evidence history may live only in
-      // a stage — fail fast for a human rather than destroy what may
-      // be the only copy (reachable via stage dirs written by a
-      // pre-manifest version of this protocol, or an append whose
-      // second artifact write never started). A tag PRESENT but
-      // uncommitted in one artifact is just a torn append awaiting its
-      // same-tag retry — that must not block the discard.
-      val target = stages.map(_._2.getName.stripPrefix(TmpPrefix).toLong).max
-      val layout = Artifacts.map { artifact =>
-        val p = new org.apache.hadoop.fs.Path(s"$dir/$artifact")
-        val dirs =
-          if (!fs.exists(p)) Seq.empty
-          else fs.listStatus(p).toSeq.filter(_.isDirectory)
-            .map(_.getPath.getName.stripPrefix("ingest="))
-            .flatMap { case BatchTagRe(k) if k.toLong <= target => Some(k.toLong)
-                       case _ => None }
-        val committed = committedTagsNoGuard(fs, dir, artifact)
-          .flatMap { case BatchTagRe(k) if k.toLong <= target => Some(k.toLong)
-                     case _ => None }
-        (artifact, dirs.toSet, committed)
-      }
-      val missing = for {
-        (a, present, _) <- layout
-        (b, _, committedB) <- layout if b != a
-        k <- committedB -- present
-      } yield s"$a lacks batch_$k that $b has committed"
-      require(missing.isEmpty,
-        s"cannot discard manifest-less compaction stages under $dir: " +
-          s"${missing.mkString("; ")} — a swap without a manifest may have " +
-          "deleted originals whose only copy is a stage; resolve manually " +
-          "(complete the old swap or restore the missing partitions) before retrying")
-      stages.foreach { case (_, sp) =>
-        require(fs.delete(sp, true), s"failed to discard torn compaction stage $sp")
-      }
-    } else stages.foreach { case (artifact, sp) =>
-      val target = sp.getName.stripPrefix(TmpPrefix).toLong
-      val covered = manifests(sp).get
-      fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/$artifact")).toSeq
-        .filter(_.isDirectory)
-        .foreach(d => d.getPath.getName.stripPrefix("ingest=") match {
-          case BatchTagRe(k) if covered(k.toLong) =>
-            require(fs.delete(d.getPath, true),
-              s"compaction recovery failed to delete ${d.getPath}")
-          case _ => ()
-        })
-      require(fs.rename(sp, new org.apache.hadoop.fs.Path(
-        ingestDir(dir, artifact, s"batch_$target"))),
-        s"compaction recovery failed to swap $sp into place")
-    }
-  }
-
-  /** `committedTags` minus the pending-stage fail-fast — for use INSIDE
-    * recovery, which is the one reader allowed to look at the layout
-    * while stages exist. `committedTags` delegates here so the
-    * "committed ingest partition" definition has exactly one copy. */
-  private def committedTagsNoGuard(fs: org.apache.hadoop.fs.FileSystem,
-                                   dir: String, artifact: String): Set[String] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$artifact")
-    if (!fs.exists(p)) Set.empty
-    else committedFrom(fs, fs.listStatus(p).toSeq.filter(_.isDirectory))
-  }
+    IndexStore.fold(spark, dir, upToBatch)
 
   /** Whole-corpus ADC top-k from the loaded index (l54's shape, no
     * IVF routing — every coded vector scored). */
@@ -508,35 +335,18 @@ object AnnIndex {
     * `batch_<batchId>` ingest tag, so the checkpoint's replay of a
     * crashed batch overwrites exactly its own partitions (idempotent
     * end to end; the quantizers stay the base build's — retrain per
-    * cycle, not per drop). Serve any time from `load(dir)`. */
+    * cycle, not per drop). `compactEvery` > 0 folds in-loop through the
+    * fold-store in-loop hook. Serve any time from `load(dir)`. */
   def runIngest(source: DataFrame, dir: String, id: String, vec: String,
                 dim: Int, m: Int, checkpointDir: String,
                 trigger: org.apache.spark.sql.streaming.Trigger =
                   org.apache.spark.sql.streaming.Trigger.AvailableNow(),
                 compactEvery: Int = 0): org.apache.spark.sql.streaming.StreamingQuery =
-    source.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // self-heal FIRST: a crash inside a previous turn's fold leaves
-        // a stage every index read fails fast on — including this
-        // replayed batch's own appendVectors→load. The loop is the
-        // single writer, so completing/discarding it here is safe;
-        // without it a mid-compaction crash would wedge the stream
-        // behind exactly the out-of-band intervention in-loop
-        // compaction exists to remove.
-        if (compactEvery > 0)
-          recoverPendingCompaction(fsOf(batch.sparkSession, dir), dir)
-        appendVectors(batch.sparkSession, dir, batch, id, vec, dim, m,
-          ingestTag = s"batch_$batchId")
-        // in-loop small-file control, mirroring IncrementalDedup.run:
-        // fold strictly-below-this-batch partitions (the replayable
-        // batch stays out), no-op on replay, sequential with the
-        // appender by foreachBatch's contract
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          compactIngests(batch.sparkSession, dir, upToBatch = batchId): Unit
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
+    IndexStore.startLoop(source, checkpointDir, trigger, compactEvery, dir,
+        "ann-ingest-loop.recover") { (batch, batchId) =>
+      appendVectors(batch.sparkSession, dir, batch, id, vec, dim, m,
+        ingestTag = s"batch_$batchId")
+    }
 
   /** The RETRAIN TRIGGER for the fixed-quantizer append cycle: per
     * ingest, how well do the index's PERSISTED quantizers still fit
@@ -658,59 +468,17 @@ object AnnIndex {
     TombstoneDecision(dead, total, share, fire)
   }
 
-  /** The probe half of the small-files closed loop: how many
-    * fold-eligible `batch_*` ingest partitions are standing vs the
-    * caller's ceiling. Fragmentation is the third thing (after drift
-    * and tombstones) that silently degrades a long-lived index — every
-    * standing partition is an extra directory listing, parquet footer
-    * and task per serve, so a crawl appending thousands of drops pays
-    * O(drops) fixed cost per query until someone folds. */
-  final case class CompactionDecision(standingBatches: Long, maxIngests: Long,
-                                      compacted: Boolean, folded: Int)
-
   /** Close the fragmentation loop the way `rebuildIfTombstoned` closes
-    * the deletion loop and `retrainIfDrifted` closes the drift loop:
-    * MEASURE the standing fold-eligible ingest count (committed
-    * `batch_<k>` with k < `upToBatch`, in both artifacts — exactly the
-    * set `compactIngests` would fold, computed by the same code) and
-    * fold only when it exceeds `maxIngests` — below it, the fold's
-    * full rewrite of the appended history isn't worth the read-side
-    * savings yet, and the index artifacts stay untouched. The
-    * `upToBatch` replay-safety contract is `compactIngests`'s: pass
-    * the last COMMITTED streaming batch id so the one batch a
-    * checkpoint can replay keeps its own partition. Both decision
-    * directions are oracle-graded (the auto-compact and compact-hold
-    * queries), mirroring the deletion loop's grades. The probe is
-    * file-listing only (no data read); the fold itself takes the
-    * store lease and carries its own crash discipline. */
+    * the deletion loop: the fold-store fragmentation probe measures the
+    * standing foldable ingest count (exactly the set `compactIngests`
+    * would fold) and folds only when it exceeds `maxIngests`. Every
+    * standing partition is an extra directory listing, parquet footer
+    * and task per serve. Pass the last COMMITTED streaming batch id as
+    * `upToBatch`, as for `compactIngests`. Both decision directions are
+    * oracle-graded (the auto-compact and compact-hold queries). */
   def compactIfFragmented(spark: SparkSession, dir: String, maxIngests: Int,
-                          upToBatch: Long): CompactionDecision = {
-    require(maxIngests >= 1,
-      s"maxIngests must be at least 1, got $maxIngests")
-    // Cron-safety vs our own prior crash: a fold that died mid-stage
-    // leaves a pending stage that trips the probe's committedTags
-    // fail-fast — and the fold's own recovery never runs because the
-    // probe fails BEFORE deciding to fold. Heal first, so the verb
-    // survives its own crashes. Recovery is destructive (discard or
-    // complete a staged swap), so it runs under the store lease; the
-    // common clean-store case stays listing-only and lease-free. The
-    // lease is released before compactIngests re-acquires it (the
-    // lease is not reentrant) — both windows are independently guarded.
-    val fs = fsOf(spark, dir)
-    val hasStage = Artifacts.exists { artifact =>
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$artifact")
-      fs.exists(p) && fs.listStatus(p).exists(s =>
-        s.isDirectory && s.getPath.getName.startsWith(TmpPrefix))
-    }
-    if (hasStage)
-      StoreLease.withLease(spark, dir, "compactIfFragmented.recover") { _ =>
-        recoverPendingCompaction(fs, dir)
-      }
-    val standing = foldableBatches(spark, dir, upToBatch).size
-    val fire = standing > maxIngests
-    val folded = if (fire) compactIngests(spark, dir, upToBatch) else 0
-    CompactionDecision(standing, maxIngests, fire, folded)
-  }
+                          upToBatch: Long): FoldStore.CompactionDecision =
+    IndexStore.foldIfFragmented(spark, dir, maxIngests, upToBatch)
 
   /** Batch IVF-PQ serve — the production request shape: a FRAME of
     * probes, each routed to its own `nProbe` lists, ADC restricted to

@@ -19,8 +19,25 @@ trait Connector {
   def readStream(spark: SparkSession, topic: String): DataFrame
   def readBatch(spark: SparkSession, topic: String): DataFrame
   def writeBatch(df: DataFrame, topic: String): Unit
+
+  /** Streaming write, replay-safe by default: foreachBatch +
+    * `writeBatchIdempotent`, so a micro-batch replayed after a crash
+    * (side write done, commit not) leaves one copy. The writerId derives
+    * from the checkpoint path — stable across restarts of the same
+    * query, distinct across queries. For FileConnector this also avoids
+    * the json file sink, whose _spark_metadata log at the topic root
+    * would hide every later writeBatch append from batch reads. */
   def writeStream(df: DataFrame, topic: String, checkpoint: String,
-                  outputMode: String = "append"): StreamingQuery
+                  outputMode: String = "append"): StreamingQuery = {
+    val writerId = s"q${checkpoint.hashCode.toHexString}"
+    df.writeStream.outputMode(outputMode)
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        writeBatchIdempotent(batch, topic, batchId, writerId)
+      }
+      .start()
+  }
 
   /** Batch-replay-safe write for foreachBatch side outputs: writing the
     * SAME (writerId, topic, batchId) twice must leave one copy (crash
@@ -106,25 +123,6 @@ final class FileConnector(root: String, schema: StructType,
   override def purgeTopic(spark: SparkSession, topic: String): Boolean =
     Connector.deletePath(spark, path(topic))
 
-  /** Streaming writes go through foreachBatch + writeBatchIdempotent
-    * rather than the json file sink: the file sink plants a
-    * _spark_metadata log at the topic root, after which batch reads see
-    * ONLY sink-committed files and every writeBatch append becomes
-    * silently invisible. One layout (batch subdirs + recursive reads)
-    * keeps streaming and batch writers interoperable, with the same
-    * replay idempotence. The writerId derives from the checkpoint path —
-    * stable across restarts of the same query, distinct across queries. */
-  override def writeStream(df: DataFrame, topic: String, checkpoint: String,
-                           outputMode: String): StreamingQuery = {
-    val writerId = s"q${checkpoint.hashCode.toHexString}"
-    df.writeStream.outputMode(outputMode)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeBatchIdempotent(batch, topic, batchId, writerId)
-      }
-      .start()
-  }
 }
 
 /** Kafka wiring (reference: KafkaStreamBackend,

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.sources.GraftLog
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, struct, to_json}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Connector over graftlog topics — the live "real broker" leg of the
   * S1 contract (reference: ValkeyStreamBackend default backend,
@@ -188,14 +187,6 @@ final class GraftLogConnector(root: String, numPartitions: Int = 4,
       java.nio.file.Files.write(marker, Array.emptyByteArray)
     }
   }
-
-  override def writeStream(df: DataFrame, topic: String, checkpoint: String,
-                           outputMode: String): StreamingQuery =
-    df.writeStream.outputMode(outputMode)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) => writeBatch(batch, topic) }
-      .start()
 
   override def purgeTopic(spark: SparkSession, topic: String): Boolean =
     Connector.deletePath(spark, path(topic))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.storage.StorageLevel
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, FoldManifest, FoldStore, StoreLease}
 
 /** Rolling-crawl incremental dedup: a streaming ingest loop in which
   * every micro-batch of new documents is MinHash-LSH-checked against
@@ -56,43 +56,86 @@ object IncrementalDedup {
                     exactCounts: Boolean = true,
                     shingler: Option[DataFrame => DataFrame] = None)
 
-  private val BatchDirRe = "ingest_batch=(\\d+)".r
-
   private def batchDir(root: String, batchId: Long) = s"$root/ingest_batch=$batchId"
+
+  /** Stage-dir name prefixes. The `2` is a PROTOCOL VERSION stamp, not
+    * cosmetics: a v2 stage was written by code that commits the
+    * `_FOLDED` manifest BEFORE any original is deleted, so a v2 stage
+    * that is parquet-committed but manifestless is PROVABLY pre-delete
+    * (FoldManifest commits by atomic rename — absent means never armed)
+    * and recovery may discard it unattended. A legacy-prefix stage in
+    * that state is genuinely ambiguous — its protocol deleted before any
+    * manifest existed — and is resolved by `resolveAmbiguousStage`. */
+  private val TmpPrefixV2 = ".compact_tmp2_"
+
+  /** The band (and fingerprint) store on the fold-store core: one
+    * artifact at the root, `ingest_batch=<id>` partitions, v2 stages
+    * written and legacy stages recognized. */
+  private val BandStore = new FoldStore(Seq(""), "ingest_batch=",
+    Seq(TmpPrefixV2, ".compact_tmp_"), "compactBandStore")(discardUnarmed)
+
+  /** The band store's unarmed-stage rule. A stage with no parquet
+    * `_SUCCESS` died while staging — under both protocol versions the
+    * deletes only start after the stage's parquet commits — so it is
+    * discarded. A committed v2 stage whose manifest is ABSENT died
+    * between its parquet commit and the manifest's arming: every
+    * original is intact, and it is discarded, loudly. A committed stage
+    * whose manifest exists but is malformed (arming committed, then
+    * storage mangled the bytes) or a committed legacy stage without one
+    * is AMBIGUOUS: the stage may be the only copy of the folded history,
+    * and a one-artifact store has no second artifact to cross-check
+    * (the ANN index has), so recovery fails fast naming `bands-resolve`
+    * rather than guessing destructively. */
+  private def discardUnarmed(fs: org.apache.hadoop.fs.FileSystem, root: String,
+                             stages: Seq[FoldStore.Stage]): Unit =
+    stages.foreach { s =>
+      val v2Unarmed = s.manifest == FoldManifest.Absent && s.path.getName.startsWith(TmpPrefixV2)
+      if (s.committed && !v2Unarmed) {
+        val why =
+          if (s.manifest == FoldManifest.Unreadable)
+            "its _FOLDED manifest exists but is malformed (arming committed, then " +
+              "storage mangled the bytes — the deletes may already have run)"
+          else "it has no _FOLDED manifest and was written by the pre-manifest " +
+            "protocol, whose deletes ran before any manifest existed"
+        throw new IllegalStateException(
+          s"compaction stage ${s.path} is parquet-committed but $why " +
+            "— the stage may be the only copy of the folded history. " +
+            "Resolve with `Ctl <root> bands-resolve <dir> discard|complete` " +
+            "(resolveAmbiguousStage): discard verifies every stage row is " +
+            "still present in the live partitions before deleting the stage; " +
+            "complete removes exactly the live partitions the stage subsumes " +
+            s"and renames it to ${batchDir(root, s.target)}")
+      }
+      if (s.committed) System.err.println(s"[compaction] discarding unarmed v2 stage " +
+        s"${s.path} (parquet committed, manifest never armed — originals are intact by protocol)")
+      require(fs.delete(s.path, true), s"failed to discard unarmed compaction stage ${s.path}")
+    }
 
   /** Band-store partitions written by micro-batches BEFORE `beforeBatch`
     * — a replayed batch must not treat its own earlier (possibly
-    * partial) write as seen corpus. None when no history exists. */
+    * partial) write as seen corpus. None when no history exists. Fails
+    * fast while a compaction stage stands (the fold-store reader
+    * guard). */
   def seenBands(spark: SparkSession, bandStoreDir: String,
                 beforeBatch: Long): Option[DataFrame] = {
-    val p = new Path(bandStoreDir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) None
-    else {
-      // ONE listing serves both checks — object-store listings at
-      // scale are not free, and the two views never need to disagree
-      val ls = fs.listStatus(p).toSeq.filter(_.isDirectory)
-      // a compaction interrupted between its delete and rename leaves
-      // history ONLY in the staged dot-dir — reading past it would
-      // dedup against a hole and write permanently wrong verdicts.
-      // The read path FAILS FAST instead of repairing (repair here
-      // would make every reader a writer and race a still-running
-      // compactor over the same renames); re-run compactBandStore to
-      // complete the swap, then restart the ingest.
-      val pending = ls.filter(s => isStageName(s.getPath.getName))
-      require(pending.isEmpty,
-        s"band store $bandStoreDir has an unfinished compaction " +
-          s"(${pending.map(_.getPath.getName).mkString(", ")}) — " +
-          "run compactBandStore to complete the swap before ingesting")
-      val dirs = ls.map(_.getPath)
-        .filter(d => d.getName match {
-          case BatchDirRe(b) => b.toLong < beforeBatch
-          case _             => false
-        })
-      if (dirs.isEmpty) None
-      else Some(spark.read.option("basePath", bandStoreDir)
-        .parquet(dirs.map(_.toString): _*))
-    }
+    val dirs = BandStore.listing(BandStore.fsOf(spark, bandStoreDir), bandStoreDir, "",
+        guarded = true)
+      .partitions.filter(d => BandStore.batchId(d.getName).exists(_ < beforeBatch))
+    if (dirs.isEmpty) None
+    else Some(spark.read.option("basePath", bandStoreDir)
+      .parquet(dirs.map(_.toString): _*))
+  }
+
+  /** The committed (`_SUCCESS`) `ingest_batch=<id>` partitions under
+    * `dir`, read with their partition column; fails on a missing dir,
+    * on no committed partition, and while a compaction stage stands. */
+  private def readCommitted(spark: SparkSession, dir: String, what: String): DataFrame = {
+    val fs = BandStore.fsOf(spark, dir)
+    require(fs.exists(new Path(dir)), s"no $what under $dir")
+    val parts = BandStore.listing(fs, dir, "", guarded = true).committed
+      .filter(p => BandStore.batchId(p.getName).nonEmpty)
+    require(parts.nonEmpty, s"no committed $what partitions under $dir")
+    spark.read.option("basePath", dir).parquet(parts.map(_.toString): _*)
   }
 
   /** Candidate duplicate pairs implied by the ENTIRE accumulated band
@@ -110,27 +153,8 @@ object IncrementalDedup {
     * _SUCCESS-committed partitions — missing band rows would silently
     * drop candidate pairs and mislabel groups. */
   def storedCandidatePairs(spark: SparkSession, bandStoreDir: String,
-                           id: String): DataFrame = {
-    val p = new Path(bandStoreDir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(p), s"no band store under $bandStoreDir")
-    val ls = fs.listStatus(p).toSeq.filter(_.isDirectory)
-    val pending = ls.filter(s => isStageName(s.getPath.getName))
-    require(pending.isEmpty,
-      s"band store $bandStoreDir has an unfinished compaction " +
-        s"(${pending.map(_.getPath.getName).mkString(", ")}) — " +
-        "run compactBandStore to complete the swap first")
-    val committed = ls
-      .filter(s => BatchDirRe.pattern.matcher(s.getPath.getName).matches() &&
-        fs.exists(new Path(s"${s.getPath}/_SUCCESS")))
-      .map(_.getPath)
-    require(committed.nonEmpty, s"no committed band partitions under $bandStoreDir")
-    Dedup.bandPairJoin(
-      spark.read.option("basePath", bandStoreDir)
-        .parquet(committed.map(_.toString): _*)
-        .drop("ingest_batch"),
-      id)
-  }
+                           id: String): DataFrame =
+    Dedup.bandPairJoin(readCommitted(spark, bandStoreDir, "band store").drop("ingest_batch"), id)
 
   /** One turn of the ingest loop (the foreachBatch body). Writes
     * per-document dedup verdicts to `resultDir/ingest_batch=<id>` —
@@ -191,71 +215,19 @@ object IncrementalDedup {
     * callers may have built on "one drop = one partition" (and any
     * oracle keyed on drop membership). */
   /** `compactEvery` > 0 folds the band store in-loop every that many
-    * batches (after the batch's own append), so a long-running crawl
-    * ingest manages its own small-file problem instead of deferring to
-    * an out-of-band job. The fold covers batches strictly BELOW the
-    * current id — the one partition a checkpoint replay can overwrite
-    * stays out of it — and a replayed batch re-runs its compaction as a
-    * no-op (fewer than two foldable partitions remain), so the hook is
-    * idempotent end to end. foreachBatch bodies run sequentially: the
-    * compactor never races the appender it shares the loop with
-    * (the single-writer discipline compactBandStore requires).
-    *
-    * When the loop owns compaction it must also own RECOVERY: a crash
-    * inside a previous turn's fold leaves a stage that every band-store
-    * read fails fast on — including the replayed batch's own
-    * `seenBands` — so each turn first completes or discards any pending
-    * stage, under the store's single-writer LEASE (an out-of-band
-    * compactor mid-staging makes the turn fail loudly at acquire
-    * rather than discard the compactor's live stage). Without the
-    * recovery, a mid-compaction crash would wedge the stream behind
-    * exactly the out-of-band intervention in-loop compaction exists to
-    * remove. */
+    * batches, after the batch's own append, through the fold-store
+    * in-loop hook (`FoldStore.startLoop` states its lease-guarded
+    * recovery and replay contract), so a long-running crawl ingest
+    * manages its own small-file problem instead of deferring to an
+    * out-of-band job. */
   def run(source: DataFrame, cfg: Config, bandStoreDir: String,
           resultDir: String, checkpointDir: String,
           trigger: Trigger = Trigger.AvailableNow(),
           compactEvery: Int = 0): StreamingQuery =
-    startLoop(source, checkpointDir, trigger, compactEvery, bandStoreDir,
+    BandStore.startLoop(source, checkpointDir, trigger, compactEvery, bandStoreDir,
         "ingest-loop.recover") { (b, id) =>
       ingestBatch(b, id, cfg, bandStoreDir, resultDir)
     }
-
-  /** The one store-loop core under `run`, `runWinnow` and
-    * `runDecontaminate`: each micro-batch runs `turn`, and with
-    * `compactEvery` > 0 the turn is bracketed by the in-loop store
-    * maintenance `run` documents — first the lease-guarded recovery of
-    * a prior turn's crashed compaction stage in `storeDir` (under lease
-    * `lease`), after the turn the fold of every `compactEvery`-th
-    * batch. */
-  private def startLoop(source: DataFrame, checkpointDir: String, trigger: Trigger,
-                        compactEvery: Int = 0, storeDir: String = "",
-                        lease: String = "")(
-      turn: (DataFrame, Long) => Unit): StreamingQuery =
-    source.writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        if (compactEvery > 0) {
-          // Recovery under the store LEASE, not under the "this loop is
-          // the single writer" prose: if an out-of-band `ctl
-          // bands-compact` is mid-staging when this turn starts, the
-          // loop fails loudly at acquire instead of discarding the
-          // compactor's live stage as a "crash". The clean-store case
-          // (every turn, in steady state) stays listing-only.
-          val root = new Path(storeDir)
-          val fs = root.getFileSystem(b.sparkSession.sessionState.newHadoopConf())
-          val hasStage = fs.exists(root) && fs.listStatus(root).exists(s =>
-            s.isDirectory && isStageName(s.getPath.getName))
-          if (hasStage)
-            graft.operators.StoreLease.withLease(b.sparkSession, storeDir, lease) { _ =>
-              recoverPendingCompaction(fs, storeDir)
-            }
-        }
-        turn(b, id)
-        if (compactEvery > 0 && id > 0 && id % compactEvery == 0)
-          compactBandStore(b.sparkSession, storeDir, upToBatch = id): Unit
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
 
   // ------------------------------------------------------------------
   // Winnow ingest loop — the exact-substring complement of the minhash
@@ -350,7 +322,7 @@ object IncrementalDedup {
                 resultDir: String, checkpointDir: String,
                 trigger: Trigger = Trigger.AvailableNow(),
                 compactEvery: Int = 0): StreamingQuery =
-    startLoop(source, checkpointDir, trigger, compactEvery, fpStoreDir,
+    BandStore.startLoop(source, checkpointDir, trigger, compactEvery, fpStoreDir,
         "winnow-loop.recover") { (b, id) =>
       ingestWinnowBatch(b, id, cfg, fpStoreDir, resultDir)
     }
@@ -431,7 +403,7 @@ object IncrementalDedup {
                        evalFpDir: String, resultDir: String, leakDir: String,
                        checkpointDir: String,
                        trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    startLoop(source, checkpointDir, trigger) { (b, id) =>
+    BandStore.startLoop(source, checkpointDir, trigger) { (b, id) =>
       ingestDecontaminateBatch(b, id, cfg, evalFpDir, resultDir, leakDir)
     }
 
@@ -441,277 +413,26 @@ object IncrementalDedup {
     * partition stays invisible until its checkpoint replay overwrites
     * it — the same guard the band-store read path gets from its strict
     * batch-id filter. */
-  def results(spark: SparkSession, resultDir: String): DataFrame = {
-    val p = new Path(resultDir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(p), s"no results under $resultDir")
-    val committed = fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory &&
-        BatchDirRe.pattern.matcher(s.getPath.getName).matches() &&
-        fs.exists(new Path(s"${s.getPath}/_SUCCESS")))
-      .map(_.getPath)
-    require(committed.nonEmpty, s"no committed result partitions under $resultDir")
-    spark.read.option("basePath", resultDir)
-      .parquet(committed.map(_.toString): _*)
-  }
+  def results(spark: SparkSession, resultDir: String): DataFrame =
+    readCommitted(spark, resultDir, "result")
 
-  /** Compact the band store: fold every partition with id <
-    * `upToBatch` into ONE partition dir (named for the highest folded
-    * id). Over thousands of crawl drops the per-batch dirs accumulate
-    * small files; dedup semantics only need "strictly before the
-    * current batch", not which batch a band came from, so folding is
-    * loss-free — batch N (and any replay of it, N >= upToBatch) reads
-    * the compacted partition exactly as it read the originals.
-    *
-    * Only _SUCCESS-committed partitions below `upToBatch` are folded:
-    * a torn partition (a batch that crashed mid band-write and will be
-    * replayed) is excluded automatically, so its replay overwrites its
-    * own dir and can never clobber folded history — which makes ANY
-    * `upToBatch` safe, from the in-loop hook (current batch id: its
-    * own just-written partition is excluded by the strict <) or
-    * out-of-band with no knowledge of the checkpoint's commit state.
-    * Returns the number of partitions folded (0 = nothing to do). */
-  /** Fold-eligible band partitions: committed (`_SUCCESS`) and
-    * strictly below `upToBatch` — the one definition shared by the
-    * fold and the fragmentation probe, so they can never disagree.
-    * Fails fast on a standing compaction stage (part of the history
-    * may live only there — same discipline as `seenBands`); complete
-    * or discard it via `compactBandStore` / `Ctl bands-resolve`. */
-  private def foldableBandPartitions(fs: org.apache.hadoop.fs.FileSystem,
-                                     bandStoreDir: String,
-                                     upToBatch: Long): Seq[Long] = {
-    val p = new Path(bandStoreDir)
-    if (!fs.exists(p)) Seq.empty
-    else {
-      val ls = fs.listStatus(p).toSeq.filter(_.isDirectory)
-      val pending = ls.filter(s => isStageName(s.getPath.getName))
-      require(pending.isEmpty,
-        s"$bandStoreDir has an unfinished compaction " +
-          s"(${pending.map(_.getPath.getName).mkString(", ")}) — " +
-          "run compactBandStore (or Ctl bands-resolve) before probing")
-      ls.map(_.getPath).flatMap(d => d.getName match {
-        case BatchDirRe(b) if b.toLong < upToBatch &&
-          fs.exists(new Path(s"$d/_SUCCESS")) => Some(b.toLong)
-        case _ => None
-      }).sorted
-    }
-  }
+  /** Fold every committed band partition with id < `upToBatch` into
+    * ONE partition dir named for the highest folded id — the fold-store
+    * fold (`FoldStore`). Dedup only needs "strictly
+    * before the current batch", not which batch a band came from, so
+    * the fold is loss-free. Returns the number of partitions folded
+    * (0 = nothing to do). */
+  def compactBandStore(spark: SparkSession, bandStoreDir: String,
+                       upToBatch: Long): Int =
+    BandStore.fold(spark, bandStoreDir, upToBatch)
 
-  /** The band-store fragmentation decision — the dedup-crawl twin of
-    * `AnnIndex.CompactionDecision`, probe result traveling with the
-    * outcome so callers and specs assert the decision, never guess. */
-  final case class BandCompactionDecision(standingPartitions: Long,
-                                          maxPartitions: Long,
-                                          compacted: Boolean, folded: Int)
-
-  /** Close the band-store small-files loop the way
-    * `AnnIndex.compactIfFragmented` closes the ANN one: MEASURE the
-    * standing committed fold-eligible partition count and fold only
-    * past `maxPartitions` — the cron-safe out-of-band form for crawl
-    * loops that don't own compaction via `compactEvery` (whose fixed
-    * cadence remains the right in-loop policy: there the loop IS the
-    * single writer and the fold cost amortizes by construction). The
-    * probe is file-listing only; the fold takes the store lease and
-    * carries the staged-swap crash discipline. */
+  /** The cron-safe out-of-band form for crawl loops that don't own
+    * compaction via `compactEvery`: the fold-store fragmentation probe
+    * — fold only past `maxPartitions` standing foldable partitions. */
   def compactBandStoreIfFragmented(spark: SparkSession, bandStoreDir: String,
                                    maxPartitions: Int, upToBatch: Long)
-      : BandCompactionDecision = {
-    require(maxPartitions >= 1,
-      s"maxPartitions must be at least 1, got $maxPartitions")
-    val fs = new Path(bandStoreDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    // Cron-safety vs our own prior crash: a fold that died mid-stage
-    // trips foldableBandPartitions' fail-fast before the fold's own
-    // recovery would run, wedging this verb permanently. Heal first,
-    // under the lease (recovery discards or completes a staged swap);
-    // the clean-store case stays listing-only and lease-free. One
-    // irreducible manual case remains: a LEGACY (pre-manifest) stage
-    // with _SUCCESS but no `_FOLDED` manifest is ambiguous — recovery
-    // fails fast naming `ctl bands-resolve`, by design (the stage may
-    // be the only copy of folded history).
-    val root = new Path(bandStoreDir)
-    val hasStage = fs.exists(root) && fs.listStatus(root).exists(s =>
-      s.isDirectory && isStageName(s.getPath.getName))
-    if (hasStage)
-      graft.operators.StoreLease.withLease(spark, bandStoreDir,
-          "compactBandStoreIfFragmented.recover") { _ =>
-        recoverPendingCompaction(fs, bandStoreDir)
-      }
-    val standing = foldableBandPartitions(fs, bandStoreDir, upToBatch).size
-    val fire = standing > maxPartitions
-    val folded =
-      if (fire) compactBandStore(spark, bandStoreDir, upToBatch) else 0
-    BandCompactionDecision(standing, maxPartitions, fire, folded)
-  }
-
-  def compactBandStore(spark: SparkSession, bandStoreDir: String,
-                       upToBatch: Long): Int = {
-    val p = new Path(bandStoreDir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) return 0
-    // enforced single-writer: an out-of-band `ctl bands-compact` racing
-    // the loop's own in-band hook fails at acquire instead of
-    // interleaving deletes with the other's staged swap
-    graft.operators.StoreLease.withLease(spark, bandStoreDir,
-        "compactBandStore") { lease =>
-    recoverPendingCompaction(fs, bandStoreDir)
-    // recovery just ran, so the shared lister's stage fail-fast passes
-    val olds = foldableBandPartitions(fs, bandStoreDir, upToBatch)
-      .map(b => (b, new Path(batchDir(bandStoreDir, b))))
-    if (olds.size < 2) 0 else {
-    val target = olds.map(_._1).max
-    val merged = spark.read
-      .option("basePath", bandStoreDir)
-      .parquet(olds.map(_._2.toString): _*)
-      .drop("ingest_batch")
-    // crash discipline (single writer): the fold is FULLY staged in a
-    // dot-dir (invisible to seenBands' partition regex) before any old
-    // partition is touched, and the swap is armed by a `_FOLDED`
-    // coverage manifest (graft.operators.FoldManifest — the exact
-    // partition ids the stage covers) written LAST. A crash before the
-    // manifest lands proves no original was touched (recovery discards
-    // the stage); a crash after is completed by recovery deleting
-    // exactly the manifest's partitions — so a partition that was torn
-    // at stage time (excluded from the fold) and recommitted by a
-    // checkpoint replay between crash and recovery survives, where a
-    // target-scoped `id <= target` delete would destroy it.
-    val tmp = s"$bandStoreDir/$TmpPrefixV2$target"
-    merged.write.mode("overwrite").parquet(tmp)
-    graft.operators.FoldManifest.write(fs, new Path(tmp), olds.map(_._1))
-    // destructive phase begins here — verify the lease is still ours
-    graft.operators.StoreLease.verify(spark, lease)
-    olds.foreach { case (_, d) =>
-      require(fs.delete(d, true), s"compaction failed to delete $d")
-    }
-    // rename into an existing dir would NEST the stage inside it (local
-    // FS/HDFS semantics) — the target is in `olds` so it was deleted
-    // above; assert that invariant rather than trust it
-    val targetPath = new Path(batchDir(bandStoreDir, target))
-    require(!fs.exists(targetPath),
-      s"$targetPath still exists after the fold's deletes; refusing a rename " +
-        "that would nest the stage inside it — history is staged in " +
-        s"$tmp; inspect by hand")
-    require(fs.rename(new Path(tmp), targetPath),
-      s"compaction failed to swap $tmp into place — history is staged " +
-        "there; re-run compactBandStore to complete the swap")
-    olds.size
-    }
-    }
-  }
-
-  /** Stage-dir name prefixes. The `2` is a PROTOCOL VERSION stamp, not
-    * cosmetics (ADVICE r8): a v2 stage was written by code that commits
-    * the `_FOLDED` manifest BEFORE any original is deleted, so a v2
-    * stage that is parquet-committed but manifestless is PROVABLY
-    * pre-delete (FoldManifest commits by atomic rename — unreadable
-    * means never armed) and recovery may discard it unattended. A
-    * legacy-prefix stage in that state is genuinely ambiguous — its
-    * protocol deleted before any manifest existed — and keeps the
-    * fail-fast, now resolvable via `resolveAmbiguousStage` / the
-    * `Ctl bands-resolve` verb instead of hand-run filesystem surgery. */
-  private val TmpPrefixV2 = ".compact_tmp2_"
-  private val TmpPrefix = ".compact_tmp_"
-  // v2 first: unambiguous either way (neither prefixes the other), but
-  // the target parse strips exactly the prefix that matched
-  private val StagePrefixes = Seq(TmpPrefixV2, TmpPrefix)
-  private def isStageName(n: String): Boolean = StagePrefixes.exists(n.startsWith)
-  private def stageTarget(n: String): Long =
-    StagePrefixes.collectFirst { case p if n.startsWith(p) => n.stripPrefix(p).toLong }
-      .getOrElse(throw new IllegalArgumentException(s"not a stage dir name: $n"))
-
-  /** Finish or discard a compaction interrupted mid-flight, by the
-    * `_FOLDED` manifest discipline (graft.operators.FoldManifest, the
-    * same protocol AnnIndex.recoverPendingCompaction runs): a stage
-    * carrying BOTH its parquet _SUCCESS and a well-formed manifest is a
-    * complete fold whose swap may have started — delete EXACTLY the
-    * manifest's partitions and rename the stage in. Deleting by
-    * manifest rather than by `id <= target` keeps a partition that was
-    * uncommitted at stage time and recommitted by a checkpoint replay
-    * between the crash and this recovery.
-    *
-    * A stage with NO parquet _SUCCESS proves the crash happened while
-    * staging — under both this protocol and the pre-manifest one,
-    * deletes only ever started after the stage's parquet committed —
-    * so discarding it is always safe. A stage WITH _SUCCESS but
-    * without a readable manifest is AMBIGUOUS: a crash in the narrow
-    * window before the manifest armed the swap (discard would be
-    * safe), or a pre-manifest-protocol crash after its deletes (the
-    * stage is the only copy of the folded history — discard would
-    * destroy it silently). A single-artifact store has no cross-check
-    * to tell these apart (AnnIndex disambiguates via its second
-    * artifact), so recovery FAILS FAST with the resolution choices
-    * rather than guessing destructively. */
-  private def recoverPendingCompaction(fs: org.apache.hadoop.fs.FileSystem,
-                                       bandStoreDir: String): Unit =
-    if (!fs.exists(new Path(bandStoreDir))) () // first-ever batch: nothing to heal
-    else fs.listStatus(new Path(bandStoreDir)).toSeq
-      .filter(s => s.isDirectory && isStageName(s.getPath.getName))
-      .foreach { s =>
-        val name = s.getPath.getName
-        val target = stageTarget(name)
-        val committed = fs.exists(new Path(s"${s.getPath}/_SUCCESS"))
-        import graft.operators.FoldManifest
-        // transient IO errors reading the manifest PROPAGATE out of
-        // state() — an armed stage must never be auto-discarded on a
-        // misread (retry the recovery instead)
-        val manifest: FoldManifest.State =
-          if (committed) FoldManifest.state(fs, s.getPath)
-          else FoldManifest.Absent
-        manifest match {
-          case FoldManifest.Covered(ids) if committed =>
-            fs.listStatus(new Path(bandStoreDir)).toSeq
-              .filter(_.isDirectory)
-              .foreach(d => d.getPath.getName match {
-                case BatchDirRe(b) if ids(b.toLong) =>
-                  require(fs.delete(d.getPath, true),
-                    s"compaction recovery failed to delete ${d.getPath}")
-                case _ => ()
-              })
-            // the fold target is always in its own manifest, so the
-            // target dir was deleted above; assert it before renaming
-            // (a rename into an existing dir would NEST the stage)
-            val tp = new Path(batchDir(bandStoreDir, target))
-            require(!fs.exists(tp),
-              s"$tp survived the manifest's deletes — the manifest does not " +
-                s"cover its own target $target; inspect by hand")
-            require(fs.rename(s.getPath, tp),
-              s"compaction recovery failed to swap ${s.getPath} into place")
-          case FoldManifest.Absent if committed && name.startsWith(TmpPrefixV2) =>
-            // committed-but-manifest-ABSENT under the v2 protocol is a
-            // crash in the window between the stage's parquet commit
-            // and the manifest's atomic-rename arming — deletes only
-            // ever start AFTER arming, so every original is intact and
-            // the stage is redundant: discard, loudly. (A manifest
-            // that EXISTS but is malformed is NOT this case — arming
-            // committed and storage mangled it; handled below.)
-            System.err.println(s"[compaction] discarding unarmed v2 stage " +
-              s"${s.getPath} (parquet committed, manifest never armed — " +
-              "originals are intact by protocol)")
-            require(fs.delete(s.getPath, true),
-              s"failed to discard unarmed compaction stage ${s.getPath}")
-          case _ if committed =>
-            val why = manifest match {
-              case FoldManifest.Unreadable =>
-                "its _FOLDED manifest exists but is malformed (arming " +
-                  "committed, then storage mangled the bytes — the deletes " +
-                  "may already have run)"
-              case _ =>
-                "it has no _FOLDED manifest and was written by the " +
-                  "pre-manifest protocol, whose deletes ran before any " +
-                  "manifest existed"
-            }
-            throw new IllegalStateException(
-              s"compaction stage ${s.getPath} is parquet-committed but $why " +
-                "— the stage may be the only copy of the folded history. " +
-                "Resolve with `Ctl <root> bands-resolve <dir> discard|complete` " +
-                "(resolveAmbiguousStage): discard verifies every stage row is " +
-                "still present in the live partitions before deleting the stage; " +
-                "complete removes exactly the live partitions the stage subsumes " +
-                s"and renames it to ${batchDir(bandStoreDir, target)}")
-          case _ => require(fs.delete(s.getPath, true),
-            s"failed to discard torn compaction stage ${s.getPath}")
-        }
-      }
+      : FoldStore.CompactionDecision =
+    BandStore.foldIfFragmented(spark, bandStoreDir, maxPartitions, upToBatch)
 
   /** Resolve THE genuinely ambiguous compaction state — a
     * parquet-committed stage with no readable `_FOLDED` manifest, left
@@ -736,19 +457,17 @@ object IncrementalDedup {
     * Returns a human-readable summary of what was executed. */
   def resolveAmbiguousStage(spark: SparkSession, bandStoreDir: String,
                             complete: Boolean): String = {
-    val p = new Path(bandStoreDir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(p), s"no band store under $bandStoreDir")
+    val fs = BandStore.fsOf(spark, bandStoreDir)
+    require(fs.exists(new Path(bandStoreDir)), s"no band store under $bandStoreDir")
     // Destructive resolution is a store MAINTENANCE pass like the folds
     // it finishes: single-writer lease, verify-on-commit before each
     // delete/rename — a resolve racing a running compactor (or a second
     // resolve) fails loudly at acquire instead of interleaving renames.
-    graft.operators.StoreLease.withLease(spark, bandStoreDir,
+    StoreLease.withLease(spark, bandStoreDir,
         "bands-resolve") { lease =>
-    val ls = fs.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath)
-    val ambiguous = ls.filter(d => isStageName(d.getName) &&
-      fs.exists(new Path(s"$d/_SUCCESS")) &&
-      graft.operators.FoldManifest.read(fs, d).isEmpty)
+    val ls = BandStore.listing(fs, bandStoreDir, "", guarded = false)
+    val ambiguous = ls.stages.filter(d => fs.exists(new Path(s"$d/_SUCCESS")) &&
+      FoldManifest.read(fs, d).isEmpty)
     require(ambiguous.nonEmpty,
       s"no ambiguous compaction stage under $bandStoreDir — every other " +
         "pending state is handled by compactBandStore's own recovery; run that")
@@ -756,16 +475,13 @@ object IncrementalDedup {
       s"multiple ambiguous stages (${ambiguous.map(_.getName).mkString(", ")}) — " +
         "a single-writer store cannot produce this; inspect by hand")
     val stage = ambiguous.head
-    val target = stageTarget(stage.getName)
+    val target = BandStore.stageTarget(stage.getName)
     val stageRows = spark.read.parquet(stage.toString)
     val cols = stageRows.columns.toIndexedSeq.map(col)
     // only committed partitions at/below the target participate: the
     // crashed fold never covered anything above it
-    val live = ls.flatMap(d => d.getName match {
-      case BatchDirRe(b) if b.toLong <= target &&
-        fs.exists(new Path(s"$d/_SUCCESS")) => Some((b.toLong, d))
-      case _ => None
-    }).sortBy(_._1)
+    val live = ls.committed.flatMap(d =>
+      BandStore.batchId(d.getName).filter(_ <= target).map((_, d))).sortBy(_._1)
     // stage rows NOT present (with multiplicity) among the live
     // partitions: > 0 proves the crashed fold's deletes already ran
     def missingFromLive(): Long = {
@@ -781,7 +497,7 @@ object IncrementalDedup {
         s"$missing stage rows are ABSENT from the live partitions — the " +
           "crashed fold's deletes already ran and the stage is the only copy " +
           "of that history; discarding would destroy it. Resolve with complete")
-      graft.operators.StoreLease.verify(spark, lease)
+      StoreLease.verify(spark, lease)
       require(fs.delete(stage, true), s"failed to discard stage $stage")
       s"discarded ${stage.getName}: all stage rows verified present in " +
         s"live partitions [${live.map(_._1).mkString(", ")}]"
@@ -803,7 +519,7 @@ object IncrementalDedup {
           "every stage row is still present in the live partitions and none " +
             "is subsumed — completing would duplicate intact history; " +
             "resolve with discard")
-      graft.operators.StoreLease.verify(spark, lease)
+      StoreLease.verify(spark, lease)
       subsumed.foreach { case (_, d) =>
         require(fs.delete(d, true), s"failed to delete subsumed partition $d")
       }

@@ -464,6 +464,33 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(allCodes == ((0L until 12L) ++ Seq(100L, 101L, 202L, 203L)).toSet)
   }
 
+  test("the ANN ingest loop's recovery refuses to discard a live out-of-band compactor's stage") {
+    val root = Files.createTempDirectory("annix_leaseloop").toString
+    val ixDir = s"$root/ix"; val src = s"$root/src"; val ckpt = s"$root/ckpt"
+    AnnIndex.buildIvfPq(emb.filter(col("vec_id") < 6), "vec_id", "embedding",
+      dim = 8, m = 2, k = 4, nCentroids = 4, dir = ixDir)
+    // an out-of-band `ctl index-compact` is MID-STAGING: its stage dir
+    // stands (no manifest yet) and it holds the index lease. Recovery
+    // without the lease would discard the live stage as a crash, and
+    // the compactor would then arm and swap in a data-less stage.
+    val stage = java.nio.file.Paths.get(s"$ixDir/codes/.compact_tmp_1")
+    Files.createDirectory(stage)
+    java.nio.file.Files.write(stage.resolve("part-torn.parquet"), Array[Byte](1))
+    val h = StoreLease.acquire(spark, ixDir, "ops-hold")
+    try {
+      emb.filter(col("vec_id") >= 6 && col("vec_id") < 8).write.parquet(src)
+      val e = intercept[Exception](
+        AnnIndex.runIngest(spark.readStream.schema(emb.schema).parquet(src),
+          ixDir, "vec_id", "embedding", dim = 8, m = 2, checkpointDir = ckpt,
+          compactEvery = 2).awaitTermination())
+      def chain(t: Throwable): Seq[String] =
+        if (t == null) Nil else Option(t.getMessage).toSeq ++ chain(t.getCause)
+      assert(chain(e).exists(_.contains("ops-hold")),
+        s"expected a lease refusal naming the holder, got: ${chain(e)}")
+      assert(Files.exists(stage), "the live compactor's stage must stay on disk")
+    } finally StoreLease.release(spark, h)
+  }
+
   // the base corpus offset to fresh ids, every coordinate shifted by
   // `delta` — tiny delta = the base distribution (healthy drop), large
   // delta = a moved distribution (drifted drop)

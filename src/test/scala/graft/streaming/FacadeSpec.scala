@@ -57,6 +57,23 @@ class FacadeSpec extends AnyFunSuite {
     assert(out.toSeq == Seq("e2"))
   }
 
+  test("pipe into a graftlog topic lands each record once when a batch is replayed") {
+    val root = Files.createTempDirectory("graft_facade_log").toString
+    val s = new GraftStream(spark, new GraftLogConnector(root, numPartitions = 2), s"$root/ckpt")
+    s.emit(events(("e1", "a", 1.0, 10.0), ("e2", "b", 2.0, 20.0)), "in")
+    def pipe(): Unit = s.pipe("in", "out")(identity).awaitTermination()
+    pipe()
+    // crash after the sink write but before the commit: removing
+    // commits/0 makes the restart replay micro-batch 0
+    val commits = java.nio.file.Paths.get(s"$root/ckpt/in/pipe-out/commits")
+    assert(Files.deleteIfExists(commits.resolve("0")))
+    Files.deleteIfExists(commits.resolve(".0.crc"))
+    pipe()
+    val landed = spark.read.format("graftlog").load(s"$root/out")
+      .select(get_json_object(col("value"), "$.event_id")).as[String].collect().toSeq
+    assert(landed.sorted == Seq("e1", "e2"), s"a replayed batch must land once: $landed")
+  }
+
   test("windowAggregate emits closed windows once the watermark passes") {
     val (root, s) = mkStream()
     def runAgg(): Unit = s.windowAggregate("tx", TumblingWindow(10000),
