@@ -13,10 +13,13 @@ import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
   * space is only materialized per bucket. At 100 TB the knobs are the
   * shingle length, number of hashes, and band width — the plan shape
   * (explode → shuffle → bucket self-join) is already the cluster one.
+  * The MinHash-LSH path keeps one row per document instead: shingle
+  * sets, row-local band signatures, band self-join, and verification
+  * on the candidate pair's two sets.
   *
   * Cross-engine determinism: every hash is md5 (same hex output in any
-  * engine); MinHash takes lexicographic minima of md5 hex strings, so a
-  * DuckDB oracle reproduces signatures bit-for-bit.
+  * engine); MinHash takes numeric minima of a universal hash over two
+  * md5 halves, so a DuckDB oracle reproduces signatures bit-for-bit.
   */
 object Dedup {
 
@@ -42,30 +45,39 @@ object Dedup {
       .groupBy(col("content_hash"))
       .agg(min(col(id)).as("keep_id"), count(lit(1)).as("n_copies"))
 
-  /** Distinct word-n-gram shingles per document: (id, s). The explode is
-    * the map side; everything downstream shuffles on the shingle. */
-  def shingleSet(docs: DataFrame, id: String, text: String, n: Int): DataFrame = {
-    // per-doc dedup happens ROW-LOCALLY (first-occurrence distinct in
-    // the closure), not via .distinct(): the id is part of the key, so
-    // a global distinct is per-document anyway and its Exchange — a
-    // full shuffle of the densest frame every dedup family builds — is
-    // pure overhead. Same (id, s) set, one shuffle fewer per consumer.
-    //
-    // The tokenize→shingle→dedup chain is a JVM closure (one pass over
-    // the string per row), not the regexp_extract_all + HOF transform +
-    // array_distinct expression tree it replaces: HOF lambdas evaluate
-    // INTERPRETED (never enter whole-stage codegen), so the expression
-    // form paid per-element tree walks plus a full token-array
-    // materialization per row — the Multimodal.blockSums precedent
-    // (guide §1.2 step 2: cut per-task work where codegen is off the
-    // table either way). Value-identical: tokens are maximal runs of
-    // non-whitespace per Java regex \S (exactly {space, \t, \n, \x0B,
-    // \f, \r} excluded), shingles joined by single spaces, distinct
-    // keeps first occurrence like array_distinct, < n tokens yields no
-    // rows like the old size(ws) >= n filter — pinned differentially
-    // against the expression form in DedupSimilaritySpec.
+  /** Distinct word-n-gram shingles per document: (id, s), one row per
+    * shingle — `shingleSets` exploded, so the tokenizer pass is defined
+    * once. The explode is the map side; everything downstream shuffles
+    * on the shingle. */
+  def shingleSet(docs: DataFrame, id: String, text: String, n: Int): DataFrame =
+    docSets(docs, id, text, n).select(col("id").as(id), explode(col("sh")).as("s"))
+
+  /** Distinct word-n-gram shingles per document as ONE row per document:
+    * (id, sh: array<string>), `textShingles` of the text. Documents with
+    * no shingle (null text, fewer than `n` tokens) are dropped, as the
+    * exploded `shingleSet` drops them. Doc ids are assumed unique: two
+    * rows with one id stay two sets. */
+  def shingleSets(docs: DataFrame, id: String, text: String, n: Int): DataFrame =
+    docSets(docs, id, text, n).toDF(id, "sh")
+
+  /** `shingleSets` with the id column named `id`: the LSH core's own
+    * frame. The caller's columns are projected away in the first
+    * select, so no caller column name can collide with an internal one.
+    *
+    * The per-doc dedup is row-local (first-occurrence distinct in the
+    * closure), never a `.distinct()`: the id is part of the key, so a
+    * global distinct is per-document anyway and its Exchange is pure
+    * overhead. The tokenize→shingle→dedup chain is a JVM closure (one
+    * pass over the string per row), not a regexp_extract_all + HOF
+    * transform + array_distinct tree: HOF lambdas evaluate interpreted
+    * and materialize the token array per row. Value-identical: tokens
+    * are maximal runs of non-whitespace per Java regex \S (exactly
+    * {space, \t, \n, \x0B, \f, \r} excluded), shingles joined by
+    * single spaces, first occurrence kept like array_distinct — pinned
+    * differentially against the expression form in DedupSimilaritySpec. */
+  private def docSets(docs: DataFrame, id: String, text: String, n: Int): DataFrame = {
     val f = udf((s: String) => textShingles(s, n))
-    docs.select(col(id), explode(f(col(text))).as("s"))
+    docs.select(col(id).as("id"), f(col(text)).as("sh")).filter(size(col("sh")) > 0)
   }
 
   /** The shingleSet closure body: distinct word n-grams of `s`, first
@@ -153,28 +165,21 @@ object Dedup {
       .filter(col("jaccard") > threshold)
 
   /** MinHash-LSH candidate pairs: docs sharing at least one band of
-    * `rowsPerBand` consecutive minhashes. The band signature is the
-    * sorted multiset of the band's minhashes (order-free → deterministic
-    * under any aggregation order). Only bucket-mates are paired — this is
-    * the plan that survives 100 TB, vs the exact-Jaccard quadratic probe.
-    *
-    * Plan shape: all `numHashes` minima are computed as separate
-    * aggregates over ONE pass of the shingle set (map-side partial mins;
-    * the shuffle carries |shingles| rows, not |shingles|×numHashes as a
-    * seed-explode would), then bands unpivot at |docs|×bands rows.
-    *
-    * Hash cost: the variable-length shingle is md5'd ONCE into a 32-char
-    * fingerprint; each seed hash digests only `seed|fp` (fixed 34 bytes)
-    * instead of re-digesting the whole shingle per seed — still md5-only,
-    * so a DuckDB oracle reproduces signatures exactly.
+    * `rowsPerBand` minhashes. The band signature is the sorted multiset
+    * of the band's minhashes (order-free → deterministic under any
+    * aggregation order). Only bucket-mates are paired — this is the plan
+    * that survives 100 TB, vs the exact-Jaccard quadratic probe. The
+    * signatures come from one row-local pass over each document's
+    * shingle set (`signedSets`, persisted under its CACHE NOTE): no
+    * per-shingle rows, no aggregate.
     *
     * `numHashes` is capped at the fixed derived-seed family size
     * (currently 16, `MinhashA.length`); larger signatures need more
-    * fixed odd 16-bit constant pairs mirrored into the oracles. */
+    * fixed odd 16-bit constant pairs mirrored into the oracles. Any id
+    * column name works; doc ids are assumed unique. */
   def minhashLshPairs(docs: DataFrame, id: String, text: String,
                       shingleN: Int, numHashes: Int, rowsPerBand: Int): DataFrame =
-    minhashLshPairsFromShingles(shingleSet(docs, id, text, shingleN),
-      id, numHashes, rowsPerBand)
+    signedPairs(signedSets(docSets(docs, id, text, shingleN), numHashes, rowsPerBand))
 
   /** Probability that two docs at Jaccard similarity `s` share at least
     * one band under (numHashes / rowsPerBand) bands of `rowsPerBand`
@@ -209,15 +214,6 @@ object Dedup {
       }
   }
 
-  /** `minhashLshPairs` over an ALREADY-PREPARED distinct shingle frame
-    * (id, s) — the form compositions use so the tokenize→explode→
-    * distinct pass (the dominant cost) is built ONCE and shared across
-    * every consumer in the plan (lshVerifiedPairs reuses it for counts
-    * and intersections too). */
-  def minhashLshPairsFromShingles(shingleFrame: DataFrame, id: String,
-                                  numHashes: Int, rowsPerBand: Int): DataFrame =
-    bandPairJoin(bandFrame(shingleFrame, id, numHashes, rowsPerBand), id)
-
   /** THE candidate-pair semantics over a band frame — (band, bsig)
     * bucket equality, ordered ids, distinct pairs — kept as the single
     * copy both the corpus self-join and the persisted band store's
@@ -230,51 +226,104 @@ object Dedup {
       .select(col(s"x.$id").as("da"), col(s"y.$id").as("db"))
       .distinct()
 
-  /** MinHash band signatures per document: (id, band, bsig) — the LSH
-    * bucket key frame both the self-join (corpus dedup) and the
-    * cross-join (incremental new-vs-seen dedup) build on. */
+  /** MinHash band signatures per document: (id, band INT, bsig STRING)
+    * — the LSH bucket key frame both the self-join (corpus dedup) and
+    * the cross-join (incremental new-vs-seen dedup) build on — from an
+    * exploded distinct (id, s) shingle frame: `collect_set` per id, then
+    * the one row-local band function of `setBandFrame`. The form for
+    * callers that hold per-shingle rows (custom shinglers, the byte
+    * families' capped universe, staged traces); text documents go
+    * through `shingleSets` straight to `setBandFrame`. */
   def bandFrame(shingleFrame: DataFrame, id: String,
-                numHashes: Int, rowsPerBand: Int): DataFrame = {
+                numHashes: Int, rowsPerBand: Int): DataFrame =
+    setBandFrame(shingleFrame.groupBy(col(id)).agg(collect_set(col("s")).as("sh")), id,
+      numHashes, rowsPerBand)
+
+  /** `bandFrame` over a per-document set frame (id, sh: array<string>):
+    * one `minhashBands` call per row, `posexplode`d into (id, band,
+    * bsig). No shuffle: a set frame in hand is banded where it lies. */
+  private[graft] def setBandFrame(sets: DataFrame, id: String,
+                                  numHashes: Int, rowsPerBand: Int): DataFrame =
+    sets.select(col(id),
+      posexplode(bandSigs(col("sh"), numHashes, rowsPerBand)).as(Seq("band", "bsig")))
+
+  /** The band signatures of a set column, as array<string> (index =
+    * band). */
+  private def bandSigs(sh: Column, numHashes: Int, rowsPerBand: Int): Column = {
     require(numHashes % rowsPerBand == 0, "numHashes must divide into bands")
-    // Seed family from ONE md5 per shingle row (was numHashes md5s —
-    // the measured constant factor in l6/l12): the textbook universal
-    // hash h_i = (a_i·h1 + b_i·h2) mod p over the two 40-bit md5
-    // halves, p the first prime past 2^40. The MODULUS is load-bearing:
-    // without it every seed preserves the shingles' magnitude order
-    // (the top bits of a·h1 + b·h2 barely move with the constants), so
-    // one globally-small shared shingle became EVERY seed's argmin for
-    // both docs and band false positives jumped 26 → 167 pairs at
-    // sf0.01; the mod wraps ~2^16 times and re-randomizes each seed's
-    // ordering (back to 26 candidate pairs — the md5 family's
-    // precision). 16-bit × 40-bit terms stay < 2^57: no signed-64
-    // overflow. The oracle mirrors the exact constants, substrings and
-    // modulus, so values stay engine-exact.
     require(numHashes <= MinhashA.length, s"at most ${MinhashA.length} derived hashes")
-    val sh = shingleFrame.withColumn("fp", md5(col("s")))
-    val h1 = conv(substring(col("fp"), 1, 10), 16, 10).cast("long")
-    val h2 = conv(substring(col("fp"), 11, 10), 16, 10).cast("long")
-    def seedHash(i: Int): Column =
-      (lit(MinhashA(i)) * h1 + lit(MinhashB(i)) * h2) % lit(MinhashP)
-    val wide = sh.groupBy(col(id)).agg(
-      min(seedHash(0)).as("mh_0"),
-      (1 until numHashes).map(i => min(seedHash(i)).as(s"mh_$i")): _*)
+    // binary elements: the cast hands over each shingle's UTF-8 bytes as
+    // they are stored, with no decode to a java String and re-encode
+    val f = udf((sh: scala.collection.Seq[Array[Byte]]) =>
+      minhashBands(sh, numHashes, rowsPerBand))
+    f(sh.cast("array<binary>"))
+  }
+
+  /** The LSH core's one per-document frame: sets (id, sh) plus their
+    * band signatures `sigs`, PERSISTED. Its readers — both sides of the
+    * band self-join and both sides of `verifySets` — scan the one cache,
+    * so the tokenizer and the MinHash pass each run once (a self-join
+    * over an uncached row-local frame evaluates it once per side).
+    * CACHE NOTE contract of `cappedUniverse`. */
+  private def signedSets(sets: DataFrame, numHashes: Int, rowsPerBand: Int): DataFrame =
+    sets.withColumn("sigs", bandSigs(col("sh"), numHashes, rowsPerBand))
+      .persist(MEMORY_AND_DISK)
+
+  /** `bandPairJoin` over `signedSets`' signatures. */
+  private def signedPairs(signed: DataFrame): DataFrame =
+    bandPairJoin(signed.select(col("id"),
+      posexplode(col("sigs")).as(Seq("band", "bsig"))), "id")
+
+  /** The one MinHash signature implementation: the band signatures of
+    * one document's shingle set (each element a shingle's UTF-8 bytes;
+    * null elements are skipped).
+    *
+    * Seed family from ONE md5 per shingle: the textbook universal hash
+    * h_i = (a_i·h1 + b_i·h2) mod p over two 40-bit md5 halves — h1 the
+    * unsigned big-endian value of digest bytes 0-4 (the hex digest's
+    * first 10 chars), h2 of bytes 5-9 — p the first prime past 2^40.
+    * The MODULUS is load-bearing: without it every seed preserves the
+    * shingles' magnitude order (the top bits of a·h1 + b·h2 barely move
+    * with the constants), so one globally-small shared shingle became
+    * EVERY seed's argmin for both docs and band false positives jumped
+    * 26 → 167 pairs at sf0.01; the mod wraps ~2^16 times and
+    * re-randomizes each seed's ordering. 16-bit × 40-bit terms stay
+    * < 2^57: no signed-64 overflow. Each seed keeps its minimum over the
+    * set.
+    *
+    * Band b takes the STRIDED seeds {b, b+nBands, ...}, not adjacent
+    * ones: h1 + i·h2 minima correlate for neighboring i (small i tracks
+    * argmin h1, large i argmin h2), so adjacent-seed bands behaved like
+    * ~1 effective hash and candidate false positives jumped ~5×. A
+    * band's values are sorted NUMERICALLY (a string sort would order
+    * "10" before "9"), then their decimals joined with `|`. An empty
+    * set signs every band "" (the concat of all-null minima).
+    *
+    * The oracle SQL mirrors the constants, the digest halves and the
+    * modulus, so values stay engine-exact; DedupSimilaritySpec pins this
+    * function against the relational md5/conv/min formulation. */
+  private[graft] def minhashBands(sh: scala.collection.Seq[Array[Byte]],
+                                  numHashes: Int, rowsPerBand: Int): Array[String] = {
     val nBands = numHashes / rowsPerBand
-    val bandCols = (0 until nBands).map { b =>
-      // band b takes the STRIDED seeds {b, b+nBands, ...} (seed % nBands
-      // = b), not adjacent ones: h1 + i·h2 minima correlate for
-      // neighboring i (small i tracks argmin h1, large i argmin h2), so
-      // adjacent-seed bands behaved like ~1 effective hash and candidate
-      // false positives jumped ~5×. Distant seeds restore near-sim^r
-      // band collision rates at zero extra hashing cost.
-      val mems = (0 until rowsPerBand).map(k => col(s"mh_${b + k * nBands}"))
-      // sort NUMERICALLY, then stringify — a string sort would order
-      // "10" before "9" and engines could legitimately disagree on
-      // signature layout
-      concat_ws("|", array_sort(array(mems: _*)).cast("array<string>")).as(s"bsig_$b")
+    val mins = Array.fill(numHashes)(Long.MaxValue)
+    val md = java.security.MessageDigest.getInstance("MD5")
+    sh.foreach { bytes =>
+      if (bytes != null) {
+        val d = java.nio.ByteBuffer.wrap(md.digest(bytes))
+        val h1 = d.getLong(0) >>> 24          // digest bytes 0-4
+        val h2 = d.getLong(2) & 0xFFFFFFFFFFL // digest bytes 5-9
+        var i = 0
+        while (i < numHashes) {
+          mins(i) = math.min(mins(i), (MinhashA(i) * h1 + MinhashB(i) * h2) % MinhashP)
+          i += 1
+        }
+      }
     }
-    val stackArgs = (0 until nBands).map(b => s"$b, bsig_$b").mkString(", ")
-    wide.select(col(id) +: bandCols: _*)
-      .selectExpr(id, s"stack($nBands, $stackArgs) as (band, bsig)")
+    // every hash is < MinhashP, so an untouched minimum means an empty set
+    Array.tabulate(nBands) { b =>
+      if (mins(0) == Long.MaxValue) ""
+      else Array.tabulate(rowsPerBand)(k => mins(b + k * nBands)).sorted.mkString("|")
+    }
   }
 
   /** Incremental dedup: MinHash-LSH candidates of a NEW batch against
@@ -284,15 +333,14 @@ object Dedup {
     * exactly what a production run would have persisted at ingest, so
     * re-shingling the historical corpus isn't required at scale).
     * Returns distinct (new_id, seen_id) candidate pairs; compose with
-    * the exact-verify join (as lshVerifiedPairs does) for thresholded
-    * precision. */
+    * `verifyCandidatePairs` for thresholded precision. */
   def incrementalLshPairs(newDocs: DataFrame, seenDocs: DataFrame,
                           id: String, text: String, shingleN: Int,
-                          numHashes: Int, rowsPerBand: Int): DataFrame =
-    incrementalLshPairsFromBands(
-      bandFrame(shingleSet(newDocs, id, text, shingleN), id, numHashes, rowsPerBand),
-      bandFrame(shingleSet(seenDocs, id, text, shingleN), id, numHashes, rowsPerBand),
-      id)
+                          numHashes: Int, rowsPerBand: Int): DataFrame = {
+    def bands(docs: DataFrame) =
+      setBandFrame(docSets(docs, id, text, shingleN), "id", numHashes, rowsPerBand)
+    incrementalLshPairsFromBands(bands(newDocs), bands(seenDocs), "id")
+  }
 
   /** `incrementalLshPairs` over ALREADY-BUILT band frames (id, band,
     * bsig) — the form the streaming ingest loop uses: the seen side is
@@ -381,53 +429,61 @@ object Dedup {
     * SCALE_DESIGN.md this is the plan that runs at 100 TB, and on
     * corpora where LSH recall covers the threshold band it returns
     * exactly ngramJaccardPairs' rows. `numHashes` <= the fixed seed
-    * family size (16) — see `bandFrame`. */
+    * family size (16) — see `minhashBands`.
+    *
+    * One row per document end to end: the shingle sets (`shingleSets`)
+    * and their row-local band signatures, persisted together
+    * (`signedSets`), feed the band self-join and, through one join per
+    * pair side, the array-intersection verification (`verifySets`) —
+    * no per-shingle frame, no set-size aggregate. Any id column name
+    * works; doc ids are assumed unique. */
   def lshVerifiedPairs(docs: DataFrame, id: String, text: String,
                        shingleN: Int, numHashes: Int, rowsPerBand: Int,
                        threshold: Double): DataFrame = {
-    // the SAME shingle frame feeds candidates, counts and intersections
-    // — PERSISTED so the tokenize→explode pass runs once (shingleSet
-    // has no exchange to share). Same CACHE NOTE contract as
-    // `cappedUniverse`.
-    val sh = shingleSet(docs, id, text, shingleN).persist(MEMORY_AND_DISK)
-    val cand = minhashLshPairsFromShingles(sh, id, numHashes, rowsPerBand)
-    exactVerifyPairs(sh, cand, id, threshold)
+    val signed = signedSets(docSets(docs, id, text, shingleN), numHashes, rowsPerBand)
+    verifySets(signed, signedPairs(signed), threshold)
   }
 
   /** Exact Jaccard verification of an EXTERNALLY-SUPPLIED candidate
     * pair frame (da, db) — the serve path when candidates come from a
     * persisted band store (the streaming ingest loop) instead of an
     * in-plan self-join: only documents that appear in some candidate
-    * pair are re-shingled (a semi-join prune; dup-involved docs are a
-    * small corpus fraction at crawl scale), then the same
-    * candidate-confined intersection/Jaccard as lshVerifiedPairs.
-    * Counts use each pruned doc's FULL shingle set, so verdicts equal
-    * the unpruned computation exactly. */
+    * pair are shingled (a semi-join prune; dup-involved docs are a
+    * small corpus fraction at crawl scale), into FULL per-document
+    * sets, then the same `verifySets` as lshVerifiedPairs — verdicts
+    * equal the unpruned computation exactly. Any id column name works;
+    * doc ids are assumed unique. */
   def verifyCandidatePairs(docs: DataFrame, cand: DataFrame, id: String,
                            text: String, shingleN: Int,
                            threshold: Double): DataFrame = {
     val ids = cand.select(col("da").as(id))
       .union(cand.select(col("db").as(id))).distinct()
-    // persisted for exactVerifyPairs' three consumers (counts + both
-    // join sides) — same CACHE NOTE contract as `cappedUniverse`
-    val sh = shingleSet(docs.join(ids, Seq(id), "left_semi"), id, text, shingleN)
+    // persisted for both join sides — same CACHE NOTE contract as
+    // `cappedUniverse`
+    val sets = docSets(docs.join(ids, Seq(id), "left_semi"), id, text, shingleN)
       .persist(MEMORY_AND_DISK)
-    exactVerifyPairs(sh, cand, id, threshold)
+    verifySets(sets, cand, threshold)
   }
 
-  /** The verification tail shared by the self-join and stored-candidate
-    * paths: intersection sizes for candidate pairs only — fan
-    * candidates out to the left side's shingles, then equi-join the
-    * right side on (doc, shingle) — work bounded by candidate docs'
-    * shingles. */
-  private def exactVerifyPairs(sh: DataFrame, cand: DataFrame, id: String,
-                               threshold: Double): DataFrame = {
-    val inter = cand
-      .join(sh.select(col(id).as("da"), col("s")), "da")
-      .join(sh.select(col(id).as("db"), col("s")), Seq("db", "s"))
-      .groupBy(col("da"), col("db"))
-      .agg(count(lit(1)).as("inter"))
-    exactJaccard(inter, sh, id, threshold)
+  /** The one exact-verify path for LSH candidates: each candidate pair
+    * (da, db) picks up both documents' sets from `sets` (id, sh) — one
+    * join per side, so a pair moves two arrays instead of fanning out
+    * to its shingle rows — and scores inter = |sa ∩ sb| and
+    * jaccard = inter / (|sa| + |sb| − inter), kept strictly above
+    * `threshold`. The sets must be distinct per document (every set
+    * frame here is). The division is one IEEE op on exact integers,
+    * bit-identical to the count-based formulation the oracles use. */
+  private def verifySets(sets: DataFrame, cand: DataFrame,
+                         threshold: Double): DataFrame = {
+    def side(d: String, s: String) = sets.select(col("id").as(d), col("sh").as(s))
+    cand.select(col("da"), col("db"))
+      .join(side("da", "sa"), "da")
+      .join(side("db", "sb"), "db")
+      .select(col("da"), col("db"), size(col("sa")).as("na"), size(col("sb")).as("nb"),
+        size(array_intersect(col("sa"), col("sb"))).as("inter"))
+      .select(col("da"), col("db"),
+        (col("inter").cast("double") / (col("na") + col("nb") - col("inter"))).as("jaccard"))
+      .filter(col("jaccard") > threshold)
   }
 
   /** SimHash near-dup pairs within `maxHamming` bit flips, found via
@@ -712,21 +768,24 @@ object Dedup {
     * row_number window partitioned by group over that same subgraph;
     * the corpus itself joins the |dup-docs| assignment table once
     * (broadcastable whenever dups are a small fraction, AQE decides).
-    * Returns every input row: (id, keep_id, kept 0/1). */
+    * Returns every input row: (id, keep_id, kept 0/1). Any id column
+    * name works: the caller's id is renamed to `_doc` where it enters
+    * (`score` is evaluated against `docs` in that same projection) and
+    * back on the way out, so no caller name meets an internal one. */
   def keepBestPerGroup(docs: DataFrame, pairs: DataFrame, id: String,
                        score: Column): DataFrame = {
-    val cc = connectedComponents(pairs)
-    val scored = docs.select(col(id), score.as("q"))
-    val members = cc.join(scored, cc("id") === scored(id)).select(col("rep"), col(id), col("q"))
+    val cc = connectedComponents(pairs).select(col("id").as("_doc"), col("rep").as("_rep"))
+    val scored = docs.select(col(id).as("_doc"), score.as("_q"))
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("rep")).orderBy(col("q").desc, col(id))
-    val best = members.withColumn("rk", row_number().over(w))
-      .filter(col("rk") === 1).select(col("rep"), col(id).as("keep_id"))
-    docs.select(col(id))
-      .join(cc.select(col("id").as(id), col("rep")), Seq(id), "left")
-      .join(best, Seq("rep"), "left")
-      .select(col(id), coalesce(col("keep_id"), col(id)).as("keep_id"),
-        (col(id) === coalesce(col("keep_id"), col(id))).cast("int").as("kept"))
+      .partitionBy(col("_rep")).orderBy(col("_q").desc, col("_doc"))
+    val best = cc.join(scored, "_doc").withColumn("_rk", row_number().over(w))
+      .filter(col("_rk") === 1).select(col("_rep"), col("_doc").as("_keep"))
+    val keep = coalesce(col("_keep"), col("_doc"))
+    docs.select(col(id).as("_doc"))
+      .join(cc, Seq("_doc"), "left")
+      .join(best, Seq("_rep"), "left")
+      .select(col("_doc").as(id), keep.as("keep_id"),
+        (col("_doc") === keep).cast("int").as("kept"))
   }
 
   /** Bloom-prefiltered incremental EXACT dedup: new rows whose content
@@ -1145,7 +1204,8 @@ object Dedup {
     * persisted, then `capHotBuckets` on `s`; when the cap fires the
     * kept frame is persisted too. The raw frame feeds the df probe (an
     * eager action) and the prune; the kept frame feeds the per-doc
-    * counts, the band aggregates and both self-join sides — without
+    * counts and both self-join sides (the exact families) or the
+    * per-document sets (the byte LSH families) — without
     * the caches each consumer re-runs the shingle explode (measured
     * 25-30 s/query at sf0.1 for byte shingles, ~3 s cached).
     * CacheManager dedupes by canonical plan, and Bench clears caches
@@ -1209,7 +1269,8 @@ object Dedup {
     * duplicates, so a re-encoded, trimmed, or header-touched payload
     * survives as a distinct blob while the text side has seven near-dup
     * families; these shingles feed the SAME MinHash-LSH machinery
-    * (`minhashLshPairsFromShingles`) the text families use. Reference
+    * (per-document sets, `minhashBands`, `bandPairJoin`, `verifySets`) the text
+    * families use. Reference
     * capability generalized: idempotent content identity,
     * `/root/reference/pspf/connectors/base.py:48-70`. */
   def byteShingleSet(bin: DataFrame, id: String, payload: String,
@@ -1277,9 +1338,15 @@ object Dedup {
                        threshold: Double,
                        maxDf: Long): (DataFrame, HotBucketDecision) = {
     val (kept, d) = cappedUniverse(byteShingleSet(bin, id, payload, n), id, maxDf)
-    val cand = minhashLshPairsFromShingles(kept, id, numHashes, rowsPerBand)
-    (exactVerifyPairs(kept, cand, id, threshold), d)
+    val signed = signedSets(unitSets(kept, id), numHashes, rowsPerBand)
+    (verifySets(signed, signedPairs(signed), threshold), d)
   }
+
+  /** The per-document set frame (id, sh) of a distinct (id, s) unit
+    * frame — the byte families' capped universe grouped for the LSH
+    * core. */
+  private def unitSets(units: DataFrame, id: String): DataFrame =
+    units.groupBy(col(id).as("id")).agg(collect_set(col("s")).as("sh"))
 
   /** `byteNearDupPairs` with LENGTH-AWARE banding — the closed loop on
     * the recall trade the l113 audit measures: a short payload has few
@@ -1336,20 +1403,17 @@ object Dedup {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
     val (kept, d) = cappedUniverse(byteShingleSet(bin, id, payload, n), id, maxDf)
+    val signed = signedSets(unitSets(kept, id), numHashes, rowsPerBand)
     // persisted: the base candidates feed base verification AND the
     // fine leg's anti-join (two actions would rebuild the band
     // self-join otherwise — the multi-consumer discipline)
-    val baseCand = bandPairJoin(bandFrame(kept, id, numHashes, rowsPerBand), id)
-      .persist(MEMORY_AND_DISK)
-    val base = exactVerifyPairs(kept, baseCand, id, threshold)
+    val baseCand = signedPairs(signed).persist(MEMORY_AND_DISK)
+    val base = verifySets(signed, baseCand, threshold)
     val fineCut = math.ceil(shortMaxShingles / threshold).toLong
-    val shortIds = kept.groupBy(col(id)).agg(count(lit(1)).as("_nsh"))
-      .filter(col("_nsh") < fineCut).select(col(id))
-    val fine = kept.join(shortIds, Seq(id), "left_semi")
-    val fineOnly =
-      bandPairJoin(bandFrame(fine, id, numHashes, shortRowsPerBand), id)
-        .join(baseCand, Seq("da", "db"), "left_anti")
-    (base, base.unionAll(exactVerifyPairs(kept, fineOnly, id, threshold)), d)
+    val fine = signedSets(signed.filter(size(col("sh")) < fineCut).drop("sigs"),
+      numHashes, shortRowsPerBand)
+    val fineOnly = signedPairs(fine).join(baseCand, Seq("da", "db"), "left_anti")
+    (base, base.unionAll(verifySets(signed, fineOnly, threshold)), d)
   }
 
   /** Exact byte-Jaccard near-dup pairs over binary payloads — the

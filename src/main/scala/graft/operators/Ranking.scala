@@ -57,8 +57,7 @@ object Ranking {
     * (id, s) — the form callers use to stage the tokenize→explode→
     * distinct pass ONCE (persist it, or reuse the dedup pipeline's
     * existing shingle frame) instead of recomputing it under each of
-    * the two aggregations; same contract as
-    * `Dedup.minhashLshPairsFromShingles`. */
+    * the two aggregations. */
   def ngramNoveltyFromShingles(docs: DataFrame, sh: DataFrame,
                                id: String): DataFrame = {
     val totals = sh.groupBy(col(id)).agg(count(lit(1)).as("n_shingles"))

@@ -156,7 +156,7 @@ private[queries] object LlmBlocks {
     s"cnt AS (SELECT doc_id, COUNT(*) AS $as FROM $src GROUP BY 1)"
 
   /** Shared-shingle count `i` per LSH candidate pair of `cand`
-    * (`Dedup.exactVerifyPairs`' re-shingled verification). */
+    * (the count form of `Dedup.verifySets`' array intersection). */
   def candInterCte(name: String): String =
     s"""$name AS (SELECT c.da, c.db, COUNT(*) AS i
        |          FROM cand c
@@ -179,7 +179,7 @@ private[queries] object LlmBlocks {
     jaccardAbove(inter, threshold, s"da, db, $jaccardOf AS jaccard") +
       "\nORDER BY da, db"
 
-  /** The minhash seed family and banding (`Dedup.bandFrame`), restated
+  /** The minhash seed family and banding (`Dedup.minhashBands`), restated
     * here independently of the engine's constant arrays: hash_i =
     * (A_i·h1 + B_i·h2) mod p over the two 40-bit md5 halves of each
     * shingle `s` of `sh`, p = the first prime past 2^40; `mh` keeps the

@@ -165,10 +165,11 @@ object IncrementalDedup {
     val spark = batch.sparkSession
     // consumed twice (store write + probe join) — stage the one
     // shingle pass instead of running it per consumer
-    val shingles = cfg.shingler.map(f => f(batch))
-      .getOrElse(Dedup.shingleSet(batch, cfg.id, cfg.text, cfg.shingleN))
-    val bands = Dedup.bandFrame(shingles, cfg.id, cfg.numHashes, cfg.rowsPerBand)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val bands = (cfg.shingler match {
+      case Some(f) => Dedup.bandFrame(f(batch), cfg.id, cfg.numHashes, cfg.rowsPerBand)
+      case None => Dedup.setBandFrame(Dedup.shingleSets(batch, cfg.id, cfg.text, cfg.shingleN),
+        cfg.id, cfg.numHashes, cfg.rowsPerBand)
+    }).persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val seen = seenBands(spark, bandStoreDir, batchId)
         .map(_.drop("ingest_batch"))

@@ -821,4 +821,92 @@ class DedupSimilaritySpec extends AnyFunSuite {
         s"n=$n: closure diverges from the expression form it replaced")
     }
   }
+
+  test("minhashBands equals the relational md5/conv/min band reference, row for row and type for type") {
+    import org.apache.spark.sql.types.{IntegerType, StringType}
+    // this spec's own fixture texts, non-ASCII and astral-plane text,
+    // docs under n tokens and null text, then a seeded corpus over a
+    // mixed-script vocabulary
+    val texts: Seq[String] = Seq(
+      "same text here", "different", "a b c d", "a b c e",
+      "w1 w2 w3 w4 w5 w6", "x1 x2 x3 x4 x5 x6", "low", "best",
+      "café naïve résumé über straße façade crème brûlée",
+      "東京 大阪 京都 札幌 福岡 名古屋 神戸",
+      "Москва Казань Самара Омск Пермь Уфа",
+      "emoji 😀 pair 😀 emoji 😀 pair 𝔘𝔫𝔦 𝄞 𝄞 music",
+      "a\u00A0b glued c d e",
+      "one two", "solo", "", " \t ", null)
+    val fixtures = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    val rnd = new scala.util.Random(7)
+    val vocab = Seq("naïve", "straße", "東京", "Москва", "😀", "𝔘𝔫𝔦", "a\u00A0b") ++
+      (0 until 40).map(i => s"w$i")
+    val corpus = (0 until 500).map { i =>
+      (1000L + i, Seq.fill(rnd.nextInt(30))(vocab(rnd.nextInt(vocab.size))).mkString(" "))
+    }.toDF("doc_id", "text")
+    val d = fixtures.unionByName(corpus)
+    // a hand-built exploded frame: duplicate (id, s) rows, a singleton,
+    // null shingles beside real ones and alone
+    val dupRows = Seq[(Long, String)]((-1L, "p q r"), (-1L, "p q r"), (-1L, "q r s"),
+      (-2L, "p q r"), (-2L, "p q r"), (-3L, "z"), (-3L, null), (-4L, null))
+      .toDF("doc_id", "s")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id", "band", "bsig").as[(Long, Int, String)].collect().sorted.toSeq
+    def types(df: org.apache.spark.sql.DataFrame) =
+      Seq(df.schema("band").dataType, df.schema("bsig").dataType)
+    for (n <- Seq(1, 3); nh <- Seq(8, 16); r <- (1 to nh).filter(nh % _ == 0)) {
+      val exploded = Dedup.shingleSet(d, "doc_id", "text", n).unionByName(dupRows)
+      val want = MinhashBandReference.bandFrame(exploded, "doc_id", nh, r)
+      val got = Dedup.bandFrame(exploded, "doc_id", nh, r)
+      val viaSets = Dedup.setBandFrame(Dedup.shingleSets(d, "doc_id", "text", n),
+        "doc_id", nh, r)
+      val wantRows = rows(want)
+      assert(wantRows.size > 400, s"n=$n numHashes=$nh rowsPerBand=$r: vacuous fixture")
+      assert(rows(got) == wantRows, s"n=$n numHashes=$nh rowsPerBand=$r: bandFrame diverges")
+      assert(rows(viaSets) == wantRows.filter(_._1 >= 0),
+        s"n=$n numHashes=$nh rowsPerBand=$r: the set path diverges")
+      assert(types(got) == Seq(IntegerType, StringType) && types(want) == types(got) &&
+        types(viaSets) == types(got))
+    }
+  }
+
+  test("keepBestPerGroup accepts any id column name, its internal ones included") {
+    val d = docs((1L, "low"), (2L, "best"), (3L, "mid"), (4L, "alone"))
+    val pairs = Seq((1L, 2L), (2L, 3L)).toDF("da", "db")
+    val score = when(col("text") === "best", 0.9)
+      .when(col("text") === "mid", 0.5).otherwise(0.1)
+    def run(name: String) = {
+      val out = Dedup.keepBestPerGroup(d.withColumnRenamed("doc_id", name), pairs, name, score)
+      (out.columns.toSeq,
+        out.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq)
+    }
+    val (cols, want) = run("doc_id")
+    assert(cols == Seq("doc_id", "keep_id", "kept") && want.size == 4)
+    for (name <- Seq("id", "rep", "keep_id", "q", "rk"))
+      assert(run(name) == ((Seq(name, "keep_id", "kept"), want)), s"id column named '$name'")
+  }
+
+  test("the LSH family accepts any id column name, its internal ones included") {
+    val base = (1 to 12).map(i => s"t$i").mkString(" ")
+    val other = (1 to 12).map(i => s"u$i").mkString(" ")
+    val texts = Seq(base, base, base.replace("t12", "v12"), other,
+      other.replace("u6", "v6"), "too short", null)
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.toSeq.map(_.toString)).sortBy(_.mkString(",")).toSeq
+    def runAll(name: String) = {
+      val d = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF(name, "text")
+      val cand = Dedup.minhashLshPairs(d, name, "text", shingleN = 3, numHashes = 8,
+        rowsPerBand = 2)
+      Seq(pairs(Dedup.lshVerifiedPairs(d, name, "text", shingleN = 3, numHashes = 8,
+          rowsPerBand = 2, threshold = 0.5)),
+        pairs(cand),
+        pairs(Dedup.verifyCandidatePairs(d, cand, name, "text", shingleN = 3,
+          threshold = 0.5)))
+    }
+    val want = runAll("doc_id")
+    assert(want.forall(_.nonEmpty))
+    for (name <- Seq("id", "s", "sh", "sa", "sb", "band", "bsig", "inter", "na", "nb",
+                     "da", "db", "x", "y", "jaccard"))
+      assert(runAll(name) == want, s"id column named '$name'")
+    spark.catalog.clearCache()
+  }
 }
