@@ -117,7 +117,7 @@ object GraftSession {
   }
 
   /** The session recipe of the non-Bench mains (Verify, Explain,
-    * PlanAudit, Profile, StartupProbe): `tune` over
+    * StartupProbe): `tune` over
     * `local[$SPARK_GRAFT_CPUS]` (default 4) with one shuffle partition
     * per core, logging at WARN — the recipe Bench times, so the oracle
     * grades and the plan tools show what Bench runs. */

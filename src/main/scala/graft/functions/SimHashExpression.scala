@@ -10,9 +10,9 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** 32-bit SimHash over a token array in a single pass per row.
   *
-  * Bit-for-bit identical to the relational formulation in
-  * `Dedup.simhash32Relational` (explode tokens × 8 hex chars × 4 bits →
-  * shuffle → majority vote), which is what the DuckDB oracle replicates:
+  * Bit-for-bit identical to the relational formulation (explode tokens ×
+  * 8 hex chars × 4 bits → shuffle → majority vote; DedupSimilaritySpec
+  * pins the two equal), which is what the DuckDB oracle replicates:
   * for each token, h = md5 hex; for hex position p∈[1,8], bit b∈[0,3]:
   * contribution sign((v(p) >> b) & 1) with v = hex digit value; final bit
   * set iff the summed contribution is > 0; bit weight 1L << ((8-p)*4+b).

@@ -196,42 +196,23 @@ object TextFunctions {
 
   /** Polynomial rolling hash h = fold(h*31 + codepoint) mod 1e9+7 — the
     * classic incremental document fingerprint (cheap to maintain over
-    * sliding content windows, unlike md5). Native codegen'd expression;
-    * `rollingHashRelational` below is the executable spec it must match
-    * (and what the DuckDB oracle replicates). */
+    * sliding content windows, unlike md5). Native codegen'd expression,
+    * pinned in TextFunctionsSpec against the HOF list fold the DuckDB
+    * oracle replicates. */
   def rollingHash(text: Column): Column =
     RollingHashFunctions.rollingHash(text)
 
-  /** HOF formulation of the rolling hash — kept as the cross-checkable
-    * spec of the algorithm (sequential fold, reproducible in any engine
-    * with a list fold); the native expression must match it exactly. */
-  def rollingHashRelational(text: Column): Column =
-    aggregate(
-      transform(split(text, ""), ch => ascii(ch).cast("long")),
-      lit(0L),
-      (acc, c) => (acc * 31 + c) % 1000000007L)
-
-  /** Word n-gram shingles: ["a b c", "b c d", ...]. Requires
-    * size(tokens) >= n (filter first). HOF expression form — retained
-    * as the cross-checkable spec `gramArray` below is differentially
-    * pinned against (DedupSimilaritySpec); hot paths use `gramArray`. */
-  def shingles(toks: Column, n: Int): Column =
-    transform(
-      sequence(lit(0), size(toks) - n),
-      i => concat_ws(" ", slice(toks, i + 1, lit(n)))
-    )
-
   /** Every word n-gram of `text` in position order, as ONE JVM closure
     * per row — replaces the tokens() regexp + filter(size >= n) +
-    * shingles() HOF chain on hot paths: HOF lambdas evaluate
+    * HOF shingle transform chain on hot paths: HOF lambdas evaluate
     * INTERPRETED (they never enter whole-stage codegen), so the
     * expression chain paid per-element tree walks plus a full
     * token-array materialization per row (the Multimodal.blockSums
-    * precedent, guide §1.2 step 2). Value-identical to
-    * `shingles(tokens(text), n)` under the size(tokens) >= n gate:
-    * fewer than n tokens yields an EMPTY array (explode then emits no
-    * rows, exactly what the filter produced), null text yields null.
-    * Pinned differentially against the expression form in
+    * precedent, guide §1.2 step 2). Value-identical to that chain under
+    * the size(tokens) >= n gate: fewer than n tokens yields an EMPTY
+    * array (explode then emits no rows, exactly what the filter
+    * produced), null text yields null. Pinned differentially (through
+    * `Dedup.textShingles`) against the expression form in
     * DedupSimilaritySpec. */
   def gramArray(text: Column, n: Int): Column = {
     require(n >= 1, s"gram size must be >= 1, got $n")

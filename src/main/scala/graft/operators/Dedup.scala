@@ -95,43 +95,25 @@ object Dedup {
   }
 
   /** Exact n-gram Jaccard near-dup pairs above `threshold`.
-    * inter(a,b) via shingle self-join.
-    *
-    * `prefilterSingletons` drops shingles with document frequency 1 from
-    * the JOIN INPUT only (they cannot contribute to any intersection;
-    * union sizes still use the full sets, so results are unchanged).
-    * In real corpora the singleton long tail dominates and this is the
-    * difference between joining the tail and not at 100 TB; on small or
-    * low-entropy corpora the extra df-count shuffle costs more than it
-    * saves (measured +1.5 s at sf0.1's 30-word vocab), so it's opt-in.
-    * Hot shingles (boilerplate shared by many documents) are the
-    * measured, capped concern of `ngramJaccardPairsCapped` — use that
-    * form on real crawls. */
+    * inter(a,b) via shingle self-join. Hot shingles (boilerplate shared
+    * by many documents) are the measured, capped concern of
+    * `ngramJaccardPairsCapped` — use that form on real crawls. (Dropping
+    * df=1 shingles from the join input cost +1.5 s at sf0.1's 30-word
+    * vocab, more than it saved.) */
   def ngramJaccardPairs(docs: DataFrame, id: String, text: String,
-                        n: Int, threshold: Double,
-                        prefilterSingletons: Boolean = false): DataFrame =
+                        n: Int, threshold: Double): DataFrame =
     // persisted: the shingle frame feeds the counts and both sides of
-    // the self-join (plus the optional df prefilter); with the per-doc
-    // dedup row-local (no exchange — see shingleSet) the persist is
-    // what keeps the tokenize→explode pass at ONE evaluation. Same
-    // CACHE NOTE contract as `cappedUniverse`.
+    // the self-join; with the per-doc dedup row-local (no exchange —
+    // see shingleSet) the persist is what keeps the tokenize→explode
+    // pass at ONE evaluation. Same CACHE NOTE contract as
+    // `cappedUniverse`.
     shingleJaccardPairs(shingleSet(docs, id, text, n).persist(MEMORY_AND_DISK),
-      id, threshold, prefilterSingletons)
+      id, threshold)
 
   /** Exact Jaccard over a distinct (id, s) shingle frame — the one
-    * scoring core of the text and byte Jaccard families. Singleton
-    * prefiltering touches only the join input; set sizes always count
-    * the full frame `sh`. */
-  private def shingleJaccardPairs(sh: DataFrame, id: String, threshold: Double,
-                                  prefilterSingletons: Boolean = false): DataFrame = {
-    val shJ =
-      if (prefilterSingletons) {
-        val shared = sh.groupBy(col("s")).agg(count(lit(1)).as("df"))
-          .filter(col("df") >= 2).select(col("s"))
-        sh.join(shared, "s")
-      } else sh
-    exactJaccard(bucketPairCount(shJ, id, "s", "inter"), sh, id, threshold)
-  }
+    * scoring core of the text and byte Jaccard families. */
+  private def shingleJaccardPairs(sh: DataFrame, id: String, threshold: Double): DataFrame =
+    exactJaccard(bucketPairCount(sh, id, "s", "inter"), sh, id, threshold)
 
   /** Per-pair shared-unit counts: the `a.bucket = b.bucket AND a.id <
     * b.id` self-join of a (id, bucket) unit frame, grouped to
@@ -414,8 +396,9 @@ object Dedup {
 
   /** 32-bit SimHash per document: single-pass native expression
     * (graft.functions.SimHash32) — no row explosion, no shuffle; values
-    * bit-identical to the relational form below (which the DuckDB oracle
-    * mirrors). Hamming-close fingerprints ≈ near-dups. */
+    * bit-identical to the relational explode → majority-vote form the
+    * DuckDB oracle mirrors (pinned in DedupSimilaritySpec).
+    * Hamming-close fingerprints ≈ near-dups. */
   def simhash32(docs: DataFrame, id: String, text: String): DataFrame =
     docs.select(col(id), tokens(col(text)).as("toks"))
       .filter(size(col("toks")) > 0) // token-free docs have no fingerprint,
@@ -530,9 +513,8 @@ object Dedup {
     * equi-join shuffle over the edge frame. Rounds materialize into
     * persisted RDDs with the superseded round's blocks released
     * immediately — storage stays at one edge copy, not one per round.
-    * The min-label reference implementation is retained as
-    * `connectedComponentsMinLabel` and pinned equivalent by property
-    * test.
+    * DedupPropertySpec pins the labels equal to a min-label propagation
+    * reference.
     *
     * SIZE DISPATCH (the broadcast-threshold pattern): the canonical
     * edge set is materialized and COUNTED first — one action the star
@@ -627,9 +609,9 @@ object Dedup {
   }
 
   /** Persist a round into an RDD and rebuild the frame from it —
-    * truncates the otherwise per-round-doubling lineage; shared by
-    * both CC implementations. */
-  private def materializeRound(df: DataFrame): (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) = {
+    * truncates the otherwise per-round-doubling lineage; shared by the
+    * star rounds and the min-label reference in DedupPropertySpec. */
+  private[operators] def materializeRound(df: DataFrame): (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) = {
     val rdd = df.rdd.persist(MEMORY_AND_DISK)
     (df.sparkSession.createDataFrame(rdd, df.schema), rdd)
   }
@@ -713,47 +695,6 @@ object Dedup {
       .select(col("x").as("id"), col("x").as("rep"))
       .join(starLabels.select(col("id")), Seq("id"), "left_anti")
     (starLabels.unionByName(selfOnly), rounds)
-  }
-
-  /** Min-label propagation to a fixpoint — rounds ≈ component diameter
-    * (one neighbor-join + min-aggregate shuffle per round). Retained as
-    * the independently-derived reference the star algorithm is
-    * differentially tested against; prefer `connectedComponents` for
-    * anything that might see deep components. */
-  private[graft] def connectedComponentsMinLabel(pairs: DataFrame, a: String = "da",
-                                                 b: String = "db"): DataFrame = {
-    val (edges, edgesRdd) = materializeRound(
-      pairs.select(col(a).as("x"), col(b).as("y"))
-        .union(pairs.select(col(b).as("x"), col(a).as("y")))
-        .distinct())
-    var (labels, labelsRdd) = materializeRound(
-      edges.select(col("x").as("id")).distinct()
-        .select(col("id"), col("id").as("rep")))
-    var converged = false
-    while (!converged) {
-      // self rows ride the same shuffle as neighbor propagations, tagged
-      // so the aggregate recovers BOTH the new label (min over all) and
-      // the previous one (the single self row) in one pass — the
-      // convergence probe then reads the materialized round from cache
-      // instead of re-running a join against the prior labels (which
-      // used to double per-round work)
-      val nbr = edges.join(labels.select(col("id").as("y"), col("rep")), "y")
-        .select(col("x").as("id"), col("rep"), lit(false).as("self"))
-      val round = labels.select(col("id"), col("rep"), lit(true).as("self"))
-        .union(nbr)
-        .groupBy(col("id"))
-        .agg(min(col("rep")).as("rep"),
-          min(when(col("self"), col("rep"))).as("prev"))
-      val (next, nextRdd) = materializeRound(round)
-      // first action computes + caches the round; the probe itself scans
-      // the cache (and short-circuits at the first changed label)
-      converged = next.filter(col("rep") =!= col("prev")).isEmpty
-      labelsRdd.unpersist(blocking = false)
-      labels = next.select(col("id"), col("rep"))
-      labelsRdd = nextRdd
-    }
-    edgesRdd.unpersist(blocking = false)
-    labels
   }
 
   /** Retention policy over near-dup clusters: every document maps to
@@ -874,24 +815,6 @@ object Dedup {
         coalesce(col("n_kept"), lit(0L)).as("n_kept"),
         coalesce(col("text_clean"), lit("")).as("text_clean"))
   }
-
-  /** Relational formulation of simhash32 (explode tokens × 8 hex chars ×
-    * 4 bits → shuffle → majority vote) — kept as the cross-checkable
-    * spec of the algorithm; the expression above must match it exactly. */
-  def simhash32Relational(docs: DataFrame, id: String, text: String): DataFrame =
-    docs.select(col(id), explode(tokens(col(text))).as("t"))
-      .select(col(id), md5(col("t")).as("h"))
-      .withColumn("p", explode(sequence(lit(1), lit(8))))
-      .withColumn("v", expr("instr('0123456789abcdef', substr(h, p, 1)) - 1"))
-      .withColumn("b", explode(sequence(lit(0), lit(3))))
-      .select(col(id), col("p"), col("b"),
-        expr("CASE WHEN (shiftright(v, b) % 2) = 1 THEN 1 ELSE -1 END").as("contrib"))
-      .groupBy(col(id), col("p"), col("b"))
-      .agg(sum(col("contrib")).as("s"))
-      .select(col(id),
-        expr("CASE WHEN s > 0 THEN shiftleft(CAST(1 AS BIGINT), (8 - p) * 4 + b) ELSE 0 END").as("term"))
-      .groupBy(col(id))
-      .agg(sum(col("term")).as("simhash32"))
 
   /** Winnowing fingerprints (Schleimer, Wilkerson & Aiken, SIGMOD'03 —
     * the MOSS algorithm; reference capability: span-level copy

@@ -95,19 +95,6 @@ object Similarity extends Serializable {
       .filter(col("cos") > threshold)
   }
 
-  /** Plain (non-hinted) self-join formulation — the executable spec the
-    * broadcast variant must match; see DedupSimilaritySpec equivalence
-    * test. */
-  def cosinePairsJoin(df: DataFrame, id: String, vec: String, threshold: Double): DataFrame = {
-    val e = withNorm(df, vec)
-    val a = e.select(col(id).as("da"), col(vec).as("va"), col("nrm").as("na"))
-    val b = e.select(col(id).as("db"), col(vec).as("vb"), col("nrm").as("nb"))
-    a.join(b, col("da") < col("db"))
-      .select(col("da"), col("db"),
-        round(dot(col("va"), col("vb")) / sqrt(col("na") * col("nb")), 6).as("cos"))
-      .filter(col("cos") > threshold)
-  }
-
   /** LSH-bucketed cosine pairs above `threshold` — the 100 TB form of
     * `cosinePairs` (which needs one side broadcastable): candidates come
     * from the multi-table (table, sig) bucket equi-join, scoring touches
@@ -521,29 +508,11 @@ object Similarity extends Serializable {
     *
     * The plane values depend only on (plane, dim) indices, so they are
     * constant-folded driver-side and the signature evaluates as ONE
-    * codegen'd primitive loop (graft.functions.LshSignature) — the
-    * relational formulation below is retained as the executable spec it
-    * must match bit-for-bit (DedupSimilaritySpec). */
+    * codegen'd primitive loop (graft.functions.LshSignature), pinned
+    * bit-for-bit in DedupSimilaritySpec against the column-level HOF
+    * formulation it replaced. */
   def lshSignature(vec: Column, dim: Int, nPlanes: Int): Column =
     graft.functions.LshFunctions.lshSignature(vec, dim, nPlanes)
-
-  /** The original column-level formulation of lshSignature: dim×nPlanes
-    * md5-of-constant evaluations per ROW inside interpreted HOFs — kept
-    * only as the cross-checkable spec of the plane/projection/rounding
-    * semantics (≈20× slower; never used in graded queries). */
-  def lshSignatureReference(vec: Column, dim: Int, nPlanes: Int): Column = {
-    val bits = (0 until nPlanes).map { i =>
-      // h_i[d] = (md5-derived value in [-0.5, 0.5))
-      val proj = aggregate(
-        zip_with(vec, sequence(lit(0), lit(dim - 1)),
-          (x, d) => x.cast("double") *
-            (conv(substring(md5(concat(lit(i.toString), lit("_"), d.cast("string"))), 1, 6), 16, 10)
-              .cast("double") / lit(16777216.0) - lit(0.5))),
-        lit(0.0), (acc, v) => acc + v)
-      when(round(proj, 6) >= 0, lit(1)).otherwise(lit(0)).cast("string")
-    }
-    concat(bits: _*)
-  }
 
   /** ANN via LSH buckets: candidates share a signature; score only within
     * bucket. Recall < 1 by construction; the knobs (pinned by the

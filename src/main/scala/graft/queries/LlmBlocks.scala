@@ -237,8 +237,8 @@ private[queries] object LlmBlocks {
        |cand AS (${bandPairsSql()}),
        |${candInterCte("inter")}""".stripMargin
 
-  /** Min-label connected components (`Dedup.connectedComponentsMinLabel`)
-    * as a recursive CTE (the enclosing WITH must be RECURSIVE): the
+  /** Min-label connected components (the labels of
+    * `Dedup.connectedComponents`) as a recursive CTE (the enclosing WITH must be RECURSIVE): the
     * (a, b) columns of `pairs` as undirected `edges`, `reach` every
     * node's transitive closure, and `label` (when given) each node's
     * min reachable id `rep`. */

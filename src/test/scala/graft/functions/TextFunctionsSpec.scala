@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.TestSpark
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -45,13 +46,23 @@ class TextFunctionsSpec extends AnyFunSuite {
     assert(got(1) == ((97L * 31 + 32) * 31 + 98) % 1000000007L)
   }
 
+  /** HOF formulation of the rolling hash — the cross-checkable spec of
+    * the algorithm (sequential fold, reproducible in any engine with a
+    * list fold, and what the DuckDB oracle replicates); the native
+    * expression must match it exactly. */
+  private def rollingHashRelational(text: Column): Column =
+    aggregate(
+      transform(split(text, ""), ch => ascii(ch).cast("long")),
+      lit(0L),
+      (acc, c) => (acc * 31 + c) % 1000000007L)
+
   test("native rolling hash equals the HOF formulation on real docs + edges") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("text"))
       .union(Seq("", "a", "multi byte: é € 𝄞").toDF("text"))
     val both = docs.select(
       TextFunctions.rollingHash(col("text")).as("native"),
-      TextFunctions.rollingHashRelational(col("text")).as("spec")).collect()
+      rollingHashRelational(col("text")).as("spec")).collect()
     assert(both.length == 503)
     assert(both.forall(r => r.getLong(0) == r.getLong(1)))
   }

@@ -1,6 +1,8 @@
 package graft.operators
 
 import graft.TestSpark
+import graft.functions.TextFunctions
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -346,11 +348,30 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(external == inPlan && external.nonEmpty)
   }
 
+  /** Relational formulation of simhash32 (explode tokens × 8 hex chars ×
+    * 4 bits → shuffle → majority vote) — the cross-checkable spec of the
+    * algorithm the DuckDB oracle replicates; the expression must match
+    * it exactly. */
+  private def simhash32Relational(docs: DataFrame, id: String, text: String): DataFrame =
+    docs.select(col(id), explode(TextFunctions.tokens(col(text))).as("t"))
+      .select(col(id), md5(col("t")).as("h"))
+      .withColumn("p", explode(sequence(lit(1), lit(8))))
+      .withColumn("v", expr("instr('0123456789abcdef', substr(h, p, 1)) - 1"))
+      .withColumn("b", explode(sequence(lit(0), lit(3))))
+      .select(col(id), col("p"), col("b"),
+        expr("CASE WHEN (shiftright(v, b) % 2) = 1 THEN 1 ELSE -1 END").as("contrib"))
+      .groupBy(col(id), col("p"), col("b"))
+      .agg(sum(col("contrib")).as("s"))
+      .select(col(id),
+        expr("CASE WHEN s > 0 THEN shiftleft(CAST(1 AS BIGINT), (8 - p) * 4 + b) ELSE 0 END").as("term"))
+      .groupBy(col(id))
+      .agg(sum(col("term")).as("simhash32"))
+
   test("native simhash expression equals the relational formulation on real docs") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val expr = Dedup.simhash32(docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val rel = Dedup.simhash32Relational(docs, "doc_id", "text")
+    val rel = simhash32Relational(docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(expr.size == 500 && expr == rel)
   }
@@ -364,11 +385,23 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(got(1L) >= 0 && got(1L) < (1L << 32))
   }
 
+  /** Plain (non-hinted) self-join formulation of `Similarity.cosinePairs`
+    * — the executable spec the broadcast variant must match. */
+  private def cosinePairsJoin(df: DataFrame, id: String, vec: String, threshold: Double): DataFrame = {
+    val e = Similarity.withNorm(df, vec)
+    val a = e.select(col(id).as("da"), col(vec).as("va"), col("nrm").as("na"))
+    val b = e.select(col(id).as("db"), col(vec).as("vb"), col("nrm").as("nb"))
+    a.join(b, col("da") < col("db"))
+      .select(col("da"), col("db"),
+        round(Similarity.dot(col("va"), col("vb")) / sqrt(col("na") * col("nb")), 6).as("cos"))
+      .filter(col("cos") > threshold)
+  }
+
   test("broadcast cosinePairs equals the declarative self-join on real embeddings") {
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val fast = Similarity.cosinePairs(e, "vec_id", "embedding", 0.3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val spec = Similarity.cosinePairsJoin(e, "vec_id", "embedding", 0.3)
+    val spec = cosinePairsJoin(e, "vec_id", "embedding", 0.3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(fast.nonEmpty && fast == spec)
   }
@@ -399,13 +432,31 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(recall > 0.5, s"ivf recall@3 = $recall")
   }
 
+  /** The original column-level formulation of `Similarity.lshSignature`:
+    * dim×nPlanes md5-of-constant evaluations per ROW inside interpreted
+    * HOFs — the cross-checkable spec of the plane/projection/rounding
+    * semantics (≈20× slower than the constant-folded expression). */
+  private def lshSignatureReference(vec: Column, dim: Int, nPlanes: Int): Column = {
+    val bits = (0 until nPlanes).map { i =>
+      // h_i[d] = (md5-derived value in [-0.5, 0.5))
+      val proj = aggregate(
+        zip_with(vec, sequence(lit(0), lit(dim - 1)),
+          (x, d) => x.cast("double") *
+            (conv(substring(md5(concat(lit(i.toString), lit("_"), d.cast("string"))), 1, 6), 16, 10)
+              .cast("double") / lit(16777216.0) - lit(0.5))),
+        lit(0.0), (acc, v) => acc + v)
+      when(round(proj, 6) >= 0, lit(1)).otherwise(lit(0)).cast("string")
+    }
+    concat(bits: _*)
+  }
+
   test("constant-folded lsh signature is bit-identical to the column-level reference formulation") {
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val fast = e.select(col("vec_id"),
         Similarity.lshSignature(col("embedding"), 64, 8).as("sig"))
       .as[(Long, String)].collect().toMap
     val ref = e.select(col("vec_id"),
-        Similarity.lshSignatureReference(col("embedding"), 64, 8).as("sig"))
+        lshSignatureReference(col("embedding"), 64, 8).as("sig"))
       .as[(Long, String)].collect().toMap
     assert(fast.size == 500 && fast == ref)
     assert(fast.values.forall(s => s.length == 8 && s.forall(c => c == '0' || c == '1')))
@@ -762,8 +813,17 @@ class DedupSimilaritySpec extends AnyFunSuite {
       "hex rendering must stay uppercase (the engine-portable contract)")
   }
 
+  /** Word n-gram shingles of a token array: ["a b c", "b c d", ...].
+    * Requires size(toks) >= n (filter first). The HOF expression form
+    * the `textShingles` closure replaced, kept as its cross-checkable
+    * spec. */
+  private def shingles(toks: Column, n: Int): Column =
+    transform(
+      sequence(lit(0), size(toks) - n),
+      i => concat_ws(" ", slice(toks, i + 1, lit(n)))
+    )
+
   test("textShingles closure == the regexp/HOF expression form it replaced, order included") {
-    import graft.functions.TextFunctions
     // edge cases: every Java-regex \s char, runs of separators, Unicode
     // NBSP (NOT \s — must stay a token char), surrogate pairs, repeats
     // (first-occurrence distinct), under-n token counts, empty, null
@@ -784,7 +844,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
         .select(col("doc_id"), TextFunctions.tokens(col("text")).as("ws"))
         .filter(size(col("ws")) >= n)
         .select(col("doc_id"),
-          array_distinct(TextFunctions.shingles(col("ws"), n)).as("arr"))
+          array_distinct(shingles(col("ws"), n)).as("arr"))
         .as[(Long, Seq[String])].collect().toMap
       val closureForm = texts.zipWithIndex.flatMap { case (t, i) =>
         Option(Dedup.textShingles(t, n)).filter(_.nonEmpty)

@@ -1,8 +1,10 @@
 package graft.queries
 
 import graft.{SparkEntry, TestSpark}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.util.{Failure, Success, Try}
 
 /** Physical-plan shape assertions for the perf-critical compositions —
   * these lock in the round-5 plan fixes so a refactor can't silently
@@ -89,5 +91,96 @@ class PlanShapeSpec extends AnyFunSuite {
     val belowAgg = optimized.substring(aggIdx)
     assert(!belowAgg.contains("FloatVecDot"),
       "scoring must happen above the candidate dedup, not below it")
+  }
+
+  /** Red-flag operators: the plans that die first at scale. */
+  private val redFlags = Seq("CartesianProduct", "BroadcastNestedLoopJoin")
+
+  /** Queries whose red flag is intentional, with the reason. */
+  private val allowed = Map(
+    // 1-row watermark scalar broadcast-crossed into events
+    "w5_late_split" -> "1-row watermark scalar broadcast-crossed into events",
+    // brute-force ANN baseline: tiny query side (10 vecs) broadcast-
+    // crossed with the corpus is the intended one-scan plan; the scale
+    // path is Similarity.lshTopK's equi-joined buckets
+    "l9_ann_topk" -> "tiny broadcast query side x corpus scan (brute-force baseline)",
+    // all-pairs cosine baseline: engine-managed broadcast self-join —
+    // Spark enforces the broadcast size bound (vs. a driver collect,
+    // which had no bound); Similarity.lshTopK buckets are the scale path
+    "l8_embed_pairs" -> "broadcast self-join all-pairs cosine baseline (size-bounded by engine)",
+    // semantic decontamination scores every train vector against the
+    // BENCHMARK-sized eval side — broadcast-crossing the (small by
+    // nature) eval frame into one corpus scan IS the intended plan
+    // (train never pairs with train); engine-bounded like l8/l9
+    "l73_semantic_decontaminate" -> "benchmark-sized eval side broadcast-crossed into one corpus scan (size-bounded by engine)",
+    // the next two cross ONE broadcast stats row (corpus-level
+    // constants: bm25 avgdl+N / LM vocab+total) into the corpus — a
+    // scalar join, not a data x data nested loop
+    "l33_bm25" -> "1-row (N, avgdl) stat frame broadcast-crossed into the term join",
+    "l42_lm_xentropy" -> "1-row (vocab, total) stat frame broadcast-crossed into the corpus",
+    // the exact-integer coin compares hash·maxW < w·2^32 against the
+    // 1-row max-weight aggregate — a scalar join, not data x data
+    "x13_weighted_sample" -> "1-row max-weight stat frame broadcast-crossed into the corpus")
+
+  /** Each query's physical plan, or what kept it from building. Only the
+    * plan text is kept, so the blocks, scratch dirs and memory-sink
+    * views a query leaves behind are released before the next one. */
+  private def plans(queries: Seq[(String, (SparkSession, String) => DataFrame)])
+      : Seq[(String, Try[String])] =
+    queries.map { case (name, fn) =>
+      val plan = Try(fn(spark, sfDir).queryExecution.executedPlan.toString)
+      graft.GraftSession.releaseCached(spark)
+      graft.Scratch.purge(spark)
+      name -> plan
+    }
+
+  /** Everything the audit rejects: a plan that failed to build (whether
+    * or not its query is allowlisted), a red flag on a query that is not
+    * allowlisted, and an allowlist entry that names no audited query or
+    * whose plan shows no red flag. */
+  private def auditProblems(plans: Seq[(String, Try[String])],
+                            allow: Map[String, String]): Seq[String] = {
+    val flags = plans.map { case (n, p) => n -> p.map(pl => redFlags.filter(pl.contains)) }.toMap
+    val unexplained = plans.map(_._1).sorted.flatMap { n =>
+      flags(n) match {
+        case Failure(e) => Some(s"$n: plan failed to build: ${e.getMessage}")
+        case Success(fs) if fs.nonEmpty && !allow.contains(n) =>
+          Some(s"$n: ${fs.mkString(",")} is not allowlisted")
+        case _ => None
+      }
+    }
+    val stale = allow.keys.toSeq.sorted.flatMap { n =>
+      flags.get(n) match {
+        case None => Some(s"$n: allowlisted, but no such query")
+        case Some(Success(Seq())) => Some(s"$n: allowlisted, but its plan has no red flag")
+        case _ => None
+      }
+    }
+    unexplained ++ stale
+  }
+
+  test("plan audit: no registry query holds an unexplained cartesian product or nested-loop join, and every allowlist entry is live") {
+    val t0 = System.nanoTime()
+    val problems = auditProblems(plans(SparkEntry.defs.map(d => d.name -> d.build)), allowed)
+    info(f"${SparkEntry.defs.size} plans audited in ${(System.nanoTime() - t0) / 1e9}%.1f s")
+    assert(problems.isEmpty, problems.mkString("\n", "\n", ""))
+  }
+
+  test("plan audit rejects a build failure (allowlisted or not), a planted cartesian product and stale allowlist entries") {
+    val tiny: (SparkSession, String) => DataFrame = (s, _) => s.range(3).toDF("a")
+    val planted = plans(Seq(
+      "clean" -> tiny,
+      "cartesian" -> ((s, d) => tiny(s, d).hint("shuffle_replicate_nl")
+        .crossJoin(tiny(s, d).toDF("b"))),
+      "broken" -> ((s, d) => s.read.parquet(s"$d/no_such_table.parquet")),
+      "broken_allowed" -> ((s, d) => s.read.parquet(s"$d/no_such_table.parquet"))))
+    assert(planted.toMap.apply("cartesian").get.contains("CartesianProduct"))
+    val problems = auditProblems(planted, Map(
+      "broken_allowed" -> "allowlisted, yet a failed build must still fail",
+      "clean" -> "stale: no red flag in its plan",
+      "gone" -> "stale: no such query"))
+    assert(problems.map(_.takeWhile(_ != ':')) ==
+      Seq("broken", "broken_allowed", "cartesian", "clean", "gone"), problems.mkString("\n"))
+    assert(auditProblems(planted.filter(_._1 == "clean"), Map.empty).isEmpty)
   }
 }
